@@ -79,7 +79,7 @@ object Bench {
       : (Seq[String], Seq[String]) = {
     def sec(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val sameSf = prior.contains(s""""sf":"$sfDir"""")
+    val sameSf = priorSf(prior).contains(sfToken(sfDir))
     def block(key: String): Map[String, Double] = {
       val i = prior.indexOf("\"" + key + "\":{")
       val end = if (i < 0) -1 else prior.indexOf("}", i)
@@ -267,8 +267,7 @@ object Bench {
         // "faster", which the faster-always-lands rule would otherwise
         // wave through (r22: an sf0.001 smoke run from the repo cwd was
         // one eligible write away from replacing the sf0.1 baseline)
-        if (sfDir.nonEmpty && p.contains("\"sf\":\"") &&
-            !p.contains(s""""sf":"$sfDir""""))
+        if (sfDir.nonEmpty && priorSf(p).exists(_ != sfToken(sfDir)))
           (false, Some("[bench-detail] run sf " + sfDir + " differs from " +
             "the committed denominator's — writing BENCH_DETAIL.dirty.json " +
             "(SPARK_GRAFT_FORCE_DETAIL=1 overrules)"))
@@ -279,20 +278,39 @@ object Bench {
             "writing BENCH_DETAIL.dirty.json (the committed artifact " +
             "stays the guard baseline; SPARK_GRAFT_FORCE_DETAIL=1 " +
             "overrules)"))
-        else {
-          val slowerHostSlowerRun = for {
-            pc <- scalar(p, "calib_loaded"); pt <- scalar(p, "value")
-          } yield calibLoaded > 1.25 * pc && total > pt
-          if (slowerHostSlowerRun.contains(true))
-            (false, Some(f"[bench-detail] loaded calib $calibLoaded%.3f " +
-              "is >1.25x the committed denominator's and the sweep is " +
-              "slower — placement, not code; writing " +
-              "BENCH_DETAIL.dirty.json (SPARK_GRAFT_FORCE_DETAIL=1 " +
-              "overrules)"))
-          else (true, None)
+        else (scalar(p, "calib_loaded"), scalar(p, "value")) match {
+          case (Some(pc), Some(pt)) =>
+            if (calibLoaded > 1.25 * pc && total > pt)
+              (false, Some(f"[bench-detail] loaded calib $calibLoaded%.3f " +
+                "is >1.25x the committed denominator's and the sweep is " +
+                "slower — placement, not code; writing " +
+                "BENCH_DETAIL.dirty.json (SPARK_GRAFT_FORCE_DETAIL=1 " +
+                "overrules)"))
+            else (true, None)
+          case (pc, pt) =>
+            // an unparseable prior must not switch the guard off quietly
+            val missing = Seq("value" -> pt, "calib_loaded" -> pc)
+              .collect { case (k, None) => k }
+            (true, Some("[bench-detail] committed denominator has no " +
+              s"parseable ${missing.mkString(" or ")} — the " +
+              "slower-placement guard is off for this run"))
         }
     }
   }
+
+  /** The scale factor an sf directory names: its basename with trailing
+    * slashes stripped, so `sf0.1`, `sf0.1/` and `/data/sf0.1` compare
+    * equal.
+    */
+  private[graft] def sfToken(sfDir: String): String = {
+    val t = sfDir.replaceAll("/+$", "")
+    t.substring(t.lastIndexOf('/') + 1)
+  }
+
+  /** The [[sfToken]] of the `"sf"` a committed artifact was recorded at. */
+  private[graft] def priorSf(prior: String): Option[String] =
+    "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(prior)
+      .map(m => sfToken(m.group(1)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

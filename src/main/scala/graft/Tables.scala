@@ -10,12 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columnar + vectorized; filters/projections applied downstream are pushed
   * into the scan by Catalyst (verified in PlanSpec).
   *
+  * Schemas are catalog metadata, resolved once per file version (see
+  * [[table]]) — the kind a metastore or table log holds at 100 TB. Data is
+  * not: every read scans the table's files.
+  *
   * Scale note: each table is a single parquet file at test scale, but the
   * same reader works unchanged on a directory of thousands of files at
-  * 100 TB — `spark.read.parquet` lists and splits by
+  * 100 TB — the parquet scan lists and splits by
   * `spark.sql.files.maxPartitionBytes`.
   */
 object Tables {
+  import org.apache.hadoop.fs.{FileStatus, Path => HPath}
   import org.apache.spark.sql.types._
 
   val names: Seq[String] = Seq(
@@ -62,11 +67,6 @@ object Tables {
                                            ArrayType(FloatType, containsNull = false)),
                         "label" -> Set(IntegerType)))
 
-  /** (sfDir, table) pairs already validated this JVM — the contract check is
-    * a footer read, but there's no reason to repeat it per query.
-    */
-  private val checked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def assertContract(name: String, schema: StructType, path: String): Unit =
     contract.get(name).foreach { want =>
       val got = schema.fields.map(f => f.name -> f.dataType).toMap
@@ -102,8 +102,8 @@ object Tables {
       name: String, schema: StructType, path: String): Unit =
     assertContract(name, schema, path)
 
-  /** Columns (at ANY nesting depth, dotted paths) the parquet FOOTER
-    * declares TIMESTAMP(NANOS), swept across the whole file tree.
+  /** Columns (at ANY nesting depth, dotted paths) the parquet FOOTERS of
+    * `files` declare TIMESTAMP(NANOS).
     *
     * The `nanosAsLong` legacy conf is necessarily session-wide (no
     * per-read parquet option exists) and must stay on for events-query
@@ -112,35 +112,19 @@ object Tables {
     * would arrive as a silently-coerced LONG. The Spark-side contract
     * catches that for contracted ts-like columns (LONG ∉ tsLike), but an
     * UNCONTRACTED column would slip through; this footer read closes that
-    * blind spot positively (ADVICE r13). One bounded footer sweep per
-    * (sfDir, table) per JVM, same cost class as the schema inference.
+    * blind spot positively (ADVICE r13). It runs once per file version,
+    * beside the schema inference. A directory-shaped table is swept
+    * part-file by part-file (a mixed-writer dir can carry nanos in one
+    * part and µs in another), capped at 64 footers — fixtures are
+    * single-digit part counts; a genuinely file-heavy deployment would
+    * hoist this into its catalog checks.
     */
-  private def nanosColumns(s: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = s.sessionState.newHadoopConf()
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    // directory-shaped tables: inspect EVERY part-file (a mixed-writer
-    // dir can carry nanos in one part and µs in another), RECURSING into
-    // subdirectories so a drift to a partitioned (key=value subdir)
-    // layout is still swept, capped at 64 footers — fixtures are
-    // single-digit part counts; a genuinely file-heavy deployment would
-    // hoist this into its catalog checks
-    def collect(p0: HPath): Seq[HPath] = {
-      if (fs.getFileStatus(p0).isDirectory)
-        fs.listStatus(p0).sortBy(_.getPath.getName).toSeq.flatMap { c =>
-          if (c.isDirectory) collect(c.getPath)
-          else if (c.getPath.getName.endsWith(".parquet")) Seq(c.getPath)
-          else Nil
-        }
-      else Seq(p0)
-    }
-    val files = collect(p).take(64)
+  private def nanosColumns(s: SparkSession, files: Seq[FileStatus]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    files.flatMap { f =>
+    val conf = s.sessionState.newHadoopConf()
+    files.filter(_.getPath.getName.endsWith(".parquet")).take(64).flatMap { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
       try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
         .toSeq.flatMap(fld => nanosFields(fld, ""))
       finally reader.close()
@@ -170,6 +154,61 @@ object Tables {
         .flatMap(f => nanosFields(f, name))
   }
 
+  /** Session confs that change what parquet schema inference returns for
+    * the same files, so they are part of a resolution's version.
+    * `mergeSchema` matters only for directory-shaped tables.
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** What a resolved schema is valid for: each data file's (path, length,
+    * mtime) and the values of [[inferenceConfs]].
+    */
+  private final case class Version(
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** Table path → the version it was last resolved at and its checked
+    * schema. One entry per path: a new file version replaces the old one,
+    * and its checks run again.
+    */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]()
+
+  /** The files Spark reads for `path`: the file itself, or every data file
+    * under a directory-shaped table, recursing into partition
+    * subdirectories and skipping `_`/`.`-prefixed names as Spark does.
+    * Empty when the path does not exist, so the read reports it.
+    */
+  private def dataFiles(s: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    def collect(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq
+        .filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .flatMap(collect)
+    try collect(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** The one resolution step for a base table.
+    *
+    * A table's schema is catalog metadata: it is inferred (one Spark job)
+    * and checked against the contract and the nanos footer sweep once per
+    * file version, then every read plans against it with
+    * `spark.read.schema(resolved).parquet(path)`, which runs no job. Data
+    * is never cached here: every query still scans the table's files.
+    * On a miss the DataFrame that did the inference is returned, so a
+    * first read costs what an unresolved read does. Two threads missing
+    * together both infer; either result is correct.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // a nanos-era events fixture fails inside Spark's footer reader
     // ("Illegal Parquet type") BEFORE the contract check unless the legacy
@@ -178,25 +217,31 @@ object Tables {
     // the contract's one-line drift error regardless of call order
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    val key = s"$sfDir/$name"
-    if (!checked.contains(key)) {
-      assertContract(name, df.schema, s"$sfDir/$name.parquet")
-      // only events.ts may ride the nanosAsLong coercion: with the conf
-      // already on from a prior events read, a nanos-drifted column in any
-      // OTHER fixture no longer fails Spark's footer conversion, so assert
-      // it against the parquet footer directly (see nanosColumns)
-      if (name != "events") {
-        val nanos = nanosColumns(spark, s"$sfDir/$name.parquet")
-        if (nanos.nonEmpty)
-          throw new IllegalStateException(
-            s"fixture schema drift: $sfDir/$name.parquet stores " +
-            s"TIMESTAMP(NANOS) column(s) ${nanos.mkString(", ")} — only " +
-            "events.ts may rely on the nanosAsLong legacy coercion")
-      }
-      checked.add(key)
+    val path = s"$sfDir/$name.parquet"
+    val files = dataFiles(spark, path)
+    val version = Version(
+      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
+      inferenceConfs.map(spark.conf.getOption))
+    resolved.get(path) match {
+      case (`version`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        assertContract(name, df.schema, path)
+        // only events.ts may ride the nanosAsLong coercion: with the conf
+        // already on from a prior events read, a nanos-drifted column in
+        // any OTHER fixture no longer fails Spark's footer conversion, so
+        // assert it against the parquet footers directly
+        if (name != "events") {
+          val nanos = nanosColumns(spark, files)
+          if (nanos.nonEmpty)
+            throw new IllegalStateException(
+              s"fixture schema drift: $path stores " +
+              s"TIMESTAMP(NANOS) column(s) ${nanos.mkString(", ")} — only " +
+              "events.ts may rely on the nanosAsLong legacy coercion")
+        }
+        resolved.put(path, (version, df.schema))
+        df
     }
-    df
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
@@ -219,11 +264,14 @@ object Tables {
     *   - TIMESTAMP → pass through.
     * Every downstream query thus always sees `ts: TIMESTAMP`.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeEventsTs(table(s, d, "events"))
+
+  /** The `events.ts` rebuild described at [[events]], for the batch reader
+    * and its streaming twin alike.
+    */
+  private[graft] def normalizeEventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))

@@ -48,94 +48,53 @@ object Streams {
           org.apache.spark.sql.types.StringType))))
       .parquet(dir)
 
-  /** The events table as a file stream (same type-adaptive ts handling as
-    * Tables.events — nanos-as-long fixtures get the µs rebuild, timestamp
-    * fixtures pass through / NTZ-cast). The file source wants a directory,
-    * and the fixture is a single file — a temp dir with one symlink bridges
-    * that (created once per (session, sf)).
-    */
+  /** Watch dirs of the table streams, one per (sfDir, table). */
   private val streamDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def eventsStream(s: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$sfDir/events.parquet").schema
-    val dir = streamDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_events_")
+  /** A base table as a file stream. The file source wants a directory,
+    * and the fixture is a single file — a temp dir with one symlink
+    * bridges that (created once per (sfDir, table)). The schema is the
+    * table's [[Tables.table]] resolution, so a warm build runs no job.
+    */
+  private def tableStream(s: SparkSession, sfDir: String,
+      name: String): DataFrame = {
+    val schema = Tables.table(s, sfDir, name).schema
+    val dir = streamDirs.computeIfAbsent(s"$sfDir#$name", { _ =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
       java.nio.file.Files.createSymbolicLink(
-        d.resolve("events.parquet"),
+        d.resolve(s"$name.parquet"),
         // toAbsolutePath: a RELATIVE sfDir would otherwise become a
         // relative symlink TARGET, which resolves against the temp
         // watch dir (not the cwd) — a broken link the file source
         // silently reads as an EMPTY stream
-        java.nio.file.Paths.get(s"$sfDir/events.parquet").toAbsolutePath)
+        java.nio.file.Paths.get(s"$sfDir/$name.parquet").toAbsolutePath)
       d.toString
     })
-    val raw = s.readStream.schema(schema).parquet(dir)
-    schema("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _                => raw
-    }
-  }
-
-  /** The documents table as a file stream (same symlink bridge as
-    * [[eventsStream]]; no timestamp rebuild needed).
-    */
-  def documentsStream(s: SparkSession, sfDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$sfDir/documents.parquet").schema
-    val dir = streamDirs.computeIfAbsent(sfDir + "#documents", { _ =>
-      val dd = java.nio.file.Files.createTempDirectory("graft_docs_")
-      java.nio.file.Files.createSymbolicLink(
-        dd.resolve("documents.parquet"),
-        // toAbsolutePath: a RELATIVE sfDir would otherwise become a
-        // relative symlink TARGET, which resolves against the temp
-        // watch dir (not the cwd) — a broken link the file source
-        // silently reads as an EMPTY stream
-        java.nio.file.Paths.get(s"$sfDir/documents.parquet").toAbsolutePath)
-      dd.toString
-    })
     s.readStream.schema(schema).parquet(dir)
   }
 
-  /** The orders table as a file stream (same symlink bridge as
-    * [[eventsStream]]; `o_orderdate` is µs parquet, no rebuild needed).
+  /** The events table as a file stream, with the same type-adaptive ts
+    * handling as Tables.events.
     */
-  def ordersStream(s: SparkSession, sfDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$sfDir/orders.parquet").schema
-    val dir = streamDirs.computeIfAbsent(sfDir + "#orders", { _ =>
-      val dd = java.nio.file.Files.createTempDirectory("graft_orders_")
-      java.nio.file.Files.createSymbolicLink(
-        dd.resolve("orders.parquet"),
-        // toAbsolutePath: a RELATIVE sfDir would otherwise become a
-        // relative symlink TARGET, which resolves against the temp
-        // watch dir (not the cwd) — a broken link the file source
-        // silently reads as an EMPTY stream
-        java.nio.file.Paths.get(s"$sfDir/orders.parquet").toAbsolutePath)
-      dd.toString
-    })
-    s.readStream.schema(schema).parquet(dir)
-  }
+  def eventsStream(s: SparkSession, sfDir: String): DataFrame =
+    Tables.normalizeEventsTs(tableStream(s, sfDir, "events"))
 
-  /** The embeddings table as a file stream (same symlink bridge as
-    * [[eventsStream]]; list<float> column streams as-is).
+  /** The documents table as a file stream. */
+  def documentsStream(s: SparkSession, sfDir: String): DataFrame =
+    tableStream(s, sfDir, "documents")
+
+  /** The orders table as a file stream (`o_orderdate` is µs parquet, no
+    * rebuild needed).
     */
-  def embeddingsStream(s: SparkSession, sfDir: String): DataFrame = {
-    val schema = s.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val dir = streamDirs.computeIfAbsent(sfDir + "#embeddings", { _ =>
-      val dd = java.nio.file.Files.createTempDirectory("graft_embs_")
-      java.nio.file.Files.createSymbolicLink(
-        dd.resolve("embeddings.parquet"),
-        // toAbsolutePath: a RELATIVE sfDir would otherwise become a
-        // relative symlink TARGET, which resolves against the temp
-        // watch dir (not the cwd) — a broken link the file source
-        // silently reads as an EMPTY stream
-        java.nio.file.Paths.get(s"$sfDir/embeddings.parquet").toAbsolutePath)
-      dd.toString
-    })
-    s.readStream.schema(schema).parquet(dir)
-  }
+  def ordersStream(s: SparkSession, sfDir: String): DataFrame =
+    tableStream(s, sfDir, "orders")
+
+  /** The embeddings table as a file stream (list<float> column streams
+    * as-is).
+    */
+  def embeddingsStream(s: SparkSession, sfDir: String): DataFrame =
+    tableStream(s, sfDir, "embeddings")
 
   /** Run `body` with a reduced shuffle-partition count — stateful
     * streaming ops allocate one state store per shuffle partition, and at

@@ -423,4 +423,41 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.detailWriteEligible(Some(prior), 0.01, 0.45, 2.0,
       force = true, sfDir = "/root/testdata/sf0.001")._1)
   }
+
+  test("detailWriteEligible: an unparseable committed total or calib " +
+      "says the slower-placement guard is off") {
+    // a slower sweep on a 1.8x-loaded placement would route to the
+    // sidecar if the prior parsed; without its calib_loaded or its
+    // anchored total the guard cannot decide, so the run lands — but
+    // not silently
+    val noCalib = prior.replace(""""calib_loaded":0.50,""", "")
+    val noTotal = prior.replace(""""metric":"total",""", "")
+    for ((p, key) <- Seq(noCalib -> "calib_loaded", noTotal -> "value")) {
+      val (ok, note) = Bench.detailWriteEligible(Some(p), 0.02, 0.90, 4.0,
+        force = false)
+      assert(ok)
+      assert(note.exists(n => n.contains(key) && n.contains("guard is off")),
+        note.toString)
+    }
+    // a prior that parses stays quiet when eligible
+    assert(Bench.detailWriteEligible(Some(prior), 0.02, 0.52, 4.0,
+      force = false) == ((true, None)))
+  }
+
+  test("sf comparison uses the normalized sf token, not the raw string") {
+    val rel = prior.replace("/root/testdata/sf0.1", "sf0.1")
+    val slow = Seq(("qa", 1.0, 2.0), ("qb", 4.4, 8.8), ("qc", 0.5, 1.0))
+    for (dir <- Seq("sf0.1", "sf0.1/", "sf0.1//", "/root/testdata/sf0.1/")) {
+      // the same sf still adjudicates (the slowdown flags) ...
+      val flags = Bench.guardFlags(rel, slow, 0.45, 0.50, dir)._1
+      assert(flags.size == 1 && flags.head.contains("qb"), s"$dir: $flags")
+      // ... and still may overwrite its own denominator
+      assert(Bench.detailWriteEligible(Some(rel), 0.01, 0.45, 2.0,
+        force = false, sfDir = dir)._1, dir)
+    }
+    // a different sf is still told apart
+    assert(Bench.guardFlags(rel, slow, 0.45, 0.50, "sf0.01/")._1.isEmpty)
+    assert(!Bench.detailWriteEligible(Some(rel), 0.01, 0.45, 2.0,
+      force = false, sfDir = "sf0.01/")._1)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** FIXTURES.md-as-code gate: pins the driver-generated parquet dtypes so a
@@ -11,9 +12,10 @@ import org.apache.spark.sql.types._
 class FixtureSchemaSpec extends SparkSuite {
 
   test("every fixture table passes the Tables contract at every sf") {
-    // schema inference is a footer read — checking all three scale dirs
-    // costs ~nothing and catches a partial regeneration (one sf updated,
-    // the others stale)
+    // schema inference is a Spark job per table and file version (30 at
+    // first read here), cheap at these sizes; checking all three scale
+    // dirs catches a partial regeneration (one sf updated, the others
+    // stale)
     Seq("sf0.001", "sf0.01", "sf0.1").foreach { sfn =>
       val dir = s"/root/testdata/$sfn"
       Tables.names.foreach { t =>
@@ -87,5 +89,123 @@ class FixtureSchemaSpec extends SparkSuite {
       .flatMap(f => Tables.nanosFields(f, ""))
     // the nested hit surfaces with its full dotted path; µs fields don't
     assert(hits == Seq("top_ns", "meta.lvl2.deep_ns"), hits.toString)
+  }
+
+  /** Spark jobs `body` launches on this thread. Its jobs carry a fresh job
+    * group; a sentinel job in a second group runs after it, and since the
+    * listener bus delivers in order, every job of `body` has been seen
+    * once the sentinel has.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val group = "fixture-jobs-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(seen.put)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map { g => assert(g != null, "listener never saw the sentinel job"); g }
+        .takeWhile(_ == group).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every table read once; events first, since its read turns the
+    * session-wide nanosAsLong conf on, and that conf is part of every
+    * table's resolved version.
+    */
+  private def warmAll(dir: String): Unit =
+    ("events" +: Tables.names).foreach(t => Tables.table(spark, dir, t))
+
+  test("warm table reads and query construction launch no Spark job") {
+    warmAll(sf)
+    Tables.names.foreach { t =>
+      assert(jobsOf(Tables.table(spark, sf, t).schema) == 0,
+        s"warm Tables.table($t) launched a job")
+    }
+    val q = SparkEntry.all.find(_.name == "dedup_exact").get
+    q.fn(spark, sf)
+    assert(jobsOf(q.fn(spark, sf)) == 0, "warm dedup_exact q.fn launched a job")
+    // the probe itself does see a resolution's inference job
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs_").toString
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/region.parquet"),
+        java.nio.file.Paths.get(s"$dir/region.parquet"))
+      assert(jobsOf(Tables.table(spark, dir, "region")) >= 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("reads through the resolved schema return the rows a plain read does") {
+    warmAll(sf)
+    Tables.names.foreach { t =>
+      val cached = Tables.table(spark, sf, t)
+      val plain = spark.read.parquet(s"$sf/$t.parquet")
+      assert(cached.schema == plain.schema, t)
+      assert(cached.collect().map(_.toString).sorted.toSeq ==
+        plain.collect().map(_.toString).sorted.toSeq, t)
+    }
+  }
+
+  test("resolved schema follows spark.sql.parquet.inferTimestampNTZ.enabled") {
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prev = spark.conf.getOption(key)
+    // a local-time (isAdjustedToUTC=false) timestamp column, written
+    // without Spark's schema metadata (which would pin the type): the
+    // encoding whose inferred type the conf flips. `ticks` has no
+    // contract, so only the resolution itself is under test.
+    val dir = java.nio.file.Files.createTempDirectory("graft_ntz_").toString
+    try {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+      val msg = Types.buildMessage()
+        .required(INT64).named("id")
+        .required(INT64).as(LogicalTypeAnnotation.timestampType(false,
+          LogicalTypeAnnotation.TimeUnit.MICROS)).named("ts")
+        .named("ticks")
+      val w = ExampleParquetWriter.builder(
+          new org.apache.hadoop.fs.Path(s"$dir/ticks.parquet"))
+        .withType(msg).build()
+      try w.write(new SimpleGroupFactory(msg).newGroup()
+        .append("id", 1L).append("ts", 1700000000000000L))
+      finally w.close()
+      // each toggle: the first read re-resolves, the second is served from
+      // the cache; a cache blind to the conf would serve the old schema
+      val schemas = Seq("true", "false", "true").map { v =>
+        spark.conf.set(key, v)
+        for ((d, t) <- Tables.names.map(sf -> _) :+ (dir -> "ticks"); _ <- 1 to 2)
+          assert(Tables.table(spark, d, t).schema ==
+            spark.read.parquet(s"$d/$t.parquet").schema, s"$d/$t with $key=$v")
+        Tables.table(spark, dir, "ticks").schema("ts").dataType
+      }
+      assert(schemas == Seq(TimestampNTZType, TimestampType, TimestampNTZType))
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a table rewritten in place is checked again") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite_").toString
+    try {
+      Seq((0, "AFRICA"), (1, "AMERICA")).toDF("r_regionkey", "r_name")
+        .write.parquet(s"$dir/region.parquet")
+      assert(Tables.table(spark, dir, "region").count() == 2)
+      Seq((0, 7), (1, 8)).toDF("r_regionkey", "r_name")
+        .write.mode("overwrite").parquet(s"$dir/region.parquet")
+      val ex = intercept[IllegalStateException](Tables.table(spark, dir, "region"))
+      assert(ex.getMessage.contains("'r_name'") && ex.getMessage.contains("int"),
+        ex.getMessage)
+      assert(!ex.getMessage.contains("\n"), "drift error spans lines")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }
