@@ -230,14 +230,7 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     generate(spark, src, out, factor,
       holdHotParts = args.lift(3).map(_.toInt).getOrElse(0),
       holdHotUsers = args.lift(4).map(_.toInt).getOrElse(0))

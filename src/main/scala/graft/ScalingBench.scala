@@ -173,9 +173,7 @@ object ScalingBench {
       System.err.println(s"[scaling] ${q.name} @ $pn failed: $e")
       Double.NaN
     }
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    Harness.release(spark)
     (t, rows)
   }
 
@@ -264,16 +262,9 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("SCALING.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       "target/scaling")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // scale points: (relative scale, fixture dir); sf0.1 is the
     // driver-generated original, the rest are ScaleGen amplifications.
     // At 1× the skew corpus IS the base corpus (copy 0 never shifts),
@@ -313,16 +304,7 @@ object ScalingBench {
       ScaleGen.generate(spark, src, dir, f.toInt,
         holdHotUsers = hotUserHeld)
     }
-    // the same warm-up discipline as Bench: JVM/codegen/streaming init
-    // must not land on the first timed kernel
-    try {
-      spark.read.parquet(s"$src/lineitem.parquet").limit(100).count()
-      val w = spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", "10").load()
-        .groupBy("value").count()
-      graft.streaming.Streams.runToTable(w, "complete", 2).count()
-    } catch { case t: Throwable =>
-      System.err.println(s"[scaling-warmup] $t") }
+    Harness.warmUp(spark, src)
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     val mainRows = sweep(spark,
       scaleQueries.flatMap(byName.get),

@@ -1,14 +1,7 @@
 package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
-    // same harness-width contract as Bench/Verify/Profile
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     df.show(1, 60)

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * [[ivfpqTopK]]) runs its k-means training collects (bounded: KB-sized
   * codebooks) at CALL time and leaves the routing assignment cached
   * until released. Long-lived sessions issuing many such
-  * calls should release blocks between calls:
-  * `spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))`.
+  * calls should release blocks between calls with
+  * `graft.Harness.release(spark)`.
   */
 object Graft {
 

@@ -1503,9 +1503,6 @@ object Analytics {
         .join(bcastUpTo(visited, vcnt, 4000000L),
           Seq("node"), "left_anti")
         .withColumn("hops", lit(h))
-      // plan-audit hook (see labelPropagationOf)
-      if (h == 1L && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
       // LAZY: the loop-condition count materializes the round's
       // blocks in its own job — one job per round, not two
       val nxt = round.localCheckpoint(false)
@@ -1570,9 +1567,6 @@ object Analytics {
         .select(col("dst").as("node"), (col("d") + col("cost")).as("cost"))
         .unionAll(dist)
         .groupBy("node").agg(min(col("cost")).as("cost"))
-      // plan-audit hook (see labelPropagationOf)
-      if (r == 1 && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
       dist = round.localCheckpoint(false)
     }
     dist
@@ -1640,10 +1634,6 @@ object Analytics {
         .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl")))
           .as("lbl"))
         .select(col("src").as("node"), col("lbl"))
-      // plan-audit hook: the per-round frames are checkpoint-truncated,
-      // so a caller-side explain can never show the round shape
-      if (i == 1 && sys.env.contains("GRAFT_EXPLAIN_ROUNDS"))
-        round.explain("formatted")
       labels = round.localCheckpoint(false)
     }
     labels.select(col("node"), col("lbl").as("community"))
@@ -1657,7 +1647,7 @@ object Analytics {
     * unpinned the lineitem explode would replay per consumer (same
     * contract the minhash callers honor for `collapseClustersLogN`).
     */
-  private def thresholdedCopurchaseEdges(s: SparkSession, d: String,
+  private[graft] def thresholdedCopurchaseEdges(s: SparkSession, d: String,
       aName: String, bName: String,
       supportName: Option[String] = None): DataFrame = {
     val counted = Tables.lineitem(s, d)

@@ -552,10 +552,7 @@ object Dedup {
       (edges.count() / 50000L + 1L).toInt)
     var converged = false
     var it = 0
-    // dev hook: GRAFT_DEBUG_ROUNDS=1 prints per-round star/check walls
-    val dbg = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     while (!converged && it < maxRounds) {
-      val tDbgR = if (dbg) System.nanoTime() else 0L
       // large-star: for each node u over its full neighborhood (both
       // orientations), attach strictly-larger neighbors to min(nbr, u)
       val nbrs = edges
@@ -603,7 +600,6 @@ object Dedup {
       // round-overhead-dominated sizes the job shape per round IS the
       // cost, not the rows.
       edges = small
-      val tDbg0 = if (dbg) System.nanoTime() else 0L
       // The ROUND-1 probe is skipped: star contraction converges in one
       // round only on an input that is already a min-labeled depth-1
       // star, and at the fixpoint both stars are IDEMPOTENT (they
@@ -625,8 +621,6 @@ object Dedup {
         converged = violations.isEmpty
       }
       it += 1
-      if (dbg)
-        System.err.println(f"[collapse] round $it stars=${(tDbg0 - tDbgR) / 1e9}%.3f viol=${(System.nanoTime() - tDbg0) / 1e9}%.3f")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -528,6 +528,17 @@ class DedupSpec extends SparkSuite {
       s"algorithms disagree: ${viaStar.toSet.diff(viaProp.toSet)}")
   }
 
+  test("collapseClustersLogN throws at its round cap instead of returning unsettled stars") {
+    import spark.implicits._
+    // a 60-node path needs more than 2 star rounds to settle into one
+    // root star, so a 2-round budget must fail loudly
+    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val ex = intercept[IllegalStateException] {
+      operators.Dedup.collapseClustersLogN(chain, maxRounds = 2)
+    }
+    assert(ex.getMessage.contains("did not stabilize"), ex.getMessage)
+  }
+
   test("dedup_exact is idempotent") {
     val q = SparkEntry.queries("dedup_exact")
     val once = q(spark, sf)

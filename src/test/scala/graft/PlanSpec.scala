@@ -591,9 +591,7 @@ class PlanSpec extends SparkSuite {
     // a prior suite may have cached an IDENTICAL adjacency frame (the
     // CacheManager dedupes by plan), which would satisfy this query with
     // zero lineitem input and starve the counter — start cold
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    Harness.release(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(groupId, "pagerank scan-count probe")
@@ -636,9 +634,7 @@ class PlanSpec extends SparkSuite {
           read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
     }
     val liRows = Tables.lineitem(spark, sf).count()
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    Harness.release(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setJobGroup(groupId, "basket lift scan-count probe")
@@ -746,5 +742,59 @@ class PlanSpec extends SparkSuite {
       val scans = "Scan parquet".r.findAllIn(p).size
       assert(scans <= 1, s"$name: expected ≤1 fact scan, got $scans")
     }
+  }
+
+  test("graph kernel rounds plan the exchanges their layout promises") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // Every round frame is lazily localCheckpoint'ed, which truncates its
+    // plan, so no caller-side explain can show the round shape. The
+    // "localCheckpoint" action reports each round's executed plan to a
+    // QueryExecutionListener; count its shuffles (exchanges built into a
+    // cached frame's plan are not the round's and are not counted).
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shuffles = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          shuffles.add(helper.collect(qe.executedPlan) {
+            case x: ShuffleExchangeLike => x }.size)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // shuffle counts of every checkpoint the kernel made, in call order
+    def checkpointShuffles(run: => org.apache.spark.sql.DataFrame)
+        : Seq[Int] = {
+      shuffles.clear()
+      spark.listenerManager.register(listener)
+      try {
+        run.collect()
+        // listener events are async: wait until the queue is stable
+        var last = -1; var spins = 0
+        while (shuffles.size != last && spins < 50) {
+          last = shuffles.size; Thread.sleep(100); spins += 1
+        }
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      shuffles.asScala.toSeq
+    }
+    val a = operators.Analytics
+    val edges = a.thresholdedCopurchaseEdges(spark, sf, "u", "v", Some("n"))
+    val pairs = edges.select("u", "v")
+    val source = edges.agg(min(col("u"))).head.getLong(0)
+    // label propagation and BFS pre-partition their edges once: ZERO
+    // exchanges in every round (and in the seed frames before them)
+    val lpa = checkpointShuffles(a.labelPropagationOf(pairs, iters = 5))
+    assert(lpa.size == 6 && lpa.forall(_ == 0), s"LPA: $lpa")
+    val bfs = checkpointShuffles(a.shortestHopsOf(pairs, source, maxHops = 30))
+    assert(bfs.size >= 2 && bfs.forall(_ == 0), s"BFS: $bfs")
+    // shortest cost: one node-sized min-combine exchange per round, after
+    // the shuffle-free edge and seed checkpoints
+    val cost = checkpointShuffles(a.shortestCostOf(
+      edges.withColumn("cost", expr("1000000L div n")), source, rounds = 10))
+    assert(cost == Seq(0, 0) ++ Seq.fill(10)(1), s"shortest cost: $cost")
   }
 }

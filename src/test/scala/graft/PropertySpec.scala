@@ -140,13 +140,8 @@ class PropertySpec extends SparkSuite {
     // its adjacency, and CacheManager plan-matching would otherwise serve
     // the FIRST pass's materialization to the second — silently skipping
     // the re-shuffle this test exists to exercise
-    def clearBlocks(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     def rows(name: String): Seq[String] = {
-      clearBlocks()
+      Harness.release(spark)
       SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
     }
     val conf = spark.conf
@@ -157,7 +152,10 @@ class PropertySpec extends SparkSuite {
       names.foreach { n =>
         assert(rows(n) == base(n), s"$n differs under 7 partitions")
       }
-    } finally { conf.set("spark.sql.shuffle.partitions", prev); clearBlocks() }
+    } finally {
+      conf.set("spark.sql.shuffle.partitions", prev)
+      Harness.release(spark)
+    }
   }
 
   test("skyline == brute-force dominance on random point sets (10 cases)") {
