@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one driver setup every entry point (Bench, ScalingBench, Profile,
   * Verify, Smoke, ScaleGen) shares: the session, the untimed warm-up and
-  * the block release between measured queries.
+  * the block release between measured queries. [[withConfs]] is the one
+  * scoped session-conf change every operator uses.
   *
   * The session is `local[cpus]` with `cpus` shuffle partitions, where
   * `cpus` is `SPARK_GRAFT_CPUS` (the driver exports it) or else the
@@ -37,15 +38,30 @@ object Harness {
       spark.range(10).select(org.apache.spark.sql.functions.sum("id")).count()
       // streaming machinery (incremental planner, state-store managers,
       // RocksDB native library) is also one-time init, not operator cost
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val w = spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", "10").load()
-        .groupBy("value").count()
-      graft.streaming.Streams.runToTable(w, "complete", 2).count()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        val w = spark.readStream.format("rate-micro-batch")
+          .option("rowsPerBatch", "10").load()
+          .groupBy("value").count()
+        graft.streaming.Streams.runToTable(w, "complete", 2).count()
+      }
     } catch { case t: Throwable =>
       System.err.println(s"[warmup] failed: $t") }
+
+  /** Run `body` with each `key -> value` set on the session, then put
+    * every key back as it was: its prior value, or unset if it had none.
+    * The restore runs in `finally`, so a throwing body leaks no conf.
+    */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   /** Release every block a query pinned (persist + localCheckpoint).
     * Leaked blocks otherwise crowd the unified-memory storage region and

@@ -56,18 +56,12 @@ object ScaleGen {
     // save/restore the session-wide legacy conf instead of leaking it:
     // ScalingBench calls this mid-run and unrelated reads must not
     // silently inherit the nanos coercion (ADVICE r20)
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try spark.read.parquet(s"$src/events.parquet")
-      .where(col("user_id") < 100)
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("user_id"))
-      .limit(n).collect().map(_.getLong(0)).toSeq
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    Harness.withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      spark.read.parquet(s"$src/events.parquet")
+        .where(col("user_id") < 100)
+        .groupBy("user_id").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("user_id"))
+        .limit(n).collect().map(_.getLong(0)).toSeq)
   }
 
   /** Union of `factor` copies of `df`, with each column in `offs`
@@ -174,11 +168,7 @@ object ScaleGen {
       val tgt = java.nio.file.Paths.get(out, s"$t.parquet")
       java.nio.file.Files.deleteIfExists(tgt)
       java.nio.file.Files.move(part, tgt)
-      scala.util.Using.resource(
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)))(
-        _.iterator().asScala.toSeq).reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: Exception => () })
+      graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(tmp))
     }
     def keyMax(t: String, c: String): Long =
       pow10Above(read(t).agg(max(col(c))).head().getLong(0))

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Harness.withConfs
 import graft.functions._
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the embedding store
@@ -82,11 +84,10 @@ object Ann {
       // session was silently rewritten to an approximate scan. Instead,
       // execute the k-row result eagerly under the flag (localCheckpoint
       // materializes the optimized — i.e. rewritten — plan distributedly;
-      // k bounds the footprint) and always drop the flag in `finally`.
+      // k bounds the footprint) and restore the session's prior value.
       // ExtensionsSpec proves a subsequent exact top-k is NOT rewritten.
-      s.conf.set(AnnTopKRewrite.EnabledKey, "true")
-      try exact.localCheckpoint(true)
-      finally s.conf.unset(AnnTopKRewrite.EnabledKey)
+      withConfs(s, AnnTopKRewrite.EnabledKey -> "true")(
+        exact.localCheckpoint(true))
     },
 
     // Self-contained IVF: cells come from a few distributed k-means
@@ -171,7 +172,7 @@ object Ann {
       val probe = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(col("embedding").as("probe"))
       val cells = routeCells(s, dir, probe, nprobe = 3)
-      readLayer(s, s"${indexRoot(dir)}/cells")
+      readLayer(s, s"${Streams.storeDataDir(dir)}/cells")
         .where(col("cell").isin(cells.toIndexedSeq: _*))
         .where(col("vec_id") =!= 0)
         .crossJoin(broadcast(probe))
@@ -208,12 +209,7 @@ object Ann {
       val census = ivfCompact(s, dir, rebuildChurn = 0.2)
       // the census is a k-row driver-local frame, so the scratch
       // generation can be reclaimed immediately
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(
-        java.nio.file.Files.walk(java.nio.file.Paths.get(dir)))(
-        _.iterator().asScala.toSeq).reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: Exception => () })
+      Streams.deleteTree(java.nio.file.Paths.get(dir))
       census
     },
 
@@ -231,7 +227,7 @@ object Ann {
       val probe = Tables.embeddings(s, d).where(col("vec_id") === 0)
         .select(lit(0L).as("probe_id"), col("embedding").as("probe"))
       val cells = routeCells(s, dir, probe, nprobe = 3)
-      val root = indexRoot(dir)
+      val root = Streams.storeDataDir(dir)
       val codes = readLayer(s, s"$root/pq_codes")
         .where(col("cell").isin(cells.toIndexedSeq: _*))
         .where(col("id") =!= 0)
@@ -264,8 +260,8 @@ object Ann {
       val cells = routeCells(s, dir, Tables.embeddings(s, d)
         .where(col("vec_id") === 0).select(col("embedding").as("probe")),
         nprobe = 3)
-      graphSearchCells(s, s"${indexRoot(dir)}/graph", cells.toIndexedSeq,
-          probeRow, k = 10, ef = 48)
+      graphSearchCells(s, s"${Streams.storeDataDir(dir)}/graph",
+          cells.toIndexedSeq, probeRow, k = 10, ef = 48)
         .where(col("vec_id") =!= 0)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("score").desc, col("vec_id"))
@@ -520,7 +516,7 @@ object Ann {
       // rank all k=4 cells per probe by centroid cosine — the routing
       // table stays a DATAFRAME (no driver collect: the curve reads all
       // cells anyway, so static partition pruning buys nothing here)
-      val root = indexRoot(dir)
+      val root = Streams.storeDataDir(dir)
       val ranked = s.read.parquet(s"$root/centroids")
         .crossJoin(broadcast(probes))
         .withColumn("cell_rank", row_number().over(
@@ -578,7 +574,7 @@ object Ann {
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
       // ONE routing pass for all probes (k centroid rows × 4 probes →
       // 12 bounded driver-side pairs, the routeCells precedent)
-      val root = indexRoot(dir)
+      val root = Streams.storeDataDir(dir)
       val routingRows = s.read.parquet(s"$root/centroids")
         .crossJoin(broadcast(probeFrame))
         .withColumn("rn", row_number().over(w0.partitionBy("probe_id")
@@ -868,23 +864,6 @@ object Ann {
       dir
     })
 
-  /** Resolve the LIVE layer root of a persisted index: `$dir/gen-N` when
-    * an atomic `CURRENT` pointer exists (an index that has been
-    * compacted at least once — see [[ivfCompact]]'s generation publish),
-    * else `dir` itself (a fresh [[writeIndexLayers]] build — implicit
-    * generation 0). Every reader resolves through this, so a compaction
-    * cut-over is one pointer flip and a reader mid-compaction always
-    * sees one whole generation (the vector STORE's `upsertGeneration`
-    * discipline, extended to the multi-layer index).
-    */
-  private[graft] def indexRoot(dir: String): String = {
-    val cur = java.nio.file.Paths.get(dir, "CURRENT")
-    if (java.nio.file.Files.isRegularFile(cur))
-      dir + "/" + new String(java.nio.file.Files.readAllBytes(cur),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-    else dir
-  }
-
   /** Read a cell-PARTITIONED index layer with partition-column type
     * inference OFF, so `cell` always comes back as the STRING it was
     * written as ([[writeIndexLayers]] pins the type before the write).
@@ -895,16 +874,10 @@ object Ann {
     * eager `load()` and restored immediately.
     */
   private[graft] def readLayer(s: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.spark.sql.DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try s.read.parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+      path: String): org.apache.spark.sql.DataFrame =
+    withConfs(s,
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")(
+      s.read.parquet(path))
 
   /** Carry an UNTOUCHED layer (or single partition directory) from the
     * old generation into the new one without opening a single data
@@ -932,61 +905,6 @@ object Ann {
         }
       }
     }
-  }
-
-  /** Layer directories a generation is made of — both the bare
-    * implicit-generation-0 layout and every `gen-N` directory hold a
-    * subset of exactly these.
-    */
-  private val IndexLayerDirs = Seq("cells", "centroids", "graph",
-    "pq_codes", "pq_codebook", "tombstones")
-
-  /** Atomically PUBLISH a fully-written generation directory: write
-    * `CURRENT.tmp`, ATOMIC_MOVE onto `CURRENT`, then GC everything
-    * EXCEPT the generation just superseded. The superseded generation
-    * is GRACE-RETAINED in full (data layers AND its tombstones) until
-    * the NEXT publish — a reader that resolved [[indexRoot]] just
-    * before the flip keeps scanning intact files and still sees the
-    * exact pre-publish live view (the vector store's retain-one
-    * discipline, extended to the multi-layer index). Generations older
-    * than the retained pair are unreachable by any reader that started
-    * after the PREVIOUS publish and are reclaimed here.
-    *
-    * Crash safety is unchanged: a crash before the move leaves the old
-    * generation (including its tombstones) fully live; a crash after
-    * it leaves only the grace copy, which the next publish reclaims.
-    * Tombstone consumption remains PART of the generation commit — the
-    * new generation is born with no tombstones directory.
-    */
-  private[graft] def publishGeneration(dir: String, gen: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(dir)
-    val oldRoot = java.nio.file.Paths.get(indexRoot(dir))
-    val tmp = root.resolve("CURRENT.tmp")
-    java.nio.file.Files.write(tmp,
-      gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, root.resolve("CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    def deleteTree(p: java.nio.file.Path): Unit =
-      scala.util.Using.resource(java.nio.file.Files.walk(p))(
-        _.iterator().asScala.toSeq).reverse
-        .foreach(q => try java.nio.file.Files.deleteIfExists(q)
-          catch { case _: Exception => () })
-    // retain the new generation and the one it superseded; GC the rest
-    val keep = Set(gen, oldRoot.getFileName.toString)
-    scala.util.Using.resource(java.nio.file.Files.list(root))(
-      _.iterator().asScala.toSeq).foreach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith("gen-") &&
-          name.stripPrefix("gen-").forall(_.isDigit) && !keep(name))
-        deleteTree(p)
-    }
-    if (oldRoot != root)
-      // the bare implicit-generation-0 layers are now two publishes
-      // old — no reader can still hold them; reclaim
-      IndexLayerDirs.map(root.resolve)
-        .filter(java.nio.file.Files.exists(_))
-        .foreach(deleteTree)
   }
 
   /** Write one index GENERATION from a (vec_id, embedding, cell)
@@ -1063,7 +981,7 @@ object Ann {
     */
   private[graft] def ivfDelete(s: org.apache.spark.sql.SparkSession,
       dir: String, deleteIds: org.apache.spark.sql.DataFrame): Unit = {
-    val root = indexRoot(dir)
+    val root = Streams.storeDataDir(dir)
     readLayer(s, s"$root/cells")
       .join(deleteIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("cell"))
@@ -1083,7 +1001,7 @@ object Ann {
     */
   private[graft] def ivfIngest(s: org.apache.spark.sql.SparkSession,
       dir: String, vecs: org.apache.spark.sql.DataFrame): Unit = {
-    val root = indexRoot(dir)
+    val root = Streams.storeDataDir(dir)
     assignToCentroids(vecs.select("vec_id", "embedding"),
         s.read.parquet(s"$root/centroids"))
       .write.mode("append").partitionBy("cell")
@@ -1096,7 +1014,7 @@ object Ann {
     */
   private[graft] def ivfLiveCells(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val root = indexRoot(dir)
+    val root = Streams.storeDataDir(dir)
     val cells = readLayer(s, s"$root/cells")
     if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(root, "tombstones"))) cells
@@ -1113,17 +1031,22 @@ object Ann {
     * checkpoint blocks.
     *
     * CRASH-SAFE PUBLISH: compaction never rewrites the live generation
-    * in place. Every surviving layer is written to a fresh `gen-N`
-    * directory under the index dir (untouched cell partitions carried
-    * over as hard links — zero data files opened), and the cut-over is
-    * [[publishGeneration]]'s single atomic CURRENT flip, after which
-    * the superseded generation — INCLUDING its tombstones: consumption
-    * is part of the commit — is GC'd. A crash anywhere before the flip
-    * leaves the old generation fully live with its tombstones intact
-    * (the live view is unchanged, and re-running compaction redoes the
-    * work idempotently); a reader mid-compaction always sees one whole
-    * generation. This is the vector STORE's `upsertGeneration`
-    * discipline extended to the multi-layer index.
+    * in place. The index dir follows the generation protocol of every
+    * file-backed store (`Streams.publishGeneration`): a fresh build is
+    * generation 0 in the bare dir, every reader resolves the live
+    * generation through `Streams.storeDataDir`, and every surviving
+    * layer is written to `Streams.nextGeneration` (untouched cell
+    * partitions carried over as hard links — zero data files opened).
+    * The cut-over is the single atomic CURRENT flip. Tombstone
+    * consumption is part of the commit: the new generation is born
+    * without a tombstones directory, while the superseded one —
+    * tombstones included — is retained until the NEXT publish, so a
+    * reader that resolved it just before the flip still sees the exact
+    * pre-publish live view. A crash anywhere before the flip leaves the
+    * old generation fully live with its tombstones intact (the live
+    * view is unchanged, and re-running compaction redoes the work
+    * idempotently); a reader mid-compaction always sees one whole
+    * generation.
     *
     * If total churn (tombstoned/total) exceeds `rebuildChurn`, the
     * k-means coarse quantizer itself is re-run on the surviving vectors
@@ -1149,7 +1072,7 @@ object Ann {
       publish: Boolean = true)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val root = indexRoot(dir)
+    val root = Streams.storeDataDir(dir)
     val before = readLayer(s, s"$root/cells")
       .groupBy("cell").agg(count(lit(1)).as("n_before"))
     def censusFrame(rows: Seq[(String, Long, Long, Long, String)]) =
@@ -1178,12 +1101,7 @@ object Ann {
       java.nio.file.Paths.get(root, "graph"))
     val withPq = java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(root, "pq_codes"))
-    val curGen =
-      if (root == dir) 0
-      else java.nio.file.Paths.get(root).getFileName.toString
-        .stripPrefix("gen-").toInt
-    val gen = s"gen-${curGen + 1}"
-    val next = s"$dir/$gen"
+    val next = Streams.nextGeneration(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(next))
     // materialize the survivors once: k-means (rebuild path) or the
     // three layer writes (rewrite path) would each replay the anti-join
@@ -1230,7 +1148,7 @@ object Ann {
       }
     }
     live.unpersist(blocking = false)
-    if (publish) publishGeneration(dir, gen)
+    if (publish) Streams.publishGeneration(dir, next)
     censusFrame(census.map { case (c, nb, nt, nl) =>
       (c, nb, nt, nl,
         if (rebuilt) "rebuilt" else if (nt > 0) "rewritten" else "kept")
@@ -1244,7 +1162,7 @@ object Ann {
     */
   private def routeCells(s: org.apache.spark.sql.SparkSession, dir: String,
       probe: org.apache.spark.sql.DataFrame, nprobe: Int): Array[String] =
-    s.read.parquet(s"${indexRoot(dir)}/centroids")
+    s.read.parquet(s"${Streams.storeDataDir(dir)}/centroids")
       .crossJoin(broadcast(probe.select(col("probe"))))
       .select(col("cell"), cosine_sim(col("cent"), col("probe")).as("cs"))
       .orderBy(col("cs").desc, col("cell"))

@@ -33,12 +33,7 @@ object Extended {
         s.sql(s"DROP TABLE IF EXISTS $name")
         val wh = java.net.URI.create(
           s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = java.nio.file.Paths.get(wh, name)
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(wh, name))
       }
       reset(ot); reset(lt)
       Tables.orders(s, d).write.mode("overwrite")
@@ -221,20 +216,15 @@ object Extended {
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       val repl = ev.where(col("event_type") === "click" && col("value") >= 100)
       // dynamic overwrite with an EMPTY frame writes no partitions and
       // silently leaves the old 'click' partition in place — fail loudly
       // instead of diverging from the oracle on a degenerate fixture
       require(!repl.isEmpty,
         "sink_partitioned_overwrite: fixture has no 'click' rows with value >= 100")
-      try
-        repl.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.Harness.withConfs(s,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        repl.write.mode("overwrite").partitionBy("event_type").parquet(tmp))
       s.read.parquet(tmp)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -660,26 +650,21 @@ object Extended {
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
       Tables.orders(s, d).createOrReplaceTempView("orders_script")
-      val prev = s.conf.getOption("spark.sql.scripting.enabled")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      try s.sql(
-        """BEGIN
-          |  DECLARE total DOUBLE DEFAULT 0d;
-          |  DECLARE i INT DEFAULT 0;
-          |  WHILE i < 10 DO
-          |    SET total = total + power(0.5d, i);
-          |    SET i = i + 1;
-          |  END WHILE;
-          |  SELECT o_orderstatus, count(*) AS n,
-          |    round(total, 6) AS geo_sum
-          |  FROM orders_script
-          |  GROUP BY o_orderstatus
-          |  ORDER BY o_orderstatus;
-          |END""".stripMargin)
-      finally prev match {
-        case Some(p) => s.conf.set("spark.sql.scripting.enabled", p)
-        case None => s.conf.unset("spark.sql.scripting.enabled")
-      }
+      graft.Harness.withConfs(s, "spark.sql.scripting.enabled" -> "true")(
+        s.sql(
+          """BEGIN
+            |  DECLARE total DOUBLE DEFAULT 0d;
+            |  DECLARE i INT DEFAULT 0;
+            |  WHILE i < 10 DO
+            |    SET total = total + power(0.5d, i);
+            |    SET i = i + 1;
+            |  END WHILE;
+            |  SELECT o_orderstatus, count(*) AS n,
+            |    round(total, 6) AS geo_sum
+            |  FROM orders_script
+            |  GROUP BY o_orderstatus
+            |  ORDER BY o_orderstatus;
+            |END""".stripMargin))
     },
   )
 

@@ -76,6 +76,40 @@ object Rag {
       replace(lit(PromptTemplate), lit("{{question}}"), question),
       lit("{{information}}"), information)
 
+  /** A9 context aggregate: the `text` of every row joined with "\n\n" in
+    * descending `score` order (RAG.java:76-78), ties broken by the
+    * `tieBreak` column the caller's top-k already sorts on.
+    */
+  private def contextOf(tieBreak: Option[String]): Column =
+    array_join(
+      transform(
+        array_sort(collect_list(struct(
+          (negate(col("score")).as("ns") +: tieBreak.map(col(_).as("v")).toSeq
+            :+ col("text").as("t")): _*))),
+        x => x.getField("t")),
+      "\n\n")
+
+  /** The answer tail (A9–A11) over scored top-k rows (question, text,
+    * score, and `tieBreak` when given): per question the context, the
+    * rendered prompt, and the extractive mock answer — the first sentence
+    * of the best match, a deterministic stand-in for the chat call at
+    * RAG.java:87-98.
+    */
+  private[graft] def answerTail(scored: DataFrame, tieBreak: Option[String])
+      : DataFrame =
+    scored
+      .groupBy(col("question"))
+      .agg(
+        contextOf(tieBreak).as("context"),
+        max(struct(col("score") +: tieBreak.map(col).toSeq :+ col("text"): _*))
+          .as("best"))
+      .select(
+        col("question"),
+        col("context"),
+        renderPrompt(col("question"), col("context")).as("prompt"),
+        concat(lit("[extractive] "),
+          substring_index(col("best.text"), ".", 1)).as("answer"))
+
   /** Greedy MMR selection over a BOUNDED candidate frame (vec_id,
     * embedding ARRAY<FLOAT>, rel DOUBLE) — re-exported as
     * `graft.api.Graft.mmrRerank`. Candidates are O(pool) by construction
@@ -162,14 +196,7 @@ object Rag {
         |  ORDER BY score DESC, vec_id LIMIT 10)""".stripMargin) { (s, d) =>
       // A9: texts of the top-k matches joined with "\n\n" in score order
       // (RAG.java:76-78). Deterministic: sort_array on (-score, vec_id).
-      val top = knnTopKWithText(s, d)
-      top.agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(negate(col("score")).as("ns"),
-              col("vec_id").as("v"), col("text").as("t")))),
-            x => x.getField("t")),
-          "\n\n").as("context"))
+      knnTopKWithText(s, d).agg(contextOf(Some("vec_id")).as("context"))
     },
 
     Q("rag_prompt_render",
@@ -276,21 +303,6 @@ object Rag {
       .where(col("score") >= 0.0)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(10)
-    scored
-      .groupBy(col("question"))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(negate(col("score")).as("ns"),
-              col("doc_id").as("v"), col("text").as("t")))),
-            x => x.getField("t")),
-          "\n\n").as("context"),
-        max(struct(col("score"), col("doc_id"), col("text"))).as("best"))
-      .select(
-        col("question"),
-        col("context"),
-        renderPrompt(col("question"), col("context")).as("prompt"),
-        concat(lit("[extractive] "),
-          substring_index(col("best.text"), ".", 1)).as("answer"))
+    answerTail(scored, tieBreak = Some("doc_id"))
   }
 }

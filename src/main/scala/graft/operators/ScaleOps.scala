@@ -73,20 +73,12 @@ object ScaleOps {
     * broadcast-able, which would bypass the feature being exercised);
     * always restores the previous session confs.
     */
-  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
+  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T =
+    graft.Harness.withConfs(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The un-hinted CBO program shared by `stats_cbo_join_reorder` and
     * PlanSpec: six cached temp views with ANALYZE'd statistics, CBO +
@@ -122,8 +114,6 @@ object ScaleOps {
       reorder: Boolean)(body: => T): T = {
     val tables = Seq("region", "nation", "customer", "orders",
       "lineitem", "supplier")
-    val prev = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      .map(k => k -> s.conf.getOption(k))
     try {
       tables.foreach { t =>
         // ANALYZE refuses temp views (EXPECT_PERMANENT_VIEW_NOT_TEMP), so
@@ -134,16 +124,10 @@ object ScaleOps {
         s.sql(s"CREATE TABLE cbo_$t USING parquet LOCATION '$d/$t.parquet'")
         s.sql(s"ANALYZE TABLE cbo_$t COMPUTE STATISTICS")
       }
-      s.conf.set("spark.sql.cbo.enabled", reorder.toString)
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", reorder.toString)
-      body
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-      tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS cbo_$t"))
-    }
+      graft.Harness.withConfs(s,
+        "spark.sql.cbo.enabled" -> reorder.toString,
+        "spark.sql.cbo.joinReorder.enabled" -> reorder.toString)(body)
+    } finally tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS cbo_$t"))
   }
 
   val defs: Seq[Q] = Seq(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.Harness.withConfs
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -511,8 +512,9 @@ object Streaming {
 
     // Streaming materialized view: each micro-batch's PARTIAL aggregate
     // (day × type: count + exact decimal sum — both re-mergeable) is
-    // merged into a persisted rollup store via the gen-N + atomic-CURRENT
-    // protocol (Streams.upsertGeneration). Merge work is rollup-sized,
+    // merged into a persisted rollup store via the generation protocol
+    // every file-backed store shares (Streams.upsertGeneration over
+    // Streams.publishGeneration). Merge work is rollup-sized,
     // not raw-sized; the final store is oracled against the batch answer
     // over all events, and StreamingSpec proves the store equals the
     // batch answer after EVERY micro-batch, not just the last.
@@ -711,11 +713,8 @@ object Streaming {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
       (s, d) =>
       import s.implicits._
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val evs = Streams.eventsStream(s, d)
           .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
         val updates = evs.groupByKey(_.event_type)
@@ -728,11 +727,6 @@ object Streaming {
         val out = Streams.runToTable(updates, "update", statePartitions = 2)
         out.groupBy("event_type").agg(max("mx").as("mx"))
           .orderBy("event_type")
-      } finally prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -764,11 +758,8 @@ object Streaming {
         |FROM c JOIN l ON c.user_id = l.user_id
         |ORDER BY c.user_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val evs = Streams.eventsStream(s, d).where(col("user_id") < 50)
           .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
         val updates = evs.groupByKey(_.user_id)
@@ -792,11 +783,6 @@ object Streaming {
             max_by(col("last3"), pick).as("last3"),
             max_by(col("type_counts"), pick).as("type_counts"))
           .orderBy("user_id")
-      } finally prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -1048,11 +1034,8 @@ object Streaming {
         |WHERE end_us + 1800000000 < wm_us
         |ORDER BY user_id, start_us""".stripMargin) { (s, d) =>
       import s.implicits._
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val evs = Streams.eventsStream(s, d)
           .withWatermark("ts", "10 minutes")
           .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
@@ -1064,11 +1047,6 @@ object Streaming {
           .toDF()
         val out = Streams.runToTable(sessions, "update", statePartitions = 2)
         out.orderBy("user_id", "start_us")
-      } finally prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -1157,7 +1135,7 @@ object Streaming {
     // against the batch nearest-centroid recompute exactly.
     Q.noOracle("stream_ann_ingest") { (s, d) =>
       val dir = Ann.ivfIndex(s, d)
-      val cents = s.read.parquet(s"${Ann.indexRoot(dir)}/centroids")
+      val cents = s.read.parquet(s"${Streams.storeDataDir(dir)}/centroids")
       val ingest = java.nio.file.Files
         .createTempDirectory("graft_ann_ingest_").toString
       val q = Streams.embeddingsStream(s, d).writeStream
@@ -1216,7 +1194,7 @@ object Streaming {
       // at-least-once, so a replayed epoch re-appends its tombstones —
       // the census must count deletes, not deliveries (the same
       // discipline ivfCompact's census applies)
-      val tomb = Ann.readLayer(s, s"${Ann.indexRoot(dir)}/tombstones")
+      val tomb = Ann.readLayer(s, s"${Streams.storeDataDir(dir)}/tombstones")
         .select(col("cell").cast("string").as("cell"), col("vec_id"))
         .distinct()
         .groupBy("cell")

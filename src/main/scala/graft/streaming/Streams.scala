@@ -101,20 +101,21 @@ object Streams {
     * test scale 32 near-empty stores cost more than the data. (At 100 TB
     * the inverse applies: size state partitions to the key space.)
     */
-  def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    graft.Harness.withConfs(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
+  /** The memory-sink table and the run's progress, harvested from the
+    * query handle before it goes out of scope.
+    */
   private def runToTableWith(df: DataFrame, mode: String,
-      statePartitions: Int, trigger: Trigger): DataFrame =
+      statePartitions: Int, trigger: Trigger)
+      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
     withStatePartitions(df.sparkSession, statePartitions) {
       val name = "st_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(trigger).start()
       q.awaitTermination()
-      df.sparkSession.table(name)
+      (df.sparkSession.table(name), q.recentProgress.toSeq)
     }
 
   /** Run a streaming DataFrame to completion into an in-memory table and
@@ -122,26 +123,18 @@ object Streams {
     */
   def runToTable(df: DataFrame, mode: String, statePartitions: Int = 8)
       : DataFrame =
-    runToTableWith(df, mode, statePartitions, Trigger.AvailableNow())
+    runToTableWith(df, mode, statePartitions, Trigger.AvailableNow())._1
 
   /** [[runToTable]] that ALSO returns the run's progress telemetry —
     * the `StateOperatorProgress` rows (state rows/bytes per stateful
     * operator) are the 100 TB operability signal for stream-stream
     * joins and windowed aggregations: unbounded state growth shows up
-    * here long before an executor OOMs. The query handle's
-    * `recentProgress` is harvested BEFORE the handle goes out of scope;
-    * the memory-sink table is returned alongside.
+    * here long before an executor OOMs.
     */
   def runToTableWithProgress(df: DataFrame, mode: String,
       statePartitions: Int = 8)
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
-    withStatePartitions(df.sparkSession, statePartitions) {
-      val name = "st_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      (df.sparkSession.table(name), q.recentProgress.toSeq)
-    }
+    runToTableWith(df, mode, statePartitions, Trigger.AvailableNow())
 
   /** Single-batch variant of [[runToTable]] for stateful queries whose
     * operator reports processing-time work pending FOREVER — a
@@ -155,17 +148,20 @@ object Streams {
   @annotation.nowarn("cat=deprecation")
   def runToTableOnce(df: DataFrame, mode: String, statePartitions: Int = 8)
       : DataFrame =
-    runToTableWith(df, mode, statePartitions, Trigger.Once())
+    runToTableWith(df, mode, statePartitions, Trigger.Once())._1
 
-  // ---- vector-store layout: flat append dir, upgraded on first
-  // compaction to generation directories + an atomic CURRENT pointer ----
+  // ---- the generation protocol every file-backed store shares (the
+  // vector store, the rollup and SCD2 views, the IVF index): the flat
+  // root is generation 0; later generations are `gen-N` directories
+  // named by an atomic CURRENT pointer ----
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
-  /** Directory holding the store's LIVE parquet data: the generation named
-    * by the `CURRENT` pointer once the store has been compacted at least
-    * once, else the flat root (ingest's plain append layout — a store that
-    * was never compacted needs no pointer).
+  /** Directory holding the store's LIVE data: the generation named by the
+    * `CURRENT` pointer once a generation has been published, else the
+    * flat root (generation 0 — ingest's plain append layout or a fresh
+    * index build — needs no pointer). Every reader resolves through this
+    * once, at plan time.
     */
   def storeDataDir(storeDir: String): String = {
     val root = java.nio.file.Paths.get(storeDir)
@@ -174,6 +170,56 @@ object Streams {
       root.resolve(new String(java.nio.file.Files.readAllBytes(cur), Utf8).trim)
         .toString
     else storeDir
+  }
+
+  /** The directory the next generation is written to: `gen-(N+1)` for a
+    * live `gen-N`, `gen-1` over the flat root. Nothing there is live or
+    * retained, so a writer may overwrite what a crashed writer left.
+    */
+  private[graft] def nextGeneration(storeDir: String): String = {
+    val live = storeDataDir(storeDir)
+    val n =
+      if (live == storeDir) 0
+      else java.nio.file.Paths.get(live).getFileName.toString
+        .stripPrefix("gen-").toInt
+    java.nio.file.Paths.get(storeDir).resolve(s"gen-${n + 1}").toString
+  }
+
+  /** Publish the fully written generation `genDir` (from
+    * [[nextGeneration]]): write `CURRENT.tmp`, ATOMIC_MOVE it onto
+    * `CURRENT`, then apply the one retention rule. A reader resolves
+    * `CURRENT` once at plan time, so a reader concurrent with the flip
+    * sees EITHER the old or the new generation, never a mix.
+    *
+    * Retention keeps `CURRENT`, the new generation and the one it
+    * superseded — a reader planned just before the flip still scans
+    * intact files — and reclaims every other root entry. While the
+    * superseded generation is the flat root, its entries ARE that
+    * retained generation, so only stray `gen-N` directories go; once it
+    * is a `gen-N` directory, generation 0's files and directories go
+    * too, `_SUCCESS` and `.crc` files included.
+    *
+    * A crash before the move leaves the old generation live; a crash
+    * after it leaves only garbage that the next publish reclaims.
+    */
+  private[graft] def publishGeneration(storeDir: String,
+      genDir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(storeDir)
+    val superseded = java.nio.file.Paths.get(storeDataDir(storeDir))
+    val gen = java.nio.file.Paths.get(genDir).getFileName.toString
+    val tmp = root.resolve("CURRENT.tmp")
+    java.nio.file.Files.write(tmp, gen.getBytes(Utf8))
+    java.nio.file.Files.move(tmp, root.resolve("CURRENT"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val retained = Set(root.resolve("CURRENT"), root.resolve(gen), superseded)
+    scala.util.Using.resource(java.nio.file.Files.list(root))(
+      _.iterator().asScala.toSeq).foreach { p =>
+      val name = p.getFileName.toString
+      val isGen =
+        name.startsWith("gen-") && name.stripPrefix("gen-").forall(_.isDigit)
+      if (!retained(p) && (isGen || superseded != root)) deleteTree(p)
+    }
   }
 
   /** Read the store's live generation (resolved at plan time — a reader
@@ -203,7 +249,11 @@ object Streams {
     }
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
+  /** Delete `p` and everything under it, best-effort; a no-op when `p`
+    * does not exist. The walk stream is closed — it holds directory
+    * handles.
+    */
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
       val all = scala.util.Using.resource(java.nio.file.Files.walk(p))(
@@ -258,16 +308,10 @@ object Streams {
     * explicitly.
     *
     * Swap protocol (the local analogue of a table-format commit): the
-    * compacted generation is written to a fresh `gen-N` directory, then
-    * published by atomically renaming a `CURRENT.tmp` pointer file over
-    * `CURRENT`. Readers resolve `CURRENT` once at plan time, so a reader
-    * concurrent with compaction sees EITHER the old or the new generation,
-    * never a partial mix; the immediately-previous generation is retained
-    * (purged on the NEXT compaction) so already-planned readers never hit
-    * FileNotFound. A crash before the pointer flip leaves the old
-    * generation live; leftover half-written `gen-N` garbage is overwritten
-    * by the next compaction. Returns the new file count (0 = empty store,
-    * nothing to do).
+    * compacted generation is written to [[nextGeneration]] and published
+    * by [[publishGeneration]]'s atomic pointer flip, which also retains
+    * the superseded generation one cycle for already-planned readers.
+    * Returns the new file count (0 = empty store, nothing to do).
     *
     * Known limit (by design, stated honestly): an ingest micro-batch that
     * resolved the OLD generation and lands its files after compaction has
@@ -278,56 +322,29 @@ object Streams {
     */
   def compactStore(s: SparkSession, storeDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    val root = java.nio.file.Paths.get(storeDir)
-    val dataDir = java.nio.file.Paths.get(storeDataDir(storeDir))
-    val parquets = listFiles(dataDir, ".parquet")
+    val dataDir = storeDataDir(storeDir)
+    val parquets = listFiles(java.nio.file.Paths.get(dataDir), ".parquet")
     if (parquets.isEmpty) return 0 // empty store: no schema to infer, no-op
     val totalBytes = parquets.map(java.nio.file.Files.size).sum
     val nFiles =
       math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val curGen = // flat root counts as generation 0
-      if (dataDir == root) 0
-      else dataDir.getFileName.toString.stripPrefix("gen-").toInt
-    val nextDir = root.resolve(s"gen-${curGen + 1}")
-    s.read.parquet(dataDir.toString).repartition(nFiles)
-      .write.mode("overwrite").parquet(nextDir.toString)
-    // publish: write-then-atomic-rename of the pointer file
-    val tmp = root.resolve("CURRENT.tmp")
-    java.nio.file.Files.write(tmp, s"gen-${curGen + 1}".getBytes(Utf8))
-    java.nio.file.Files.move(tmp, root.resolve("CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // retention: keep the previous generation for in-flight readers; purge
-    // everything older (generations < curGen, and — once the previous
-    // generation is itself a gen dir — the original flat-root files)
-    scala.util.Using.resource(java.nio.file.Files.list(root)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.toSeq.foreach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("gen-") &&
-            name.stripPrefix("gen-").forall(_.isDigit) &&
-            name.stripPrefix("gen-").toInt < curGen)
-          deleteTree(p)
-      }
-    }
-    if (curGen >= 1)
-      listFiles(root, ".parquet").foreach(java.nio.file.Files.deleteIfExists(_))
+    val nextDir = nextGeneration(storeDir)
+    s.read.parquet(dataDir).repartition(nFiles)
+      .write.mode("overwrite").parquet(nextDir)
+    publishGeneration(storeDir, nextDir)
     nFiles
   }
 
   /** Incremental materialized-view upsert: replace the store's live table
     * with `next(current)` — `None` on the first call — under the same
-    * gen-N + atomic-`CURRENT` protocol as [[compactStore]]: readers see
-    * either the old or the new generation, never a mix, and the previous
-    * generation is retained one cycle for already-planned readers. The
-    * caller's `next` does rollup-sized work (old rollup ∪ micro-batch
-    * partial, re-grouped), NOT raw-data-sized work — that asymmetry is
-    * what makes a streaming materialized view affordable at 100 TB.
-    */
-  def upsertGeneration(s: SparkSession, storeDir: String)(
-      next: Option[DataFrame] => DataFrame): Unit =
-    upsertGeneration(s, storeDir, batchId = None)(next)
-
-  /** Exactly-once variant: `batchId` (the foreachBatch epoch) is written
+    * generation protocol as [[compactStore]]: readers see either the old
+    * or the new generation, never a mix, and the previous generation is
+    * retained one cycle for already-planned readers. The caller's `next`
+    * does rollup-sized work (old rollup ∪ micro-batch partial,
+    * re-grouped), NOT raw-data-sized work — that asymmetry is what makes
+    * a streaming materialized view affordable at 100 TB.
+    *
+    * Exactly-once with `batchId` (the foreachBatch epoch): it is written
     * as a `_COMMIT_BATCHID` marker INSIDE the new generation dir before
     * the atomic pointer swap, so the marker becomes visible exactly when
     * the generation does. A replayed batch (crash AFTER the merge's
@@ -340,10 +357,9 @@ object Streams {
     * reads.
     */
   def upsertGeneration(s: SparkSession, storeDir: String,
-      batchId: Option[Long])(
+      batchId: Option[Long] = None)(
       next: Option[DataFrame] => DataFrame): Unit = {
-    val root = java.nio.file.Paths.get(storeDir)
-    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
     val dataDir = java.nio.file.Paths.get(storeDataDir(storeDir))
     val committed: Option[Long] = {
       val marker = dataDir.resolve("_COMMIT_BATCHID")
@@ -362,27 +378,12 @@ object Streams {
       if (listFiles(dataDir, ".parquet").nonEmpty)
         Some(s.read.parquet(dataDir.toString))
       else None
-    val curGen =
-      if (dataDir == root) 0
-      else dataDir.getFileName.toString.stripPrefix("gen-").toInt
-    val nextDir = root.resolve(s"gen-${curGen + 1}")
-    next(cur).write.mode("overwrite").parquet(nextDir.toString)
+    val nextDir = nextGeneration(storeDir)
+    next(cur).write.mode("overwrite").parquet(nextDir)
     batchId.foreach(id => java.nio.file.Files.write(
-      nextDir.resolve("_COMMIT_BATCHID"), id.toString.getBytes(Utf8)))
-    val tmp = root.resolve("CURRENT.tmp")
-    java.nio.file.Files.write(tmp, s"gen-${curGen + 1}".getBytes(Utf8))
-    java.nio.file.Files.move(tmp, root.resolve("CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    scala.util.Using.resource(java.nio.file.Files.list(root)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.toSeq.foreach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("gen-") &&
-            name.stripPrefix("gen-").forall(_.isDigit) &&
-            name.stripPrefix("gen-").toInt < curGen)
-          deleteTree(p)
-      }
-    }
+      java.nio.file.Paths.get(nextDir, "_COMMIT_BATCHID"),
+      id.toString.getBytes(Utf8)))
+    publishGeneration(storeDir, nextDir)
   }
 
   /** One micro-batch of RAG answering (A5–A11) as a reusable batch
@@ -391,26 +392,9 @@ object Streams {
     * (deterministic stand-in for the chat call, `RAG.java:87-98`).
     */
   def answerBatch(batch: DataFrame, storeDir: String,
-      k: Int = 10, dim: Int = 64): DataFrame = {
-    val scored = topMatches(batch, storeDir, k, dim, carry = Nil)
-    scored
-      .groupBy(col("question"))
-      .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(negate(col("score")).as("ns"),
-            col("text").as("t")))),
-          x => x.getField("t")), "\n\n").as("context"),
-        max(struct(col("score"), col("text"))).as("best"))
-      .select(
-        col("question"),
-        col("context"),
-        replace(
-          replace(lit(graft.operators.Rag.PromptTemplate),
-            lit("{{question}}"), col("question")),
-          lit("{{information}}"), col("context")).as("prompt"),
-        concat(lit("[extractive] "),
-          substring_index(col("best.text"), ".", 1)).as("answer"))
-  }
+      k: Int = 10, dim: Int = 64): DataFrame =
+    graft.operators.Rag.answerTail(
+      topMatches(batch, storeDir, k, dim, carry = Nil), tieBreak = None)
 
   /** Shared retrieval core (A7–A8): embed each batch question, cosine
     * against the store, keep the k best at minScore ≥ 0.0. `carry` names

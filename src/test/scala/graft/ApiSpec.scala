@@ -1185,7 +1185,7 @@ class ApiSpec extends SparkSuite {
     // commit: the published generation has no tombstones dir; the
     // superseded bare layers (including their tombstones) are GRACE-
     // RETAINED until the next publish so in-flight readers complete
-    val root1 = Ann.indexRoot(dir1)
+    val root1 = streaming.Streams.storeDataDir(dir1)
     assert(root1 != dir1, "compaction must publish a new generation")
     assert(!java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(root1, "tombstones")))
@@ -1205,7 +1205,7 @@ class ApiSpec extends SparkSuite {
     val census2 = Ann.ivfCompact(spark, dir2, rebuildChurn = 0.2).collect()
     assert(census2.forall(_.getString(4) == "rebuilt"),
       census2.mkString(", "))
-    val root2 = Ann.indexRoot(dir2)
+    val root2 = streaming.Streams.storeDataDir(dir2)
     val cells2 = spark.read.parquet(s"$root2/cells")
     assert(cells2.count() == n - nDel2)
     assert(cells2.join(dels2, Seq("vec_id"), "left_semi").count() == 0)
@@ -1297,7 +1297,7 @@ class ApiSpec extends SparkSuite {
     // fully-tombstoned case is the one exercised)
     val census = Ann.ivfCompact(spark, dir, rebuildChurn = 0.9,
       publish = false).collect()
-    assert(Ann.indexRoot(dir) == dir,
+    assert(streaming.Streams.storeDataDir(dir) == dir,
       "unpublished compaction must not move the live root")
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(dir, "gen-1", "cells")))
@@ -1310,8 +1310,9 @@ class ApiSpec extends SparkSuite {
       java.nio.file.Paths.get(dir, "tombstones")))
     // recovery: publish the written generation (re-running ivfCompact
     // would redo it idempotently)
-    Ann.publishGeneration(dir, "gen-1")
-    val root = Ann.indexRoot(dir)
+    streaming.Streams.publishGeneration(dir,
+      streaming.Streams.nextGeneration(dir))
+    val root = streaming.Streams.storeDataDir(dir)
     assert(root == s"$dir/gen-1")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       root, "cells", s"cell=$victim")),
@@ -1352,7 +1353,7 @@ class ApiSpec extends SparkSuite {
       withGraph = false, withPq = false)
     // an in-flight reader: resolves the (implicit generation-0) root
     // and lists its files NOW; the scan itself runs after the publish
-    val oldRoot = Ann.indexRoot(dir)
+    val oldRoot = streaming.Streams.storeDataDir(dir)
     assert(oldRoot == dir)
     val reader = Ann.readLayer(spark, s"$oldRoot/cells")
     val dels = reader.where(col("vec_id") % 4 === 0)
@@ -1360,7 +1361,7 @@ class ApiSpec extends SparkSuite {
     val nDel = dels.count()
     Ann.ivfDelete(spark, dir, dels)
     Ann.ivfCompact(spark, dir, rebuildChurn = 0.9)
-    assert(Ann.indexRoot(dir) == s"$dir/gen-1")
+    assert(streaming.Streams.storeDataDir(dir) == s"$dir/gen-1")
     // the in-flight read completes and still sees the ENTIRE
     // superseded generation — the flip deleted nothing it holds
     assert(reader.count() == n,
@@ -1381,7 +1382,7 @@ class ApiSpec extends SparkSuite {
     val nDel2 = dels2.count()
     Ann.ivfDelete(spark, dir, dels2)
     Ann.ivfCompact(spark, dir, rebuildChurn = 0.9)
-    assert(Ann.indexRoot(dir) == s"$dir/gen-2")
+    assert(streaming.Streams.storeDataDir(dir) == s"$dir/gen-2")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "cells")),
       "two-publish-old bare generation must be reclaimed")
@@ -1435,7 +1436,7 @@ class ApiSpec extends SparkSuite {
         .orderBy(col("s").desc, col("vec_id"))
         .limit(10).collect().map(_.getLong(0)).toSet
       val routed = spark.read
-        .parquet(s"${Ann.indexRoot(dir)}/centroids")
+        .parquet(s"${streaming.Streams.storeDataDir(dir)}/centroids")
         .crossJoin(broadcast(probe))
         .select(col("cell"), cosine_sim(col("cent"), col("probe")).as("cs"))
         .orderBy(col("cs").desc, col("cell"))
@@ -1472,7 +1473,7 @@ class ApiSpec extends SparkSuite {
     ingest(450, 500); checkPhase("ingest-2")
     // two full cycles later the index is on its second published
     // generation and the store holds exactly the surviving ids
-    assert(Ann.indexRoot(dir) == s"$dir/gen-2")
+    assert(streaming.Streams.storeDataDir(dir) == s"$dir/gen-2")
     assert(Ann.ivfLiveCells(spark, dir).count() == liveIds.size)
   }
 

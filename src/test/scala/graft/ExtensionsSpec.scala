@@ -52,7 +52,7 @@ class ExtensionsSpec extends SparkSuite {
       val recall = exactRank.take(10).toSet.intersect(approx.map(_._1).toSet).size
       assert(recall >= 5, s"recall $recall/10")
     } finally {
-      spark.conf.set(AnnTopKRewrite.EnabledKey, "false")
+      spark.conf.unset(AnnTopKRewrite.EnabledKey)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == AnnTopKRewrite)
     }

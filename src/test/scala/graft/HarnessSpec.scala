@@ -17,6 +17,23 @@ class HarnessSpec extends SparkSuite {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
+  test("withConfs restores a set key and unsets an unset key when the " +
+      "body throws") {
+    val (set, unset) = ("graft.test.confs.set", "graft.test.confs.unset")
+    spark.conf.set(set, "prior")
+    try {
+      intercept[IllegalStateException] {
+        Harness.withConfs(spark, set -> "scoped", unset -> "scoped") {
+          assert(spark.conf.get(set) == "scoped")
+          assert(spark.conf.get(unset) == "scoped")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(set) == "prior")
+      assert(spark.conf.getOption(unset).isEmpty)
+    } finally spark.conf.unset(set)
+  }
+
   private val mainRoot = Paths.get("src/main/scala")
 
   /** Lines of code (not comments) in each Scala file under `dir`. */
@@ -31,6 +48,17 @@ class HarnessSpec extends SparkSuite {
     val hits = codeLines(mainRoot).collect {
       case (f, l) if l.contains("SparkSession.builder") => f.toString }
     assert(hits == Seq("src/main/scala/graft/Harness.scala"), hits)
+  }
+
+  test("the generation pointer flip and conf save/restore live only in " +
+      "their shared helpers") {
+    def filesWith(needle: String): Set[String] = codeLines(mainRoot).collect {
+      case (f, l) if l.contains(needle) => f.toString }.toSet
+    assert(filesWith("CURRENT.tmp") ==
+      Set("src/main/scala/graft/streaming/Streams.scala"))
+    // Tables reads its inference confs into a file-version key
+    assert(filesWith("conf.getOption") == Set(
+      "src/main/scala/graft/Harness.scala", "src/main/scala/graft/Tables.scala"))
   }
 
   test("operators, api, functions and streaming read no environment") {

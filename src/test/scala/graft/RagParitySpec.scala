@@ -312,6 +312,10 @@ class RagParitySpec extends SparkSuite {
       assert(n2 == 1)
       assert(flatParquetCount == 0,
         "flat-root generation should be purged after the second compaction")
+      // one retention rule: CURRENT plus the live and the superseded
+      // generation — generation 0's _SUCCESS and .crc files are gone too
+      assert(new java.io.File(store).list().toSet ==
+        Set("CURRENT", "gen-1", "gen-2"))
       assert(streaming.Streams.storeRead(spark, store).count() == 4)
 
       // retrieval against the compacted store is unchanged

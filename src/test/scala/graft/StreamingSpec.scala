@@ -772,6 +772,33 @@ class StreamingSpec extends SparkSuite {
     } catch { case _: Exception => () }
   }
 
+  test("rollup upserts retain exactly the live and the superseded generation") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_mv_gc_")
+    val batches = Seq(
+      Seq((t("10:00"), "click", 1.5), (t("10:10"), "view", 2.0)),
+      Seq((t("11:00"), "click", 0.5)),
+      Seq((t("10:30"), "click", 3.25)))
+    try {
+      batches.foreach(b => operators.Streaming.mergeRollupBatch(
+        b.toDF("ts", "event_type", "value"), store.toString))
+      assert(store.toFile.list().toSet == Set("CURRENT", "gen-2", "gen-3"))
+      val got = streaming.Streams.storeRead(spark, store.toString)
+        .orderBy("day", "event_type")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          r.getDecimal(3).doubleValue())).toSeq
+      val want = batches.flatten.toDF("ts", "event_type", "value")
+        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sv"))
+        .orderBy("day", "event_type")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          r.getDouble(3))).toSeq
+      assert(got == want, s"store $got vs batch $want")
+    } finally streaming.Streams.deleteTree(store)
+  }
+
   test("streaming HLL DAU sketch: incremental estimate == batch sketch " +
       "exactly, within the HLL bound of exact distinct") {
     import org.apache.spark.sql.functions._
