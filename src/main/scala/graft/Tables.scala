@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columnar + vectorized; filters/projections applied downstream are pushed
   * into the scan by Catalyst (verified in PlanSpec).
   *
-  * Schemas are catalog metadata, resolved once per file version (see
-  * [[table]]) — the kind a metastore or table log holds at 100 TB. Data is
-  * not: every read scans the table's files.
+  * Schemas are catalog metadata, read from the parquet footers once per
+  * file version (see [[resolve]]) — the kind a metastore or table log holds
+  * at 100 TB. Data is not: every read scans the table's files.
   *
   * Scale note: each table is a single parquet file at test scale, but the
   * same reader works unchanged on a directory of thousands of files at
@@ -102,35 +102,6 @@ object Tables {
       name: String, schema: StructType, path: String): Unit =
     assertContract(name, schema, path)
 
-  /** Columns (at ANY nesting depth, dotted paths) the parquet FOOTERS of
-    * `files` declare TIMESTAMP(NANOS).
-    *
-    * The `nanosAsLong` legacy conf is necessarily session-wide (no
-    * per-read parquet option exists) and must stay on for events-query
-    * EXECUTION, so once an events read has set it, a nanos column in any
-    * other fixture would no longer fail Spark's footer conversion — it
-    * would arrive as a silently-coerced LONG. The Spark-side contract
-    * catches that for contracted ts-like columns (LONG ∉ tsLike), but an
-    * UNCONTRACTED column would slip through; this footer read closes that
-    * blind spot positively (ADVICE r13). It runs once per file version,
-    * beside the schema inference. A directory-shaped table is swept
-    * part-file by part-file (a mixed-writer dir can carry nanos in one
-    * part and µs in another), capped at 64 footers — fixtures are
-    * single-digit part counts; a genuinely file-heavy deployment would
-    * hoist this into its catalog checks.
-    */
-  private def nanosColumns(s: SparkSession, files: Seq[FileStatus]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val conf = s.sessionState.newHadoopConf()
-    files.filter(_.getPath.getName.endsWith(".parquet")).take(64).flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .toSeq.flatMap(fld => nanosFields(fld, ""))
-      finally reader.close()
-    }.distinct
-  }
-
   /** Dotted paths of every TIMESTAMP(NANOS) primitive under `t`,
     * descending into group types: a nanos field nested inside a
     * struct/list/map rides the same session-wide coercion as a
@@ -154,63 +125,162 @@ object Tables {
         .flatMap(f => nanosFields(f, name))
   }
 
-  /** Session confs that change what parquet schema inference returns for
-    * the same files, so they are part of a resolution's version.
-    * `mergeSchema` matters only for directory-shaped tables.
+  /** Session confs that change the schema inference derives from one
+    * footer, so they are part of each file's cached version. Whether to
+    * merge (`mergeSchema`) and how (`caseSensitive`) are read on every
+    * resolution, since merging is not cached.
     */
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.mergeSchema")
+    "spark.sql.parquet.int96AsTimestamp")
 
-  /** What a resolved schema is valid for: each data file's (path, length,
-    * mtime) and the values of [[inferenceConfs]].
-    */
-  private final case class Version(
-      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+  /** What one data file's footer facts are valid for. */
+  private final case class FileVersion(path: String, length: Long,
+      mtime: Long, confs: Seq[Option[String]])
 
-  /** Table path → the version it was last resolved at and its checked
-    * schema. One entry per path: a new file version replaces the old one,
-    * and its checks run again.
+  /** One data file's footer, as schema inference sees it: the Spark
+    * schema it yields (or the conversion error, raised only when that
+    * schema is used, since Spark converts only the files it infers from)
+    * and the columns it stores as TIMESTAMP(NANOS).
     */
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]()
+  private final case class FileFacts(schema: scala.util.Try[StructType],
+      nanos: Seq[String])
+
+  /** A resolved read: the schema inference would give, and every data
+    * file's TIMESTAMP(NANOS) columns.
+    */
+  private final case class Resolved(schema: StructType,
+      nanos: Seq[String])
+
+  /** Read root → the footer facts of its data files at the versions last
+    * resolved. The root is a table's path, or a store's root directory for
+    * all its generations. Each resolution replaces the root's whole map, so
+    * files that compaction or retention deleted drop out.
+    */
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[FileVersion, FileFacts]]()
+
+  /** Test hook: the files the resolver holds footer facts for under `root`. */
+  private[graft] def cachedFiles(root: String): Set[String] =
+    Option(footers.get(root)).fold(Set.empty[String])(_.keySet.map(_.path))
 
   /** The files Spark reads for `path`: the file itself, or every data file
     * under a directory-shaped table, recursing into partition
     * subdirectories and skipping `_`/`.`-prefixed names as Spark does.
-    * Empty when the path does not exist, so the read reports it.
+    * Sorted by full path, the order Spark infers and merges in. Empty when
+    * the path does not exist, so the read reports it.
     */
   private def dataFiles(s: SparkSession, path: String): Seq[FileStatus] = {
     val p = new HPath(path)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     def collect(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq
+      else fs.listStatus(st.getPath).toSeq
         .filterNot { c =>
           val n = c.getPath.getName
           n.startsWith("_") || n.startsWith(".")
         }
         .flatMap(collect)
-    try collect(fs.getFileStatus(p))
+    try collect(fs.getFileStatus(p)).sortBy(_.getPath.toString)
     catch { case _: java.io.FileNotFoundException => Nil }
   }
 
-  /** The one resolution step for a base table.
+  /** Read one footer, on the driver, and derive what Spark's parquet
+    * inference derives from it: the writer's Spark schema from the
+    * `org.apache.spark.sql.parquet.row.metadata` key when it parses, else
+    * the parquet schema converted under the session's conf.
+    */
+  private def readFooter(f: FileStatus,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
+      converter: => org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter): FileFacts = {
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hadoopConf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val schema = scala.util.Try(
+      Option(meta.getKeyValueMetaData.get(
+          "org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(converter.convert(meta.getSchema)))
+    FileFacts(schema,
+      meta.getSchema.getFields.asScala.toSeq.flatMap(nanosFields(_, "")))
+  }
+
+  /** The one schema resolver for parquet reads: what `spark.read.parquet`
+    * would infer for `path`, from the data files' footers instead of a
+    * Spark job. Footers are read once per file version and kept under
+    * `root`; a resolution after an append reads only the new file's
+    * footer. With `mergeAll` the per-file schemas merge in path order
+    * through Spark's own `StructType.merge`, as `mergeSchema` does;
+    * without it the first file's schema stands, as Spark takes it. `None`
+    * when `path` has no data file: there is nothing to resolve, and the
+    * plain read reports the error.
     *
-    * A table's schema is catalog metadata: it is inferred (one Spark job)
-    * and checked against the contract and the nanos footer sweep once per
-    * file version, then every read plans against it with
-    * `spark.read.schema(resolved).parquet(path)`, which runs no job. Data
-    * is never cached here: every query still scans the table's files.
-    * On a miss the DataFrame that did the inference is returned, so a
-    * first read costs what an unresolved read does. Two threads missing
-    * together both infer; either result is correct.
+    * This is catalog metadata, as a table log or metastore would hold it;
+    * no data is cached. Summary files (`_metadata`, `_common_metadata`)
+    * are not consulted; Spark writes none by default. Two threads
+    * resolving one root together both read; either map is correct.
+    */
+  private def resolve(spark: SparkSession, root: String,
+      path: String, mergeAll: Boolean): Option[Resolved] = {
+    val files = dataFiles(spark, path)
+    if (files.isEmpty) return None
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    val known = footers.getOrDefault(root, Map.empty)
+    lazy val hadoopConf = spark.sessionState.newHadoopConf()
+    lazy val converter = new org.apache.spark.sql.execution.datasources
+      .parquet.ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val facts = files.map { f =>
+      val v = FileVersion(f.getPath.toString, f.getLen,
+        f.getModificationTime, confs)
+      v -> known.getOrElse(v, readFooter(f, hadoopConf, converter))
+    }
+    footers.put(root, facts.toMap)
+    val schemas = facts.map(_._2.schema)
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    val schema =
+      if (mergeAll) schemas.map(_.get).reduce(
+        org.apache.spark.sql.GraftSql.mergeSchemas(_, _, caseSensitive))
+      else schemas.head.get
+    Some(Resolved(schema, facts.flatMap(_._2.nanos).distinct))
+  }
+
+  /** `path` read with its resolved schema, which runs no Spark job. */
+  private def read(spark: SparkSession, path: String,
+      resolved: Option[Resolved]): DataFrame = resolved match {
+    case Some(r) => spark.read.schema(r.schema).parquet(path)
+    // no data file: Spark words the error (PATH_NOT_FOUND,
+    // UNABLE_TO_INFER_SCHEMA); with nothing to infer from, no job runs
+    case None => spark.read.parquet(path)
+  }
+
+  /** `path` read with the merged schema of all its data files, resolved
+    * under `root` (see [[resolve]]): the file-backed stores' read.
+    */
+  private[graft] def readMerged(spark: SparkSession, root: String,
+      path: String): DataFrame =
+    read(spark, path, resolve(spark, root, path, mergeAll = true))
+
+  /** The one read path for a base table.
+    *
+    * The schema comes from [[resolve]], so no read runs a Spark job, cold
+    * or warm. Each read checks it against the contract and asserts that
+    * no data file stores a TIMESTAMP(NANOS) column outside `events`. The
+    * `nanosAsLong` legacy conf is session-wide (no per-read parquet option
+    * exists) and must stay on for events-query execution, so once an
+    * events read has set it, a nanos column in any other fixture would no
+    * longer fail Spark's footer conversion: it would arrive as a silently
+    * coerced LONG. The contract catches that for contracted ts-like
+    * columns, but an uncontracted column would slip through; the footer
+    * check closes that gap. Data is never cached here: every query still
+    * scans the table's files.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // a nanos-era events fixture fails inside Spark's footer reader
+    // a nanos-era events fixture fails Spark's footer conversion
     // ("Illegal Parquet type") BEFORE the contract check unless the legacy
     // conf is on — set it here, not only in events(), so a direct
     // table(_, _, "events") scan (FixtureSchemaSpec's all-tables pass) hits
@@ -218,30 +288,17 @@ object Tables {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$name.parquet"
-    val files = dataFiles(spark, path)
-    val version = Version(
-      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
-      inferenceConfs.map(spark.conf.getOption))
-    resolved.get(path) match {
-      case (`version`, schema) => spark.read.schema(schema).parquet(path)
-      case _ =>
-        val df = spark.read.parquet(path)
-        assertContract(name, df.schema, path)
-        // only events.ts may ride the nanosAsLong coercion: with the conf
-        // already on from a prior events read, a nanos-drifted column in
-        // any OTHER fixture no longer fails Spark's footer conversion, so
-        // assert it against the parquet footers directly
-        if (name != "events") {
-          val nanos = nanosColumns(spark, files)
-          if (nanos.nonEmpty)
-            throw new IllegalStateException(
-              s"fixture schema drift: $path stores " +
-              s"TIMESTAMP(NANOS) column(s) ${nanos.mkString(", ")} — only " +
-              "events.ts may rely on the nanosAsLong legacy coercion")
-        }
-        resolved.put(path, (version, df.schema))
-        df
+    val resolved = resolve(spark, path, path,
+      mergeAll = spark.sessionState.conf.isParquetSchemaMergingEnabled)
+    resolved.foreach { r =>
+      assertContract(name, r.schema, path)
+      if (name != "events" && r.nanos.nonEmpty)
+        throw new IllegalStateException(
+          s"fixture schema drift: $path stores " +
+          s"TIMESTAMP(NANOS) column(s) ${r.nanos.mkString(", ")} — only " +
+          "events.ts may rely on the nanosAsLong legacy coercion")
     }
+    read(spark, path, resolved)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

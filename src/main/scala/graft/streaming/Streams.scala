@@ -224,16 +224,19 @@ object Streams {
 
   /** Read the store's live generation (resolved at plan time — a reader
     * holds one consistent generation for its whole lifetime).
+    *
+    * The schema merges every data file's footer: a store generation is
+    * normally schema-uniform, but an old pre-metadata store that took
+    * metadata-era appends before its next compaction holds mixed footers —
+    * unmerged, which columns surface would depend on WHICH file footer is
+    * sampled, so `metadata` could silently vanish based on file order.
+    * Merged, pre-metadata rows surface metadata=NULL and retrieveBatch
+    * restores the TextSegment empty-map default. Footers are read once per
+    * file version and cached under the store root ([[Tables.resolve]]),
+    * so a read runs no Spark job.
     */
   def storeRead(s: SparkSession, storeDir: String): DataFrame =
-    // mergeSchema: a store generation is normally schema-uniform, but an
-    // old pre-metadata store that took metadata-era appends before its
-    // next compaction holds mixed footers — without merging, which columns
-    // surface depends on WHICH file footer Spark samples, so `metadata`
-    // could silently vanish (or the read fail) based on file order. Merged,
-    // pre-metadata rows surface metadata=NULL and retrieveBatch restores
-    // the TextSegment empty-map default.
-    s.read.option("mergeSchema", "true").parquet(storeDataDir(storeDir))
+    Tables.readMerged(s, storeDir, storeDataDir(storeDir))
 
   /** Regular files under `p` ending in `suffix`; empty for a non-dir.
     * (Files.list must be closed — it holds a directory handle.)
@@ -276,7 +279,7 @@ object Streams {
     // column on the input rides into the store verbatim; absent, rows
     // carry the empty map `TextSegment.from(value)` defaults to. A
     // generation that mixes pre-metadata and metadata-era files is read
-    // with mergeSchema (storeRead), so the union schema always surfaces
+    // with the merged schema (storeRead), so the union schema always surfaces
     // and old rows resolve to the empty-map default in retrieveBatch.
     val withMeta =
       if (lines.columns.contains("metadata")) lines
@@ -324,12 +327,13 @@ object Streams {
       targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val dataDir = storeDataDir(storeDir)
     val parquets = listFiles(java.nio.file.Paths.get(dataDir), ".parquet")
-    if (parquets.isEmpty) return 0 // empty store: no schema to infer, no-op
+    if (parquets.isEmpty) return 0 // empty store: no schema to resolve, no-op
     val totalBytes = parquets.map(java.nio.file.Files.size).sum
     val nFiles =
       math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val nextDir = nextGeneration(storeDir)
-    s.read.parquet(dataDir).repartition(nFiles)
+    // the merged schema: a mixed-footer generation keeps every column
+    storeRead(s, storeDir).repartition(nFiles)
       .write.mode("overwrite").parquet(nextDir)
     publishGeneration(storeDir, nextDir)
     nFiles
@@ -376,7 +380,7 @@ object Streams {
       return // replayed epoch: the live generation already contains it
     val cur =
       if (listFiles(dataDir, ".parquet").nonEmpty)
-        Some(s.read.parquet(dataDir.toString))
+        Some(storeRead(s, storeDir))
       else None
     val nextDir = nextGeneration(storeDir)
     next(cur).write.mode("overwrite").parquet(nextDir)
@@ -394,16 +398,16 @@ object Streams {
   def answerBatch(batch: DataFrame, storeDir: String,
       k: Int = 10, dim: Int = 64): DataFrame =
     graft.operators.Rag.answerTail(
-      topMatches(batch, storeDir, k, dim, carry = Nil), tieBreak = None)
+      topMatches(batch, storeRead(batch.sparkSession, storeDir), k, dim,
+        carry = Nil),
+      tieBreak = None)
 
   /** Shared retrieval core (A7–A8): embed each batch question, cosine
-    * against the store, keep the k best at minScore ≥ 0.0. `carry` names
-    * extra store columns to ride along with (question, text, score).
+    * against the `store` frame, keep the k best at minScore ≥ 0.0. `carry`
+    * names extra store columns to ride along with (question, text, score).
     */
-  private def topMatches(batch: DataFrame, storeDir: String, k: Int,
+  private def topMatches(batch: DataFrame, store: DataFrame, k: Int,
       dim: Int, carry: Seq[String]): DataFrame = {
-    val s = batch.sparkSession
-    val store = storeRead(s, storeDir)
     val qs = batch.select(col("line").as("question"),
       feature_hash_embed(col("line"), dim).as("qvec"))
     import org.apache.spark.sql.expressions.Window
@@ -426,9 +430,9 @@ object Streams {
     */
   def retrieveBatch(batch: DataFrame, storeDir: String,
       k: Int = 10, dim: Int = 64): DataFrame = {
-    val hasMeta = storeRead(batch.sparkSession, storeDir)
-      .columns.contains("metadata")
-    val m = topMatches(batch, storeDir, k, dim,
+    val store = storeRead(batch.sparkSession, storeDir)
+    val hasMeta = store.columns.contains("metadata")
+    val m = topMatches(batch, store, k, dim,
       carry = if (hasMeta) Seq("metadata") else Nil)
     // pre-metadata rows in a mixed-generation store arrive as NULL under
     // the merged schema — restore the `TextSegment.from` empty-map default

@@ -2,12 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` Spark surface, kept to the absolute minimum:
   * wrapping a custom Catalyst [[Expression]] into a user-facing [[Column]]
   * (the Spark 4.x `Column` carries a `ColumnNode`, not an `Expression`, so
-  * third-party expressions need this one hop) and registering SQL function
-  * builders on an already-built session.
+  * third-party expressions need this one hop), registering SQL function
+  * builders on an already-built session, and Spark's own schema merge.
   */
 object GraftSql {
   /** Wrap a raw Catalyst expression as a Column. */
@@ -26,4 +27,12 @@ object GraftSql {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
   }
+
+  /** Spark's parquet schema merge (`StructType.merge`): `right`'s new
+    * fields append after `left`'s, and conflicting types fail as they do
+    * under `mergeSchema`.
+    */
+  def mergeSchemas(left: StructType, right: StructType,
+      caseSensitive: Boolean): StructType =
+    left.merge(right, caseSensitive)
 }

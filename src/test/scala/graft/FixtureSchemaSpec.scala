@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** FIXTURES.md-as-code gate: pins the driver-generated parquet dtypes so a
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types._
 class FixtureSchemaSpec extends SparkSuite {
 
   test("every fixture table passes the Tables contract at every sf") {
-    // schema inference is a Spark job per table and file version (30 at
+    // resolution reads one footer per table and file version (30 at
     // first read here), cheap at these sizes; checking all three scale
     // dirs catches a partial regeneration (one sf updated, the others
     // stale)
@@ -91,32 +90,6 @@ class FixtureSchemaSpec extends SparkSuite {
     assert(hits == Seq("top_ns", "meta.lvl2.deep_ns"), hits.toString)
   }
 
-  /** Spark jobs `body` launches on this thread. Its jobs carry a fresh job
-    * group; a sentinel job in a second group runs after it, and since the
-    * listener bus delivers in order, every job of `body` has been seen
-    * once the sentinel has.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val group = "fixture-jobs-" + java.util.UUID.randomUUID()
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith(group)).foreach(seen.put)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map { g => assert(g != null, "listener never saw the sentinel job"); g }
-        .takeWhile(_ == group).size
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Every table read once; events first, since its read turns the
     * session-wide nanosAsLong conf on, and that conf is part of every
     * table's resolved version.
@@ -133,12 +106,14 @@ class FixtureSchemaSpec extends SparkSuite {
     val q = SparkEntry.all.find(_.name == "dedup_exact").get
     q.fn(spark, sf)
     assert(jobsOf(q.fn(spark, sf)) == 0, "warm dedup_exact q.fn launched a job")
-    // the probe itself does see a resolution's inference job
+    // the probe itself does see a job
+    assert(jobsOf(spark.range(1).count()) >= 1)
+    // and a cold resolution, of a fresh copy, reads footers without one
     val dir = java.nio.file.Files.createTempDirectory("graft_jobs_").toString
     try {
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/region.parquet"),
         java.nio.file.Paths.get(s"$dir/region.parquet"))
-      assert(jobsOf(Tables.table(spark, dir, "region")) >= 1)
+      assert(jobsOf(Tables.table(spark, dir, "region")) == 0)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -191,6 +166,53 @@ class FixtureSchemaSpec extends SparkSuite {
       prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("resolved schema equals spark.read.parquet for every fixture under " +
+      "each inference conf toggle") {
+    // inferTimestampNTZ has its own test above, with a table it flips
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.parquet.mergeSchema")
+    for (key <- keys; v <- Seq("true", "false", "true"))
+      Harness.withConfs(spark, key -> v) {
+        ("events" +: Tables.names).foreach { t =>
+          val got = Tables.table(spark, sf, t).schema
+          assert(got == spark.read.parquet(s"$sf/$t.parquet").schema,
+            s"$t with $key=$v")
+        }
+      }
+  }
+
+  test("a TIMESTAMP(NANOS) column outside events fails with the drift error") {
+    // written without Spark's schema metadata, as pyarrow writes nanos;
+    // nanosAsLong on (as after any events read) makes Spark's conversion
+    // accept the column as LONG, so only the footer check can catch it
+    val dir = java.nio.file.Files.createTempDirectory("graft_nanos_").toString
+    try {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+      val msg = Types.buildMessage()
+        .required(INT32).named("r_regionkey")
+        .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("r_name")
+        .required(INT64).as(LogicalTypeAnnotation.timestampType(true,
+          LogicalTypeAnnotation.TimeUnit.NANOS)).named("updated_ns")
+        .named("region")
+      val w = ExampleParquetWriter.builder(
+          new org.apache.hadoop.fs.Path(s"$dir/region.parquet"))
+        .withType(msg).build()
+      try w.write(new SimpleGroupFactory(msg).newGroup()
+        .append("r_regionkey", 0).append("r_name", "AFRICA")
+        .append("updated_ns", 1700000000000000000L))
+      finally w.close()
+      Harness.withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+        val ex = intercept[IllegalStateException](Tables.table(spark, dir, "region"))
+        assert(ex.getMessage.contains("TIMESTAMP(NANOS)") &&
+          ex.getMessage.contains("updated_ns"), ex.getMessage)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("a table rewritten in place is checked again") {

@@ -61,6 +61,27 @@ class HarnessSpec extends SparkSuite {
       "src/main/scala/graft/Harness.scala", "src/main/scala/graft/Tables.scala"))
   }
 
+  test("table and store reads take their schema from the footer resolver") {
+    val readers = Set("src/main/scala/graft/Tables.scala",
+      "src/main/scala/graft/streaming/Streams.scala")
+    val lines = codeLines(mainRoot).filter { case (f, _) => readers(f.toString) }
+    val merging = lines.collect {
+      case (f, l) if l.contains("\"mergeSchema\"") => s"$f: $l" }
+    assert(merging.isEmpty, merging.mkString("\n"))
+    val parquetRead = """\.read(\.option\([^)]*\))*\.parquet\(""".r
+    val inferring = lines.collect {
+      case (f, l) if parquetRead.findFirstIn(l).nonEmpty &&
+        !l.contains(".schema(") => s"$f: $l" }
+    // the one schemaless read is the resolver's no-data-file fallback:
+    // there is nothing to infer from, and Spark words the error
+    assert(inferring == Seq(
+      "src/main/scala/graft/Tables.scala: case None => spark.read.parquet(path)"),
+      inferring.mkString("\n"))
+    val footerReads = codeLines(mainRoot).collect {
+      case (f, l) if l.contains("ParquetFileReader.open") => f.toString }
+    assert(footerReads == Seq("src/main/scala/graft/Tables.scala"), footerReads)
+  }
+
   test("operators, api, functions and streaming read no environment") {
     val hits = Seq("operators", "api", "functions", "streaming")
       .flatMap(d => codeLines(mainRoot.resolve("graft").resolve(d)))

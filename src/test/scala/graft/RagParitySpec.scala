@@ -264,6 +264,44 @@ class RagParitySpec extends SparkSuite {
     }
   }
 
+  test("compaction keeps metadata on a mixed-footer store whose first " +
+      "file is pre-metadata") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, map, xxhash64}
+    implicit val sq: SQLContext = spark.sqlContext
+    withTmp("graft_mixed_compact_") { tmp =>
+      val store = s"$tmp/store"
+      // a pre-metadata file that sorts before every ingest file
+      val old = s"$tmp/old"
+      Seq("Catalyst optimizes plans.").toDF("text")
+        .select(xxhash64(col("text")).as("vec_id"), col("text"),
+          graft.functions.feature_hash_embed(col("text"), 64).as("embedding"))
+        .coalesce(1).write.parquet(old)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
+      val part = new java.io.File(old).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      java.nio.file.Files.move(part,
+        java.nio.file.Paths.get(store, "a-old.parquet"))
+      val knowledge = MemoryStream[String]
+      knowledge.addData("The capital of France is Paris.",
+        "Spark plans queries with the Catalyst optimizer.")
+      streaming.Streams.ingest(
+        knowledge.toDF().toDF("line")
+          .withColumn("metadata", map(lit("source"), lit("unit-test"))),
+        store)
+      assert(streaming.Streams.compactStore(spark, store) == 1)
+      val compacted = spark.read.parquet(streaming.Streams.storeDataDir(store))
+      assert(compacted.columns.contains("metadata"), compacted.schema.treeString)
+      val metas = compacted.select("text", "metadata").collect()
+        .map(r => r.getString(0) -> Option(r.getMap[String, String](1)))
+        .toMap
+      assert(metas.size == 3)
+      assert(metas("Catalyst optimizes plans.").isEmpty)
+      assert(metas.removed("Catalyst optimizes plans.").values
+        .forall(_.contains(Map("source" -> "unit-test"))), metas.toString)
+    }
+  }
+
   test("compactStore publishes atomically: a concurrent reader sees one whole generation") {
     import spark.implicits._
     implicit val sq: SQLContext = spark.sqlContext

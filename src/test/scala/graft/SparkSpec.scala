@@ -24,4 +24,31 @@ object SparkSpec {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf0001
+
+  /** Spark jobs `body` launches on this thread. Its jobs carry a fresh job
+    * group; a sentinel job in a second group runs after it, and since the
+    * listener bus delivers in order, every job of `body` has been seen
+    * once the sentinel has.
+    */
+  protected def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(seen.put)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map { g => assert(g != null, "listener never saw the sentinel job"); g }
+        .takeWhile(_ == group).size
+    } finally sc.removeSparkListener(listener)
+  }
 }
