@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.functions.topKRows
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,20 +40,17 @@ object Graft {
 
   /** Exact cosine top-k of `store` (id, embedding) for every row of
     * `probes` (probe_id, probe): the probes side is broadcast (O(probes)
-    * small by contract); the store streams through one scan, ranked per
-    * probe. 100 TB shape: no shuffle of the store, one window over the
-    * probe key after scan-side scoring.
+    * small by contract); the store streams through one scan and is
+    * scored there. 100 TB shape: the store itself is never shuffled;
+    * `graft.functions.top_k` keeps at most k scored rows per probe per
+    * task, and only those cross one exchange on `probe_id`.
     */
-  def cosineTopK(store: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val scored = store.crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("id"),
-        graft.functions.cosine_sim(col("embedding"), col("probe")).as("score"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+  def cosineTopK(store: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topKRows(store.crossJoin(broadcast(probes))
+        .select(col("probe_id"), col("id"),
+          graft.functions.cosine_sim(col("embedding"), col("probe")).as("score")),
+        Seq("probe_id"), "score", "id", k, "rank")
       .drop("rank")
-  }
 
   /** All store vectors within `minScore` cosine of each probe — the
     * range-query twin of [[cosineTopK]] (dedup thresholds, retrieval
@@ -96,28 +94,24 @@ object Graft {
     * `nprobe` nearest cells by centroid cosine (a k×probes-row crossJoin
     * — metadata-sized), then score ONLY the routed cells' vectors. The
     * store side never shuffles: the routing table broadcasts onto the
-    * cell-partitioned assignment (at 100 TB: partition pruning), and the
-    * per-probe ranking window runs over the candidate subset, scan
-    * fraction ≈ nprobe/k. Recall/scan trade-off is the caller's k/nprobe
-    * choice (ApiSpec proves ≥0.9 recall at 25% scan on clustered data).
+    * cell-partitioned assignment (at 100 TB: partition pruning), and
+    * only the candidate subset is scored, scan fraction ≈ nprobe/k. At
+    * most k scored rows per probe per task cross one exchange on
+    * `probe_id` (`graft.functions.top_k`). Recall/scan trade-off is the
+    * caller's k/nprobe choice (ApiSpec proves ≥0.9 recall at 25% scan on
+    * clustered data).
     */
   def ivfTopK(index: IvfIndex, probes: DataFrame, k: Int,
       nprobe: Int): DataFrame = {
-    val rw = Window.partitionBy("probe_id")
-      .orderBy(col("cs").desc, col("cell"))
-    val routes = index.centroids.crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("probe"), col("cell"),
-        graft.functions.cosine_sim(col("cent"), col("probe")).as("cs"))
-      .withColumn("rnk", row_number().over(rw))
-      .where(col("rnk") <= nprobe)
+    val routes = topKRows(index.centroids.crossJoin(broadcast(probes))
+        .select(col("probe_id"), col("probe"), col("cell"),
+          graft.functions.cosine_sim(col("cent"), col("probe")).as("cs")),
+        Seq("probe_id"), "cs", "cell", nprobe, "rnk")
       .select("probe_id", "probe", "cell")
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("score").desc, col("id"))
-    index.assign.join(broadcast(routes), "cell")
-      .select(col("probe_id"), col("id"),
-        graft.functions.cosine_sim(col("embedding"), col("probe")).as("score"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topKRows(index.assign.join(broadcast(routes), "cell")
+        .select(col("probe_id"), col("id"),
+          graft.functions.cosine_sim(col("embedding"), col("probe")).as("score")),
+        Seq("probe_id"), "score", "id", k, "rank")
       .drop("rank")
   }
 
@@ -125,9 +119,11 @@ object Graft {
     * independent `bits`-bit signatures per vector (seeded, scan-side
     * codegen'd expressions); a store row is a candidate for a probe if
     * ANY of its signatures lands within Hamming `maxHamming` of the
-    * probe's, and only candidates pay the exact cosine. At 100 TB each
-    * signature is its own partition/cluster key and the disjunction
-    * becomes `tables` bucket-joins unioned before the verify step.
+    * probe's, and only candidates pay the exact cosine. At most k scored
+    * candidates per probe per task cross one exchange on `probe_id`
+    * (`graft.functions.top_k`). At 100 TB each signature is its own
+    * partition/cluster key and the disjunction becomes `tables`
+    * bucket-joins unioned before the verify step.
     */
   def lshTopK(store: DataFrame, probes: DataFrame, k: Int, bits: Int = 12,
       tables: Int = 3, maxHamming: Int = 5): DataFrame = {
@@ -143,14 +139,11 @@ object Graft {
     val anyTableHits = seeds.indices
       .map(i => bit_count(col(s"b$i").bitwiseXOR(col(s"pb$i"))) <= maxHamming)
       .reduce(_ || _)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("score").desc, col("id"))
-    e.crossJoin(broadcast(p))
-      .where(anyTableHits)
-      .select(col("probe_id"), col("id"),
-        graft.functions.cosine_sim(col("embedding"), col("probe")).as("score"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topKRows(e.crossJoin(broadcast(p))
+        .where(anyTableHits)
+        .select(col("probe_id"), col("id"),
+          graft.functions.cosine_sim(col("embedding"), col("probe")).as("score")),
+        Seq("probe_id"), "score", "id", k, "rank")
       .drop("rank")
   }
 

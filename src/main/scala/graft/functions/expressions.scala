@@ -445,3 +445,27 @@ case class Chunks(child: Expression, size: Int, overlap: Int)
   override protected def withNewChildInternal(nc: Expression): Chunks =
     copy(child = nc)
 }
+
+/** A numeric value's descending sort key, for [[graft.functions.top_k]],
+  * whose `collect_top_k` heap orders entries ascending only: ascending on
+  * the key is a DESC window's order, NaN first, NULL last, -0.0 = 0.0.
+  * Integral values flip with `~x`, since `-x` overflows at the minimum.
+  */
+case class DescendingKey(child: Expression) extends RuntimeReplaceable
+    with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+  override lazy val replacement: Expression = CreateStruct(
+    IsNull(child) +: (child.dataType match {
+      case FloatType | DoubleType => Seq(Not(IsNaN(child)), UnaryMinus(child))
+      case ByteType | ShortType | IntegerType | LongType => Seq(BitwiseNot(child))
+      case _ => Seq(UnaryMinus(child))
+    }))
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: NumericType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"a top-k score must be numeric, got ${t.sql}")
+  }
+  override def prettyName: String = "descending_key"
+
+  override protected def withNewChildInternal(nc: Expression): DescendingKey =
+    copy(child = nc)
+}

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftSql, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{functions => F}
 
@@ -132,6 +133,45 @@ package object functions {
 
   /** vector_avg as a ready-to-use aggregate Column function. */
   def vector_avg(c: Column): Column = vectorAvgUdaf(c)
+
+  /** Exact top-k aggregate: per group, the `k` entries best by numeric
+    * `score` DESC, then `tieBreak` ASC — a `row_number()` window's total
+    * order: NaN first, NULL last, -0.0 = 0.0 — as an
+    * ARRAY<STRUCT<score, tieBreak, carry…>> in rank order. Spark's
+    * `collect_top_k` bounded heap, partial and final: at most k entries
+    * per group and task cross the exchange; nothing sorts or spills.
+    * Full (score, tieBreak) ties order by the carried columns, which must
+    * be orderable (no MAP).
+    */
+  def top_k(score: Column, tieBreak: Column, k: Int, carry: Column*): Column = {
+    val entry = F.struct(
+      (GraftSql.column(DescendingKey(GraftSql.expression(score))).as(RankKey)
+        +: score +: tieBreak +: carry): _*)
+    val top = GraftSql.column(new CollectTopK(GraftSql.expression(entry), k,
+      true).toAggregateExpression())
+    F.transform(top, _.dropFields(RankKey))
+  }
+
+  private val RankKey = "__rank_key"
+
+  /** The rows `row_number() OVER (PARTITION BY key ORDER BY score DESC,
+    * tieBreak) <= k` keeps, through [[top_k]], in the frame's column
+    * order plus `rank`, the INT `row_number` would give. An empty `key`
+    * ranks the whole frame.
+    */
+  def topKRows(frame: DataFrame, key: Seq[String], score: String,
+      tieBreak: String, k: Int, rank: String): DataFrame = {
+    val carry = frame.columns.toSeq
+      .filterNot(c => key.contains(c) || c == score || c == tieBreak)
+    frame.groupBy(key.map(F.col): _*)
+      .agg(top_k(F.col(score), F.col(tieBreak), k, carry.map(F.col): _*)
+        .as("__top"))
+      .select(key.map(F.col) :+ F.posexplode(F.col("__top"))
+        .as(Seq("__pos", "__row")): _*)
+      .select(frame.columns.toSeq.map(c =>
+          if (key.contains(c)) F.col(c) else F.col("__row").getField(c).as(c))
+        :+ (F.col("__pos") + 1).as(rank): _*)
+  }
 
   /** Register all SQL-callable names on a live session (idempotent). */
   def registerAll(spark: SparkSession): Unit = {

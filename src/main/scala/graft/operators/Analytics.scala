@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.functions.word_ngrams
+import graft.functions.{topKRows, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -6055,7 +6055,6 @@ object Analytics {
         |    row_number() OVER (ORDER BY h DESC, c) AS rk FROM h1n) u
         |WHERE rk <= 20
         |ORDER BY kind, score DESC, id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val e = Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
@@ -6069,20 +6068,11 @@ object Analytics {
         .groupBy("c").agg(sum(col("a")).as("h")), "h")
       val a2n = renorm(e.join(h1n, Seq("c"))
         .groupBy("p").agg(sum(col("h")).as("a")), "a")
-      // unpartitioned rank over the node domain: bounded here by the
-      // top-20 LIMIT downstream — at 100 TB replace with orderBy+limit
-      // BEFORE the rank (TakeOrdered heap) exactly like rag_hybrid_rrf,
-      // whose 50-row-frame comment documents the identical-ranks proof
       val auth = a2n.select(lit("authority").as("kind"),
           col("p").as("id"), col("a").as("score"))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("score").desc, col("id"))))
       val hubs = h1n.select(lit("hub").as("kind"),
           col("c").as("id"), col("h").as("score"))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("score").desc, col("id"))))
-      auth.unionAll(hubs)
-        .where(col("rk") <= 20)
+      topKRows(auth.unionAll(hubs), Seq("kind"), "score", "id", 20, "rk")
         .select(col("kind"), col("id"), col("score"))
         .orderBy(col("kind"), col("score").desc, col("id"))
     },

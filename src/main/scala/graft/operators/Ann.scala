@@ -231,9 +231,9 @@ object Ann {
       val codes = readLayer(s, s"$root/pq_codes")
         .where(col("cell").isin(cells.toIndexedSeq: _*))
         .where(col("id") =!= 0)
-      val cents = s.read.parquet(s"$root/centroids")
+      val cents = flatLayer(s, dir, root, "centroids")
         .where(col("cell").isin(cells.toIndexedSeq: _*))
-      adcScoreResidual(codes, s.read.parquet(s"$root/pq_codebook"),
+      adcScoreResidual(codes, flatLayer(s, dir, root, "pq_codebook"),
           cents, probe, 8, 10)
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("score").desc, col("vec_id"))
@@ -320,15 +320,11 @@ object Ann {
       val store = Tables.embeddings(s, d).where(col("label") === 1)
       val probes = Tables.embeddings(s, d).where(col("vec_id") < 3)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)
-      store.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosine_sim(col("embedding"), col("pe")).as("score"))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
+      topKRows(store.crossJoin(broadcast(probes))
+          .where(col("vec_id") =!= col("probe_id"))
+          .select(col("probe_id"), col("vec_id"),
+            cosine_sim(col("embedding"), col("pe")).as("score")),
+          Seq("probe_id"), "score", "vec_id", 5, "rnk")
         .select(col("probe_id"), col("rnk"), col("vec_id"),
           round(col("score"), 6).as("score"))
         .orderBy("probe_id", "rnk")
@@ -389,33 +385,20 @@ object Ann {
         |  ON a.probe_id = x.probe_id AND a.vec_id = x.vec_id
         |GROUP BY x.probe_id
         |ORDER BY x.probe_id""".stripMargin) { (s, d) =>
-      val w = org.apache.spark.sql.expressions.Window
       val e = Tables.embeddings(s, d)
       val probes = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val reps = e.groupBy("label")
         .agg(min_by(col("embedding"), col("vec_id")).as("rep"))
-      val routed = reps.crossJoin(broadcast(probes))
-        .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("rep"), col("pe")).desc, col("label"))))
-        .where(col("rn") <= 2)
+      val routed = topKRows(reps.crossJoin(broadcast(probes))
+          .select(col("probe_id"), col("label"), col("pe"),
+            cosine_sim(col("rep"), col("pe")).as("cs")),
+          Seq("probe_id"), "cs", "label", 2, "rn")
         .select("probe_id", "label", "pe")
       // the routed search scans only 2 of the label cells per probe — at
       // scale `label` is the partition key and this is partition pruning
-      val approx = e.join(broadcast(routed), Seq("label"))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("embedding"), col("pe")).desc,
-            col("vec_id"))))
-        .where(col("rn") <= 10)
-        .select("probe_id", "vec_id")
-      val exact = e.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("embedding"), col("pe")).desc,
-            col("vec_id"))))
-        .where(col("rn") <= 10)
-        .select("probe_id", "vec_id")
+      val approx = top10(e.join(broadcast(routed), Seq("label")), "pe")
+      val exact = top10(e.crossJoin(broadcast(probes)), "pe")
       exact.as("x")
         .join(approx.as("a"),
           col("x.probe_id") === col("a.probe_id") &&
@@ -470,21 +453,14 @@ object Ann {
         |  ON a.probe_id = x.probe_id AND a.vec_id = x.vec_id
         |GROUP BY x.probe_id
         |ORDER BY x.probe_id""".stripMargin) { (s, d) =>
-      val w = org.apache.spark.sql.expressions.Window
       val e = Tables.embeddings(s, d)
       val probes = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           slice(col("embedding"), 1, 16).as("pe16"))
-      def top10(scoreCol: org.apache.spark.sql.Column) =
-        e.crossJoin(broadcast(probes))
-          .where(col("vec_id") =!= col("probe_id"))
-          .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-            .orderBy(scoreCol.desc, col("vec_id"))))
-          .where(col("rn") <= 10)
-          .select("probe_id", "vec_id")
-      val trunc =
-        top10(cosine_sim(slice(col("embedding"), 1, 16), col("pe16")))
-      val exact = top10(cosine_sim(col("embedding"), col("pe")))
+      val pairs = e.crossJoin(broadcast(probes))
+        .withColumn("embedding16", slice(col("embedding"), 1, 16))
+      val trunc = top10(pairs, "pe16", "embedding16")
+      val exact = top10(pairs, "pe")
       exact.as("x")
         .join(trunc.as("a"),
           col("x.probe_id") === col("a.probe_id") &&
@@ -503,7 +479,7 @@ object Ann {
     // (k × probes broadcast rows), each candidate row fans out to the
     // nprobe levels that include its cell (sequence(cell_rank, k) — a
     // ≤k-way in-task explode, never a per-level rescan), and one
-    // window per (probe, level) takes the top-10. Monotonicity is
+    // top_k per (probe, level) takes the top-10. Monotonicity is
     // structural (level n's candidate set ⊆ level n+1's) and AnnSpec
     // gates it plus the nprobe=k endpoint (full scan → recall 1.0).
     // No SQL oracle: cells are seeded-k-means-defined.
@@ -517,31 +493,21 @@ object Ann {
       // table stays a DATAFRAME (no driver collect: the curve reads all
       // cells anyway, so static partition pruning buys nothing here)
       val root = Streams.storeDataDir(dir)
-      val ranked = s.read.parquet(s"$root/centroids")
+      val ranked = flatLayer(s, dir, root, "centroids")
         .crossJoin(broadcast(probes))
         .withColumn("cell_rank", row_number().over(
           w.partitionBy("probe_id")
             .orderBy(cosine_sim(col("cent"), col("pe")).desc, col("cell"))))
         .select("probe_id", "cell", "cell_rank", "pe")
-      val topk = readLayer(s, s"$root/cells")
-        .join(broadcast(ranked), "cell")
-        .where(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"), col("cell_rank"),
-          cosine_sim(col("embedding"), col("pe")).as("score"))
-        .withColumn("nprobe",
-          explode(sequence(col("cell_rank"), lit(4))))
-        .withColumn("rn", row_number().over(
-          w.partitionBy("probe_id", "nprobe")
-            .orderBy(col("score").desc, col("vec_id"))))
-        .where(col("rn") <= 10)
+      val topk = topKRows(readLayer(s, s"$root/cells")
+          .join(broadcast(ranked), "cell")
+          .where(col("vec_id") =!= col("probe_id"))
+          .select(col("probe_id"), col("vec_id"),
+            explode(sequence(col("cell_rank"), lit(4))).as("nprobe"),
+            cosine_sim(col("embedding"), col("pe")).as("score")),
+          Seq("probe_id", "nprobe"), "score", "vec_id", 10, "rn")
         .select("probe_id", "nprobe", "vec_id")
-      val exact = e.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("embedding"), col("pe")).desc,
-            col("vec_id"))))
-        .where(col("rn") <= 10)
-        .select("probe_id", "vec_id")
+      val exact = top10(e.crossJoin(broadcast(probes)), "pe")
       val nEx = exact.agg(count(lit(1)).as("n_exact"))
       val hits = exact.join(topk, Seq("probe_id", "vec_id"))
         .groupBy("nprobe").agg(count(lit(1)).as("hits"))
@@ -569,17 +535,16 @@ object Ann {
       import s.implicits._
       val dir = ivfIndex(s, d)
       val e = Tables.embeddings(s, d)
-      val w0 = org.apache.spark.sql.expressions.Window
       val probeFrame = e.where(col("vec_id") < 4)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
       // ONE routing pass for all probes (k centroid rows × 4 probes →
       // 12 bounded driver-side pairs, the routeCells precedent)
       val root = Streams.storeDataDir(dir)
-      val routingRows = s.read.parquet(s"$root/centroids")
-        .crossJoin(broadcast(probeFrame))
-        .withColumn("rn", row_number().over(w0.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("cent"), col("probe")).desc, col("cell"))))
-        .where(col("rn") <= 3)
+      val routingRows = topKRows(flatLayer(s, dir, root, "centroids")
+          .crossJoin(broadcast(probeFrame))
+          .select(col("probe_id"), col("cell"),
+            cosine_sim(col("cent"), col("probe")).as("cs")),
+          Seq("probe_id"), "cs", "cell", 3, "rn")
         .select(col("probe_id"), col("cell"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
       val unionCells = routingRows.map(_._2).distinct.toIndexedSeq
@@ -592,8 +557,8 @@ object Ann {
         .join(broadcast(routing), "cell")
         .where(col("id") =!= col("r_pid"))
       val ivfpq = adcScoreResidual(codes,
-          s.read.parquet(s"$root/pq_codebook"),
-          s.read.parquet(s"$root/centroids")
+          flatLayer(s, dir, root, "pq_codebook"),
+          flatLayer(s, dir, root, "centroids")
             .where(col("cell").isin(unionCells: _*)),
           probeFrame, 8, 10)
         .select(col("probe_id"), lit("ivfpq").as("method"),
@@ -607,24 +572,15 @@ object Ann {
       val routedByProbe = routingRows.groupBy(_._1).toSeq
         .map { case (p, rs) => (p, pvecs(p), rs.map(_._2).toSet) }
         .sortBy(_._1)
-      val graph = graphSearchMulti(readLayer(s, s"$root/graph"),
-          routedByProbe, k = 12, ef = 48)
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("rn", row_number().over(w0.partitionBy("probe_id")
-          .orderBy(col("score").desc, col("vec_id"))))
-        .where(col("rn") <= 10)
+      val graph = topKRows(graphSearchMulti(readLayer(s, s"$root/graph"),
+            routedByProbe, k = 12, ef = 48)
+          .where(col("vec_id") =!= col("probe_id")),
+          Seq("probe_id"), "score", "vec_id", 10, "rn")
         .select(col("probe_id"), lit("graph").as("method"), col("vec_id"))
       val perProbe = ivfpq.unionByName(graph)
       val probes = e.where(col("vec_id") < 4)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val w = org.apache.spark.sql.expressions.Window
-      val exact = e.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("probe_id"))
-        .withColumn("rn", row_number().over(w.partitionBy("probe_id")
-          .orderBy(cosine_sim(col("embedding"), col("pe")).desc,
-            col("vec_id"))))
-        .where(col("rn") <= 10)
-        .select("probe_id", "vec_id")
+      val exact = top10(e.crossJoin(broadcast(probes)), "pe")
       exact.as("x")
         .join(broadcast(perProbe).as("a"),
           col("x.probe_id") === col("a.probe_id") &&
@@ -879,6 +835,15 @@ object Ann {
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")(
       s.read.parquet(path))
 
+  /** A flat layer (`centroids`, `pq_codebook`) of the index at `dir`, read
+    * from generation `gen` through the footer resolver, with no inference
+    * job. One cache root per (index, layer), so layers never evict each
+    * other's footers.
+    */
+  private def flatLayer(s: org.apache.spark.sql.SparkSession, dir: String,
+      gen: String, layer: String): org.apache.spark.sql.DataFrame =
+    Tables.readMerged(s, s"$dir#$layer", s"$gen/$layer")
+
   /** Carry an UNTOUCHED layer (or single partition directory) from the
     * old generation into the new one without opening a single data
     * file: hard links where the filesystem allows, byte copies
@@ -1003,7 +968,7 @@ object Ann {
       dir: String, vecs: org.apache.spark.sql.DataFrame): Unit = {
     val root = Streams.storeDataDir(dir)
     assignToCentroids(vecs.select("vec_id", "embedding"),
-        s.read.parquet(s"$root/centroids"))
+        flatLayer(s, dir, root, "centroids"))
       .write.mode("append").partitionBy("cell")
       .parquet(s"$root/cells")
   }
@@ -1109,7 +1074,7 @@ object Ann {
       .select("vec_id", "embedding", "cell").localCheckpoint(true)
     val rebuilt = churn > rebuildChurn
     if (rebuilt) {
-      val k = s.read.parquet(s"$root/centroids").count().toInt
+      val k = flatLayer(s, dir, root, "centroids").count().toInt
       writeIndexLayers(s, next,
         kmeansCells(live.select("vec_id", "embedding"), k, iters),
         withGraph, withPq)
@@ -1132,7 +1097,7 @@ object Ann {
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$next/graph")
       if (withPq) {
-        val cents = s.read.parquet(s"$next/centroids")
+        val cents = flatLayer(s, dir, next, "centroids")
         val res = live.join(broadcast(cents), "cell")
           .select(col("vec_id").as("id"), col("cell"),
             expr("zip_with(embedding, cent, (x, y) -> x - y)").as("res"))
@@ -1155,6 +1120,18 @@ object Ann {
     })
   }
 
+  /** The exact top 10 of (probe, store row) `pairs` per `probe_id` by the
+    * cosine of `vec` to `probeVec`, then `vec_id`, self-matches excluded,
+    * as (probe_id, vec_id): the search every recall audit scores against.
+    */
+  private def top10(pairs: org.apache.spark.sql.DataFrame, probeVec: String,
+      vec: String = "embedding"): org.apache.spark.sql.DataFrame =
+    topKRows(pairs.where(col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"),
+          cosine_sim(col(vec), col(probeVec)).as("score")),
+        Seq("probe_id"), "score", "vec_id", 10, "rn")
+      .select("probe_id", "vec_id")
+
   /** nprobe nearest persisted cells for a probe frame exposing a
     * `probe` column: the shared routing step of every persisted-index
     * query — a bounded O(nprobe) driver collect of the k-row centroid
@@ -1162,7 +1139,7 @@ object Ann {
     */
   private def routeCells(s: org.apache.spark.sql.SparkSession, dir: String,
       probe: org.apache.spark.sql.DataFrame, nprobe: Int): Array[String] =
-    s.read.parquet(s"${Streams.storeDataDir(dir)}/centroids")
+    flatLayer(s, dir, Streams.storeDataDir(dir), "centroids")
       .crossJoin(broadcast(probe.select(col("probe"))))
       .select(col("cell"), cosine_sim(col("cent"), col("probe")).as("cs"))
       .orderBy(col("cs").desc, col("cell"))
@@ -1256,8 +1233,8 @@ object Ann {
     * approximate cosine is the sum of m LUT hits over its codes divided
     * by |probe|·√Σ|cw|². Returns (probe_id, id, score) top-k per probe.
     * Everything after encoding is one broadcast join + one (probe, id)
-    * combiner shuffle; the rank window sees probes × k candidates only
-    * after a per-probe TakeOrdered — never the raw store.
+    * combiner shuffle; at most k candidates per probe per task cross
+    * the top_k's exchange — never the raw store.
     */
   private[graft] def pqTopKOf(store: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame, k: Int, m: Int = 8,
@@ -1303,13 +1280,11 @@ object Ann {
       .persist()
     val cents = assign.groupBy("cell")
       .agg(vector_avg(col("embedding")).as("cent"))
-    val routed = cents.crossJoin(broadcast(probes))
-      .select(col("probe_id").as("r_pid"), col("cell"),
-        cosine_sim(col("cent"), col("probe")).as("cs"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("r_pid")
-          .orderBy(col("cs").desc, col("cell"))))
-      .where(col("rn") <= nprobe).select(col("r_pid"), col("cell"))
+    val routed = topKRows(cents.crossJoin(broadcast(probes))
+        .select(col("probe_id").as("r_pid"), col("cell"),
+          cosine_sim(col("cent"), col("probe")).as("cs")),
+        Seq("r_pid"), "cs", "cell", nprobe, "rn")
+      .select(col("r_pid"), col("cell"))
     // the returned frame still reads `assign` lazily — releasing it here
     // would silently re-run the k-means assignment at execution time;
     // callers release blocks when done (the same contract as pageRank)
@@ -1379,10 +1354,7 @@ object Ann {
       .join(broadcast(pnorm), col("probe_id") === col("pn_id"))
       .select(col("probe_id"), col("id"),
         (col("ds") / (col("pnorm") * sqrt(col("nn")))).as("score"))
-    val rw = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("score").desc, col("id"))
-    scored.withColumn("rn", row_number().over(rw))
-      .where(col("rn") <= k).drop("rn")
+    topKRows(scored, Seq("probe_id"), "score", "id", k, "rn").drop("rn")
   }
 
   /** ADC scoring of RESIDUAL-coded candidates (id, cell, sub, code;
@@ -1449,10 +1421,7 @@ object Ann {
         ((col("pc") + col("rds")) / (col("pnorm") *
           sqrt(col("scn2") + lit(2.0) * col("sccw") + col("sn2"))))
           .as("score"))
-    val rw = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("score").desc, col("id"))
-    scored.withColumn("rn", row_number().over(rw))
-      .where(col("rn") <= k).drop("rn")
+    topKRows(scored, Seq("probe_id"), "score", "id", k, "rn").drop("rn")
   }
 
   /** Nearest-centroid assignment of a (vec_id, embedding) frame against a

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.topKRows
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -167,7 +168,7 @@ object Corpus {
     * group scored tf·(N/df) — one int64 product + ONE double division,
     * so scores are bit-identical on any engine (log-IDF's libm ln can
     * differ in the last ulp and flip near-tie ranks). Rank ties break on
-    * the term itself. The rank window only ever sees (group × vocab)
+    * the term itself. The top-k only ever sees (group × vocab)
     * aggregated rows, never raw tokens.
     */
   private[graft] def tfidfTopTermsOf(docs: org.apache.spark.sql.DataFrame,
@@ -187,10 +188,7 @@ object Corpus {
       .crossJoin(broadcast(nd))
       .select(col(groupCol), col("term"), col("tf"), col("df"),
         ((col("tf") * col("n")).cast("double") / col("df")).as("score"))
-    val w = Window.partitionBy(groupCol)
-      .orderBy(col("score").desc, col("term"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .drop("rk")
+    topKRows(scored, Seq(groupCol), "score", "term", k, "rk").drop("rk")
   }
 
   val defs: Seq[Q] = Seq(

@@ -341,10 +341,7 @@ object Joins {
         .where(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"),
           cosine_sim(col("embedding"), col("probe")).as("score"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)
-      scored.withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 3)
+      topKRows(scored, Seq("probe_id"), "score", "vec_id", 3, "rnk")
         .select(col("probe_id"), col("rnk"), col("vec_id"),
           round(col("score"), 6).as("score"))
         .orderBy("probe_id", "rnk")

@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   * calls (OpenAI embed `RAG.java:47`, OpenSearch k-NN `RAG.java:51-59`,
   * chat completion `RAG.java:87-98`). Here the same semantic chain is a
   * declarative DataFrame program over a parquet-backed vector store:
-  * embed → cosine top-k (TakeOrderedAndProject, no full sort) → score-ordered
-  * context concat → prompt render → deterministic extractive mock answer.
+  * embed → cosine top-k → score-ordered context concat → prompt render →
+  * deterministic extractive mock answer.
   *
-  * Scale posture: the probe side is a broadcast of O(k) rows; the store side
-  * streams through the scan stage — no shuffle at any k, any store size.
+  * Scale posture: the probe side is a broadcast of O(k) rows; the store
+  * is scored in its scan stage and never shuffled. `top_k` keeps at most
+  * k scored rows per question per task, those cross one exchange, and
+  * context and answer read its ranked array: no sort, no regrouping.
   */
 object Rag {
 
@@ -35,37 +37,33 @@ object Rag {
 
   val FixedQuestion = "how does a query filter rows in a stream"
 
-  /** Deterministic probe: store vector with vec_id = 0 (lets DuckDB oracle
-    * the k-NN search via a scalar subquery on the same table).
+  /** (vec_id, score) of every store vector against the deterministic
+    * probe, the store vector with vec_id = 0 (lets DuckDB oracle the k-NN
+    * search via a scalar subquery on the same table), at the reference's
+    * minScore(0.0), RAG.java:54.
     */
-  private def withProbe(s: SparkSession, d: String): DataFrame = {
+  private def probeScores(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val probe = e.where(col("vec_id") === 0).select(col("embedding").as("probe"))
     e.crossJoin(broadcast(probe))
+      .where(col("vec_id") =!= 0)
+      .select(col("vec_id"), cosine_sim(col("embedding"), col("probe")).as("score"))
+      .where(col("score") >= 0.0)
   }
 
   /** Top-k rows (vec_id, score) for the fixed probe — A7/A8. */
   def knnTopK(s: SparkSession, d: String, k: Int = 10): DataFrame =
-    withProbe(s, d)
-      .where(col("vec_id") =!= 0)
-      .select(col("vec_id"), cosine_sim(col("embedding"), col("probe")).as("score"))
-      .where(col("score") >= 0.0) // reference's minScore(0.0), RAG.java:54
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    probeScores(s, d).orderBy(col("score").desc, col("vec_id")).limit(k)
 
-  /** Top-k (vec_id, score, text): scores joined to `documents` BEFORE the
-    * limit, mirroring the oracle's order of operations exactly (ADVICE r1 —
-    * limiting first would silently select a different set if any top-k
-    * vec_id lacked a documents row).
+  /** The top k for the fixed probe with their text, as one row whose `top`
+    * is the ranked array of (score, vec_id, text). Scores join `documents`
+    * BEFORE the cut, as the oracle does (ADVICE r1 — cutting first would
+    * select a different set if a top-k vec_id lacked a documents row).
     */
   def knnTopKWithText(s: SparkSession, d: String, k: Int = 10): DataFrame =
-    withProbe(s, d)
-      .where(col("vec_id") =!= 0)
-      .select(col("vec_id"), cosine_sim(col("embedding"), col("probe")).as("score"))
-      .where(col("score") >= 0.0)
+    probeScores(s, d)
       .join(Tables.documents(s, d), col("vec_id") === col("doc_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+      .agg(top_k(col("score"), col("vec_id"), k, col("text")).as("top"))
 
   /** Literal template substitution — `replace` has plain-string semantics on
     * both engines, unlike `regexp_replace` whose Java `Matcher` replacement
@@ -76,33 +74,24 @@ object Rag {
       replace(lit(PromptTemplate), lit("{{question}}"), question),
       lit("{{information}}"), information)
 
-  /** A9 context aggregate: the `text` of every row joined with "\n\n" in
-    * descending `score` order (RAG.java:76-78), ties broken by the
-    * `tieBreak` column the caller's top-k already sorts on.
+  /** A9 context: the `text` of every entry of a ranked `top_k` array
+    * joined with "\n\n", in rank order: descending `score`, ties broken
+    * by the top-k's tie-break (RAG.java:76-78).
     */
-  private def contextOf(tieBreak: Option[String]): Column =
-    array_join(
-      transform(
-        array_sort(collect_list(struct(
-          (negate(col("score")).as("ns") +: tieBreak.map(col(_).as("v")).toSeq
-            :+ col("text").as("t")): _*))),
-        x => x.getField("t")),
-      "\n\n")
+  private def contextOf(top: Column): Column =
+    array_join(transform(top, _.getField("text")), "\n\n")
 
-  /** The answer tail (A9–A11) over scored top-k rows (question, text,
-    * score, and `tieBreak` when given): per question the context, the
-    * rendered prompt, and the extractive mock answer — the first sentence
-    * of the best match, a deterministic stand-in for the chat call at
-    * RAG.java:87-98.
+  /** The answer tail (A9–A11) over (question, top), `top` a `top_k`
+    * array of (score, tie-break, …, text): the context, the rendered
+    * prompt, and the extractive mock answer — the first sentence of the
+    * best match, a deterministic stand-in for the chat call at
+    * RAG.java:87-98. The best match is the maximum entry by (score,
+    * tie-break, text); on tied top scores that is not the context's head.
     */
-  private[graft] def answerTail(scored: DataFrame, tieBreak: Option[String])
-      : DataFrame =
-    scored
-      .groupBy(col("question"))
-      .agg(
-        contextOf(tieBreak).as("context"),
-        max(struct(col("score") +: tieBreak.map(col).toSeq :+ col("text"): _*))
-          .as("best"))
+  private[graft] def answerTail(ranked: DataFrame): DataFrame =
+    ranked
+      .select(col("question"), contextOf(col("top")).as("context"),
+        array_max(col("top")).as("best"))
       .select(
         col("question"),
         col("context"),
@@ -195,8 +184,8 @@ object Rag {
         |  WHERE e.vec_id <> 0
         |  ORDER BY score DESC, vec_id LIMIT 10)""".stripMargin) { (s, d) =>
       // A9: texts of the top-k matches joined with "\n\n" in score order
-      // (RAG.java:76-78). Deterministic: sort_array on (-score, vec_id).
-      knnTopKWithText(s, d).agg(contextOf(Some("vec_id")).as("context"))
+      // (RAG.java:76-78), ties broken by vec_id.
+      knnTopKWithText(s, d).select(contextOf(col("top")).as("context"))
     },
 
     Q("rag_prompt_render",
@@ -297,12 +286,11 @@ object Rag {
     val q = s.range(1).select(
       lit(FixedQuestion).as("question"),
       feature_hash_embed(lit(FixedQuestion), 64).as("qvec"))
-    val scored = docs.crossJoin(broadcast(q))
+    answerTail(docs.crossJoin(broadcast(q))
       .select(col("question"), col("doc_id"), col("text"),
         cosine_sim(col("embedding"), col("qvec")).as("score"))
       .where(col("score") >= 0.0)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(10)
-    answerTail(scored, tieBreak = Some("doc_id"))
+      .groupBy(col("question"))
+      .agg(top_k(col("score"), col("doc_id"), 10, col("text")).as("top")))
   }
 }

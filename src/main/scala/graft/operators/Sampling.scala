@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.topKRows
 import org.apache.spark.sql.functions._
 
 /** Corpus sampling / splitting / scrubbing — the remaining bread-and-butter
@@ -51,12 +52,10 @@ object Sampling {
         |  FROM documents)
         |WHERE rk <= 20
         |ORDER BY source, rk""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      Tables.documents(s, d)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("source"))
-            .orderBy(md5(col("doc_id").cast("string")))))
-        .where(col("rk") <= 20)
+      // every row scores 0, so the hash alone orders a stratum
+      topKRows(Tables.documents(s, d).select(col("source"), col("doc_id"),
+            lit(0).as("score"), md5(col("doc_id").cast("string")).as("h")),
+          Seq("source"), "score", "h", 20, "rk")
         .select(col("source"), col("doc_id"), col("rk"))
         .orderBy("source", "rk")
     },

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.Harness.withConfs
+import graft.functions.topKRows
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -595,10 +596,7 @@ object Streaming {
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"))
       val mv = Streams.runToTable(agg, "complete")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("win_start").orderBy(col("n").desc, col("event_type"))
-      mv.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 2)
+      topKRows(mv, Seq("win_start"), "n", "event_type", 2, "rn")
         .select("win_start", "event_type", "n")
         .orderBy("win_start", "event_type")
     },

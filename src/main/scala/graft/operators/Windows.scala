@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.topKRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -87,11 +88,9 @@ object Windows {
         |  FROM orders)
         |WHERE rn <= 2
         |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 2)
+      topKRows(Tables.orders(s, d)
+          .select("o_custkey", "o_orderkey", "o_totalprice"),
+          Seq("o_custkey"), "o_totalprice", "o_orderkey", 2, "rn")
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .orderBy("o_custkey", "o_orderkey")
     },

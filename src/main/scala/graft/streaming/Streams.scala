@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -393,54 +393,55 @@ object Streams {
   /** One micro-batch of RAG answering (A5–A11) as a reusable batch
     * transform: embed questions → cosine vs store → top-k per question →
     * context assembly → prompt render → extractive mock answer
-    * (deterministic stand-in for the chat call, `RAG.java:87-98`).
+    * (deterministic stand-in for the chat call, `RAG.java:87-98`). The
+    * store is scored in its scan and never shuffled; at most k scored rows
+    * per question per task cross one exchange on `question` (`top_k`).
     */
   def answerBatch(batch: DataFrame, storeDir: String,
       k: Int = 10, dim: Int = 64): DataFrame =
     graft.operators.Rag.answerTail(
-      topMatches(batch, storeRead(batch.sparkSession, storeDir), k, dim,
-        carry = Nil),
-      tieBreak = None)
+      matches(batch, storeRead(batch.sparkSession, storeDir), dim, carry = Nil)
+        .groupBy(col("question"))
+        .agg(top_k(col("score"), col("text"), k).as("top")))
 
-  /** Shared retrieval core (A7–A8): embed each batch question, cosine
-    * against the `store` frame, keep the k best at minScore ≥ 0.0. `carry`
-    * names extra store columns to ride along with (question, text, score).
+  /** Shared retrieval core (A7–A8): each batch question embedded and
+    * scored against every `store` row at minScore ≥ 0.0, as (question,
+    * text, carry…, score); callers cut the top k by (score, text).
     */
-  private def topMatches(batch: DataFrame, store: DataFrame, k: Int,
-      dim: Int, carry: Seq[String]): DataFrame = {
+  private def matches(batch: DataFrame, store: DataFrame, dim: Int,
+      carry: Seq[Column]): DataFrame = {
     val qs = batch.select(col("line").as("question"),
       feature_hash_embed(col("line"), dim).as("qvec"))
-    import org.apache.spark.sql.expressions.Window
     store.crossJoin(broadcast(qs))
-      .select(col("question") +: col("text") +: carry.map(col) :+
+      .select(col("question") +: col("text") +: carry :+
         cosine_sim(col("embedding"), col("qvec")).as("score"): _*)
       .where(col("score") >= 0.0) // minScore(0.0), RAG.java:54
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("question"))
-          .orderBy(col("score").desc, col("text"))))
-      .where(col("rn") <= k)
   }
 
   /** The retriever surface itself (the reference's
     * `EmbeddingStoreContentRetriever` returns whole TextSegments — text
     * PLUS metadata — even though the answer chain consumes only text):
     * top-k matches per question as (question, text, metadata, score,
-    * rank). A store written before the metadata column existed yields
-    * empty maps, the `TextSegment.from` default.
+    * rank), scored as in [[answerBatch]]. A store written before the
+    * metadata column existed yields empty maps, the `TextSegment.from`
+    * default.
     */
   def retrieveBatch(batch: DataFrame, storeDir: String,
       k: Int = 10, dim: Int = 64): DataFrame = {
     val store = storeRead(batch.sparkSession, storeDir)
     val hasMeta = store.columns.contains("metadata")
-    val m = topMatches(batch, store, k, dim,
-      carry = if (hasMeta) Seq("metadata") else Nil)
+    // top_k orders full ties by the carry, and a MAP is not orderable
+    val m = topKRows(matches(batch, store, dim,
+        carry = if (hasMeta) Seq(map_entries(col("metadata")).as("metadata"))
+                else Nil),
+      Seq("question"), "score", "text", k, "rank")
     // pre-metadata rows in a mixed-generation store arrive as NULL under
     // the merged schema — restore the `TextSegment.from` empty-map default
-    (if (hasMeta) m.withColumn("metadata",
-       coalesce(col("metadata"), map().cast("map<string,string>")))
+    (if (hasMeta) m.withColumn("metadata", coalesce(
+       map_from_entries(col("metadata")), map().cast("map<string,string>")))
      else m.withColumn("metadata", map().cast("map<string,string>")))
       .select(col("question"), col("text"), col("metadata"),
-        col("score"), col("rn").as("rank"))
+        col("score"), col("rank"))
   }
 
   private def runAnswer(questions: DataFrame, storeDir: String, k: Int,

@@ -63,7 +63,8 @@ class HarnessSpec extends SparkSuite {
 
   test("table and store reads take their schema from the footer resolver") {
     val readers = Set("src/main/scala/graft/Tables.scala",
-      "src/main/scala/graft/streaming/Streams.scala")
+      "src/main/scala/graft/streaming/Streams.scala",
+      "src/main/scala/graft/operators/Ann.scala")
     val lines = codeLines(mainRoot).filter { case (f, _) => readers(f.toString) }
     val merging = lines.collect {
       case (f, l) if l.contains("\"mergeSchema\"") => s"$f: $l" }
@@ -72,14 +73,26 @@ class HarnessSpec extends SparkSuite {
     val inferring = lines.collect {
       case (f, l) if parquetRead.findFirstIn(l).nonEmpty &&
         !l.contains(".schema(") => s"$f: $l" }
-    // the one schemaless read is the resolver's no-data-file fallback:
-    // there is nothing to infer from, and Spark words the error
+    // the schemaless reads are the resolver's no-data-file fallback
+    // (there is nothing to infer from, and Spark words the error) and the
+    // IVF index's cell-partitioned layers, which need partition discovery
     assert(inferring == Seq(
-      "src/main/scala/graft/Tables.scala: case None => spark.read.parquet(path)"),
+      "src/main/scala/graft/Tables.scala: case None => spark.read.parquet(path)",
+      "src/main/scala/graft/operators/Ann.scala: s.read.parquet(path))"),
       inferring.mkString("\n"))
     val footerReads = codeLines(mainRoot).collect {
       case (f, l) if l.contains("ParquetFileReader.open") => f.toString }
     assert(footerReads == Seq("src/main/scala/graft/Tables.scala"), footerReads)
+  }
+
+  test("no hand-written per-key top-k cut: every one goes through top_k") {
+    // a row_number/rank column cut at a fixed k is a per-key top-k, which
+    // graft.functions.top_k computes with a bounded heap; a cut against a
+    // per-row bound (rn <= fpp) is a prefix filter and is not matched
+    val cut = """(col\("|\$")(rn|rnk|rank|rk)"\)?\s*<=\s*(\d+|[A-Za-z_]\w*)\b(?!\s*\()""".r
+    val hits = codeLines(mainRoot).collect {
+      case (f, l) if cut.findFirstIn(l).nonEmpty => s"$f: $l" }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("operators, api, functions and streaming read no environment") {

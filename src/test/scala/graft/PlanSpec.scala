@@ -432,16 +432,54 @@ class PlanSpec extends SparkSuite {
       med.take(3000))
   }
 
-  test("tfidf: df side broadcast-joins; rank window sees aggregated rows") {
+  test("tfidf: df side broadcast-joins; the top-k sees aggregated rows") {
     val p = planString("corpus_tfidf_topterms")
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
-    // the row_number window consumes the (source, term) aggregate, so a
-    // HashAggregate must sit strictly below the Window operator
-    val winIdx = p.indexOf("Window")
-    val aggBelow = p.indexOf("HashAggregate", winIdx)
-    assert(winIdx >= 0 && aggBelow > winIdx,
-      "rank window must run over aggregated term rows, not raw tokens")
+    // the top-k consumes the (source, term) aggregate, so a plain
+    // HashAggregate must sit strictly below its partial phase
+    val topIdx = p.indexOf("partial_collect_top_k")
+    assert(topIdx >= 0 &&
+      "(?<!Object)HashAggregate".r.findFirstIn(p.substring(topIdx)).nonEmpty,
+      "the top-k must run over aggregated term rows, not raw tokens")
+  }
+
+  /** Every node of an executed plan, adaptive stages included. */
+  private def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    plan match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec        => planNodes(q.plan)
+      case p                        => p +: p.children.flatMap(planNodes)
+    }
+  }
+
+  test("answerBatch ranks through one partial/final collect_top_k pair, " +
+      "with no Sort, Window or WindowGroupLimit") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{
+      AggregateExpression, CollectTopK, Final, Partial}
+    val store = java.nio.file.Files.createTempDirectory("graft_plan_store_")
+    try {
+      Seq.tabulate(40)(i => s"Fact $i says row ${i % 7} is in the stream.")
+        .toDF("text")
+        .select(col("text"),
+          graft.functions.feature_hash_embed(col("text")).as("embedding"))
+        .write.mode("overwrite").parquet(store.toString)
+      val df = streaming.Streams.answerBatch(
+        Seq("which row is in the stream", "what does fact 3 say").toDF("line"),
+        store.toString, k = 3)
+      assert(df.collect().length == 2)
+      val nodes = planNodes(df.queryExecution.executedPlan)
+      val names = nodes.map(_.nodeName)
+      assert(!names.exists(n => n.contains("Sort") || n.contains("Window")),
+        names.mkString(", "))
+      val topK = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case a: AggregateExpression if a.aggregateFunction
+          .isInstanceOf[CollectTopK] => a.mode }))
+      assert(topK.sortBy(_.toString) == Seq(Final, Partial),
+        df.queryExecution.executedPlan.toString)
+    } finally streaming.Streams.deleteTree(store)
   }
 
   test("pagerank: equi-joins only; scalar frames broadcast; dq drift one scan") {

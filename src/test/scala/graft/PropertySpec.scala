@@ -207,4 +207,54 @@ class PropertySpec extends SparkSuite {
       assert(math.abs(revE - total) / total < 1e-9, s"case $ci: $revE")
     }
   }
+
+  test("topKRows equals the row_number window form, rows and ranks: many " +
+      "keys, heavy ties, NaN, ±0.0, NULL, k = 1 and k past the group " +
+      "(8 frames × 2 score types × 2 tie-break types)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // scores drawn mostly from a few values, so most groups tie; the
+    // tie-break is unique, as the window form needs for one answer
+    val dbl: Gen[Option[Double]] = Gen.frequency(
+      8 -> Gen.oneOf(0.0, -0.0, 0.5, 1.0, -1.0).map(Some(_)),
+      3 -> Gen.choose(-1.0, 1.0).map(Some(_)),
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity).map(Some(_)),
+      1 -> Gen.const(None))
+    val lng: Gen[Option[Long]] = Gen.frequency(
+      8 -> Gen.oneOf(0L, 1L, -1L, 7L).map(Some(_)),
+      2 -> Gen.oneOf(Long.MinValue, Long.MaxValue).map(Some(_)),
+      2 -> Gen.choose(-1000L, 1000L).map(Some(_)),
+      1 -> Gen.const(None))
+    val rowsGen = Gen.choose(1, 300).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0, 40), dbl, lng, Gen.alphaLowerStr)))
+    // the window form is the reference, kept here only
+    def windowForm(df: org.apache.spark.sql.DataFrame, key: Seq[String],
+        score: String, tie: String, k: Int) =
+      df.withColumn("rank", row_number().over(Window
+          .partitionBy(key.map(col): _*)
+          .orderBy(col(score).desc, col(tie))))
+        .where(col("rank") <= k)
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.toSeq.map(c => col(c).cast("string")): _*)
+        .collect().map(_.mkString("|")).sorted.toSeq
+    samples(rowsGen, 8).zipWithIndex.foreach { case (rows, ci) =>
+      val df = rows.zipWithIndex.map { case ((g, d, l, w), i) =>
+          // -0.0 and 0.0 differ in bits: keep them apart in the compare
+          (g, d, d.map(x => java.lang.Double.doubleToRawLongBits(x)), l,
+            i.toLong, f"$w%s#$i%05d", s"p$i")
+        }.toDF("g", "d", "d_bits", "l", "tie_l", "tie_s", "payload")
+        .repartition(3)
+      for (score <- Seq("d", "l"); tie <- Seq("tie_l", "tie_s");
+           (key, k) <- Seq((Seq("g"), 1), (Seq("g"), 3), (Seq("g"), 50),
+             (Nil, 5))) {
+        val got = topKRows(df, key, score, tie, k, "rank")
+        assert(got.columns.toSeq == df.columns.toSeq :+ "rank")
+        assert(got.schema("rank").dataType ==
+          org.apache.spark.sql.types.IntegerType)
+        assert(canon(got) == canon(windowForm(df, key, score, tie, k)),
+          s"case $ci: score $score, tie-break $tie, key $key, k $k")
+      }
+    }
+  }
 }
