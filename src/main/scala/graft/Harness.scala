@@ -71,11 +71,15 @@ object Harness {
     * getPersistentRDDs sweep. The removal BLOCKS: async eviction
     * otherwise overlaps the next query's timed window (r8 saw an
     * in-sweep-only 7 s on a query that measures 1 s isolated), so paying
-    * the removal wall here keeps it out of every measurement.
+    * the removal wall here keeps it out of every measurement. Everything
+    * the queries wrote under `Streams.scratchDir` (run outputs, scratch
+    * stores, checkpoints) is deleted too, so nothing read lazily from
+    * there may outlive the release.
     */
   def release(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
+    graft.streaming.Streams.deleteTree(graft.streaming.Streams.scratchRoot)
   }
 }

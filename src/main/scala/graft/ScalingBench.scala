@@ -217,47 +217,32 @@ object ScalingBench {
     */
   private def bandJoinState(s: SparkSession, dir: String, bound: Int)
       : (Double, Long, Long) = {
-    val maxState = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener =
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryProgressEvent): Unit = {
-          val ops = e.progress.stateOperators
-          if (ops != null && ops.nonEmpty)
-            maxState.getAndAccumulate(ops.map(_.numRowsTotal).sum,
-              math.max(_, _))
-        }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit = ()
+    val t0 = System.nanoTime()
+    val l = graft.streaming.Streams.eventsStream(s, dir)
+      .where(col("user_id") < bound)
+      .withWatermark("ts", "10 minutes")
+      .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
+        col("ts").as("ts_a"))
+    val r = graft.streaming.Streams.eventsStream(s, dir)
+      .where(col("user_id") < bound)
+      .withWatermark("ts", "10 minutes")
+      .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
+        col("ts").as("ts_b"))
+    val j = l.join(r,
+      col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
+        col("ts_b") >= col("ts_a") &&
+        col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"))
+      .select("eid_a", "eid_b")
+    var rows = 0L
+    val progress = graft.streaming.Streams.withStatePartitions(s, 4) {
+      graft.streaming.Streams.drain(j, "append") { (batch, _) =>
+        rows += batch.count()
       }
-    s.streams.addListener(listener)
-    try {
-      val t0 = System.nanoTime()
-      val l = graft.streaming.Streams.eventsStream(s, dir)
-        .where(col("user_id") < bound)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
-          col("ts").as("ts_a"))
-      val r = graft.streaming.Streams.eventsStream(s, dir)
-        .where(col("user_id") < bound)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
-          col("ts").as("ts_b"))
-      val j = l.join(r,
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"))
-        .select("eid_a", "eid_b")
-      val rows = graft.streaming.Streams
-        .runToTable(j, "append", statePartitions = 4).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, rows, maxState.get())
-    } finally s.streams.removeListener(listener)
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val maxState = progress.map(_.stateOperators.map(_.numRowsTotal).sum)
+      .foldLeft(0L)(math.max)
+    (wall, rows, maxState)
   }
 
   def main(args: Array[String]): Unit = {

@@ -166,6 +166,17 @@ object Tables {
   private[graft] def cachedFiles(root: String): Set[String] =
     Option(footers.get(root)).fold(Set.empty[String])(_.keySet.map(_.path))
 
+  /** Drop the footer facts of every read root at or under `dir`; a
+    * `<path>#<layer>` root counts as `<path>`. For a deleted directory.
+    */
+  private[graft] def forgetUnder(dir: java.nio.file.Path): Unit = {
+    val d = dir.toAbsolutePath.normalize
+    footers.keySet.removeIf { root =>
+      scala.util.Try(java.nio.file.Paths.get(root.split('#').head)
+        .toAbsolutePath.normalize.startsWith(d)).getOrElse(false)
+    }
+  }
+
   /** The files Spark reads for `path`: the file itself, or every data file
     * under a directory-shaped table, recursing into partition
     * subdirectories and skipping `_`/`.`-prefixed names as Spark does.

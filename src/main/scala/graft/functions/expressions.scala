@@ -446,10 +446,13 @@ case class Chunks(child: Expression, size: Int, overlap: Int)
     copy(child = nc)
 }
 
-/** A numeric value's descending sort key, for [[graft.functions.top_k]],
-  * whose `collect_top_k` heap orders entries ascending only: ascending on
-  * the key is a DESC window's order, NaN first, NULL last, -0.0 = 0.0.
-  * Integral values flip with `~x`, since `-x` overflows at the minimum.
+/** A numeric or binary-ordered string value's descending sort key, for
+  * [[graft.functions.top_k]], whose `collect_top_k` heap orders entries
+  * ascending only: ascending on the key is a DESC window's order, NaN
+  * first, NULL last, -0.0 = 0.0. Integral values flip with `~x`, since
+  * `-x` overflows at the minimum; a string flips each hex digit of its
+  * bytes and ends in `G`, above every digit, so a prefix sorts after its
+  * extensions.
   */
 case class DescendingKey(child: Expression) extends RuntimeReplaceable
     with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
@@ -457,12 +460,15 @@ case class DescendingKey(child: Expression) extends RuntimeReplaceable
     IsNull(child) +: (child.dataType match {
       case FloatType | DoubleType => Seq(Not(IsNaN(child)), UnaryMinus(child))
       case ByteType | ShortType | IntegerType | LongType => Seq(BitwiseNot(child))
+      case _: StringType => Seq(Concat(Seq(StringTranslate(Hex(child),
+        Literal("0123456789ABCDEF"), Literal("FEDCBA9876543210")), Literal("G"))))
       case _ => Seq(UnaryMinus(child))
     }))
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: NumericType => TypeCheckResult.TypeCheckSuccess
+    case StringType => TypeCheckResult.TypeCheckSuccess // UTF8_BINARY only
     case t => TypeCheckResult.TypeCheckFailure(
-      s"a top-k score must be numeric, got ${t.sql}")
+      s"a descending key must be numeric or a binary-ordered string, got ${t.sql}")
   }
   override def prettyName: String = "descending_key"
 

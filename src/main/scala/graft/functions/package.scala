@@ -145,7 +145,7 @@ package object functions {
     */
   def top_k(score: Column, tieBreak: Column, k: Int, carry: Column*): Column = {
     val entry = F.struct(
-      (GraftSql.column(DescendingKey(GraftSql.expression(score))).as(RankKey)
+      (descending(score).as(RankKey)
         +: score +: tieBreak +: carry): _*)
     val top = GraftSql.column(new CollectTopK(GraftSql.expression(entry), k,
       true).toAggregateExpression())
@@ -153,6 +153,12 @@ package object functions {
   }
 
   private val RankKey = "__rank_key"
+
+  /** A [[top_k]] tie-break that prefers LARGER values of a numeric or
+    * string column `c` (NULL last): its ascending order is `c` DESC.
+    */
+  def descending(c: Column): Column =
+    GraftSql.column(DescendingKey(GraftSql.expression(c)))
 
   /** The rows `row_number() OVER (PARTITION BY key ORDER BY score DESC,
     * tieBreak) <= k` keeps, through [[top_k]], in the frame's column

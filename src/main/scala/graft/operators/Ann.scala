@@ -198,19 +198,14 @@ object Ann {
     // ApiSpec gates the post-delete census, both compaction paths,
     // crash-before-publish, and recall vs exact on the shrunken store.
     Q.noOracle("ann_ivf_delete_compact") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ivf_life_").toString
+      val dir = Streams.scratchDir("ivf_life_")
       writeIndexLayers(s, dir,
         kmeansCells(Tables.embeddings(s, d), k = 4, iters = 3),
         withGraph = false, withPq = false)
       ivfDelete(s, dir,
         Tables.embeddings(s, d).where(col("vec_id") % 7 === 0)
           .select("vec_id"))
-      val census = ivfCompact(s, dir, rebuildChurn = 0.2)
-      // the census is a k-row driver-local frame, so the scratch
-      // generation can be reclaimed immediately
-      Streams.deleteTree(java.nio.file.Paths.get(dir))
-      census
+      ivfCompact(s, dir, rebuildChurn = 0.2)
     },
 
     // IVFPQ — the webscale layout both compressions compose into (the
@@ -635,13 +630,13 @@ object Ann {
       .agg(vector_avg(col("embedding")).as("cent"))
     val top2 = assign.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"),
-        struct(cosine_sim(col("embedding"), col("cent")).as("cs"),
-          col("cell").as("cell")).as("sc"))
+      .select(col("vec_id"), col("embedding"), col("cell"),
+        cosine_sim(col("embedding"), col("cent")).as("cs"))
       .groupBy(col("vec_id"))
       .agg(first(col("embedding")).as("embedding"),
-        slice(sort_array(collect_list(col("sc")), asc = false), 1, 2)
-          .as("top"))
+        // cosine DESC, ties to the larger cell
+        top_k(col("cs"), descending(col("cell")).as("cell_desc"), 2,
+          col("cell")).as("top"))
     val replicas = top2
       .where(size(col("top")) >= 2 &&
         col("top")(1)("cs") >= col("top")(0)("cs") - eps)
@@ -840,7 +835,7 @@ object Ann {
     * job. One cache root per (index, layer), so layers never evict each
     * other's footers.
     */
-  private def flatLayer(s: org.apache.spark.sql.SparkSession, dir: String,
+  private[graft] def flatLayer(s: org.apache.spark.sql.SparkSession, dir: String,
       gen: String, layer: String): org.apache.spark.sql.DataFrame =
     Tables.readMerged(s, s"$dir#$layer", s"$gen/$layer")
 

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.functions.{cosine_sim, minhash_shingles, simhash64, word_ngrams}
+import graft.functions.{cosine_sim, descending, minhash_shingles, simhash64,
+  top_k, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -723,13 +724,13 @@ object Dedup {
       // tiny (score, cell) structs — k is user-bounded, so this is O(n)
       val soft = assign.select(col("id"), col("embedding"))
         .crossJoin(broadcast(cents))
-        .select(col("id"), col("embedding"),
-          struct(cosine_sim(col("embedding"), col("cent")).as("cs"),
-            col("cell").as("cell")).as("sc"))
+        .select(col("id"), col("embedding"), col("cell"),
+          cosine_sim(col("embedding"), col("cent")).as("cs"))
         .groupBy(col("id"))
         .agg(first(col("embedding")).as("embedding"),
-          slice(sort_array(collect_list(col("sc")), asc = false), 1, probes)
-            .as("top"))
+          // cosine DESC, ties to the larger cell
+          top_k(col("cs"), descending(col("cell")).as("cell_desc"), probes,
+            col("cell")).as("top"))
         .select(col("id"), col("embedding"),
           explode(col("top.cell")).as("pcell"))
       val blocks = saltedCellBlocks(soft, maxCell)

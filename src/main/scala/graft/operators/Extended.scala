@@ -136,7 +136,7 @@ object Extended {
     Q("source_csv_roundtrip",
       """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""") {
       (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+      val tmp = graft.streaming.Streams.scratchDir("csv_")
       Tables.region(s, d).write.mode("overwrite")
         .option("header", "true").csv(tmp)
       s.read.option("header", "true")
@@ -148,7 +148,7 @@ object Extended {
     Q("source_json_roundtrip",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json_").toString
+      val tmp = graft.streaming.Streams.scratchDir("json_")
       Tables.nation(s, d).write.mode("overwrite").json(tmp)
       s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(tmp)
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -161,7 +161,7 @@ object Extended {
     Q("source_orc_roundtrip",
       """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier
         |ORDER BY s_suppkey""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_orc_").toString
+      val tmp = graft.streaming.Streams.scratchDir("orc_")
       Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -184,7 +184,7 @@ object Extended {
         |  CAST(max(length(replace(text, chr(10), ' '))) AS BIGINT)
         |    AS max_chars
         |FROM documents WHERE doc_id < 500""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_text_").toString
+      val tmp = graft.streaming.Streams.scratchDir("text_")
       Tables.documents(s, d).where(col("doc_id") < 500)
         .select(regexp_replace(col("text"), "\n", " ").as("value"))
         .write.mode("overwrite").text(tmp)
@@ -210,8 +210,7 @@ object Extended {
         |WHERE event_type <> 'click' OR value >= 100
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_dynpart_").toString
+      val tmp = graft.streaming.Streams.scratchDir("dynpart_")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))

@@ -206,8 +206,7 @@ object Pipeline {
         |FROM events
         |ORDER BY event_id
         |LIMIT 1000""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_rangesort_").toString
+      val tmp = graft.streaming.Streams.scratchDir("rangesort_")
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           expr("unix_timestamp(date_trunc('second', ts))").as("sec"))

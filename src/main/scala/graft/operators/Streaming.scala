@@ -11,14 +11,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming operator surface (SURVEY.md §2.2 "Streaming").
   *
   * Each query EXECUTES a real streaming job (file/memory/rate source →
-  * stateful transform → memory sink, AvailableNow trigger) and returns the
-  * sink table, so the driver's gate exercises genuine incremental
-  * execution. Where one AvailableNow pass over the fixture is semantically
-  * equal to the batch query (complete-mode windows, dedup keys, final
-  * running counts, stream-stream inner join), the result is ORACLED
-  * against the same DuckDB SQL as its batch twin; multi-batch watermark
-  * behavior (late-data drop) is sketch-free but algorithmically pinned in
-  * StreamingSpec plus the no-oracle `stream_late_data` demo below.
+  * stateful transform → parquet run directory, AvailableNow trigger,
+  * through `Streams.drain`) and returns that directory read back, so the
+  * driver's gate exercises genuine incremental execution and no result is
+  * held on the driver. Where one AvailableNow pass over the fixture is
+  * semantically equal to the batch query (complete-mode windows, dedup
+  * keys, final running counts, stream-stream inner join), the result is
+  * ORACLED against the same DuckDB SQL as its batch twin; multi-batch
+  * watermark behavior (late-data drop) is sketch-free but algorithmically
+  * pinned in StreamingSpec plus the no-oracle `stream_late_data` demo
+  * below.
   */
 object Streaming {
 
@@ -260,10 +262,13 @@ object Streaming {
     }
   }
 
+  @annotation.nowarn("cat=deprecation")
+  private def onceTrigger = org.apache.spark.sql.streaming.Trigger.Once()
+
   val defs: Seq[Q] = Seq(
 
-    // Tumbling 1-hour windows (A-layer window upgrade): complete-mode
-    // memory sink after one AvailableNow pass == the batch group-by.
+    // Tumbling 1-hour windows (A-layer window upgrade): the complete-mode
+    // result table after one AvailableNow pass == the batch group-by.
     Q("stream_tumbling_agg",
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS win_start, event_type,
         |  count(*) AS n,
@@ -525,15 +530,10 @@ object Streaming {
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
         |FROM events GROUP BY 1, 2
         |ORDER BY day, event_type""".stripMargin) { (s, d) =>
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_rollup_mv_").toString
-      val q = Streams.eventsStream(s, d).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          mergeRollupBatch(batch, store, Some(id))
-        }
-        .start()
-      q.awaitTermination()
+      val store = Streams.scratchDir("rollup_mv_")
+      Streams.drain(Streams.eventsStream(s, d), "append") { (batch, id) =>
+        mergeRollupBatch(batch, store, Some(id))
+      }
       Streams.storeRead(s, store)
         .select(col("day"), col("event_type"), col("n"),
           col("sv").cast("double").as("sv"))
@@ -557,17 +557,9 @@ object Streaming {
         |    IS NULL AS is_current
         |FROM orders WHERE o_custkey < 500
         |ORDER BY o_custkey, valid_from, o_orderkey""".stripMargin) { (s, d) =>
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_scd2_mv_").toString
-      val q = Streams.ordersStream(s, d)
-        .where(col("o_custkey") < 500)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          mergeScd2Batch(batch, store)
-        }
-        .start()
-      q.awaitTermination()
+      val store = Streams.scratchDir("scd2_mv_")
+      Streams.drain(Streams.ordersStream(s, d).where(col("o_custkey") < 500),
+        "append") { (batch, _) => mergeScd2Batch(batch, store) }
       Streams.storeRead(s, store)
         .orderBy("o_custkey", "valid_from", "o_orderkey")
     },
@@ -622,25 +614,20 @@ object Streaming {
         |    CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE)
         |  FROM events WHERE value >= 100)
         |ORDER BY sink""".stripMargin) { (s, d) =>
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_route_").toString
+      val base = Streams.scratchDir("route_")
       val (okDir, badDir) = (s"$base/valid", s"$base/quarantine")
       val gate = col("value") >= 100
-      val q = Streams.eventsStream(s, d).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one source pass per batch: cache, then two filtered writes,
-          // each into its own batch subdir (overwrite = retry-idempotent)
-          batch.persist()
-          try {
-            batch.where(gate).write.mode("overwrite")
-              .parquet(s"$okDir/batch_$batchId")
-            batch.where(!coalesce(gate, lit(false))).write.mode("overwrite")
-              .parquet(s"$badDir/batch_$batchId")
-          } finally { batch.unpersist(); () }
-        }
-        .start()
-      q.awaitTermination()
+      Streams.drain(Streams.eventsStream(s, d), "append") { (batch, batchId) =>
+        // one source pass per batch: cache, then two filtered writes,
+        // each into its own batch subdir (overwrite = retry-idempotent)
+        batch.persist()
+        try {
+          batch.where(gate).write.mode("overwrite")
+            .parquet(s"$okDir/batch_$batchId")
+          batch.where(!coalesce(gate, lit(false))).write.mode("overwrite")
+            .parquet(s"$badDir/batch_$batchId")
+        } finally { batch.unpersist(); () }
+      }
       // a route that received zero rows across all batches has no
       // directory — report (n=0, sv=null) instead of failing the read
       val schema = Tables.events(s, d).schema
@@ -767,10 +754,12 @@ object Streaming {
             OutputMode.Update())
           .toDF("user_id", "n_seen", "last3", "type_counts", "snap_ms",
             "snap_seq")
-        // Trigger.Once, not AvailableNow: processing-time TTL keeps
-        // shouldRunAnotherBatch true forever (see runToTableOnce)
-        val out = Streams.runToTableOnce(updates, "update",
-          statePartitions = 2)
+        // Trigger.Once, not AvailableNow: a processing-time TTL keeps
+        // shouldRunAnotherBatch true forever, so AvailableNow never
+        // terminates (measured: thousands of no-data micro-batches); Once
+        // runs exactly one batch over all available data and stops
+        val out = Streams.runToTable(updates, "update", statePartitions = 2,
+          trigger = onceTrigger)
         // the (batch timestamp, per-key batch counter) stamp — not
         // n_seen — picks the final snapshot: snap_ms increases across
         // batches even under partial TTL expiry (where n_seen can
@@ -917,8 +906,12 @@ object Streaming {
           col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
         "full_outer")
         .select("eid_a", "eid_b")
-      val (_, progress) =
-        Streams.runToTableWithProgress(j, "append", statePartitions = 4)
+      // the rows are not the output; the batches run for their state
+      val progress = Streams.withStatePartitions(s, 4) {
+        Streams.drain(j, "append") { (batch, _) =>
+          batch.write.format("noop").mode("overwrite").save()
+        }
+      }
       val withState = progress.filter(_.stateOperators.nonEmpty)
       val last = withState.lastOption.map(_.stateOperators.toSeq)
         .getOrElse(Seq.empty)
@@ -1065,21 +1058,12 @@ object Streaming {
         (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 2
       val cut = new java.sql.Timestamp(cutMs)
       val overlap = new java.sql.Timestamp(cutMs - 24L * 3600 * 1000)
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_backfill_").toString
-      val q = Streams.eventsStream(s, d)
+      val tail = Streams.runToTable(Streams.eventsStream(s, d)
         .where(col("ts") >= lit(overlap)) // tail + 1-day overlap
-        .select("event_id", "user_id")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(store)
-        }
-        .start()
-      q.awaitTermination()
+        .select("event_id", "user_id"), "append")
       Tables.events(s, d).where(col("ts") < lit(cut))
         .select("event_id", "user_id")
-        .unionByName(s.read.parquet(store))
+        .unionByName(tail)
         .dropDuplicates("event_id")
         .orderBy("event_id")
     },
@@ -1097,20 +1081,17 @@ object Streaming {
         |  CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sv
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) {
       (s, d) =>
-      val ck = java.nio.file.Files.createTempDirectory("graft_ssread_")
-        .toString
+      val ck = Streams.scratchDir("ssread_")
       val agg = Streams.eventsStream(s, d)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(14,2)")).as("sv"))
-      val name = "ssr_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      // the state is the answer: each batch must execute for its state
+      // to commit, and its rows go nowhere
       Streams.withStatePartitions(s, 4) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ck)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Streams.drain(agg, "complete", checkpoint = Some(ck)) { (batch, _) =>
+          batch.write.format("noop").mode("overwrite").save()
+        }
       }
       s.read.format("statestore").option("path", ck).load()
         .select(col("key.user_id").as("user_id"),
@@ -1133,23 +1114,16 @@ object Streaming {
     // against the batch nearest-centroid recompute exactly.
     Q.noOracle("stream_ann_ingest") { (s, d) =>
       val dir = Ann.ivfIndex(s, d)
-      val cents = s.read.parquet(s"${Streams.storeDataDir(dir)}/centroids")
-      val ingest = java.nio.file.Files
-        .createTempDirectory("graft_ann_ingest_").toString
-      val q = Streams.embeddingsStream(s, d).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$ingest/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Ann.assignToCentroids(batch, cents)
-            .write.mode("append").partitionBy("cell")
-            .parquet(s"$ingest/data")
-        }
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$ingest/data")
-        // partition-column type inference may narrow "3" to int — pin the
-        // census to the index's string cell ids
-        .groupBy(col("cell").cast("string").as("cell"))
+      val cents = Ann.flatLayer(s, dir, Streams.storeDataDir(dir), "centroids")
+      val ingest = Streams.scratchDir("ann_ingest_")
+      Streams.drain(Streams.embeddingsStream(s, d), "append",
+          checkpoint = Some(s"$ingest/chk")) { (batch, _) =>
+        Ann.assignToCentroids(batch, cents)
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$ingest/data")
+      }
+      Ann.readLayer(s, s"$ingest/data")
+        .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"))
         .orderBy("cell")
     },
@@ -1166,24 +1140,15 @@ object Streaming {
     // id-checksum; no SQL oracle (cells are seeded-k-means-defined) —
     // ApiSpec gates the census against the batch recompute.
     Q.noOracle("stream_ann_delete") { (s, d) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ann_del_").toString
+      val dir = Streams.scratchDir("ann_del_")
       Ann.writeIndexLayers(s, dir,
         Ann.kmeansCells(graft.Tables.embeddings(s, d), k = 4, iters = 3),
         withGraph = false, withPq = false)
-      val chk = java.nio.file.Files
-        .createTempDirectory("graft_ann_delchk_").toString
-      val q = Streams.embeddingsStream(s, d)
-        .where(col("vec_id") % 5 === 0)
-        .select("vec_id")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$chk/chk")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Ann.ivfDelete(s, dir, batch)
-        }
-        .start()
-      q.awaitTermination()
+      Streams.drain(Streams.embeddingsStream(s, d)
+          .where(col("vec_id") % 5 === 0).select("vec_id"), "append",
+          checkpoint = Some(Streams.scratchDir("ann_delchk_"))) {
+        (batch, _) => Ann.ivfDelete(s, dir, batch)
+      }
       val live = Ann.ivfLiveCells(s, dir)
         .groupBy(col("cell").cast("string").as("cell"))
         .agg(count(lit(1)).as("n_live"),
@@ -1221,10 +1186,15 @@ object Streaming {
         .groupBy(window(col("ts"), "10 minutes"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("win_start"), col("n"))
-      val name = "late_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      // interactive (data is added between batches), so the query is
+      // started and stopped here rather than drained
+      val out = Streams.scratchDir("late_")
       Streams.withStatePartitions(s, 2) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
+        val q = agg.writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.write.mode("append").parquet(out)
+          }
+          .start()
         try {
           ms.addData((t("10:00"), 1L), (t("10:05"), 1L))
           q.processAllAvailable() // watermark -> 09:55
@@ -1232,7 +1202,7 @@ object Streaming {
           q.processAllAvailable() // watermark -> 10:10, closes 10:00 window
         } finally q.stop()
       }
-      s.table(name).orderBy("win_start")
+      s.read.schema(agg.schema).parquet(out).orderBy("win_start")
     },
 
     // Rate source smoke: deterministic rate-micro-batch, windowless agg.
@@ -1255,7 +1225,7 @@ object Streaming {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val tmp = java.nio.file.Files.createTempDirectory("graft_rag_").toString
+      val tmp = Streams.scratchDir("rag_")
       val store = s"$tmp/store"; val out = s"$tmp/answers"
 
       val knowledge = MemoryStream[String]
@@ -1269,7 +1239,8 @@ object Streaming {
       questions.addData("What is the capital of France?")
       Streams.answer(questions.toDF().toDF("line"), store, out, k = 2)
 
-      s.read.parquet(out).select("question", "answer").orderBy("question")
+      Tables.readMerged(s, out, out).select("question", "answer")
+        .orderBy("question")
     },
   )
 }

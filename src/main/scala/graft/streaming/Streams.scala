@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 
 /** Streaming sources + the two reference-parity pipelines
   * (SURVEY.md §2.1 / §3.4), Spark-first:
@@ -104,51 +104,58 @@ object Streams {
   def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
     graft.Harness.withConfs(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
-  /** The memory-sink table and the run's progress, harvested from the
-    * query handle before it goes out of scope.
+  /** Run `df` to completion: start it with `trigger` (AvailableNow by
+    * default), hand every micro-batch to `body`, await termination and
+    * return the run's progress (its last
+    * `spark.sql.streaming.numRecentProgressUpdates` batches, 100 by
+    * default). The one place a streaming query in `src/main` is started
+    * and awaited; a failed batch rethrows here. Results go where `body`
+    * writes them, never into the driver.
     */
-  private def runToTableWith(df: DataFrame, mode: String,
-      statePartitions: Int, trigger: Trigger)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
+  def drain(df: DataFrame, mode: String,
+      trigger: Trigger = Trigger.AvailableNow(),
+      checkpoint: Option[String] = None)(body: (DataFrame, Long) => Unit)
+      : Seq[StreamingQueryProgress] = {
+    val w = df.writeStream.outputMode(mode).trigger(trigger)
+    val q = checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+      .foreachBatch(body).start()
+    q.awaitTermination()
+    q.recentProgress.toSeq
+  }
+
+  /** Run `df` to completion into a fresh scratch directory and read the
+    * result back as a batch DataFrame. Per mode, as Spark's sinks keep a
+    * result table: `complete` rewrites the directory with each batch,
+    * `append` and `update` append (an update-mode reader takes the last
+    * update per key itself). The read uses the stream's own schema, so it
+    * runs no inference job and is empty when no batch ran.
+    */
+  def runToTable(df: DataFrame, mode: String, statePartitions: Int = 8,
+      trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
+    val dir = scratchDir("run_")
+    val write = if (mode == "complete") "overwrite" else "append"
     withStatePartitions(df.sparkSession, statePartitions) {
-      val name = "st_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(trigger).start()
-      q.awaitTermination()
-      (df.sparkSession.table(name), q.recentProgress.toSeq)
+      drain(df, mode, trigger) { (batch, _) =>
+        batch.write.mode(write).parquet(dir)
+      }
     }
+    df.sparkSession.read.schema(df.schema).parquet(dir)
+  }
 
-  /** Run a streaming DataFrame to completion into an in-memory table and
-    * return the result as a batch DataFrame (AvailableNow trigger).
+  /** The per-JVM parent of every [[scratchDir]]; `Harness.release`
+    * deletes it, and the next [[scratchDir]] makes it again.
     */
-  def runToTable(df: DataFrame, mode: String, statePartitions: Int = 8)
-      : DataFrame =
-    runToTableWith(df, mode, statePartitions, Trigger.AvailableNow())._1
+  private[graft] lazy val scratchRoot: java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory("graft_scratch_")
 
-  /** [[runToTable]] that ALSO returns the run's progress telemetry —
-    * the `StateOperatorProgress` rows (state rows/bytes per stateful
-    * operator) are the 100 TB operability signal for stream-stream
-    * joins and windowed aggregations: unbounded state growth shows up
-    * here long before an executor OOMs.
+  /** A fresh directory for what one query writes (a run's output, a
+    * scratch store, a checkpoint), under [[scratchRoot]]: it lives until
+    * the next `Harness.release`.
     */
-  def runToTableWithProgress(df: DataFrame, mode: String,
-      statePartitions: Int = 8)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
-    runToTableWith(df, mode, statePartitions, Trigger.AvailableNow())
-
-  /** Single-batch variant of [[runToTable]] for stateful queries whose
-    * operator reports processing-time work pending FOREVER — a
-    * `transformWithState` in `TimeMode.ProcessingTime` with state TTL
-    * keeps `shouldRunAnotherBatch` true, so `Trigger.AvailableNow` never
-    * reaches its termination condition (measured: thousands of no-data
-    * micro-batches). `Trigger.Once` runs exactly one batch — all
-    * available source data — and stops unconditionally, which is the
-    * correct run-to-completion harness for that operator family.
-    */
-  @annotation.nowarn("cat=deprecation")
-  def runToTableOnce(df: DataFrame, mode: String, statePartitions: Int = 8)
-      : DataFrame =
-    runToTableWith(df, mode, statePartitions, Trigger.Once())._1
+  def scratchDir(prefix: String): String = {
+    java.nio.file.Files.createDirectories(scratchRoot)
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+  }
 
   // ---- the generation protocol every file-backed store shares (the
   // vector store, the rollup and SCD2 views, the IVF index): the flat
@@ -254,7 +261,8 @@ object Streams {
 
   /** Delete `p` and everything under it, best-effort; a no-op when `p`
     * does not exist. The walk stream is closed — it holds directory
-    * handles.
+    * handles. The footer resolver forgets every read root at or under
+    * `p`, so a deleted store leaves no cache entry behind.
     */
   private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -264,6 +272,7 @@ object Streams {
       all.reverse.foreach(f =>
         try java.nio.file.Files.deleteIfExists(f) catch { case _: Exception => () })
     }
+    Tables.forgetUnder(p)
   }
 
   /** IngestPipeline (A2–A4): lines → deterministic embedding →
@@ -285,23 +294,18 @@ object Streams {
       if (lines.columns.contains("metadata")) lines
       else lines.withColumn("metadata",
         map().cast("map<string,string>"))
-    val q = withMeta
-      .select(
-        xxhash64(col("line")).as("vec_id"),
-        col("line").as("text"),
-        feature_hash_embed(col("line"), dim).as("embedding"),
-        col("metadata").cast("map<string,string>").as("metadata"))
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      // one file-set per micro-batch still accumulates forever; coalesce
-      // bounds files-per-batch (micro-batches are small relative to the
-      // store by definition) and compactStore bounds the long-run total
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.coalesce(filesPerBatch).write.mode("append")
-          .parquet(storeDataDir(storeDir))
-      }
-      .start()
-    q.awaitTermination()
+    val rows = withMeta.select(
+      xxhash64(col("line")).as("vec_id"),
+      col("line").as("text"),
+      feature_hash_embed(col("line"), dim).as("embedding"),
+      col("metadata").cast("map<string,string>").as("metadata"))
+    // one file-set per micro-batch still accumulates forever; coalesce
+    // bounds files-per-batch (micro-batches are small relative to the
+    // store by definition) and compactStore bounds the long-run total
+    drain(rows, "append") { (batch, _) =>
+      batch.coalesce(filesPerBatch).write.mode("append")
+        .parquet(storeDataDir(storeDir))
+    }
   }
 
   /** Rewrite the store into ~`targetFileBytes` files — the OPTIMIZE/
@@ -446,16 +450,10 @@ object Streams {
 
   private def runAnswer(questions: DataFrame, storeDir: String, k: Int,
       dim: Int, checkpointDir: Option[String])
-      (sink: (DataFrame, Long) => Unit): Unit = {
-    val writer = questions.writeStream.trigger(Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(answerBatch(batch, storeDir, k, dim), batchId)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      (sink: (DataFrame, Long) => Unit): Unit =
+    drain(questions, "append", checkpoint = checkpointDir) { (batch, batchId) =>
+      sink(answerBatch(batch, storeDir, k, dim), batchId)
+    }
 
   /** AnswerPipeline (A5–A12), parquet sink: per micro-batch, answer every
     * question in the batch against the parquet vector store with ONE

@@ -64,7 +64,8 @@ class HarnessSpec extends SparkSuite {
   test("table and store reads take their schema from the footer resolver") {
     val readers = Set("src/main/scala/graft/Tables.scala",
       "src/main/scala/graft/streaming/Streams.scala",
-      "src/main/scala/graft/operators/Ann.scala")
+      "src/main/scala/graft/operators/Ann.scala",
+      "src/main/scala/graft/operators/Streaming.scala")
     val lines = codeLines(mainRoot).filter { case (f, _) => readers(f.toString) }
     val merging = lines.collect {
       case (f, l) if l.contains("\"mergeSchema\"") => s"$f: $l" }
@@ -90,9 +91,87 @@ class HarnessSpec extends SparkSuite {
     // graft.functions.top_k computes with a bounded heap; a cut against a
     // per-row bound (rn <= fpp) is a prefix filter and is not matched
     val cut = """(col\("|\$")(rn|rnk|rank|rk)"\)?\s*<=\s*(\d+|[A-Za-z_]\w*)\b(?!\s*\()""".r
+    // so is the first n of a descending-sorted per-key list, which
+    // holds every entry of the key before it cuts
+    val sortedPrefix = """slice\(\s*sort_array\(\s*collect_list\(""".r
     val hits = codeLines(mainRoot).collect {
-      case (f, l) if cut.findFirstIn(l).nonEmpty => s"$f: $l" }
+      case (f, l) if cut.findFirstIn(l).nonEmpty ||
+        sortedPrefix.findFirstIn(l).nonEmpty => s"$f: $l" }
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** `file: line` for each code line under src/main containing `needle`. */
+  private def linesWith(needle: String): Seq[String] =
+    codeLines(mainRoot).collect {
+      case (f, l) if l.contains(needle) => s"$f: $l" }
+
+  test("every run-to-completion stream goes through Streams.drain, and no " +
+      "memory sink holds results on the driver") {
+    val memory = linesWith("format(\"memory\")")
+    assert(memory.isEmpty, memory.mkString("\n"))
+    assert(linesWith("awaitTermination") == Seq(
+      "src/main/scala/graft/streaming/Streams.scala: q.awaitTermination()"),
+      linesWith("awaitTermination").mkString("\n"))
+  }
+
+  test("query scratch lives under the one scratch root; only the memoized " +
+      "cross-query layouts make their own temp directories") {
+    val dirs = linesWith("createTempDirectory")
+    assert(dirs == Seq(
+      "src/main/scala/graft/operators/Analytics.scala: " +
+        "val dir = java.nio.file.Files.createTempDirectory(\"graft_zonemap_\")",
+      "src/main/scala/graft/operators/Ann.scala: " +
+        "val dir = java.nio.file.Files.createTempDirectory(\"graft_ivf_idx_\")",
+      "src/main/scala/graft/operators/ScaleOps.scala: " +
+        "val dir = java.nio.file.Files.createTempDirectory(\"graft_events_part_\")",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "val d = java.nio.file.Files.createTempDirectory(s\"graft_${name}_\")",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "java.nio.file.Files.createTempDirectory(\"graft_scratch_\")",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString"),
+      dirs.mkString("\n"))
+  }
+
+  /** The scratch root's entries, empty when it does not exist. */
+  private def scratchEntries: Seq[Path] =
+    if (!Files.isDirectory(streaming.Streams.scratchRoot)) Nil
+    else scala.util.Using.resource(Files.list(streaming.Streams.scratchRoot))(
+      _.iterator().asScala.toSeq)
+
+  test("release leaves no temp view and no run directory behind") {
+    def tempViews = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    Seq("stream_tumbling_agg", "stream_state_reader", "stream_late_data",
+      "source_rate_stream").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+    }
+    assert(scratchEntries.nonEmpty, "the queries wrote no run directory")
+    Harness.release(spark)
+    assert(tempViews.diff(before).isEmpty, tempViews.diff(before))
+    assert(scratchEntries.isEmpty, scratchEntries.mkString(", "))
+  }
+
+  test("release drops the footer-cache roots of the scratch stores it " +
+      "deletes") {
+    Seq("ann_ivf_delete_compact", "stream_incremental_rollup",
+      "stream_scd2_upsert").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+    }
+    // a store is cached under its root, an index layer under root#layer;
+    // the lifecycle's compaction keeps its centroids, so read them here
+    scratchEntries.map(_.toString).filter(_.contains("ivf_life_")).foreach {
+      d => operators.Ann.flatLayer(spark, d, streaming.Streams.storeDataDir(d),
+        "centroids").count()
+    }
+    val roots = scratchEntries.map(_.toString).flatMap(d =>
+      Seq(d, s"$d#centroids", s"$d#pq_codebook"))
+    def cached = roots.filter(r => Tables.cachedFiles(r).nonEmpty)
+    assert(cached.exists(_.endsWith("#centroids")) &&
+      cached.count(!_.contains("#")) >= 2, cached)
+    Harness.release(spark)
+    assert(cached.isEmpty, cached)
   }
 
   test("operators, api, functions and streaming read no environment") {

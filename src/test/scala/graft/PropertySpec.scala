@@ -257,4 +257,41 @@ class PropertySpec extends SparkSuite {
       }
     }
   }
+
+  test("top_k with a descending tie-break equals the sorted-list prefix " +
+      "form: tied cosines, NaN, ±0.0, NULL; BIGINT and STRING cells") {
+    import spark.implicits._
+    // cosines drawn mostly from a few values, so most rows tie; a row's
+    // cells are distinct, as the IVF probes' are
+    val cs: Gen[Option[Double]] = Gen.frequency(
+      8 -> Gen.oneOf(0.0, -0.0, 0.5, 1.0, -1.0).map(Some(_)),
+      3 -> Gen.choose(-1.0, 1.0).map(Some(_)),
+      1 -> Gen.const(Some(Double.NaN)),
+      1 -> Gen.const(None))
+    val rowGen = Gen.zip(Gen.choose(1, 12), Gen.listOfN(12, cs),
+      Gen.pick(12, Seq(0L, 1L, 2L, 3L, 9L, 10L, 11L, 12L, 99L, 100L, 101L,
+        1000L, 123456L, 7L, 8L, 42L)))
+    val rowsGen = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, rowGen))
+    samples(rowsGen, 8).zipWithIndex.foreach { case (rows, ci) =>
+      val df = rows.zipWithIndex.flatMap { case ((m, css, cells), id) =>
+          css.take(m).zip(cells.toSeq).map { case (c, cell) =>
+            (id.toLong, c, cell, cell.toString) }
+        }.toDF("id", "cs", "cell_l", "cell_s").repartition(3)
+      for (cell <- Seq("cell_l", "cell_s"); n <- Seq(1, 2, 3, 20)) {
+        // the sorted-list prefix form is the reference, kept here only
+        val ref = df.groupBy("id").agg(slice(sort_array(collect_list(
+            struct(col("cs"), col(cell).as("cell"))), asc = false), 1, n)
+          .as("top"))
+        val got = df.groupBy("id").agg(top_k(col("cs"),
+            descending(col(cell)).as("cell_desc"), n, col(cell).as("cell"))
+          .as("top"))
+        // cells name the rank order; cosines compare by bits (±0.0)
+        def canon(t: org.apache.spark.sql.DataFrame) = t.select(col("id"),
+            col("top.cell").cast("array<string>"),
+            transform(col("top.cs"), x => x.cast("string")))
+          .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+        assert(canon(got) == canon(ref), s"case $ci: cell $cell, n $n")
+      }
+    }
+  }
 }

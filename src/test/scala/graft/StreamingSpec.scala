@@ -423,7 +423,7 @@ class StreamingSpec extends SparkSuite {
       // (processAllAvailable never latches, AvailableNow never reaches
       // its termination condition — measured), so each phase is a
       // single-batch Trigger.Once pass over a SHARED checkpoint — state
-      // persists across restarts, and each pass's memory table holds
+      // persists across restarts, and each pass's output dir holds
       // exactly that pass's emissions
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_ttl_").toString
@@ -824,6 +824,41 @@ class StreamingSpec extends SparkSuite {
       val x = exact(day)
       assert(math.abs(e.toDouble - x) <= 0.05 * x, s"$day: est $e exact $x")
     }
+  }
+
+  test("runToTable keeps the memory sink's result table in every output " +
+      "mode across micro-batches") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft_rtt_").toString
+    try {
+      // two files, one per micro-batch: key 1 is updated by both
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1)
+        .write.mode("append").parquet(src)
+      Seq((1L, 5L), (3L, 30L)).toDF("k", "v").coalesce(1)
+        .write.mode("append").parquet(src)
+      def stream = spark.readStream.schema("k BIGINT, v BIGINT")
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      def agg = stream.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("sv"))
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      for ((df, mode) <- Seq((stream.select($"k", $"v" * 2), "append"),
+          (agg, "update"), (agg, "complete"))) {
+        val got = canon(streaming.Streams.runToTable(df, mode, 2))
+        // the memory sink is the reference, kept here only
+        val name = "rtt_" + java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode(mode)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        try {
+          q.awaitTermination()
+          assert(q.recentProgress.count(_.numInputRows > 0) == 2, mode)
+          assert(got == canon(spark.table(name)), mode)
+        } finally spark.catalog.dropTempView(name)
+      }
+      // update mode appends: key 1 keeps both of its updates
+      assert(canon(streaming.Streams.runToTable(agg, "update", 2)) ==
+        Seq("1|1|10", "1|2|15", "2|1|20", "3|1|30"))
+    } finally streaming.Streams.deleteTree(java.nio.file.Paths.get(src))
   }
 
   test("kafka-shaped source builds the value-only string plan (A1 parity)") {
