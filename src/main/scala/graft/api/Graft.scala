@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Pin
 import graft.functions.topKRows
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,20 +16,28 @@ import org.apache.spark.sql.functions._
   *   docs  — (doc_id LONG, text STRING)
   *   store — (id LONG, embedding ARRAY<FLOAT>)
   * Everything returns a DataFrame and nothing collects to the driver.
-  * Laziness caveat: the MinHash pipeline ([[minhashNearDupPairs]],
-  * [[dedupClusters]], [[dedupClustersLogN]], [[nearDupKeepList]], and
-  * [[mmrRerank]]'s greedy)
-  * materializes bounded intermediates eagerly (persist/localCheckpoint
-  * of candidate/label/edge frames per round — required so iterative
-  * stages don't replay
-  * the full sketch per round), and the PQ family ([[pqTopK]],
-  * [[ivfpqTopK]]) runs its k-means training collects (bounded: KB-sized
-  * codebooks) at CALL time and leaves the routing assignment cached
-  * until released. Long-lived sessions issuing many such
-  * calls should release blocks between calls with
-  * `graft.Harness.release(spark)`.
+  *
+  * Pinned blocks. Iterative and multi-consumer kernels pin bounded
+  * intermediates (`graft.Pin`) so later stages don't replay them, and
+  * the PQ family ([[pqTopK]], [[ivfpqTopK]]) runs its k-means training
+  * collects (KB-sized codebooks) at CALL time. [[minhashNearDupPairs]],
+  * [[simhashNearDupPairs]] and [[semanticDedup]] free their other pins
+  * at return and hand their eager result checkpoint to the caller. A
+  * lazy result leaves its pins with the caller: [[pageRank]] and
+  * [[personalizedPageRank]] the cached adjacency and their round
+  * checkpoints, the cluster collapses their last round, the graph walks
+  * their edges and rounds, [[ivfpqTopK]] the cached assignment, and
+  * [[ivfBuild]] the index (released by [[IvfIndex.unpersist]]) and its
+  * k-means centroids. Wrap the calls and the actions over their results
+  * in [[scoped]] to release everything they pinned, and only that.
   */
 object Graft {
+
+  /** `graft.Pin.scope`: run `body`, then release every block it pinned
+    * on this thread, and no other, e.g.
+    * `Graft.scoped { Graft.pageRank(edges).count() }`.
+    */
+  def scoped[T](body: => T): T = Pin.scope(body)
 
   /** Register the engine's SQL-callable kernels (cosine_sim, vector_dot,
     * l2_distance, vector_norm, quantize_i8, cosine_sim_i8, zorder_key)
@@ -66,11 +75,11 @@ object Graft {
   /** A built IVF index over a caller store: `assign` carries every store
     * row plus its cell assignment (id, embedding, cell) — on a real table
     * `cell` is the partition/cluster key — and `centroids` is the k-row
-    * routing table (cell, cent). Both are materialized (probing must not
+    * routing table (cell, cent). Both are cached (probing must not
     * replay the k-means); release with [[IvfIndex.unpersist]] when done.
     */
   final case class IvfIndex(assign: DataFrame, centroids: DataFrame) {
-    def unpersist(): Unit = { assign.unpersist(); centroids.unpersist(); () }
+    def unpersist(): Unit = Pin.release(assign, centroids)
   }
 
   /** Build an IVF index over `store` (id, embedding): distributed seeded
@@ -80,13 +89,11 @@ object Graft {
     * nearest cells ([[ivfTopK]]).
     */
   def ivfBuild(store: DataFrame, k: Int, iters: Int = 3): IvfIndex = {
-    val assign = graft.operators.Ann.kmeansCells(
+    val assign = Pin.cache(graft.operators.Ann.kmeansCells(
         store.select(col("id").as("vec_id"), col("embedding")), k, iters)
-      .select(col("vec_id").as("id"), col("embedding"), col("cell"))
-      .persist()
-    val cents = assign.groupBy("cell")
-      .agg(graft.functions.vector_avg(col("embedding")).as("cent"))
-      .persist()
+      .select(col("vec_id").as("id"), col("embedding"), col("cell")))
+    val cents = Pin.cache(assign.groupBy("cell")
+      .agg(graft.functions.vector_avg(col("embedding")).as("cent")))
     IvfIndex(assign, cents)
   }
 
@@ -477,9 +484,8 @@ object Graft {
     * arithmetic — deterministic under any summation order. Contract:
     * every node must appear as a source (an undirected graph — both
     * directions present — satisfies this); a target-only node
-    * accumulates rank but contributes none. Returns (u, pr). Eagerness
-    * caveat: edges persist and intermediate iterations localCheckpoint
-    * (see the class note on releasing blocks).
+    * accumulates rank but contributes none. Returns (u, pr), lazy over
+    * the cached adjacency (see the class note on pinned blocks).
     *
     * `saltDegree` > 0 enables the two-level SALTED adjacency for
     * power-law graphs: a node whose degree exceeds the threshold holds
@@ -705,11 +711,11 @@ object Graft {
     * boilerplate-heavy corpora): an oversized probed cell sub-salts by
     * id hash into ⌈size/maxCell⌉ blocks — pair work is bounded at
     * O(n·maxCell) and a split pair is missed, the LSH-band-cap contract.
-    * The call is EAGER: the keep-list (O(n) narrow rows) is materialized
-    * via localCheckpoint and the internal caches are released before
-    * returning, so repeated calls in a long-lived session leak no cached
-    * blocks (unlike ivfBuild, there is no index to keep alive — nothing
-    * here needs a release handle).
+    * The call is EAGER: the keep-list (O(n) narrow rows) is an eager
+    * checkpoint, and the call releases the cached assignment and the
+    * k-means centroid checkpoints before returning. The keep-list's
+    * blocks pass to the caller: each call leaves exactly that one pin,
+    * which [[scoped]] (or the frame's garbage collection) frees.
     */
   def semanticDedup(store: DataFrame, k: Int, threshold: Double,
       iters: Int = 3, probes: Int = 2, maxCell: Int = 10000): DataFrame =
@@ -828,13 +834,10 @@ object Graft {
 
   private def canonicalEdges(edges: DataFrame, uCol: String,
       vCol: String): DataFrame =
-    edges.select(greatest(col(uCol), col(vCol)).as("u"),
+    Pin.cut(edges.select(greatest(col(uCol), col(vCol)).as("u"),
         least(col(uCol), col(vCol)).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      // lazy: plan truncation up front, materialization on the
-      // kernel's first round job (see Analytics.shortestCostOf)
-      .localCheckpoint(false)
+      .distinct())
 
   /** Single-source BFS hop counts over an undirected edge frame:
     * (node, hops) for every node reachable from `source` within
@@ -862,11 +865,10 @@ object Graft {
       uCol: String = "u", vCol: String = "v",
       costCol: String = "cost"): DataFrame =
     graft.operators.Analytics.shortestCostOf(
-      edges.select(greatest(col(uCol), col(vCol)).as("u"),
+      Pin.cut(edges.select(greatest(col(uCol), col(vCol)).as("u"),
           least(col(uCol), col(vCol)).as("v"), col(costCol).as("cost"))
         .where(col("u") =!= col("v"))
-        .groupBy("u", "v").agg(min(col("cost")).as("cost"))
-        .localCheckpoint(false), source, rounds)
+        .groupBy("u", "v").agg(min(col("cost")).as("cost"))), source, rounds)
 
   /** Common-neighbor link prediction over an undirected edge frame:
     * the top `topN` NON-adjacent pairs sharing >= 1 neighbor, as
@@ -882,11 +884,7 @@ object Graft {
       uCol: String = "u", vCol: String = "v",
       maxMiddleDegree: Int = 1000): DataFrame =
     graft.operators.Analytics.commonNeighborsOf(
-      edges.select(least(col(uCol), col(vCol)).as("u"),
-          greatest(col(uCol), col(vCol)).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(false), topN, maxMiddleDegree)
+      lowHighEdges(edges, uCol, vCol), topN, maxMiddleDegree)
 
   /** Synchronous label-propagation communities over an undirected edge
     * frame: exactly `iters` lockstep rounds, each re-labeling every
@@ -941,11 +939,10 @@ object Graft {
     */
   private def lowHighEdges(edges: DataFrame, uCol: String,
       vCol: String): DataFrame =
-    edges.select(least(col(uCol), col(vCol)).as("u"),
+    Pin.cut(edges.select(least(col(uCol), col(vCol)).as("u"),
         greatest(col(uCol), col(vCol)).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
 
   /** Resource-allocation link prediction over an undirected edge frame:
     * non-adjacent pairs scored Σ 1/deg(w) over common neighbors w,

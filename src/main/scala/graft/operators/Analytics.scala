@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.{topKRows, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -316,9 +316,10 @@ object Analytics {
     * graphs — both edge directions present — satisfy this); a
     * target-only node accumulates rank but contributes none. Returns
     * (u, pr) after `iters` iterations. The edge frame is deduplicated
-    * and persisted; intermediate iterations localCheckpoint so the plan
-    * doesn't grow exponentially with `iters` (same discipline as the
-    * connected-components rounds).
+    * and cached; every third iteration is an eager checkpoint so the
+    * plan doesn't grow with `iters` (same discipline as the
+    * connected-components rounds). The result is lazy over the cached
+    * adjacency, so that pin stays with the caller.
     *
     * Internally the edge multiset is held as an ADJACENCY LIST
     * (u, neighbors): a pair-level codegen DISTINCT (map-side partial
@@ -356,7 +357,7 @@ object Analytics {
     // driver scalar folded into the plan as a LITERAL (Scala Long
     // division == SQL div), removing per-iteration one-row joins.
     val saltedLayout = saltDegree > 0L
-    val adj = pageRankAdjacency(edges, saltDegree, salts).persist()
+    val adj = Pin.cache(pageRankAdjacency(edges, saltDegree, salts))
     // one row per node for n and p0 (the salted layout holds hubs on
     // several rows; the distinct reads the already-persisted adj)
     val nodes =
@@ -372,12 +373,12 @@ object Analytics {
         .select(explode(col("vs")).as("pu"), col("c"))
         .groupBy(col("pu"))
         .agg((lit(base) + expr("(85L * sum(c)) div 100")).as("pr"))
-    // localCheckpoint is EAGER — each one is a full extra job — and plan
-    // depth grows only LINEARLY per round here, so cut the lineage every
-    // third round instead of every round: short walks (iters <= 3, both
-    // bench queries) plan zero checkpoint jobs, long walks stay bounded.
+    // plan depth grows only LINEARLY per round here, so cut the lineage
+    // every third round instead of every round: short walks (iters <= 3,
+    // both bench queries) plan zero checkpoint jobs, long walks stay
+    // bounded.
     val ranked = (1 to iters).foldLeft(p0) { (p, i) =>
-      if (i < iters && i % 3 == 0) step(p).localCheckpoint() else step(p)
+      if (i < iters && i % 3 == 0) Pin.now(step(p)) else step(p)
     }
     ranked.select(col("pu").as("u"), col("pr"))
   }
@@ -401,7 +402,7 @@ object Analytics {
     */
   private[graft] def pprOf(edges: DataFrame, seed: Long, iters: Int,
       saltDegree: Long = 0L, salts: Int = 16): DataFrame =
-    pprRounds(pageRankAdjacency(edges, saltDegree, salts).persist(),
+    pprRounds(Pin.cache(pageRankAdjacency(edges, saltDegree, salts)),
       seed, iters)
 
   /** [[pprOf]] with the seed DERIVED from the graph itself (min source
@@ -414,7 +415,7 @@ object Analytics {
     */
   private[graft] def pprMinSeeded(edges: DataFrame, iters: Int,
       saltDegree: Long = 0L, salts: Int = 16): DataFrame = {
-    val adj = pageRankAdjacency(edges, saltDegree, salts).persist()
+    val adj = Pin.cache(pageRankAdjacency(edges, saltDegree, salts))
     val seedRow = adj.agg(min(col("u"))).head
     if (seedRow.isNullAt(0))
       adj.select(col("u"), lit(0L).as("pr")).where(lit(false))
@@ -437,7 +438,7 @@ object Analytics {
           + expr("(85L * sum(c)) div 100")).as("pr"))
       // same lineage rule as pageRankOf: depth grows linearly, cut
       // every third round so short walks plan zero checkpoint jobs
-      if (i < iters && i % 3 == 0) next.localCheckpoint() else next
+      if (i < iters && i % 3 == 0) Pin.now(next) else next
     }
     ranked.select(col("pu").as("u"), col("pr"))
   }
@@ -832,8 +833,8 @@ object Analytics {
       .select(col("a"), col("b"), col("c"))
 
   private[graft] def triangleStatsOf(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v")).distinct()
-      .persist() // read 4× (ab, bc, ac, degrees)
+    // read 4× (ab, bc, ac, degrees)
+    val e = Pin.cache(edges.select(col("u"), col("v")).distinct())
     val tri = trianglesOf(e).agg(count(lit(1)).as("t"))
     val w = e.select(col("u").as("x"))
       .unionAll(e.select(col("v").as("x")))
@@ -863,8 +864,8 @@ object Analytics {
     * BIGINTs — bit-identical cross-engine.
     */
   private[graft] def localClusteringOf(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v")).distinct()
-      .persist() // read 4× (ab, bc, ac, degrees)
+    // read 4× (ab, bc, ac, degrees)
+    val e = Pin.cache(edges.select(col("u"), col("v")).distinct())
     val tri = trianglesOf(e)
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("tri"))
@@ -1152,14 +1153,14 @@ object Analytics {
       val keep = bcastUpTo(
         degrees(edges).where(col("dg") >= k).select(col("nd")),
         cnt, 2000000L)
-      // LAZY checkpoint: the count below materializes the blocks in
-      // the same job (plan truncation identical to the eager form,
-      // one round job instead of two)
-      val next = edges
+      // the count below materializes the round
+      val next = Pin.cut(edges
         .join(keep, col("u") === col("nd"), "left_semi")
-        .join(keep, col("v") === col("nd"), "left_semi")
-        .localCheckpoint(false)
+        .join(keep, col("v") === col("nd"), "left_semi"))
       val ncnt = next.count()
+      // the count materialized `next`: a superseded round is dead (the
+      // caller's edges0 is not this kernel's to release)
+      if (edges ne edges0) Pin.release(edges)
       changed = ncnt != cnt
       cnt = ncnt
       edges = next
@@ -1251,13 +1252,13 @@ object Analytics {
     // time. Both consumers (pair mining, prune) share the identical
     // basket subtree, so Spark's ReusedExchange serves the second from
     // the first's shuffle files.
-    val baskets = df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
-      .groupBy("bk").agg(collect_set(col("it")).as("ps"))
-      // persist (the basket_lift discipline): ReusedExchange only shares
-      // the orderkey SHUFFLE between the pair miner and the prune — each
-      // branch still re-ran the final collect_set over the full item
-      // stream on top of it; the cache computes the baskets once
-      .persist()
+    // cached (the basket_lift discipline): ReusedExchange only shares
+    // the orderkey SHUFFLE between the pair miner and the prune — each
+    // branch still re-ran the final collect_set over the full item
+    // stream on top of it; the cache computes the baskets once
+    val baskets = Pin.cache(df
+      .select(col(basketCol).as("bk"), col(itemCol).as("it"))
+      .groupBy("bk").agg(collect_set(col("it")).as("ps")))
     val pairs = baskets
       .select(col("ps"), explode(col("ps")).as("pa"))
       .select(col("pa"),
@@ -1469,26 +1470,22 @@ object Analytics {
       spark.conf.get("spark.sql.shuffle.partitions").toInt
     val eparts = math.max(1, math.min(sessParts,
       (edges0.count() * 2 / 50000L + 1L).toInt))
-    // persist, NOT localCheckpoint (see labelPropagationOf): AQE-era
-    // checkpoints surface as UnknownPartitioning and would re-introduce
-    // the per-round dedup exchange
-    val e = symmetrize(edges0, "u", "v", "src", "dst")
-      .repartition(eparts, col("dst"))
-      .persist()
+    // a cache, so the rounds see hash(dst) (see graft.Pin)
+    val e = Pin.cache(symmetrize(edges0, "u", "v", "src", "dst")
+      .repartition(eparts, col("dst")))
     // materialize the cache NOW: a round planned before the cache is
     // built sees AQE's UnknownPartitioning and re-inserts the dedup
     // exchange for that round (labelPropagationOf gets this for free
     // from its node count; BFS has no natural pre-loop action)
     e.count()
-    var visited = Seq((source, 0L)).toDF("node", "hops")
-      .localCheckpoint(false)
+    var visited = Pin.cut(Seq((source, 0L)).toDF("node", "hops"))
     var frontier = visited.select(col("node"))
     var fcnt = 1L
     var vcnt = 1L
     var h = 0L
     while (fcnt > 0 && h < maxHops) {
       h += 1
-      // The round frame is localCheckpoint'd — plan TRUNCATION matters
+      // The round frame is checkpointed — plan TRUNCATION matters
       // here, not just caching: the next round references this frame
       // twice (frontier and inside visited), so an untruncated plan
       // would nest exponentially across rounds. visited stays a LAZY
@@ -1503,9 +1500,8 @@ object Analytics {
         .join(bcastUpTo(visited, vcnt, 4000000L),
           Seq("node"), "left_anti")
         .withColumn("hops", lit(h))
-      // LAZY: the loop-condition count materializes the round's
-      // blocks in its own job — one job per round, not two
-      val nxt = round.localCheckpoint(false)
+      // the loop-condition count materializes the round
+      val nxt = Pin.cut(round)
       fcnt = nxt.count()
       if (fcnt > 0) {
         visited = visited.unionAll(nxt)
@@ -1539,19 +1535,16 @@ object Analytics {
     // ZERO per-round driver syncs: unlike BFS (where the frontier count
     // IS the loop condition), Bellman-Ford runs a FIXED round count, so
     // nothing in the loop needs a per-round action. Every round frame
-    // is a LAZY localCheckpoint — the plan still truncates (the next
-    // round references dist TWICE, join side and carry side, so without
-    // truncation the logical tree would double every round) but the
-    // whole relaxation chain materializes in ONE cascade at the
-    // caller's first action, each intermediate cached as its checkpoint
-    // blocks on first computation. Broadcast/partition gates use the
-    // symmetric edge count (computed once; dist is node-sized and
-    // nodes ≤ edge rows) instead of a per-round dist count.
-    val e = symmetrize(edges0, "u", "v", "src", "dst", Seq("cost"))
-      .localCheckpoint(false)
+    // is a `cut` pin — the plan truncates (the next round references
+    // dist TWICE, join side and carry side, so without truncation the
+    // logical tree would double every round) and the whole relaxation
+    // chain materializes in ONE cascade at the caller's first action.
+    // Broadcast/partition gates use the symmetric edge count (computed
+    // once; dist is node-sized and nodes ≤ edge rows) instead of a
+    // per-round dist count.
+    val e = Pin.cut(symmetrize(edges0, "u", "v", "src", "dst", Seq("cost")))
     val ecnt = e.count()
-    var dist = Seq((source, 0L)).toDF("node", "cost")
-      .localCheckpoint(false)
+    var dist = Pin.cut(Seq((source, 0L)).toDF("node", "cost"))
     for (r <- 1 to rounds) {
       // One exchange per round, carrying NODE-sized partial minima: the
       // min-combine's map-side partial aggregation collapses the
@@ -1567,7 +1560,7 @@ object Analytics {
         .select(col("dst").as("node"), (col("d") + col("cost")).as("cost"))
         .unionAll(dist)
         .groupBy("node").agg(min(col("cost")).as("cost"))
-      dist = round.localCheckpoint(false)
+      dist = Pin.cut(round)
     }
     dist
   }
@@ -1609,17 +1602,13 @@ object Analytics {
     val parts = math.max(1, math.min(
       edges0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       (ecnt2 / 50000L + 1L).toInt))
-    // persist, NOT localCheckpoint: under AQE a checkpointed frame comes
-    // back as Scan ExistingRDD with UnknownPartitioning, silently
-    // re-introducing the per-round exchange this layout exists to avoid;
-    // the cached InMemoryRelation keeps hash(src) visible to every
-    // round's aggregates. Lineage here is shallow (pinned edges0 →
-    // explode → one exchange), so truncation is not needed.
-    val e = symmetrize(edges0, "u", "v", "src", "dst")
-      .repartition(parts, col("src"))
-      .persist()
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint(false)
+    // a cache, so every round's aggregates see hash(src) (see
+    // graft.Pin). Lineage here is shallow (pinned edges0 → explode →
+    // one exchange), so truncation is not needed.
+    val e = Pin.cache(symmetrize(edges0, "u", "v", "src", "dst")
+      .repartition(parts, col("src")))
+    var labels = Pin.cut(e.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     val nNodes = labels.count()
     for (i <- 1 to iters) {
       // max_by over (count, -label) structs replaces the former
@@ -1634,7 +1623,7 @@ object Analytics {
         .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl")))
           .as("lbl"))
         .select(col("src").as("node"), col("lbl"))
-      labels = round.localCheckpoint(false)
+      labels = Pin.cut(round)
     }
     labels.select(col("node"), col("lbl").as("community"))
   }
@@ -1658,21 +1647,20 @@ object Analytics {
         explode(expr("filter(ps, x -> x > pa)")).as("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("n"))
       .where(col("n") >= 2)
-    counted
+    // EAGER checkpoint (was lazy): every kernel consumer shares ONE
+    // pinned frame instead of replaying the lineitem explode. Lazy
+    // materialization only wins when exactly one consumer subtree
+    // exists — the kernels and link-prediction queries consume this
+    // frame through SEVERAL subtrees of one job (symmetric union
+    // branches, broadcast degree tables, adjacency anti-joins), and
+    // concurrent first consumers RACE the block store: each branch
+    // recomputes the whole derivation and all but one result is
+    // discarded ("Block rdd_N already exists" warnings; measured
+    // ~2x the derivation CPU inside graph_label_propagation's first
+    // round). One eager job pays the derivation exactly once.
+    Pin.now(counted
       .select(col("pa").as(aName) +: col("pb").as(bName) +:
-        supportName.map(col("n").as(_)).toSeq: _*)
-      // EAGER checkpoint (was lazy): every kernel consumer shares ONE
-      // pinned frame instead of replaying the lineitem explode. Lazy
-      // materialization only wins when exactly one consumer subtree
-      // exists — the kernels and link-prediction queries consume this
-      // frame through SEVERAL subtrees of one job (symmetric union
-      // branches, broadcast degree tables, adjacency anti-joins), and
-      // concurrent first consumers RACE the block store: each branch
-      // recomputes the whole derivation and all but one result is
-      // discarded ("Block rdd_N already exists" warnings; measured
-      // ~2x the derivation CPU inside graph_label_propagation's first
-      // round). One eager job pays the derivation exactly once.
-      .localCheckpoint(true)
+        supportName.map(col("n").as(_)).toSeq: _*))
   }
 
   val defs: Seq[Q] = Seq(
@@ -1980,11 +1968,10 @@ object Analytics {
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
       // one fact scan: the hourly aggregate carries presence (bounds,
       // types) and the sparse sums; tiny (types × hours), pinned once
-      val hourly = Tables.events(s, d)
+      val hourly = Pin.now(Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(sum(when(col("value") > 150, col("value"))
-          .cast("decimal(12,2)")).as("v"))
-        .localCheckpoint(true)
+          .cast("decimal(12,2)")).as("v")))
       val sparse = hourly.where(col("v").isNotNull)
       val hoursF = hourly.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
         .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
@@ -2337,11 +2324,10 @@ object Analytics {
         |  CAST(cum_rev AS DOUBLE) / cohort_users AS ltv_per_user
         |FROM w JOIN sz ON w.cm = sz.cm
         |ORDER BY cohort_month, age_months""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
+      val o = Pin.now(Tables.orders(s, d)
         .select(col("o_custkey"),
           date_trunc("month", col("o_orderdate").cast("date")).as("om"),
-          col("o_totalprice"))
-        .localCheckpoint(true)
+          col("o_totalprice")))
       val c = o.groupBy(col("o_custkey").as("ck"))
         .agg(min(col("om")).as("cm"))
       val sz = c.groupBy("cm")
@@ -2440,10 +2426,9 @@ object Analytics {
         |FROM hourly h JOIN seas s
         |  ON h.event_type = s.et AND hour(h.h) = s.hod
         |ORDER BY h.event_type, h.h""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
+      val hourly = Pin.now(Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
-        .localCheckpoint(true)
+        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
       val seas = hourly
         .groupBy(col("event_type").as("et"), hour(col("h")).as("hod"))
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
@@ -2528,10 +2513,9 @@ object Analytics {
         |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, v, z
         |FROM z WHERE abs(z) >= 2.5
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
+      val hourly = Pin.now(Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
-        .localCheckpoint(true)
+        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
       val st = hourly.groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
           sum(col("v") * col("v")).as("svv"))
@@ -2580,11 +2564,10 @@ object Analytics {
         |       hod, v, z
         |FROM z WHERE abs(z) >= 2.0
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
+      val hourly = Pin.now(Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"),
           hour(col("ts")).cast("long").as("hod"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
-        .localCheckpoint(true)
+        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
       val st = hourly.groupBy(col("event_type").as("et"),
           col("hod").as("shod"))
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
@@ -3247,10 +3230,9 @@ object Analytics {
         |        JOIN pc pb ON pr.part_b = pb.l_partkey, n
         |ORDER BY lift DESC, part_a, part_b
         |LIMIT 100""".stripMargin) { (s, d) =>
-      val baskets = Tables.lineitem(s, d)
+      val baskets = Pin.cache(Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("ps"))
-        .persist()
+        .agg(collect_set(col("l_partkey")).as("ps")))
       val pairs = baskets
         .select(col("ps"), explode(col("ps")).as("part_a"))
         .select(col("part_a"),
@@ -4332,14 +4314,12 @@ object Analytics {
     // SQL oracle; AnalyticsSpec gates every estimate against the exact
     // coverage-explode twin within ±5%.
     Q.noOracle("events_active_users_sketch") { (s, d) =>
-      val daily = Tables.events(s, d)
+      // day-sized frame read by three aggregates below: pin it so the
+      // events scan + sketch shuffle run once
+      val daily = Pin.cut(Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("date").as("day"))
         .groupBy("day")
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-        // day-sized frame read by three aggregates below: pin it so the
-        // events scan + sketch shuffle run once (lazy — materializes
-        // inside the first consumer's job)
-        .localCheckpoint(false)
+        .agg(hll_sketch_agg(col("user_id")).as("sk")))
       val mx = daily.agg(max(col("day")).as("mxa"))
       // the horizon filter sits INSIDE trailing(), BEFORE the union
       // aggregate: a day's coverage fan-out reaches up to n−1 days past
@@ -6055,10 +6035,10 @@ object Analytics {
         |    row_number() OVER (ORDER BY h DESC, c) AS rk FROM h1n) u
         |WHERE rk <= 20
         |ORDER BY kind, score DESC, id""".stripMargin) { (s, d) =>
-      val e = Tables.orders(s, d)
+      val e = Pin.cache(Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-        .distinct().persist()
+        .distinct())
       def renorm(scores: org.apache.spark.sql.DataFrame, v: String) =
         scores.withColumn(v,
           expr(s"$v div greatest((sum($v) OVER ()) div 1000000000, 1)"))
@@ -6162,11 +6142,10 @@ object Analytics {
       // the (part, week) frame feeds both the calendar length and the
       // per-part reduce; localCheckpoint pins it to ONE fact scan
       // (bounded: |parts|·|weeks| rows, dimensions not corpus)
-      val wd = Tables.lineitem(s, d)
+      val wd = Pin.now(Tables.lineitem(s, d)
         .groupBy(col("l_partkey").as("pk"),
           date_trunc("week", col("l_shipdate")).as("wk"))
-        .agg(sum(col("l_quantity").cast("long")).as("q"))
-        .localCheckpoint(true)
+        .agg(sum(col("l_quantity").cast("long")).as("q")))
       val cal = wd.agg(countDistinct(col("wk")).as("nw"))
       val ps = wd.groupBy("pk")
         .agg(sum(col("q")).as("s"), sum(col("q") * col("q")).as("ss"))
@@ -6253,9 +6232,8 @@ object Analytics {
           .stripMargin)).as("t"))
         .select(col("t.k").as("k"), col("t.a").as("a"),
           col("t.b").as("b"))
-      val counts = tags.groupBy("k", "a", "b")
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+      val counts = Pin.now(tags.groupBy("k", "a", "b")
+        .agg(count(lit(1)).as("c")))
       val bk = counts.where(col("k") === "n")
         .select(col("c").as("nb"))
       val ca = counts.where(col("k") === "s")
@@ -6361,10 +6339,9 @@ object Analytics {
       // ONE orders scan: the |days|-row count frame is checkpointed and
       // every later consumer (bounds, calendar join, block frames)
       // derives from it
-      val dc = Tables.orders(s, d)
+      val dc = Pin.now(Tables.orders(s, d)
         .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("c")))
       val b = dc.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       val cal = b.select(col("d0"),
         explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
@@ -6455,10 +6432,9 @@ object Analytics {
         |FROM nw CROSS JOIN med""".stripMargin) { (s, d) =>
       // |weeks|-row frame feeds the origin lookup and the index join;
       // localCheckpoint pins it to one fact scan
-      val wk = Tables.orders(s, d)
+      val wk = Pin.now(Tables.orders(s, d)
         .groupBy(date_trunc("week", col("o_orderdate")).as("w"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("c")))
       val w0 = wk.agg(min(col("w")).cast("date").as("w0"))
       val ix = wk.crossJoin(broadcast(w0))
         .select(expr("CAST(datediff(CAST(w AS DATE), w0) div 7 AS LONG)")
@@ -6536,10 +6512,9 @@ object Analytics {
     // the member-level frame feeds both the totals and the share
     // algebra; localCheckpoint pins it to one fact scan (bounded:
     // |groups|·|members| rows)
-    val rev = df.groupBy(col(groupCol).as("grp"),
+    val rev = Pin.now(df.groupBy(col(groupCol).as("grp"),
         col(keyCol).as("mk"))
-      .agg(sum(value).as("r"))
-      .localCheckpoint(true)
+      .agg(sum(value).as("r")))
     val tot = rev.groupBy("grp")
       .agg(sum(col("r")).as("tr"), count(lit(1)).as("ns"))
     val sh = rev.join(broadcast(tot), "grp")
@@ -6577,8 +6552,8 @@ object Analytics {
       yCol: String, maxPoints: Long = TheilSenMaxPoints): DataFrame = {
     // the series is consumed three ways (both pair sides + the point
     // count); localCheckpoint pins the caller's lineage to one pass
-    val ix = series.select(col(tCol).cast("long").as("t"),
-      col(yCol).cast("long").as("c")).localCheckpoint(true)
+    val ix = Pin.now(series.select(col(tCol).cast("long").as("t"),
+      col(yCol).cast("long").as("c")))
     // the checkpoint is already materialized (eager), so this count is
     // a metadata-cheap job — the price of not OOMing on raw events
     val n = ix.count()
@@ -6618,12 +6593,11 @@ object Analytics {
     // frame is |subjects| rows of three longs — the alternative, an
     // unpartitioned max() window over it, single-partitions the same
     // rows for a worse constant)
-    val life = df.groupBy(col(idCol)).agg(
+    val life = Pin.now(df.groupBy(col(idCol)).agg(
       (year(min(col(tsCol))) * 12
         + month(min(col(tsCol)))).cast("long").as("m0"),
       (year(max(col(tsCol))) * 12
-        + month(max(col(tsCol)))).cast("long").as("m1"))
-      .localCheckpoint(true)
+        + month(max(col(tsCol)))).cast("long").as("m1")))
     val mx = life.agg(max(col("m1")).as("mxm"))
     val subj = life.crossJoin(broadcast(mx))
       .select((col("m1") - col("m0")).as("dur"),

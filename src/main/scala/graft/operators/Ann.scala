@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.Harness.withConfs
 import graft.functions._
 import graft.streaming.Streams
@@ -87,7 +87,7 @@ object Ann {
       // k bounds the footprint) and restore the session's prior value.
       // ExtensionsSpec proves a subsequent exact top-k is NOT rewritten.
       withConfs(s, AnnTopKRewrite.EnabledKey -> "true")(
-        exact.localCheckpoint(true))
+        Pin.now(exact))
     },
 
     // Self-contained IVF: cells come from a few distributed k-means
@@ -872,18 +872,19 @@ object Ann {
     * table, and (optionally) the derived graph and PQ layers. Shared by
     * [[ivfIndex]] (initial build) and [[ivfCompact]] (threshold
     * rebuild) so a rebuilt index is layer-for-layer identical in
-    * layout to a fresh one.
+    * layout to a fresh one. `assignIn` is evaluated inside the call's
+    * pin scope, so the pins that build it (the k-means centroids) are
+    * freed with the rest once the layers are written.
     */
   private[graft] def writeIndexLayers(s: org.apache.spark.sql.SparkSession,
-      dir: String, assignIn: org.apache.spark.sql.DataFrame,
-      withGraph: Boolean = true, withPq: Boolean = true): Unit = {
+      dir: String, assignIn: => org.apache.spark.sql.DataFrame,
+      withGraph: Boolean = true, withPq: Boolean = true): Unit = Pin.scope {
     // pin the assignment: up to three consumers (cells write, centroid
     // agg, graph build) would otherwise each replay the full k-means —
     // and a compaction rebuild READS the very files it overwrites, so
     // the rows must be materialized before the first write
-    val assign = assignIn
-      .withColumn("cell", col("cell").cast("string")) // stable partition-column type
-      .localCheckpoint(true)
+    val assign = Pin.now(assignIn
+      .withColumn("cell", col("cell").cast("string"))) // stable partition-column type
     assign.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/cells")
     val cents = assign.groupBy("cell")
@@ -923,10 +924,6 @@ object Ann {
       cbFrame(s, cb).coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/pq_codebook")
     }
-    // the checkpoint's blocks are dead once the last layer is written —
-    // free them (repeated index builds in one session would otherwise
-    // accumulate checkpoint blocks in the block manager)
-    assign.unpersist(blocking = false)
   }
 
   /** Tombstone DELETES routed to their cells — the `stream_ann_ingest`
@@ -1065,8 +1062,8 @@ object Ann {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(next))
     // materialize the survivors once: k-means (rebuild path) or the
     // three layer writes (rewrite path) would each replay the anti-join
-    val live = ivfLiveCells(s, dir)
-      .select("vec_id", "embedding", "cell").localCheckpoint(true)
+    val live = Pin.now(ivfLiveCells(s, dir)
+      .select("vec_id", "embedding", "cell"))
     val rebuilt = churn > rebuildChurn
     if (rebuilt) {
       val k = flatLayer(s, dir, root, "centroids").count().toInt
@@ -1107,7 +1104,7 @@ object Ann {
           .parquet(s"$next/pq_codebook")
       }
     }
-    live.unpersist(blocking = false)
+    Pin.release(live)
     if (publish) Streams.publishGeneration(dir, next)
     censusFrame(census.map { case (c, nb, nt, nl) =>
       (c, nb, nt, nl,
@@ -1178,7 +1175,7 @@ object Ann {
     */
   private[graft] def pqCodebooks(store: org.apache.spark.sql.DataFrame,
       idCol: String, vecCol: String, m: Int, ksub: Int, iters: Int)
-      : Array[Array[Array[Float]]] = {
+      : Array[Array[Array[Float]]] = Pin.scope {
     // bad m fails loudly here, not as NaN scores downstream: dim must
     // split into m equal non-empty subspaces (O(1) head probe)
     val dim = store.select(size(col(vecCol))).head().getInt(0)
@@ -1188,9 +1185,9 @@ object Ann {
     // a store small enough that the 1-in-4 sample can be empty trains on
     // everything (the O(1) emptiness probe reads one row, not a count)
     val train = if (sampled.limit(1).isEmpty) store else sampled
-    val subs = subVectors(train, idCol, vecCol, m)
-      .select(col(idCol).as("id"), col("sub"), col("sv"))
-      .persist() // read by init + every k-means round
+    // read by init + every k-means round
+    val subs = Pin.cache(subVectors(train, idCol, vecCol, m)
+      .select(col(idCol).as("id"), col("sub"), col("sv")))
     def nested(rows: Array[org.apache.spark.sql.Row])
         : Array[Array[Array[Float]]] = {
       val bySub = rows.map(r =>
@@ -1212,7 +1209,6 @@ object Ann {
           col("sv"))
         .groupBy("sub", "code").agg(vector_avg(col("sv")).as("cw"))
         .select(col("sub"), col("code"), col("cw")).collect())
-    subs.unpersist(false)
     cb
   }
 
@@ -1269,10 +1265,9 @@ object Ann {
       nprobe: Int, m: Int = 8, ksub: Int = 16, residual: Boolean = true)
       : org.apache.spark.sql.DataFrame = {
     val sp = store.sparkSession
-    val assign = kmeansCells(store
+    val assign = Pin.cache(kmeansCells(store
         .select(col("id").as("vec_id"), col("embedding")), cells, 3)
-      .select(col("vec_id").as("id"), col("embedding"), col("cell"))
-      .persist()
+      .select(col("vec_id").as("id"), col("embedding"), col("cell")))
     val cents = assign.groupBy("cell")
       .agg(vector_avg(col("embedding")).as("cent"))
     val routed = topKRows(cents.crossJoin(broadcast(probes))
@@ -1442,26 +1437,25 @@ object Ann {
     * the hash, no driver collect — a TakeOrderedAndProject of k rows);
     * each round broadcasts the k centroids, reassigns via argmax cosine
     * (struct-max for deterministic tie-break), and recomputes centroids
-    * with the `vector_avg` UDAF. `localCheckpoint` pins each round's
-    * tiny centroid table so round r+1 doesn't replay rounds 1..r.
+    * with the `vector_avg` UDAF. A `now` pin holds each round's tiny
+    * centroid table so round r+1 doesn't replay rounds 1..r; the final
+    * one, which the lazy result reads, stays with the caller.
     */
   private[graft] def kmeansCells(e: org.apache.spark.sql.DataFrame,
       k: Int, iters: Int): org.apache.spark.sql.DataFrame = {
-    var cents = e
+    var cents = Pin.now(e
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(k)
-      .select(col("vec_id").as("cell"), col("embedding").as("cent"))
-      .localCheckpoint(true)
+      .select(col("vec_id").as("cell"), col("embedding").as("cent")))
     def assignTo(c: org.apache.spark.sql.DataFrame) = assignToCentroids(e, c)
     for (_ <- 1 until iters) {
       val prev = cents
-      cents = assignTo(cents)
-        .groupBy("cell").agg(vector_avg(col("embedding")).as("cent"))
-        .localCheckpoint(true)
+      cents = Pin.now(assignTo(cents)
+        .groupBy("cell").agg(vector_avg(col("embedding")).as("cent")))
       // round r+1 only needs the NEW centroid checkpoint — free the
       // previous round's k-row blocks (same discipline as the layer
       // writers: no checkpoint outlives its last consumer)
-      prev.unpersist(blocking = false)
+      Pin.release(prev)
     }
     assignTo(cents)
   }

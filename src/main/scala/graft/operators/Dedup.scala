@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.{cosine_sim, descending, minhash_shingles, simhash64,
   top_k, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -92,7 +92,7 @@ object Dedup {
     * `graft.api.Graft.minhashNearDupPairs`): `docs` needs (doc_id, text).
     */
   private[graft] def minhashVerifiedPairsOf(docs: DataFrame,
-      threshold: Double, maxBucket: Int = 1000): DataFrame = {
+      threshold: Double, maxBucket: Int = 1000): DataFrame = Pin.scope {
     // scan-side signature: one string hash per shingle + 32 splitmix
     // lanes (the nested-HOF formulation recomputed ~1G string hashes at
     // sf0.1 — 100×+ slower than this kernel)
@@ -100,18 +100,17 @@ object Dedup {
       .where(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"),
         minhash_shingles(col("text"), 32, 3).as("sig"))
-    val rawBands = sig.select(col("doc_id"),
+    // three consumers (bucket count + both self-join sides) would each
+    // recompute the scan + minhash kernel; pin the tiny (doc, band, bh)
+    // frame once instead
+    val rawBands = Pin.cache(sig.select(col("doc_id"),
         explode(expr(
           """transform(sequence(0, 7), b -> named_struct(
             |  'band', b,
             |  'bh', xxhash64(element_at(sig, 4*b + 1), element_at(sig, 4*b + 2),
             |                 element_at(sig, 4*b + 3), element_at(sig, 4*b + 4))))"""
             .stripMargin)).as("e"))
-      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
-      // three consumers (bucket count + both self-join sides) would each
-      // recompute the scan + minhash kernel; pin the tiny (doc, band, bh)
-      // frame once instead (released in the finally below)
-      .persist()
+      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh")))
     // hot-bucket cap — the 100 TB safety valve: a degenerate bucket with B
     // members yields B² candidate pairs (one boilerplate-heavy shingle
     // pattern can put millions of docs in one band bucket and melt the
@@ -130,36 +129,32 @@ object Dedup {
       .select("band", "bh")
     val bands = rawBands
       .join(broadcast(hot), Seq("band", "bh"), "left_anti")
-    val cand = bands.as("x").join(bands.as("y"),
+    // candidates are O(dup clusters) tiny; caching stops the band join
+    // from being recomputed for the id-list and the verification
+    val cand = Pin.cache(bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct())
+    // exact shingles ONLY for candidate docs (a semi-join first — the
+    // shingle HOF over the full corpus costs more than the whole sketch)
+    val candIds = cand
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
-      // candidates are O(dup clusters) tiny; persisting stops the band
-      // join from being recomputed for the id-list and the verification
-      .persist()
-    try {
-      // exact shingles ONLY for candidate docs (a semi-join first — the
-      // shingle HOF over the full corpus costs more than the whole sketch)
-      val candIds = cand
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      // join BEFORE the shingle projection — declared the other way round,
-      // the HOF would run over the full corpus and only then be filtered
-      val candSh = docs
-        .join(broadcast(candIds), "doc_id")
-        .where(size(split(col("text"), " ")) >= 3)
-        .select(col("doc_id"), shingles3.as("sh"))
-      val a = candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-      val b = candSh.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
-      cand.join(a, "doc_a").join(b, "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          jaccard(col("sha"), col("shb")).as("jac"))
-        .where(col("jac") >= threshold)
-        // eager, O(verified pairs) rows: pins the result so `cand` can be
-        // released immediately instead of living for the session
-        .localCheckpoint(true)
-    } finally { cand.unpersist(false); rawBands.unpersist(false) }
+    // join BEFORE the shingle projection — declared the other way round,
+    // the HOF would run over the full corpus and only then be filtered
+    val candSh = docs
+      .join(broadcast(candIds), "doc_id")
+      .where(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"), shingles3.as("sh"))
+    val a = candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
+    val b = candSh.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
+    // eager, O(verified pairs) rows: the scope releases `cand` and
+    // `rawBands` on return instead of leaving them for the session
+    Pin.now(cand.join(a, "doc_a").join(b, "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        jaccard(col("sha"), col("shb")).as("jac"))
+      .where(col("jac") >= threshold))
   }
 
   /** LSH BANDING SWEEP over one shared MinHash(32) signature — the
@@ -199,22 +194,20 @@ object Dedup {
     * the shipped LSH pipeline and the monotone containment ordering).
     */
   private[graft] def bandSweepOf(docs: DataFrame, threshold: Double,
-      maxBucket: Int = 1000): DataFrame = {
-    val sig = docs
+      maxBucket: Int = 1000): DataFrame = Pin.scope {
+    val sig = Pin.cache(docs
       .where(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"),
-        minhash_shingles(col("text"), 32, 3).as("sig"))
-      .persist()
+        minhash_shingles(col("text"), 32, 3).as("sig")))
     // finest banding only (16 bands × 2 rows): the ONE band self-join
-    val bands2 = sig.select(col("doc_id"),
+    val bands2 = Pin.cache(sig.select(col("doc_id"),
         explode(expr(
           """transform(sequence(0, 15), bi -> named_struct(
             |  'band', bi,
             |  'bh', xxhash64(element_at(sig, 2 * bi + 1),
             |                 element_at(sig, 2 * bi + 2))))""".stripMargin))
           .as("e"))
-      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
-      .persist()
+      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh")))
     val hot2 = bands2.groupBy("band", "bh")
       .agg(count(lit(1)).as("bn"))
       .where(col("bn") > maxBucket)
@@ -227,107 +220,100 @@ object Dedup {
       .agg(sum(expr("shiftleft(1L, cast(band AS int))")).as("dm"))
     val surviving = bands2.join(broadcast(hot2), Seq("band", "bh"),
       "left_anti")
-    val pairs = surviving.as("x").join(surviving.as("y"),
+    val pairs = Pin.cache(surviving.as("x").join(surviving.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh")
           && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct())
+    val candIds = pairs
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
-      .persist()
-    try {
-      val candIds = pairs
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      val candSh = docs
-        .join(broadcast(candIds), "doc_id")
-        .where(size(split(col("text"), " ")) >= 3)
-        .select(col("doc_id"), shingles3.as("sh"))
-      // per-doc coarser band-hash arrays + drop mask, restricted to
-      // CANDIDATE docs (semi-join on candIds — the same discipline as
-      // candSh) BEFORE the broadcast: only candidate-pair docs are ever
-      // looked up below, and the unrestricted frame is O(corpus) — a
-      // broadcast that dies at 100 TB (guide §3.1 / VERDICT r21 #1).
-      // rpb=4/8 pair membership is decided from these arrays, never
-      // from another self-join.
-      val docFeat = sig
-        .join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          expr("""transform(sequence(0, 7), bi -> xxhash64(
-                 |  element_at(sig, 4 * bi + 1), element_at(sig, 4 * bi + 2),
-                 |  element_at(sig, 4 * bi + 3), element_at(sig, 4 * bi + 4)))"""
-            .stripMargin).as("bh4"),
-          expr("""transform(sequence(0, 3), bi -> xxhash64(
-                 |  element_at(sig, 8 * bi + 1), element_at(sig, 8 * bi + 2),
-                 |  element_at(sig, 8 * bi + 3), element_at(sig, 8 * bi + 4),
-                 |  element_at(sig, 8 * bi + 5), element_at(sig, 8 * bi + 6),
-                 |  element_at(sig, 8 * bi + 7), element_at(sig, 8 * bi + 8)))"""
-            .stripMargin).as("bh8"))
-        .join(dropMask, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("dm"))
-      val verified = pairs
-        .join(candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
-          "doc_a")
-        .join(candSh.select(col("doc_id").as("doc_b"), col("sh").as("shb")),
-          "doc_b")
-        .where(jaccard(col("sha"), col("shb")) >= threshold)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(true)
-      // a pair is an rpb=r candidate iff some band index agrees on the
-      // r-row hash AND no covered rpb=2 sub-band was dropped for EITHER
-      // doc (mask bits 2bi..2bi+1 for rpb=4, 4bi..4bi+3 for rpb=8) —
-      // the exact drop-propagation rule of the 3-config join version
-      val flagged = pairs
-        .join(broadcast(docFeat.select(col("doc_id").as("doc_a"),
-          col("bh4").as("bh4a"), col("bh8").as("bh8a"),
-          col("dm").as("dma"))), "doc_a")
-        .join(broadcast(docFeat.select(col("doc_id").as("doc_b"),
-          col("bh4").as("bh4b"), col("bh8").as("bh8b"),
-          col("dm").as("dmb"))), "doc_b")
-        .join(verified.withColumn("v", lit(true)),
-          Seq("doc_a", "doc_b"), "left")
-        .select(
-          expr("""exists(sequence(0, 7), bi ->
-                 |  element_at(bh4a, bi + 1) = element_at(bh4b, bi + 1)
-                 |  AND ((dma | dmb) & shiftleft(3L, 2 * bi)) = 0)"""
-            .stripMargin).as("m4"),
-          expr("""exists(sequence(0, 3), bi ->
-                 |  element_at(bh8a, bi + 1) = element_at(bh8b, bi + 1)
-                 |  AND ((dma | dmb) & shiftleft(15L, 4 * bi)) = 0)"""
-            .stripMargin).as("m8"),
-          coalesce(col("v"), lit(false)).as("v"))
-      val counts = flagged.agg(
-        count(lit(1)).as("c2"),
-        count_if(col("m4")).as("c4"),
-        count_if(col("m8")).as("c8"),
-        count_if(col("v")).as("v2"),
-        count_if(col("m4") && col("v")).as("v4"),
-        count_if(col("m8") && col("v")).as("v8"))
-      // one output row per config that HAS candidates (the 3-config
-      // join version emitted no row for a candidate-less config);
-      // recall is vs the finest config's verified count, as before
-      counts
-        .select(explode(array(
-          struct(lit(4L).as("n_bands"), lit(8L).as("rows_per_band"),
-            col("c8").as("n_candidates"), col("v8").as("n_verified"),
-            col("v2").as("n_finest")),
-          struct(lit(8L).as("n_bands"), lit(4L).as("rows_per_band"),
-            col("c4").as("n_candidates"), col("v4").as("n_verified"),
-            col("v2").as("n_finest")),
-          struct(lit(16L).as("n_bands"), lit(2L).as("rows_per_band"),
-            col("c2").as("n_candidates"), col("v2").as("n_verified"),
-            col("v2").as("n_finest")))).as("r"))
-        .select(col("r.*"))
-        .where(col("n_candidates") > 0)
-        .select(col("n_bands"), col("rows_per_band"),
-          col("n_candidates"), col("n_verified"),
-          (col("n_verified").cast("double") / col("n_finest"))
-            .as("recall_vs_finest"),
-          (col("n_verified").cast("double") / col("n_candidates"))
-            .as("candidate_precision"))
-        .orderBy("n_bands")
-        .localCheckpoint(true)
-    } finally {
-      pairs.unpersist(false); bands2.unpersist(false); sig.unpersist(false)
-    }
+    val candSh = docs
+      .join(broadcast(candIds), "doc_id")
+      .where(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"), shingles3.as("sh"))
+    // per-doc coarser band-hash arrays + drop mask, restricted to
+    // CANDIDATE docs (semi-join on candIds — the same discipline as
+    // candSh) BEFORE the broadcast: only candidate-pair docs are ever
+    // looked up below, and the unrestricted frame is O(corpus) — a
+    // broadcast that dies at 100 TB (guide §3.1 / VERDICT r21 #1).
+    // rpb=4/8 pair membership is decided from these arrays, never
+    // from another self-join.
+    val docFeat = sig
+      .join(broadcast(candIds), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        expr("""transform(sequence(0, 7), bi -> xxhash64(
+               |  element_at(sig, 4 * bi + 1), element_at(sig, 4 * bi + 2),
+               |  element_at(sig, 4 * bi + 3), element_at(sig, 4 * bi + 4)))"""
+          .stripMargin).as("bh4"),
+        expr("""transform(sequence(0, 3), bi -> xxhash64(
+               |  element_at(sig, 8 * bi + 1), element_at(sig, 8 * bi + 2),
+               |  element_at(sig, 8 * bi + 3), element_at(sig, 8 * bi + 4),
+               |  element_at(sig, 8 * bi + 5), element_at(sig, 8 * bi + 6),
+               |  element_at(sig, 8 * bi + 7), element_at(sig, 8 * bi + 8)))"""
+          .stripMargin).as("bh8"))
+      .join(dropMask, Seq("doc_id"), "left")
+      .na.fill(0L, Seq("dm"))
+    val verified = Pin.now(pairs
+      .join(candSh.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
+        "doc_a")
+      .join(candSh.select(col("doc_id").as("doc_b"), col("sh").as("shb")),
+        "doc_b")
+      .where(jaccard(col("sha"), col("shb")) >= threshold)
+      .select("doc_a", "doc_b"))
+    // a pair is an rpb=r candidate iff some band index agrees on the
+    // r-row hash AND no covered rpb=2 sub-band was dropped for EITHER
+    // doc (mask bits 2bi..2bi+1 for rpb=4, 4bi..4bi+3 for rpb=8) —
+    // the exact drop-propagation rule of the 3-config join version
+    val flagged = pairs
+      .join(broadcast(docFeat.select(col("doc_id").as("doc_a"),
+        col("bh4").as("bh4a"), col("bh8").as("bh8a"),
+        col("dm").as("dma"))), "doc_a")
+      .join(broadcast(docFeat.select(col("doc_id").as("doc_b"),
+        col("bh4").as("bh4b"), col("bh8").as("bh8b"),
+        col("dm").as("dmb"))), "doc_b")
+      .join(verified.withColumn("v", lit(true)),
+        Seq("doc_a", "doc_b"), "left")
+      .select(
+        expr("""exists(sequence(0, 7), bi ->
+               |  element_at(bh4a, bi + 1) = element_at(bh4b, bi + 1)
+               |  AND ((dma | dmb) & shiftleft(3L, 2 * bi)) = 0)"""
+          .stripMargin).as("m4"),
+        expr("""exists(sequence(0, 3), bi ->
+               |  element_at(bh8a, bi + 1) = element_at(bh8b, bi + 1)
+               |  AND ((dma | dmb) & shiftleft(15L, 4 * bi)) = 0)"""
+          .stripMargin).as("m8"),
+        coalesce(col("v"), lit(false)).as("v"))
+    val counts = flagged.agg(
+      count(lit(1)).as("c2"),
+      count_if(col("m4")).as("c4"),
+      count_if(col("m8")).as("c8"),
+      count_if(col("v")).as("v2"),
+      count_if(col("m4") && col("v")).as("v4"),
+      count_if(col("m8") && col("v")).as("v8"))
+    // one output row per config that HAS candidates (the 3-config
+    // join version emitted no row for a candidate-less config);
+    // recall is vs the finest config's verified count, as before
+    Pin.now(counts
+      .select(explode(array(
+        struct(lit(4L).as("n_bands"), lit(8L).as("rows_per_band"),
+          col("c8").as("n_candidates"), col("v8").as("n_verified"),
+          col("v2").as("n_finest")),
+        struct(lit(8L).as("n_bands"), lit(4L).as("rows_per_band"),
+          col("c4").as("n_candidates"), col("v4").as("n_verified"),
+          col("v2").as("n_finest")),
+        struct(lit(16L).as("n_bands"), lit(2L).as("rows_per_band"),
+          col("c2").as("n_candidates"), col("v2").as("n_verified"),
+          col("v2").as("n_finest")))).as("r"))
+      .select(col("r.*"))
+      .where(col("n_candidates") > 0)
+      .select(col("n_bands"), col("rows_per_band"),
+        col("n_candidates"), col("n_verified"),
+        (col("n_verified").cast("double") / col("n_finest"))
+          .as("recall_vs_finest"),
+        (col("n_verified").cast("double") / col("n_candidates"))
+          .as("candidate_precision"))
+      .orderBy("n_bands"))
   }
 
   /** SimHash near-dup pairs of `docs` (doc_id, text): 64-bit sketch per
@@ -342,34 +328,30 @@ object Dedup {
     * cost is one map-side-combined count of bucket keys.
     */
   private[graft] def simhashPairsOf(docs: DataFrame, maxHamming: Int = 6,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = Pin.scope {
     val sk = docs.select(col("doc_id"), simhash64(col("text")).as("sh"))
-    val rawBands = sk.select(col("doc_id"), col("sh"),
+    // three consumers (bucket count + both self-join sides) would each
+    // recompute the scan + simhash kernel; pin the small frame once
+    val rawBands = Pin.cache(sk.select(col("doc_id"), col("sh"),
         explode(expr(
           """transform(sequence(0, 3), b -> named_struct(
             |  'band', b,
             |  'bv', (sh >> (16 * b)) & 65535))""".stripMargin)).as("e"))
       .select(col("doc_id"), col("sh"),
-        col("e.band").as("band"), col("e.bv").as("bv"))
-      // three consumers (bucket count + both self-join sides) would each
-      // recompute the scan + simhash kernel; pin the small frame once
-      .persist()
+        col("e.band").as("band"), col("e.bv").as("bv")))
     val hot = rawBands.groupBy("band", "bv")
       .agg(count(lit(1)).as("bn"))
       .where(col("bn") > maxBucket)
       .select("band", "bv")
     val bands = rawBands.join(broadcast(hot), Seq("band", "bv"), "left_anti")
-    try {
-      bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
-        .where(col("hamming") <= maxHamming)
-        .distinct()
-        // eager, O(verified pairs) rows — releases rawBands immediately
-        .localCheckpoint(true)
-    } finally rawBands.unpersist(false)
+    // eager, O(verified pairs) rows: the scope releases rawBands on return
+    Pin.now(bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .distinct())
   }
 
   /** Connected components over an undirected pair list by iterative
@@ -403,13 +385,12 @@ object Dedup {
   private[graft] def collapseClusters(pairs: DataFrame, maxIter: Int = 10,
       broadcastNodeLimit: Long = 20000000L,
       failOnMaxIter: Boolean = true): DataFrame = {
-    val edges = pairs
+    val edges = Pin.cache(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint(false)
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    var labels = Pin.cut(edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("cluster_id", col("doc_id")))
+    var pinned = labels
     // node count is fixed across rounds (labels keeps one row per node);
     // the count materializes the lazy checkpoint in the same job
     val smallGraph = labels.count() <= broadcastNodeLimit
@@ -430,13 +411,15 @@ object Dedup {
       // partitions is completed by Spark's local-checkpoint finalizer,
       // which caches any missed partitions at job end — work the next
       // round needs anyway)
-      val joined = labels.join(hinted(nbrMin),
+      val joined = Pin.cut(labels.join(hinted(nbrMin),
           labels("doc_id") === nbrMin("src"), "left")
         .select(col("doc_id"), col("cluster_id").as("old_cid"),
           least(col("cluster_id"),
-            coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"))
-        .localCheckpoint(false)
+            coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id")))
       converged = joined.where(col("cluster_id") =!= col("old_cid")).isEmpty
+      // the probe materialized `joined`, so the round it read is dead
+      Pin.release(pinned)
+      pinned = joined
       labels = joined.select(col("doc_id"), col("cluster_id"))
       it += 1
     }
@@ -456,7 +439,7 @@ object Dedup {
           coalesce(col("nbr_min"), col("cluster_id"))) =!= col("cluster_id"))
         .isEmpty
     }
-    edges.unpersist(false)
+    Pin.release(edges)
     if (!converged && failOnMaxIter)
       throw new IllegalStateException(
         s"collapseClusters did not converge in $maxIter rounds: the pair " +
@@ -482,12 +465,12 @@ object Dedup {
     *    stars onto their roots.
     *
     * Each round rewrites the edge list (one shuffle per star operation,
-    * map-side combined aggregates for the per-node minimum) and
-    * `localCheckpoint` truncates lineage (blocks are released by the
-    * session-level sweep the facade scaladoc documents, like every
-    * iterative op here). Convergence = the edge set has stabilized into
-    * root stars: every source has exactly ONE target AND no target has
-    * an outgoing edge. Both conditions are required — "all targets are
+    * map-side combined aggregates for the per-node minimum) and a lazy
+    * checkpoint truncates lineage; a superseded round is released once
+    * a probe has materialized its successor, and the last round, which
+    * the lazy result reads, stays with the caller. Convergence = the
+    * edge set has stabilized into root stars: every source has exactly
+    * ONE target AND no target has an outgoing edge. Both conditions are required — "all targets are
     * roots" alone fires early on graphs where a node still points at two
     * different roots (e.g. pairs {(7,5),(7,1),(8,5),(8,2)} after one
     * round: 5→1 and 5→2, components not yet merged). Star ops preserve
@@ -517,18 +500,14 @@ object Dedup {
     val nodes = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    // canonical undirected edges, self-loops dropped, deduped
-    // LAZY checkpoint + count: plan truncation is identical to the
-    // eager form, but the materialization rides the count's job instead
-    // of paying its own — the round-overhead fusion applied throughout
-    // the iterative kernels (at these graph sizes the per-round JOB
-    // COUNT is the cost, not the rows).
-    var edges = pairs
+    // canonical undirected edges, self-loops dropped, deduped; the
+    // count below materializes them (at these graph sizes the per-round
+    // JOB COUNT is the cost, not the rows)
+    var edges = Pin.cut(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // Size the per-round shuffles to the MATERIALIZED edge set: the
     // near-dup / co-purchase residual graph is orders of magnitude
     // smaller than the corpus (sf0.1 co-purchase: 3.6k edges), and an
@@ -551,6 +530,8 @@ object Dedup {
     val sessionParts = sess.conf.get("spark.sql.shuffle.partitions").toInt
     val kernelParts = math.min(sessionParts,
       (edges.count() / 50000L + 1L).toInt)
+    // rounds whose successor no probe has materialized yet
+    var superseded = List.empty[DataFrame]
     var converged = false
     var it = 0
     while (!converged && it < maxRounds) {
@@ -577,7 +558,10 @@ object Dedup {
       // small-star: orient high->low, attach smaller-or-equal neighbors
       // (and u itself) to the minimum of the closed neighborhood
       val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(minsS, "u")
+      // the violations scan below is the round's ONLY job: its
+      // aggregate consumes every partition of these blocks before
+      // emitting, so nothing is left half-computed
+      val small = Pin.cut(large.join(minsS, "u")
         .select(col("v"), col("m"), col("u"))
         .select(explode(array(
             struct(col("v").as("u"), col("m").as("v")),
@@ -585,13 +569,7 @@ object Dedup {
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .where(col("u") =!= col("v"))
         .repartition(kernelParts, col("u"), col("v"))
-        .distinct()
-        // LAZY: the violations scan below is the round's ONLY job — it
-        // materializes these blocks on the way (the aggregate consumes
-        // every partition before emitting, so nothing is left
-        // half-computed), where the eager form paid a separate
-        // materialization job per round
-        .localCheckpoint(false)
+        .distinct())
       // fixed point (BOTH required — see scaladoc): one target per
       // source, and no target has an outgoing edge. ONE role-tagged
       // aggregation checks both — a node violates iff it sources two
@@ -600,6 +578,7 @@ object Dedup {
       // (3 shuffles) with a single shuffle over the in-memory edges: at
       // round-overhead-dominated sizes the job shape per round IS the
       // cost, not the rows.
+      superseded ::= edges
       edges = small
       // The ROUND-1 probe is skipped: star contraction converges in one
       // round only on an input that is already a min-labeled depth-1
@@ -620,6 +599,8 @@ object Dedup {
           .agg(sum(col("s")).as("s"), sum(col("t")).as("t"))
           .where(col("s") > 1 || (col("s") >= 1 && col("t") >= 1))
         converged = violations.isEmpty
+        Pin.release(superseded: _*)
+        superseded = Nil
       }
       it += 1
     }
@@ -704,50 +685,46 @@ object Dedup {
     * rows' probe sets are fully disjoint. Cost is bounded and explicit:
     * the pair space grows ≤ probes² / (cells-per-row shrinkage) ≈ 4× at
     * probes=2 — still an equi-join on a cell key, never all-pairs.
-    * EAGER: the O(n)-narrow keep-list materializes via localCheckpoint
-    * and the internal caches are released before returning — repeated
-    * calls leak no cached blocks.
+    * EAGER: the O(n)-narrow keep-list is a `now` pin, and the call's
+    * scope releases the cached assignment and the k-means centroid
+    * checkpoints before returning; the keep-list passes to the caller.
     */
   private[graft] def semanticDedupOf(store: DataFrame, k: Int,
       threshold: Double, iters: Int = 3, probes: Int = 2,
-      maxCell: Int = 10000): DataFrame = {
-    val assign = Ann.kmeansCells(
+      maxCell: Int = 10000): DataFrame = Pin.scope {
+    val assign = Pin.cache(Ann.kmeansCells(
         store.select(col("id").as("vec_id"), col("embedding")), k, iters)
-      .select(col("vec_id").as("id"), col("embedding"), col("cell"))
-      .persist()
-    try {
-      // cell means of the final assignment — the routing table for the
-      // soft probes (k rows, broadcast)
-      val cents = assign.groupBy(col("cell"))
-        .agg(graft.functions.vector_avg(col("embedding")).as("cent"))
-      // top-`probes` cells per row: one vec-keyed combiner shuffle of n·k
-      // tiny (score, cell) structs — k is user-bounded, so this is O(n)
-      val soft = assign.select(col("id"), col("embedding"))
-        .crossJoin(broadcast(cents))
-        .select(col("id"), col("embedding"), col("cell"),
-          cosine_sim(col("embedding"), col("cent")).as("cs"))
-        .groupBy(col("id"))
-        .agg(first(col("embedding")).as("embedding"),
-          // cosine DESC, ties to the larger cell
-          top_k(col("cs"), descending(col("cell")).as("cell_desc"), probes,
-            col("cell")).as("top"))
-        .select(col("id"), col("embedding"),
-          explode(col("top.cell")).as("pcell"))
-      val blocks = saltedCellBlocks(soft, maxCell)
-      val dups = blocks
-        .select(col("pcell"), col("id").as("a_id"),
-          col("embedding").as("a_emb"))
-        .join(blocks
-          .select(col("pcell"), col("id").as("b_id"),
-            col("embedding").as("b_emb")), Seq("pcell"))
-        .where(col("a_id") < col("b_id") &&
-          cosine_sim(col("a_emb"), col("b_emb")) >= threshold)
-        .select(col("b_id").as("id"))
-        .distinct()
-      assign.join(dups.withColumn("dup", lit(true)), Seq("id"), "left")
-        .select(col("id"), col("cell"), col("dup").isNull.as("keep"))
-        .localCheckpoint(true)
-    } finally assign.unpersist(false)
+      .select(col("vec_id").as("id"), col("embedding"), col("cell")))
+    // cell means of the final assignment — the routing table for the
+    // soft probes (k rows, broadcast)
+    val cents = assign.groupBy(col("cell"))
+      .agg(graft.functions.vector_avg(col("embedding")).as("cent"))
+    // top-`probes` cells per row: one vec-keyed combiner shuffle of n·k
+    // tiny (score, cell) structs — k is user-bounded, so this is O(n)
+    val soft = assign.select(col("id"), col("embedding"))
+      .crossJoin(broadcast(cents))
+      .select(col("id"), col("embedding"), col("cell"),
+        cosine_sim(col("embedding"), col("cent")).as("cs"))
+      .groupBy(col("id"))
+      .agg(first(col("embedding")).as("embedding"),
+        // cosine DESC, ties to the larger cell
+        top_k(col("cs"), descending(col("cell")).as("cell_desc"), probes,
+          col("cell")).as("top"))
+      .select(col("id"), col("embedding"),
+        explode(col("top.cell")).as("pcell"))
+    val blocks = saltedCellBlocks(soft, maxCell)
+    val dups = blocks
+      .select(col("pcell"), col("id").as("a_id"),
+        col("embedding").as("a_emb"))
+      .join(blocks
+        .select(col("pcell"), col("id").as("b_id"),
+          col("embedding").as("b_emb")), Seq("pcell"))
+      .where(col("a_id") < col("b_id") &&
+        cosine_sim(col("a_emb"), col("b_emb")) >= threshold)
+      .select(col("b_id").as("id"))
+      .distinct()
+    Pin.now(assign.join(dups.withColumn("dup", lit(true)), Seq("id"), "left")
+      .select(col("id"), col("cell"), col("dup").isNull.as("keep")))
   }
 
   /** Frame-parametric verbatim shared-window pairs (re-exported as

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.zorder_key
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -118,11 +118,10 @@ object Pipeline {
       // materialized once (localCheckpoint) and reused three ways —
       // naively deriving bounds, types, and the join side from `events`
       // directly would be three full scans at 100 TB.
-      val daily = Tables.events(s, d)
+      val daily = Pin.now(Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(when(col("value") > 480, 1)).as("n"),
-          round(avg(when(col("value") > 480, col("value"))), 6).as("avg_v"))
-        .localCheckpoint(true)
+          round(avg(when(col("value") > 480, col("value"))), 6).as("avg_v")))
       val sparse = daily.where(col("n") > 0)
       val days = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         .select(explode(sequence(col("d0"), col("d1"))).as("day"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,7 +158,7 @@ object ScaleOps {
         |GROUP BY n.n_name
         |ORDER BY revenue DESC, n_name""".stripMargin) { (s, d) =>
       withCboViews(s, d, reorder = true) {
-        s.sql(cboSql).localCheckpoint(true)
+        Pin.now(s.sql(cboSql))
       }
     },
 
@@ -175,8 +175,7 @@ object ScaleOps {
         |GROUP BY l.l_returnflag
         |ORDER BY l.l_returnflag""".stripMargin) { (s, d) =>
       withBloomConfs(s) {
-        bloomJoinShape(Tables.lineitem(s, d), Tables.orders(s, d))
-          .localCheckpoint(true)
+        Pin.now(bloomJoinShape(Tables.lineitem(s, d), Tables.orders(s, d)))
       }
     },
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2060,11 +2060,10 @@ object Stats {
         |FROM sc2 CROSS JOIN t2 ORDER BY g""".stripMargin) { (s, d) =>
       // the ≤150-cell frame feeds the median scan AND the split cells;
       // localCheckpoint pins it to one fact scan (see anovaFOf)
-      val c = Tables.lineitem(s, d)
+      val c = Pin.now(Tables.lineitem(s, d)
         .groupBy(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("v"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("cnt")))
       val marg = c.groupBy("v").agg(sum(col("cnt")).as("t"))
       val cum = marg.select(col("v"), col("t"),
         coalesce(sum(col("t")).over(Window.orderBy("v")
@@ -2286,13 +2285,12 @@ object Stats {
       def mlog(c: Column) =
         floor(log(c.cast("double")) * lit(1000000)).cast("long")
       val cut = lit("2024-01-16").cast("timestamp")
-      val cells = Tables.events(s, d)
+      val cells = Pin.now(Tables.events(s, d)
         .select(least(floor(col("value") / 50.0), lit(9L)).as("bin"),
           when(col("ts") < cut, 1L).otherwise(0L).as("isr"))
         .groupBy("bin")
         .agg(sum(col("isr")).as("n_ref"),
-          sum(lit(1L) - col("isr")).as("n_cur"))
-        .localCheckpoint(true)
+          sum(lit(1L) - col("isr")).as("n_cur")))
       val tot = cells.agg(sum(col("n_ref")).as("tr"),
         sum(col("n_cur")).as("tc"))
       val m = cells.where(col("n_ref") > 0 && col("n_cur") > 0)
@@ -2322,10 +2320,9 @@ object Stats {
     // cells; localCheckpoint pins it so neither consumer replays the
     // fact scan (exchange reuse is not guaranteed across an aggregate
     // boundary — measured: without this the plan scans the fact twice)
-    val g = df.groupBy(col(groupCol).as("grp"))
+    val g = Pin.now(df.groupBy(col(groupCol).as("grp"))
       .agg(count(lit(1)).as("n"), sum(value).as("s"),
-        sum(value * value).as("ss"))
-      .localCheckpoint(true)
+        sum(value * value).as("ss")))
     val t = g.agg(sum(col("n")).cast("long").as("nt"),
       sum(col("s")).as("st"), count(lit(1)).as("k"))
     val c = g.crossJoin(broadcast(t))

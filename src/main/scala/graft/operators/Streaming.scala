@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.Harness.withConfs
 import graft.functions.topKRows
 import graft.streaming.Streams
@@ -620,13 +620,13 @@ object Streaming {
       Streams.drain(Streams.eventsStream(s, d), "append") { (batch, batchId) =>
         // one source pass per batch: cache, then two filtered writes,
         // each into its own batch subdir (overwrite = retry-idempotent)
-        batch.persist()
-        try {
+        Pin.scope {
+          Pin.cache(batch)
           batch.where(gate).write.mode("overwrite")
             .parquet(s"$okDir/batch_$batchId")
           batch.where(!coalesce(gate, lit(false))).write.mode("overwrite")
             .parquet(s"$badDir/batch_$batchId")
-        } finally { batch.unpersist(); () }
+        }
       }
       // a route that received zero rows across all batches has no
       // directory — report (n=0, sv=null) instead of failing the read

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.{chunks, winnow_fingerprint, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -991,11 +991,10 @@ object Text {
         |ORDER BY ck.k""".stripMargin) { (s, d) =>
       // the vocab-sized frequency frame feeds both the totals and the
       // top-50 cut; localCheckpoint pins it to one corpus scan
-      val tf = Tables.documents(s, d)
+      val tf = Pin.now(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("t"))
         .where(col("t") =!= "")
-        .groupBy("t").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
+        .groupBy("t").agg(count(lit(1)).as("c")))
       val tot = tf.agg(sum(col("c")).as("n"), count(lit(1)).as("v"))
       val top = tf.orderBy(col("c").desc, col("t")).limit(50)
       val w = Window.orderBy(col("c").desc, col("t"))

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -8,7 +9,8 @@ import org.apache.spark.sql.types.StructType
   * wrapping a custom Catalyst [[Expression]] into a user-facing [[Column]]
   * (the Spark 4.x `Column` carries a `ColumnNode`, not an `Expression`, so
   * third-party expressions need this one hop), registering SQL function
-  * builders on an already-built session, and Spark's own schema merge.
+  * builders on an already-built session, Spark's own schema merge, and
+  * the cache substitution a plan would see at execution.
   */
 object GraftSql {
   /** Wrap a raw Catalyst expression as a Column. */
@@ -35,4 +37,8 @@ object GraftSql {
   def mergeSchemas(left: StructType, right: StructType,
       caseSensitive: Boolean): StructType =
     left.merge(right, caseSensitive)
+
+  /** `plan` with the session's cached data in, memoized on no Dataset. */
+  def withCachedData(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    spark.sharedState.cacheManager.useCachedData(plan)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The `graft.api.Graft` facade: frame-parametric operators over
@@ -1570,5 +1571,85 @@ class ApiSpec extends SparkSuite {
     assert(rows("d") == 0.0, "hapax-only vocabulary has K = 0")
     // one type occurring n=3 times: K = 1e4*(9-3)/9
     assert(rows("r") == 10000.0 * 6.0 / 9.0)
+  }
+
+  test("scoped: repeated pinning calls come back to the caller's baseline " +
+      "each time, and the caller's own blocks stay") {
+    import spark.implicits._
+    Harness.release(spark)
+    val mine = spark.sparkContext.parallelize(1 to 10).persist()
+    mine.count()
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val baseline = pinned
+    // a path with a branch, a chord and a separate pair; both directions
+    // present so every node is a PageRank source
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L), (1L, 3L), (9L, 10L))
+      .toDF("u", "v")
+    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val pairs = e.select(col("u").as("doc_a"), col("v").as("doc_b"))
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val small = store.where(col("id") < 400)
+    val probe = probes.where(col("probe_id") === 0).select("probe")
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() => Graft.pageRank(sym, iters = 4)),
+      "personalizedPageRank" ->
+        (() => Graft.personalizedPageRank(sym, 1L, iters = 4)),
+      "shortestHops" -> (() => Graft.shortestHops(e, 1L)),
+      "shortestCost" ->
+        (() => Graft.shortestCost(e.withColumn("cost", lit(1L)), 1L)),
+      "labelPropagation" -> (() => Graft.labelPropagation(e)),
+      "kCore" -> (() => Graft.kCore(e, k = 2)),
+      "commonNeighbors" -> (() => Graft.commonNeighbors(e)),
+      "dedupClusters" -> (() => Graft.dedupClusters(pairs)),
+      "dedupClustersLogN" -> (() => Graft.dedupClustersLogN(pairs)),
+      "minhashNearDupPairs" ->
+        (() => Graft.minhashNearDupPairs(docs, 0.5)),
+      "simhashNearDupPairs" -> (() => Graft.simhashNearDupPairs(docs)),
+      "nearDupKeepList" -> (() => Graft.nearDupKeepList(docs, 0.5)),
+      "semanticDedup" ->
+        (() => Graft.semanticDedup(small, k = 4, threshold = 0.99)),
+      "pqTopK" -> (() => Graft.pqTopK(small, probes, 5)),
+      "mmrRerank" -> (() => Graft.mmrRerank(small, probe, 3)))
+    // the calls that hand pins to their caller, seen from inside the scope
+    val handed = calls.collect { case (name, call) =>
+      (1 to 3).map { i =>
+        var inside = scala.collection.Set.empty[Int]
+        Graft.scoped {
+          val df = call()
+          val n = df.count()
+          inside = pinned -- baseline
+          java.lang.ref.Reference.reachabilityFence(df)
+          n
+        }
+        assert(pinned == baseline, s"$name call $i left ${pinned -- baseline}")
+        assert(spark.sharedState.cacheManager.isEmpty,
+          s"$name call $i left a cached frame")
+        inside.nonEmpty
+      }.reduce(_ && _) match { case true => Some(name); case _ => None }
+    }.flatten
+    assert(handed.toSet == calls.map(_._1).toSet -- Set("pqTopK", "mmrRerank"),
+      handed)
+    assert(mine.getStorageLevel.useMemory, "the caller's own RDD was freed")
+    mine.unpersist()
+  }
+
+  test("scoped refuses to return a lazy frame over a block it would free, " +
+      "and passes an eager result out") {
+    import spark.implicits._
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val before = pinned
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    // shortestHops' result is lazy over its last round's `cut` pin
+    val ex = intercept[IllegalStateException](
+      Graft.scoped(Graft.shortestHops(e, 1L)))
+    assert(ex.getMessage.contains("Pin.scope"), ex.getMessage)
+    assert(pinned == before, pinned -- before)
+    // the verified pairs are an eager checkpoint: the result keeps it
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val n = Graft.scoped(Graft.minhashNearDupPairs(docs, 0.5).count())
+    val nd = Graft.scoped(Graft.minhashNearDupPairs(docs, 0.5))
+    assert((pinned -- before).size == 1 && nd.count() == n)
+    Pin.release(nd)
+    assert(pinned == before, pinned -- before)
   }
 }

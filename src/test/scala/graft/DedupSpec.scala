@@ -539,6 +539,55 @@ class DedupSpec extends SparkSuite {
     assert(ex.getMessage.contains("did not stabilize"), ex.getMessage)
   }
 
+  /** Persistent RDDs `body` leaves pinned that were not pinned before.
+    * What `body` returns stays reachable until they are counted, so the
+    * context cleaner cannot free what it still reads.
+    */
+  private def pinsLeftBy(body: => Any): Int = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val result = body
+    try (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    finally java.lang.ref.Reference.reachabilityFence(result)
+  }
+
+  private def counted(df: org.apache.spark.sql.DataFrame) = { df.count(); df }
+
+  test("kmeansCells leaves one pin: the final centroids its lazy result reads") {
+    val e = Tables.embeddings(spark, sf)
+    // four rounds make four centroid checkpoints; each superseded one
+    // is released once its successor is materialized
+    assert(pinsLeftBy(counted(operators.Ann.kmeansCells(e, 4, iters = 4))) == 1)
+  }
+
+  test("writeIndexLayers leaves no pin, the k-means that feeds it included") {
+    val e = Tables.embeddings(spark, sf)
+    val dir = streaming.Streams.scratchDir("ivf_pins_")
+    assert(pinsLeftBy(operators.Ann.writeIndexLayers(spark, dir,
+      operators.Ann.kmeansCells(e, 4, iters = 3))) == 0)
+  }
+
+  test("the dedup loops release superseded rounds: the pins a converged " +
+      "run leaves do not grow with its round count") {
+    import spark.implicits._
+    def path(n: Long) = (0L until n - 1).map(i => (i, i + 1))
+      .toDF("doc_a", "doc_b")
+    // the 60-node path takes several star rounds, the 3-node path the
+    // minimum two; each run leaves only the round its lazy result reads
+    val logShort = pinsLeftBy(
+      counted(operators.Dedup.collapseClustersLogN(path(3))))
+    val logLong = pinsLeftBy(
+      counted(operators.Dedup.collapseClustersLogN(path(60))))
+    assert(logShort == 1 && logLong == 1, s"3 nodes: $logShort, 60: $logLong")
+    // propagation needs diameter + 1 rounds: 3 on the short path, 12 on
+    // the long one
+    val propShort = pinsLeftBy(
+      counted(operators.Dedup.collapseClusters(path(3), maxIter = 15)))
+    val propLong = pinsLeftBy(
+      counted(operators.Dedup.collapseClusters(path(12), maxIter = 15)))
+    assert(propShort == 1 && propLong == 1,
+      s"3 nodes: $propShort, 12: $propLong")
+  }
+
   test("dedup_exact is idempotent") {
     val q = SparkEntry.queries("dedup_exact")
     val once = q(spark, sf)

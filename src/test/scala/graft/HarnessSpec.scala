@@ -174,6 +174,63 @@ class HarnessSpec extends SparkSuite {
     assert(cached.isEmpty, cached)
   }
 
+  test("every persist and local checkpoint goes through Pin, and so does " +
+      "every release but the harness sweep") {
+    val hits = Seq(".persist(", ".cache()", ".localCheckpoint(",
+        ".checkpoint(", ".unpersist(").flatMap(linesWith)
+      .filterNot(_.startsWith("src/main/scala/graft/Pin.scala: "))
+    assert(hits == Seq("src/main/scala/graft/Harness.scala: " +
+      ".foreach(_.unpersist(blocking = true))"), hits.mkString("\n"))
+  }
+
+  test("Pin.release frees a checkpoint's own blocks and a cache; a frame " +
+      "that is not a pin is an error") {
+    Harness.release(spark)
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val before = pinned
+    val eager = Pin.now(spark.range(100).toDF("x"))
+    val lazyCut = Pin.cut(spark.range(100).toDF("x"))
+    val cached = Pin.cache(spark.range(100).toDF("y"))
+    assert(lazyCut.count() == 100 && cached.count() == 100)
+    assert((pinned -- before).size == 3, pinned -- before)
+    // Dataset.unpersist reaches the cache manager only: a checkpoint
+    // keeps its blocks
+    eager.unpersist(blocking = true)
+    assert((pinned -- before).size == 3, pinned -- before)
+    Pin.release(eager, lazyCut, cached)
+    assert(pinned == before, pinned -- before)
+    assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    intercept[IllegalArgumentException](Pin.release(eager))
+    intercept[IllegalArgumentException](
+      Pin.release(spark.range(3).toDF("x")))
+  }
+
+  test("Pin.scope frees what its body pinned, passes an eager result out, " +
+      "and refuses a lazy one") {
+    Harness.release(spark)
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val before = pinned
+    val out = Pin.scope {
+      val c = Pin.cache(spark.range(50).toDF("x"))
+      val inner = Pin.scope(Pin.now(c.where("x % 2 = 0")))
+      Pin.now(inner.where("x < 10"))
+    }
+    // the outer result is the only pin left; the nested scope's eager
+    // result and the cache it read are freed
+    assert(out.count() == 5 && (pinned -- before).size == 1, pinned -- before)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    Pin.release(out)
+    assert(pinned == before)
+    val ex = intercept[IllegalStateException](Pin.scope(
+      Pin.cut(spark.range(50).toDF("x")).where("x > 3")))
+    assert(ex.getMessage.contains("Pin.scope"), ex.getMessage)
+    intercept[IllegalStateException](Pin.scope(
+      (1L, Pin.cache(spark.range(50).toDF("x")).select("x"))))
+    intercept[ArithmeticException](Pin.scope {
+      Pin.now(spark.range(50).toDF("x")); 1 / 0 })
+    assert(pinned == before && spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("operators, api, functions and streaming read no environment") {
     val hits = Seq("operators", "api", "functions", "streaming")
       .flatMap(d => codeLines(mainRoot.resolve("graft").resolve(d)))
