@@ -37,7 +37,10 @@ object Harness {
       spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).count()
       spark.range(10).select(org.apache.spark.sql.functions.sum("id")).count()
       // streaming machinery (incremental planner, state-store managers,
-      // RocksDB native library) is also one-time init, not operator cost
+      // RocksDB native library) is also one-time init, not operator cost.
+      // Every stream starts on the executor's one classloader
+      // (Streams.start), so the code this stream generates stays compiled
+      // for the later streams that share it
       withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val w = spark.readStream.format("rate-micro-batch")
@@ -49,12 +52,14 @@ object Harness {
       System.err.println(s"[warmup] failed: $t") }
 
   /** Run `body` with each `key -> value` set on the session, then put
-    * every key back as it was: its prior value, or unset if it had none.
+    * every key back as it was: its prior value, or unset if it had none
+    * (a key left at its default is unset, not pinned to the default).
     * The restore runs in `finally`, so a throwing body leaks no conf.
     */
   def withConfs[T](spark: SparkSession, confs: (String, String)*)(
       body: => T): T = {
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prior = confs.map { case (k, _) => k -> set.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prior.foreach {

@@ -5,9 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Dev harness: time individual inventory queries (min of `reps`) at an
   * arbitrary SF without paying for the full bench sweep. Each rep prints
-  * its wall and task CPU, every stage that took at least 30 ms of wall or
-  * CPU, and, for a streaming query, the `durationMs` breakdown of every
-  * micro-batch.
+  * its wall, task CPU and the number of classes Spark's code generator
+  * compiled (a rep that reuses compiled code reads 0), every stage that
+  * took at least 30 ms of wall or CPU, and, for a streaming query, the
+  * `durationMs` breakdown of every micro-batch.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt 'runMain graft.Profile dedup_minhash_collapse [more names]'
@@ -60,15 +61,17 @@ object Profile {
         val times = (1 to reps).map { r =>
           stages.synchronized(stages.clear())
           batches.synchronized(batches.clear())
+          val compiles0 = compileCount
           val t0 = System.nanoTime()
           q.fn(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
+          val compiles = compileCount - compiles0
           Harness.release(spark)
           // listener events arrive asynchronously: let the rep's drain
           Thread.sleep(300)
           stages.synchronized {
             val cpu = stages.map(_._5).sum / 1e3
-            println(f"== $n r$r wall=$dt%.3f cpu=$cpu%.3f")
+            println(f"== $n r$r wall=$dt%.3f cpu=$cpu%.3f compiles=$compiles")
             stages.sortBy(_._1).foreach { case (id, dur, nt, rt, ct) =>
               if (dur >= 30 || ct >= 30)
                 println(f"   stage=$id dur=${dur}ms tasks=$nt " +
@@ -88,4 +91,8 @@ object Profile {
     }
     spark.stop()
   }
+
+  /** Classes compiled by Spark's code generator so far in this JVM. */
+  private def compileCount: Long = org.apache.spark.metrics.source
+    .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -1016,16 +1016,6 @@ object Graft {
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame =
     graft.operators.Stats.spearman(df, xCol, yCol)
 
-  /** The LSH bands×rows tuning table over one shared MinHash(32)
-    * signature of `docs` (doc_id, text): per banding (4×8, 8×4, 16×2)
-    * the candidate volume, `threshold`-verified pair count, recall vs
-    * the finest banding, and candidate precision — containment is
-    * structural, so recall rises and precision falls as bands narrow.
-    */
-  def minhashBandSweep(docs: DataFrame, threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame =
-    graft.operators.Dedup.bandSweepOf(docs, threshold, maxBucket)
-
   /** One-way ANOVA F of `value` (an exact decimal/integer column
     * expression) across the groups of `groupCol` → one row (n_total,
     * k_groups, ss_between, ss_within, f_stat, eta_sq). Cross-group

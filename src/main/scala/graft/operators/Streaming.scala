@@ -1190,11 +1190,11 @@ object Streaming {
       // started and stopped here rather than drained
       val out = Streams.scratchDir("late_")
       Streams.withStatePartitions(s, 2) {
-        val q = agg.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        val q = Streams.start(agg) {
+          _.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(out)
           }
-          .start()
+        }
         try {
           ms.addData((t("10:00"), 1L), (t("10:05"), 1L))
           q.processAllAvailable() // watermark -> 09:55

@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.Tables
 import graft.functions._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryProgress, Trigger}
 
 /** Streaming sources + the two reference-parity pipelines
   * (SURVEY.md §2.1 / §3.4), Spark-first:
@@ -108,20 +109,45 @@ object Streams {
     * default), hand every micro-batch to `body`, await termination and
     * return the run's progress (its last
     * `spark.sql.streaming.numRecentProgressUpdates` batches, 100 by
-    * default). The one place a streaming query in `src/main` is started
-    * and awaited; a failed batch rethrows here. Results go where `body`
-    * writes them, never into the driver.
+    * default). The one place a streaming query in `src/main` is awaited
+    * (it starts through [[start]]); a failed batch rethrows here. Results
+    * go where `body` writes them, never into the driver.
     */
   def drain(df: DataFrame, mode: String,
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None)(body: (DataFrame, Long) => Unit)
       : Seq[StreamingQueryProgress] = {
-    val w = df.writeStream.outputMode(mode).trigger(trigger)
-    val q = checkpoint.fold(w)(c => w.option("checkpointLocation", c))
-      .foreachBatch(body).start()
+    val q = start(df) { w0 =>
+      val w = w0.outputMode(mode).trigger(trigger)
+      checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+        .foreachBatch(body)
+    }
     q.awaitTermination()
     q.recentProgress.toSeq
   }
+
+  /** Start the streaming query that `writer` configures on `df`'s writer:
+    * the one place a streaming query in `src/main` is started.
+    *
+    * Spark keys its generated-code cache on (context classloader, source).
+    * Every start clones the session, and under artifact isolation
+    * (`spark.sql.artifact.isolation.enabled`, on by default) the clone
+    * gets a fresh artifact state, so its tasks run under a fresh
+    * executor classloader and every generated class of the query is
+    * compiled again at every start. The clone copies the session conf
+    * when it is made, so turning isolation off around `start()` alone
+    * lets every stream reuse the executor's one loader, and so each
+    * generated class compiles once per JVM, while the caller's session
+    * keeps its own setting. Results cannot change: the engine adds no
+    * session artifacts (no jars, files or classes), so isolation has
+    * nothing to keep apart.
+    */
+  private[graft] def start(df: DataFrame)(
+      writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
+    graft.Harness.withConfs(df.sparkSession,
+      "spark.sql.artifact.isolation.enabled" -> "false") {
+      writer(df.writeStream).start()
+    }
 
   /** Run `df` to completion into a fresh scratch directory and read the
     * result back as a batch DataFrame. Per mode, as Spark's sinks keep a
@@ -516,11 +542,11 @@ object Streams {
     */
   def kafkaSink(df: DataFrame, servers: String, topic: String,
       checkpointDir: String, valueCol: String = "answer")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.select(col(valueCol).cast("string").as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      : StreamingQuery =
+    start(df.select(col(valueCol).cast("string").as("value"))) {
+      _.format("kafka")
+        .option("kafka.bootstrap.servers", servers)
+        .option("topic", topic)
+        .option("checkpointLocation", checkpointDir)
+    }
 }

@@ -20,17 +20,23 @@ class HarnessSpec extends SparkSuite {
   test("withConfs restores a set key and unsets an unset key when the " +
       "body throws") {
     val (set, unset) = ("graft.test.confs.set", "graft.test.confs.unset")
+    // a Spark conf with a default reads as set, yet unset it stays
+    val defaulted = "spark.sql.artifact.isolation.enabled"
+    assert(spark.conf.getAll.get(defaulted).isEmpty)
     spark.conf.set(set, "prior")
     try {
       intercept[IllegalStateException] {
-        Harness.withConfs(spark, set -> "scoped", unset -> "scoped") {
+        Harness.withConfs(spark, set -> "scoped", unset -> "scoped",
+            defaulted -> "false") {
           assert(spark.conf.get(set) == "scoped")
           assert(spark.conf.get(unset) == "scoped")
+          assert(spark.conf.get(defaulted) == "false")
           throw new IllegalStateException("body failed")
         }
       }
       assert(spark.conf.get(set) == "prior")
       assert(spark.conf.getOption(unset).isEmpty)
+      assert(spark.conf.getAll.get(defaulted).isEmpty)
     } finally spark.conf.unset(set)
   }
 
@@ -57,8 +63,9 @@ class HarnessSpec extends SparkSuite {
     assert(filesWith("CURRENT.tmp") ==
       Set("src/main/scala/graft/streaming/Streams.scala"))
     // Tables reads its inference confs into a file-version key
-    assert(filesWith("conf.getOption") == Set(
-      "src/main/scala/graft/Harness.scala", "src/main/scala/graft/Tables.scala"))
+    assert(filesWith("conf.getOption") ==
+      Set("src/main/scala/graft/Tables.scala"))
+    assert(filesWith("conf.getAll") == Set("src/main/scala/graft/Harness.scala"))
   }
 
   test("table and store reads take their schema from the footer resolver") {
@@ -112,6 +119,17 @@ class HarnessSpec extends SparkSuite {
     assert(linesWith("awaitTermination") == Seq(
       "src/main/scala/graft/streaming/Streams.scala: q.awaitTermination()"),
       linesWith("awaitTermination").mkString("\n"))
+  }
+
+  test("every streaming query starts through Streams.start") {
+    val helper = Seq("src/main/scala/graft/streaming/Streams.scala: " +
+      "writer(df.writeStream).start()")
+    // Bench's own starts are its worker threads and its subprocess
+    val starts = linesWith(".start()")
+      .filterNot(_.startsWith("src/main/scala/graft/Bench.scala: "))
+    assert(starts == helper, starts.mkString("\n"))
+    assert(linesWith("writeStream") == helper,
+      linesWith("writeStream").mkString("\n"))
   }
 
   test("query scratch lives under the one scratch root; only the memoized " +

@@ -876,4 +876,62 @@ class StreamingSpec extends SparkSuite {
           s"unexpected failure: $e")
     }
   }
+
+  test("a restarted ingest compiles no generated code again, its batch " +
+      "jobs keep their task classloader, and the caller's isolation conf " +
+      "is left as it was") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    implicit val sq: SQLContext = spark.sqlContext
+    val iso = "spark.sql.artifact.isolation.enabled"
+    def explicit = spark.conf.getAll.get(iso)
+    val prior = explicit
+    val root = java.nio.file.Files.createTempDirectory("graft_restart_")
+    try {
+      val lines = s"$root/lines"
+      Seq("The capital of France is Paris.", "Spark plans with Catalyst.",
+        "Flink streams with low latency.").toDF("line").coalesce(1)
+        .write.parquet(lines)
+      // the identity of the context classloader each ingest task runs under
+      val probe = udf { (l: String) =>
+        StreamingSpec.loaders.add(
+          System.identityHashCode(Thread.currentThread.getContextClassLoader))
+        l
+      }
+      def run(): (Long, Set[Int]) = {
+        StreamingSpec.loaders.clear()
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        streaming.Streams.ingest(streaming.Streams.fileLines(spark, lines)
+          .select(probe(col("line")).as("line")), s"$root/store")
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles,
+          StreamingSpec.loaders.asScala.toSet)
+      }
+      val (_, first) = run()
+      val (compiled, second) = run()
+      assert(first.nonEmpty, "the probe saw no ingest task")
+      assert(compiled == 0, s"the second run compiled $compiled classes")
+      assert(second == first, s"task classloaders $first, then $second")
+      assert(spark.read.parquet(s"$root/store").count() == 6)
+      assert(explicit == prior)
+      // a start that throws (no kafka connector ships here) restores the
+      // caller's setting too: an explicit value, and unset
+      for (setting <- Seq(Some("true"), None)) {
+        setting.fold(spark.conf.unset(iso))(spark.conf.set(iso, _))
+        val e = intercept[Exception](streaming.Streams.kafkaSink(
+          MemoryStream[String].toDF().toDF("answer"), "broker:9092",
+          "answers", s"$root/chk"))
+        assert(e.getMessage.toLowerCase.contains("kafka"), e)
+        assert(explicit == setting)
+      }
+    } finally {
+      prior.fold(spark.conf.unset(iso))(spark.conf.set(iso, _))
+      streaming.Streams.deleteTree(root)
+    }
+  }
+}
+
+object StreamingSpec {
+  /** Written by the tasks of a local-mode job, read by the test. */
+  val loaders = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
 }
