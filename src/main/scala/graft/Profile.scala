@@ -2,11 +2,13 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Dev harness: time individual inventory queries (min of `reps`) at an
   * arbitrary SF without paying for the full bench sweep. Each rep prints
-  * its wall, task CPU and the number of classes Spark's code generator
-  * compiled (a rep that reuses compiled code reads 0), every stage that
+  * its wall, task CPU, the number of classes Spark's code generator
+  * compiled (a rep that reuses compiled code reads 0) and the number of
+  * processes the JVM forked ([[processStarts]]), every stage that
   * took at least 30 ms of wall or CPU, and, for a streaming query, the
   * `durationMs` breakdown of every micro-batch.
   *
@@ -62,16 +64,19 @@ object Profile {
           stages.synchronized(stages.clear())
           batches.synchronized(batches.clear())
           val compiles0 = compileCount
-          val t0 = System.nanoTime()
-          q.fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (dt, forks) = processStarts {
+            val t0 = System.nanoTime()
+            q.fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }
           val compiles = compileCount - compiles0
           Harness.release(spark)
           // listener events arrive asynchronously: let the rep's drain
           Thread.sleep(300)
           stages.synchronized {
             val cpu = stages.map(_._5).sum / 1e3
-            println(f"== $n r$r wall=$dt%.3f cpu=$cpu%.3f compiles=$compiles")
+            println(f"== $n r$r wall=$dt%.3f cpu=$cpu%.3f compiles=$compiles " +
+              s"forks=${forks.size}")
             stages.sortBy(_._1).foreach { case (id, dur, nt, rt, ct) =>
               if (dur >= 30 || ct >= 30)
                 println(f"   stage=$id dur=${dur}ms tasks=$nt " +
@@ -95,4 +100,25 @@ object Profile {
   /** Classes compiled by Spark's code generator so far in this JVM. */
   private def compileCount: Long = org.apache.spark.metrics.source
     .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Run `body` under a JFR recording of `jdk.ProcessStart` alone, and
+    * return its result with the command line of every process this JVM
+    * started meanwhile. Without its native library, Hadoop forks a shell
+    * command for each local permission change and link-status check.
+    */
+  def processStarts[T](body: => T): (T, Seq[String]) = {
+    val rec = new jdk.jfr.Recording()
+    val file = java.nio.file.Files.createTempFile("graft_forks_", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(file)
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+        .map(_.getString("command")).toSeq)
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
 }

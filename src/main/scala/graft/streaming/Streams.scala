@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryProgress, Trigger}
 
@@ -141,12 +142,28 @@ object Streams {
     * keeps its own setting. Results cannot change: the engine adds no
     * session artifacts (no jars, files or classes), so isolation has
     * nothing to keep apart.
+    *
+    * The clone's conf also names [[LocalCheckpointFiles]] as the
+    * checkpoint file manager, so the stream's offset, commit and source
+    * logs and its state-store files are written without forking a
+    * process per file on a local disk. A file source builds its log on
+    * the caller's session when the stream thread initializes the query,
+    * after `start()` returns, so both confs stay set until the query has
+    * initialized its sources.
     */
   private[graft] def start(df: DataFrame)(
       writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
     graft.Harness.withConfs(df.sparkSession,
-      "spark.sql.artifact.isolation.enabled" -> "false") {
-      writer(df.writeStream).start()
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[LocalCheckpointFiles].getName) {
+      val q = writer(df.writeStream).start()
+      q match {
+        case w: StreamingQueryWrapper =>
+          w.streamingQuery.awaitInitialization(Long.MaxValue)
+        case _ => ()
+      }
+      q
     }
 
   /** Run `df` to completion into a fresh scratch directory and read the

@@ -123,13 +123,27 @@ class HarnessSpec extends SparkSuite {
 
   test("every streaming query starts through Streams.start") {
     val helper = Seq("src/main/scala/graft/streaming/Streams.scala: " +
-      "writer(df.writeStream).start()")
-    // Bench's own starts are its worker threads and its subprocess
+      "val q = writer(df.writeStream).start()")
+    // Bench's own starts are its worker threads and its subprocess, and
+    // Profile's is its JFR recording of process starts
     val starts = linesWith(".start()")
       .filterNot(_.startsWith("src/main/scala/graft/Bench.scala: "))
+      .filterNot(_ == "src/main/scala/graft/Profile.scala: rec.start()")
     assert(starts == helper, starts.mkString("\n"))
     assert(linesWith("writeStream") == helper,
       linesWith("writeStream").mkString("\n"))
+  }
+
+  test("the isolation conf and the checkpoint file manager are set only " +
+      "in Streams.start") {
+    for ((conf, line) <- Seq(
+        "spark.sql.artifact.isolation.enabled" ->
+          "\"spark.sql.artifact.isolation.enabled\" -> \"false\",",
+        "checkpointFileManagerClass" ->
+          "\"spark.sql.streaming.checkpointFileManagerClass\" ->"))
+      assert(linesWith(conf) ==
+        Seq(s"src/main/scala/graft/streaming/Streams.scala: $line"),
+        linesWith(conf).mkString("\n"))
   }
 
   test("query scratch lives under the one scratch root; only the memoized " +

@@ -887,6 +887,10 @@ class StreamingSpec extends SparkSuite {
     val iso = "spark.sql.artifact.isolation.enabled"
     def explicit = spark.conf.getAll.get(iso)
     val prior = explicit
+    // the checkpoint file manager is scoped to the start the same way
+    val cfm = "spark.sql.streaming.checkpointFileManagerClass"
+    def manager = spark.conf.getAll.get(cfm)
+    assert(manager.isEmpty)
     val root = java.nio.file.Files.createTempDirectory("graft_restart_")
     try {
       val lines = s"$root/lines"
@@ -914,6 +918,7 @@ class StreamingSpec extends SparkSuite {
       assert(second == first, s"task classloaders $first, then $second")
       assert(spark.read.parquet(s"$root/store").count() == 6)
       assert(explicit == prior)
+      assert(manager.isEmpty, manager)
       // a start that throws (no kafka connector ships here) restores the
       // caller's setting too: an explicit value, and unset
       for (setting <- Seq(Some("true"), None)) {
@@ -923,11 +928,110 @@ class StreamingSpec extends SparkSuite {
           "answers", s"$root/chk"))
         assert(e.getMessage.toLowerCase.contains("kafka"), e)
         assert(explicit == setting)
+        assert(manager.isEmpty, manager)
       }
     } finally {
       prior.fold(spark.conf.unset(iso))(spark.conf.set(iso, _))
       streaming.Streams.deleteTree(root)
     }
+  }
+
+  test("a checkpointed drain forks no process on its checkpoint and " +
+      "leaves no .crc there") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(streaming.Streams.scratchDir("forks_"))
+    val chk = root.resolve("chk").toString
+    try {
+      Seq("a", "b", "c").toDF("line").coalesce(1)
+        .write.parquet(s"$root/src")
+      val rows = new java.util.concurrent.atomic.AtomicLong
+      val (_, forks) = Profile.processStarts {
+        streaming.Streams.drain(
+          streaming.Streams.fileLines(spark, s"$root/src"), "append",
+          checkpoint = Some(chk)) { (b, _) => rows.addAndGet(b.count()) }
+      }
+      assert(rows.get == 3)
+      // without the native libhadoop, Spark's default manager forks a
+      // readlink per rename and a chmod per file and directory here
+      val onCheckpoint = forks.filter(_.contains(chk))
+      assert(onCheckpoint.isEmpty, s"${onCheckpoint.size} processes: " +
+        onCheckpoint.groupBy(_.split(" ").head).map { case (c, n) =>
+          s"$c x${n.size}" }.mkString(", "))
+      val crcs = scala.util.Using.resource(java.nio.file.Files.walk(
+        java.nio.file.Paths.get(chk)))(_.iterator().asScala
+        .filter(_.toString.endsWith(".crc")).toSeq)
+      assert(crcs.isEmpty, crcs.mkString(", "))
+    } finally streaming.Streams.deleteTree(root)
+  }
+
+  test("a stateful drain restarted on its checkpoint counts nothing twice") {
+    import spark.implicits._
+    val root = streaming.Streams.scratchDir("restart_")
+    val (src, out, chk) = (s"$root/src", s"$root/out", s"$root/chk")
+    def feed(lines: String*): Unit =
+      lines.toDF("line").coalesce(1).write.mode("append").parquet(src)
+    def run(): Unit = streaming.Streams.withStatePartitions(spark, 2) {
+      streaming.Streams.drain(
+        streaming.Streams.fileLines(spark, src).groupBy("line").count(),
+        "complete", checkpoint = Some(chk)) { (b, _) =>
+        b.write.mode("overwrite").parquet(out)
+      }
+    }
+    try {
+      feed("a", "b", "a")
+      run()
+      feed("a", "c")
+      run() // resumes from the committed offsets and state
+      val got = spark.read.parquet(out).as[(String, Long)].collect()
+        .sorted.toSeq
+      assert(got == Seq(("a", 3L), ("b", 1L), ("c", 1L)), got)
+      assert(java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(chk, "state", "0")), "no state was stored")
+    } finally streaming.Streams.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  test("the local checkpoint manager keeps the no-overwrite check and " +
+      "overwrites a file whose .crc the default manager wrote") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing
+      .CheckpointFileManager
+    import scala.jdk.CollectionConverters._
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val root = java.nio.file.Paths.get(streaming.Streams.scratchDir("cfm_"))
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(root.resolve("chk").toUri)
+    val local = new streaming.LocalCheckpointFiles(dir, conf)
+    // the caller's session names no manager: this is Spark's default
+    val default = CheckpointFileManager.create(dir, conf)
+    assert(!default.isInstanceOf[streaming.LocalCheckpointFiles])
+    def write(fm: CheckpointFileManager, p: Path, text: String,
+        overwrite: Boolean): Unit = {
+      val o = fm.createAtomic(p, overwrite)
+      o.write(text.getBytes(utf8))
+      o.close()
+    }
+    def read(fm: CheckpointFileManager, p: Path): String =
+      scala.util.Using.resource(fm.open(p))(in =>
+        new String(in.readAllBytes(), utf8))
+    val file = new Path(dir, "0")
+    val crc = root.resolve("chk").resolve(".0.crc")
+    try {
+      local.createCheckpointDirectory()
+      write(default, file, "written by the default manager", false)
+      assert(java.nio.file.Files.exists(crc))
+      write(local, file, "local", true)
+      assert(!java.nio.file.Files.exists(crc), "a stale .crc survived")
+      assert(read(local, file) == "local")
+      assert(read(default, file) == "local")
+      // the overwrite published its temp file rather than leave it behind
+      val left = scala.util.Using.resource(java.nio.file.Files.list(
+        root.resolve("chk")))(_.iterator().asScala
+        .map(_.getFileName.toString).toSeq)
+      assert(left == Seq("0"), left)
+      intercept[FileAlreadyExistsException](write(local, file, "again", false))
+      assert(read(local, file) == "local")
+    } finally streaming.Streams.deleteTree(root)
   }
 }
 
