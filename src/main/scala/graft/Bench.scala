@@ -38,6 +38,16 @@ object Bench {
     dt
   }
 
+  /** Streaming queries run ONCE per sweep (init-dominated wall that
+    * repeats identically — min-of-two buys nothing, see BASELINE.md), so
+    * BOTH their committed baseline and any current value are single
+    * samples of a noisy per-job init cost (measured spread: 0.90–1.46 s
+    * for the same query on identical code within one session). The guard
+    * widens their wall gate accordingly.
+    */
+  private[graft] def isStreamingQuery(name: String): Boolean =
+    name.startsWith("stream_") || name == "source_rate_stream"
+
   /** Cross-round regression adjudication, pure and unit-testable
     * (BenchGuardSpec). Inputs: the committed BENCH_DETAIL artifact and the
     * current run's (name, wall, cpu) triples + calibrations. Returns
@@ -59,16 +69,6 @@ object Bench {
     * baseline committed from a slow placement no longer masks real
     * regressions up to the placement factor.
     */
-  /** Streaming queries run ONCE per sweep (init-dominated wall that
-    * repeats identically — min-of-two buys nothing, see BASELINE.md), so
-    * BOTH their committed baseline and any current value are single
-    * samples of a noisy per-job init cost (measured spread: 0.90–1.46 s
-    * for the same query on identical code within one session). The guard
-    * widens their wall gate accordingly.
-    */
-  private[graft] def isStreamingQuery(name: String): Boolean =
-    name.startsWith("stream_") || name == "source_rate_stream"
-
   private[graft] def guardFlags(prior: String,
       results: Seq[(String, Double, Double)],
       calib: Double, calibLoaded: Double,

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Streaming.{bandJoin, bandSide}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,8 +22,9 @@ import org.apache.spark.sql.functions._
   *     hottest parts keep their key across copies: hot-key ABSOLUTE
   *     mass grows with scale (share constant) instead of each shard
   *     bringing its own hot key.
-  *  3. STATE axis — the stream-stream band join runs with its
-  *     state-bounding predicate widened proportionally to scale
+  *  3. STATE axis — the stream-stream band join (built by the same
+  *     `Streaming.bandSide`/`bandJoin` as `stream_stream_join`) runs
+  *     with its state-bounding predicate widened proportionally to scale
   *     (user_id < 100·f), so stream state genuinely grows with input;
   *     both the wall exponent and the state_rows exponent are fitted
   *     and gated (a stuck watermark ⇒ unbounded state is the failure a
@@ -207,31 +209,21 @@ object ScalingBench {
         if (exp.isNaN) "null" else sec(exp)}}"""
     }
 
-  /** The STATE-AXIS kernel: `stream_stream_join`'s exact shape with the
-    * state-bounding predicate widened to `user_id < bound` — at bound
-    * 100·f on the f× corpus the retained key set grows ~f× while the
-    * per-key band stays fixed, so stream state is forced to grow
-    * linearly in input (the axis the shipped queries deliberately
-    * bound). Returns (wall, outRows, maxStateRows) with state read from
-    * the engine's own progress telemetry.
+  /** The STATE-AXIS kernel: `stream_stream_join`'s query, built by the
+    * same band-join builder ([[operators.Streaming.bandSide]],
+    * [[operators.Streaming.bandJoin]]) with the state-bounding predicate
+    * widened to `user_id < bound` — at bound 100·f on the f× corpus the
+    * retained key set grows ~f× while the per-key band stays fixed, so
+    * stream state is forced to grow linearly in input (the axis the
+    * shipped queries deliberately bound). At bound 100 it builds the
+    * shipped query's join. Returns (wall, outRows, maxStateRows) with
+    * state read from the engine's own progress telemetry.
     */
   private def bandJoinState(s: SparkSession, dir: String, bound: Int)
       : (Double, Long, Long) = {
     val t0 = System.nanoTime()
-    val l = graft.streaming.Streams.eventsStream(s, dir)
-      .where(col("user_id") < bound)
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
-        col("ts").as("ts_a"))
-    val r = graft.streaming.Streams.eventsStream(s, dir)
-      .where(col("user_id") < bound)
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
-        col("ts").as("ts_b"))
-    val j = l.join(r,
-      col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-        col("ts_b") >= col("ts_a") &&
-        col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"))
+    val j = bandJoin(bandSide(s, dir, "a", bound),
+        bandSide(s, dir, "b", bound))
       .select("eid_a", "eid_b")
     var rows = 0L
     val progress = graft.streaming.Streams.withStatePartitions(s, 4) {

@@ -976,12 +976,6 @@ object Graft {
     graft.operators.Analytics.jaccardLinksOf(
       lowHighEdges(edges, uCol, vCol), topN, maxMiddleDegree)
 
-  /** Spearman rank correlation over a BOUNDED joint value domain:
-    * Pearson on tie-averaged ×2-integer ranks derived from the (x, y)
-    * cell-count frame, moments in DECIMAL(38,0) → one row (n_rows,
-    * spearman_rho). `df` needs the two columns; both must have bounded
-    * distinct-value counts (the rank windows touch |distinct| rows).
-    */
   /** Weekly cohort retention triangle: users cohort by first-active
     * week, each (cohort_week, week_offset) cell reports still-active
     * count and share → (cohort_week, week_offset, n_cohort, n_active,
@@ -1013,6 +1007,12 @@ object Graft {
     graft.operators.Stats.bootstrapCiOf(
       df, groupCol, valueExpr, keyExpr, replicas)
 
+  /** Spearman rank correlation over a BOUNDED joint value domain:
+    * Pearson on tie-averaged ×2-integer ranks derived from the (x, y)
+    * cell-count frame, moments in DECIMAL(38,0) → one row (n_rows,
+    * spearman_rho). `df` needs the two columns; both must have bounded
+    * distinct-value counts (the rank windows touch |distinct| rows).
+    */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame =
     graft.operators.Stats.spearman(df, xCol, yCol)
 

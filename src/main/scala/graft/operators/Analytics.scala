@@ -810,14 +810,6 @@ object Analytics {
         (col("n").cast("double") / col("__tn")).as("p"))
   }
 
-  /** Frame-parametric triangle census (re-exported as
-    * `graft.api.Graft.triangleStats`): one row (n_triangles, n_wedges,
-    * clustering) for an ORIENTED edge frame (u, v) with u < v — each
-    * triangle enumerates once as a<b<c. At power-law scale orient
-    * low-degree → high-degree instead so wedge fan-out is bounded by
-    * arboricity, not max degree. The clustering coefficient is ONE
-    * double division of two exact longs.
-    */
   /** Every triangle of a canonical (u < v) DISTINCT edge frame, exactly
     * once as (a, b, c) with a<b<c — the wedge-close triple join shared
     * by the global census and the per-node coefficients (a fix to the
@@ -832,6 +824,14 @@ object Analytics {
         col("a") === col("a2") && col("c") === col("c2"))
       .select(col("a"), col("b"), col("c"))
 
+  /** Frame-parametric triangle census (re-exported as
+    * `graft.api.Graft.triangleStats`): one row (n_triangles, n_wedges,
+    * clustering) for an ORIENTED edge frame (u, v) with u < v — each
+    * triangle enumerates once as a<b<c. At power-law scale orient
+    * low-degree → high-degree instead so wedge fan-out is bounded by
+    * arboricity, not max degree. The clustering coefficient is ONE
+    * double division of two exact longs.
+    */
   private[graft] def triangleStatsOf(edges: DataFrame): DataFrame = {
     // read 4× (ab, bc, ac, degrees)
     val e = Pin.cache(edges.select(col("u"), col("v")).distinct())
@@ -1090,17 +1090,6 @@ object Analytics {
           (col("n_a") + col("n_b") - col("n_both"))).as("jaccard"))
   }
 
-  /** k-CORE peel kernel (re-exported as `graft.api.Graft.kCore`):
-    * `edges` is an undirected (u, v) pair frame, ALREADY checkpoint-pinned
-    * (same caller contract as `collapseClustersLogN` — every round and
-    * the convergence count re-read it). Iteratively removes nodes whose
-    * degree in the surviving subgraph is < k until stable (monotone, so
-    * round counts on checkpointed in-memory frames are cheap) and
-    * returns (node, core_degree) for the survivors. Survivor lists are
-    * node-sized ≪ edges and broadcast into the semi-joins; past
-    * broadcast range drop the hint and the planner shuffles on the node
-    * key instead.
-    */
   /** Round cap shared by the iterative graph kernels AND their DuckDB
     * oracles' fixed recursion depth: the Spark side throws past it, so
     * whenever a query returns at all, the oracle's level-`MaxRounds`
@@ -1137,6 +1126,17 @@ object Analytics {
     e.select(explode(array(fwd, rev)).as("se")).select(col("se.*"))
   }
 
+  /** k-CORE peel kernel (re-exported as `graft.api.Graft.kCore`):
+    * `edges` is an undirected (u, v) pair frame, ALREADY checkpoint-pinned
+    * (same caller contract as `collapseClustersLogN` — every round and
+    * the convergence count re-read it). Iteratively removes nodes whose
+    * degree in the surviving subgraph is < k until stable (monotone, so
+    * round counts on checkpointed in-memory frames are cheap) and
+    * returns (node, core_degree) for the survivors. Survivor lists are
+    * node-sized ≪ edges and broadcast into the semi-joins; past
+    * broadcast range drop the hint and the planner shuffles on the node
+    * key instead.
+    */
   private[graft] def kCoreOf(edges0: DataFrame, k: Int): DataFrame = {
     var edges = edges0
     var cnt = edges.count()
@@ -1173,34 +1173,6 @@ object Analytics {
       .select(col("nd").as("node"), col("dg").as("core_degree"))
   }
 
-  /** Common-neighbor link prediction (re-exported as
-    * `graft.api.Graft.commonNeighbors`): `edges` is a canonical
-    * undirected (u < v) pair frame, ALREADY checkpoint-pinned (the kCoreOf
-    * caller contract). Scores every NON-adjacent pair sharing >= 1
-    * neighbor by common-neighbor count and Jaccard
-    * |N(a)∩N(b)| / |N(a)∪N(b)|, returning the top `topN` by
-    * (common DESC, part key) — the classic "who should be connected
-    * next" primitive behind recommendation and graph-completion.
-    *
-    * Wedge enumeration, the same shape as the triangle census: the
-    * symmetric edge frame self-joins on the shared middle node (a—x—b,
-    * a < b), one combiner count per pair, then an anti-join drops the
-    * already-adjacent pairs and node-sized degree counts broadcast in
-    * for the Jaccard denominator (one double division of exact
-    * BIGINTs). Power-law safety is the HOT-MIDDLE cap (the dedup
-    * hot-bucket discipline applied to wedges): a middle node of degree
-    * d fans out d(d−1)/2 candidate pairs NO MATTER how the endpoints
-    * are oriented — one degree-n hub is Θ(n²) rows, and on a star the
-    * exact result set itself is Θ(n²) — so middles with degree >
-    * `maxMiddleDegree` are dropped BEFORE the self-join (broadcast
-    * anti-join of the near-empty hot list). That bounds candidate rows
-    * by Σ_x min(deg x, cap)·deg x ≤ E·cap, and the semantic loss is the
-    * principled one: a neighbor shared by >1000 nodes is boilerplate
-    * co-occurrence, not an affinity signal (its RA weight is < 1/cap).
-    * Jaccard denominators still use FULL degrees. The cap is a no-op on
-    * the fixture graphs (max degree 13 at sf0.01) and is pinned by the
-    * AnalyticsSpec star-graph property test.
-    */
   /** Weekly cohort RETENTION TRIANGLE (re-exported as
     * `graft.api.Graft.retentionTriangle`): `df` needs a user column and
     * an event-time column; users cohort by FIRST-ACTIVE week
@@ -1294,30 +1266,96 @@ object Analytics {
       .limit(topN)
   }
 
-  private[graft] def commonNeighborsOf(edges: DataFrame,
-      topN: Int, maxMiddleDegree: Int = 1000): DataFrame = {
+  /** The wedge-candidate chain every link-prediction kernel shares:
+    * symmetrize the canonical (u < v) `edges`, count FULL degrees (dn,
+    * dg), drop middles of degree > `maxMiddleDegree` (broadcast
+    * anti-join of the near-empty hot list, see [[commonNeighborsOf]]),
+    * and self-join on the shared middle into one (part_a, part_b, w)
+    * row per wedge a—w—b with a < b. `score(wedges, deg)` reduces those
+    * to one row per pair, (part_a, part_b, ...); the pairs already in
+    * `edges` are anti-joined out, `out(pairs, deg)` projects the rest
+    * and the top `topN` by (`rankBy` DESC, part_a, part_b) is returned.
+    */
+  private def wedgeLinksOf(edges: DataFrame, topN: Int,
+      maxMiddleDegree: Int, rankBy: String)(
+      score: (DataFrame, DataFrame) => DataFrame,
+      out: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val sym = symmetrize(edges, "u", "v", "a", "x")
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("dg"))
+    val deg = sym.groupBy(col("a").as("dn")).agg(count(lit(1)).as("dg"))
     val hotMid = deg.where(col("dg") > maxMiddleDegree)
-      .select(col("a").as("x"))
+      .select(col("dn").as("x"))
     val wedgeIn = sym.join(broadcast(hotMid), Seq("x"), "left_anti")
-    val cn = wedgeIn.as("l")
+    val wedges = wedgeIn.as("l")
       .join(wedgeIn.as("r"),
         col("l.x") === col("r.x") && col("l.a") < col("r.a"))
-      .select(col("l.a").as("part_a"), col("r.a").as("part_b"))
-      .groupBy("part_a", "part_b").agg(count(lit(1)).as("common"))
-    cn.join(edges.select(col("u").as("part_a"), col("v").as("part_b")),
+      .select(col("l.a").as("part_a"), col("r.a").as("part_b"),
+        col("l.x").as("w"))
+    val pairs = score(wedges, deg)
+      .join(edges.select(col("u").as("part_a"), col("v").as("part_b")),
         Seq("part_a", "part_b"), "left_anti")
-      .join(broadcast(deg.select(col("a").as("part_a"), col("dg").as("da"))),
-        "part_a")
-      .join(broadcast(deg.select(col("a").as("part_b"), col("dg").as("db"))),
-        "part_b")
-      .select(col("part_a"), col("part_b"), col("common"),
-        (col("common").cast("double")
-          / (col("da") + col("db") - col("common"))).as("jaccard"))
-      .orderBy(col("common").desc, col("part_a"), col("part_b"))
+    out(pairs, deg)
+      .orderBy(col(rankBy).desc, col("part_a"), col("part_b"))
       .limit(topN)
   }
+
+  /** Wedges counted per pair as `cn`: the common-neighbor count. */
+  private def pairCounts(wedges: DataFrame, cn: String): DataFrame =
+    wedges.groupBy("part_a", "part_b").agg(count(lit(1)).as(cn))
+
+  /** `pairs` with both endpoints' FULL degrees (da, db) broadcast in, for
+    * a union denominator.
+    */
+  private def withDegrees(pairs: DataFrame, deg: DataFrame): DataFrame =
+    pairs
+      .join(broadcast(deg.select(col("dn").as("part_a"),
+        col("dg").as("da"))), "part_a")
+      .join(broadcast(deg.select(col("dn").as("part_b"),
+        col("dg").as("db"))), "part_b")
+
+  /** Wedges summed per pair as `as`: each middle w contributes the exact
+    * BIGINT `weight`, an expression of its FULL degree `dg`.
+    */
+  private def middleWeights(wedges: DataFrame, deg: DataFrame,
+      weight: String, as: String): DataFrame =
+    wedges.join(broadcast(deg), col("w") === col("dn"))
+      .groupBy("part_a", "part_b").agg(sum(expr(weight)).as(as))
+
+  /** Common-neighbor link prediction (re-exported as
+    * `graft.api.Graft.commonNeighbors`): `edges` is a canonical
+    * undirected (u < v) pair frame, ALREADY checkpoint-pinned (the kCoreOf
+    * caller contract). Scores every NON-adjacent pair sharing >= 1
+    * neighbor by common-neighbor count and Jaccard
+    * |N(a)∩N(b)| / |N(a)∪N(b)|, returning the top `topN` by
+    * (common DESC, part key) — the classic "who should be connected
+    * next" primitive behind recommendation and graph-completion.
+    *
+    * Wedge enumeration, the same shape as the triangle census: the
+    * symmetric edge frame self-joins on the shared middle node (a—x—b,
+    * a < b), one combiner count per pair, then an anti-join drops the
+    * already-adjacent pairs and node-sized degree counts broadcast in
+    * for the Jaccard denominator (one double division of exact
+    * BIGINTs). Power-law safety is the HOT-MIDDLE cap (the dedup
+    * hot-bucket discipline applied to wedges): a middle node of degree
+    * d fans out d(d−1)/2 candidate pairs NO MATTER how the endpoints
+    * are oriented — one degree-n hub is Θ(n²) rows, and on a star the
+    * exact result set itself is Θ(n²) — so middles with degree >
+    * `maxMiddleDegree` are dropped BEFORE the self-join (broadcast
+    * anti-join of the near-empty hot list). That bounds candidate rows
+    * by Σ_x min(deg x, cap)·deg x ≤ E·cap, and the semantic loss is the
+    * principled one: a neighbor shared by >1000 nodes is boilerplate
+    * co-occurrence, not an affinity signal (its RA weight is < 1/cap).
+    * Jaccard denominators still use FULL degrees. The cap is a no-op on
+    * the fixture graphs (max degree 13 at sf0.01) and is pinned by the
+    * AnalyticsSpec star-graph property test.
+    */
+  private[graft] def commonNeighborsOf(edges: DataFrame,
+      topN: Int, maxMiddleDegree: Int = 1000): DataFrame =
+    wedgeLinksOf(edges, topN, maxMiddleDegree, "common")(
+      (wedges, _) => pairCounts(wedges, "common"),
+      (pairs, deg) => withDegrees(pairs, deg)
+        .select(col("part_a"), col("part_b"), col("common"),
+          (col("common").cast("double")
+            / (col("da") + col("db") - col("common"))).as("jaccard")))
 
   /** Resource-allocation link-prediction index (Zhou–Lü–Zhang) over an
     * undirected (u, v) edge frame: for each NON-adjacent pair, Σ over
@@ -1332,27 +1370,13 @@ object Analytics {
     * negligible: a middle past the cap contributes < 1/cap per pair.
     */
   private[graft] def resourceAllocationOf(edges: DataFrame,
-      topN: Int, maxMiddleDegree: Int = 1000): DataFrame = {
-    val sym = symmetrize(edges, "u", "v", "a", "x")
-    val deg = sym.groupBy(col("a").as("dn")).agg(count(lit(1)).as("dg"))
-    val hotMid = deg.where(col("dg") > maxMiddleDegree)
-      .select(col("dn").as("x"))
-    val wedgeIn = sym.join(broadcast(hotMid), Seq("x"), "left_anti")
-    val cn = wedgeIn.as("l")
-      .join(wedgeIn.as("r"),
-        col("l.x") === col("r.x") && col("l.a") < col("r.a"))
-      .select(col("l.a").as("part_a"), col("r.a").as("part_b"),
-        col("l.x").as("w"))
-    val sc = cn.join(broadcast(deg), col("w") === col("dn"))
-      .groupBy("part_a", "part_b")
-      .agg(sum(expr("CAST(1000000000000 AS BIGINT) div dg")).as("ra_scaled"))
-    sc.join(edges.select(col("u").as("part_a"), col("v").as("part_b")),
-        Seq("part_a", "part_b"), "left_anti")
-      .select(col("part_a"), col("part_b"), col("ra_scaled"),
-        (col("ra_scaled").cast("double") / 1000000000000.0).as("ra_score"))
-      .orderBy(col("ra_scaled").desc, col("part_a"), col("part_b"))
-      .limit(topN)
-  }
+      topN: Int, maxMiddleDegree: Int = 1000): DataFrame =
+    wedgeLinksOf(edges, topN, maxMiddleDegree, "ra_scaled")(
+      middleWeights(_, _, "CAST(1000000000000 AS BIGINT) div dg",
+        "ra_scaled"),
+      (pairs, _) => pairs.select(col("part_a"), col("part_b"),
+        col("ra_scaled"),
+        (col("ra_scaled").cast("double") / 1000000000000.0).as("ra_score")))
 
   /** Neighbor-set Jaccard link prediction — the third of the classic
     * index trio next to [[resourceAllocationOf]] and [[adamicAdarOf]]:
@@ -1366,33 +1390,17 @@ object Analytics {
     * (see [[commonNeighborsOf]]); union denominators use FULL degrees.
     */
   private[graft] def jaccardLinksOf(edges: DataFrame, topN: Int,
-      maxMiddleDegree: Int = 1000): DataFrame = {
-    val sym = symmetrize(edges, "u", "v", "a", "x")
-    val deg = sym.groupBy(col("a").as("dn")).agg(count(lit(1)).as("dg"))
-    val hotMid = deg.where(col("dg") > maxMiddleDegree)
-      .select(col("dn").as("x"))
-    val wedgeIn = sym.join(broadcast(hotMid), Seq("x"), "left_anti")
-    val cn = wedgeIn.as("l")
-      .join(wedgeIn.as("r"),
-        col("l.x") === col("r.x") && col("l.a") < col("r.a"))
-      .groupBy(col("l.a").as("part_a"), col("r.a").as("part_b"))
-      .agg(count(lit(1)).as("cn"))
-    val sc = cn
-      .join(broadcast(deg.select(col("dn").as("part_a"),
-        col("dg").as("du"))), "part_a")
-      .join(broadcast(deg.select(col("dn").as("part_b"),
-        col("dg").as("dv"))), "part_b")
-      .select(col("part_a"), col("part_b"), col("cn"),
-        (col("du") + col("dv") - col("cn")).as("un"))
-    sc.join(edges.select(col("u").as("part_a"), col("v").as("part_b")),
-        Seq("part_a", "part_b"), "left_anti")
-      .select(col("part_a"), col("part_b"), col("cn"), col("un"),
-        expr("cn * CAST(1000000000000 AS BIGINT) div un").as("jac_scaled"),
-        (col("cn").cast("double") / col("un").cast("double"))
-          .as("jaccard"))
-      .orderBy(col("jac_scaled").desc, col("part_a"), col("part_b"))
-      .limit(topN)
-  }
+      maxMiddleDegree: Int = 1000): DataFrame =
+    wedgeLinksOf(edges, topN, maxMiddleDegree, "jac_scaled")(
+      (wedges, _) => pairCounts(wedges, "cn"),
+      (pairs, deg) => withDegrees(pairs, deg)
+        .select(col("part_a"), col("part_b"), col("cn"),
+          (col("da") + col("db") - col("cn")).as("un"))
+        .select(col("part_a"), col("part_b"), col("cn"), col("un"),
+          expr("cn * CAST(1000000000000 AS BIGINT) div un")
+            .as("jac_scaled"),
+          (col("cn").cast("double") / col("un").cast("double"))
+            .as("jaccard")))
 
   /** Adamic–Adar link prediction over an undirected (u, v) edge frame —
     * [[resourceAllocationOf]]'s log-damped sibling (the classic index:
@@ -1410,30 +1418,14 @@ object Analytics {
     * < 1/ln(cap) per pair — damped, but the row blowup is what kills).
     */
   private[graft] def adamicAdarOf(edges: DataFrame, topN: Int,
-      maxMiddleDegree: Int = 1000): DataFrame = {
-    val sym = symmetrize(edges, "u", "v", "a", "x")
-    val deg = sym.groupBy(col("a").as("dn")).agg(count(lit(1)).as("dg"))
-    val hotMid = deg.where(col("dg") > maxMiddleDegree)
-      .select(col("dn").as("x"))
-    val wedgeIn = sym.join(broadcast(hotMid), Seq("x"), "left_anti")
-    val cn = wedgeIn.as("l")
-      .join(wedgeIn.as("r"),
-        col("l.x") === col("r.x") && col("l.a") < col("r.a"))
-      .select(col("l.a").as("part_a"), col("r.a").as("part_b"),
-        col("l.x").as("w"))
-    val sc = cn.join(broadcast(deg), col("w") === col("dn"))
-      .groupBy("part_a", "part_b")
-      .agg(sum(expr(
-        "CAST(1000000000000 AS BIGINT) div " +
-          "CAST(floor(ln(CAST(dg AS DOUBLE)) * 1000000) AS BIGINT)"))
-        .as("aa_scaled"))
-    sc.join(edges.select(col("u").as("part_a"), col("v").as("part_b")),
-        Seq("part_a", "part_b"), "left_anti")
-      .select(col("part_a"), col("part_b"), col("aa_scaled"),
-        (col("aa_scaled").cast("double") / 1000000.0).as("aa_score"))
-      .orderBy(col("aa_scaled").desc, col("part_a"), col("part_b"))
-      .limit(topN)
-  }
+      maxMiddleDegree: Int = 1000): DataFrame =
+    wedgeLinksOf(edges, topN, maxMiddleDegree, "aa_scaled")(
+      middleWeights(_, _, "CAST(1000000000000 AS BIGINT) div " +
+        "CAST(floor(ln(CAST(dg AS DOUBLE)) * 1000000) AS BIGINT)",
+        "aa_scaled"),
+      (pairs, _) => pairs.select(col("part_a"), col("part_b"),
+        col("aa_scaled"),
+        (col("aa_scaled").cast("double") / 1000000.0).as("aa_score")))
 
   /** Single-source BFS hop counts (re-exported as
     * `graft.api.Graft.shortestHops`): `edges0` is an undirected (u, v)

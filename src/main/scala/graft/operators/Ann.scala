@@ -695,17 +695,6 @@ object Ann {
       readLayer(s, graphDir).where(col("cell").isin(cells: _*)),
       probe, k, ef)
 
-  /** Frame-parametric beam search over per-cell neighbor graphs (the
-    * `Graft.cellGraphTopK` facade surface): `graph` carries
-    * (vec_id, embedding, neighbors, cell) rows — [[buildCellGraphs]]
-    * output, already cell-filtered by the caller's routing. ONE task per
-    * cell walks its graph: best-first beam of width `ef` from a
-    * deterministic entry (min vec_id); neighbors of the current best
-    * expand until no frontier node can improve the beam. Emits each
-    * searched cell's top-`k` (vec_id, score) plus the visited count —
-    * the scan-fraction evidence the specs gate on. Per-cell results are
-    * O(k·cells) rows; the global top-k is a TakeOrdered over them.
-    */
   /** The in-task beam kernel shared by the single- and multi-probe graph
     * searches: best-first beam of width `ef` from the deterministic
     * min-vec_id entry over one cell's adjacency map. Returns the top-k
@@ -743,6 +732,17 @@ object Ann {
         .map { case (score, id) => (id, score, nVisited) }.iterator
     }
 
+  /** Frame-parametric beam search over per-cell neighbor graphs (the
+    * `Graft.cellGraphTopK` facade surface): `graph` carries
+    * (vec_id, embedding, neighbors, cell) rows — [[buildCellGraphs]]
+    * output, already cell-filtered by the caller's routing. ONE task per
+    * cell walks its graph: best-first beam of width `ef` from a
+    * deterministic entry (min vec_id); neighbors of the current best
+    * expand until no frontier node can improve the beam. Emits each
+    * searched cell's top-`k` (vec_id, score) plus the visited count —
+    * the scan-fraction evidence the specs gate on. Per-cell results are
+    * O(k·cells) rows; the global top-k is a TakeOrdered over them.
+    */
   private[graft] def graphSearchOf(graph: org.apache.spark.sql.DataFrame,
       probe: Array[Float], k: Int, ef: Int): org.apache.spark.sql.DataFrame = {
     val s = graph.sparkSession
@@ -891,6 +891,20 @@ object Ann {
       .agg(vector_avg(col("embedding")).as("cent"))
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/centroids")
+    writeDerivedLayers(dir, assign, cents, withGraph, withPq)
+  }
+
+  /** Write the DERIVED layers of the index generation at `dir` from its
+    * (vec_id, embedding, cell) assignment and (cell, cent) centroids:
+    * the per-cell graph when `withGraph` and the PQ codes and codebook
+    * when `withPq`. Shared by [[writeIndexLayers]] and [[ivfCompact]]'s
+    * per-cell rewrite, so a compacted index carries the same layers as
+    * a built one. `cents` is read only for the PQ layer.
+    */
+  private def writeDerivedLayers(dir: String,
+      assign: org.apache.spark.sql.DataFrame,
+      cents: => org.apache.spark.sql.DataFrame,
+      withGraph: Boolean, withPq: Boolean): Unit = {
     // per-cell neighbor graph (degree 12): the graph-ANN search
     // structure, partition-aligned with the cells (ann_ivf_graph_topk).
     // The assignment is closure-stitched first (stitchAssignment):
@@ -921,7 +935,7 @@ object Ann {
           pq_argmin(col("sv"), col("sub"), cbLit(cb)).as("code"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/pq_codes")
-      cbFrame(s, cb).coalesce(1).write.mode("overwrite")
+      cbFrame(assign.sparkSession, cb).coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/pq_codebook")
     }
   }
@@ -1084,25 +1098,8 @@ object Ann {
       }
       linkLayer(java.nio.file.Paths.get(root, "centroids"),
         java.nio.file.Paths.get(next, "centroids"))
-      if (withGraph)
-        buildCellGraphs(stitchAssignment(live), m = 12)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$next/graph")
-      if (withPq) {
-        val cents = flatLayer(s, dir, next, "centroids")
-        val res = live.join(broadcast(cents), "cell")
-          .select(col("vec_id").as("id"), col("cell"),
-            expr("zip_with(embedding, cent, (x, y) -> x - y)").as("res"))
-        val cb = pqCodebooks(res.select(col("id"), col("res")),
-          "id", "res", 8, 16, 3)
-        subVectors(res, "id", "res", 8, carry = Seq("cell"))
-          .select(col("id"), col("cell"), col("sub"),
-            pq_argmin(col("sv"), col("sub"), cbLit(cb)).as("code"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$next/pq_codes")
-        cbFrame(s, cb).coalesce(1).write.mode("overwrite")
-          .parquet(s"$next/pq_codebook")
-      }
+      writeDerivedLayers(next, live, flatLayer(s, dir, next, "centroids"),
+        withGraph, withPq)
     }
     Pin.release(live)
     if (publish) Streams.publishGeneration(dir, next)
@@ -1361,7 +1358,7 @@ object Ann {
     * broadcast LUTs → one (probe, id) combiner shuffle → per-probe
     * top-k) is unchanged.
     */
-  private def adcScoreResidual(codes: org.apache.spark.sql.DataFrame,
+  private[graft] def adcScoreResidual(codes: org.apache.spark.sql.DataFrame,
       cbDf: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame, m: Int, k: Int)

@@ -282,18 +282,6 @@ object Stats {
         / sqrt(sigma2)).as("z_stat"))
   }
 
-  /** Spearman rank correlation over a BOUNDED joint value domain: rho =
-    * Pearson on tie-averaged ranks, with the ranks derived from the
-    * (x, y) cell-count frame — the same ECDF trick as [[mannWhitney]].
-    * Doubled average ranks (2·avgrank = 2·cumBefore + t + 1) stay exact
-    * integers; Pearson is invariant to the common ×2 scale. Every
-    * moment accumulates in DECIMAL(38,0) — cnt·rx·ry reaches ~4n³,
-    * far past int64 at 100 TB row counts, and DuckDB's HUGEINT sum is
-    * the exact twin — then rho is ONE double expression from the six
-    * exact accumulators, identically associated on both engines. The
-    * rank windows touch |distinct x| + |distinct y| rows, never the
-    * fact table.
-    */
   /** Deterministic Poisson BOOTSTRAP confidence interval for the mean of
     * `valueExpr` per `groupCol` (re-exported as
     * `graft.api.Graft.bootstrapCi`): `replicas` resamples, each
@@ -345,6 +333,18 @@ object Stats {
       .orderBy("grp")
   }
 
+  /** Spearman rank correlation over a BOUNDED joint value domain: rho =
+    * Pearson on tie-averaged ranks, with the ranks derived from the
+    * (x, y) cell-count frame — the same ECDF trick as [[mannWhitney]].
+    * Doubled average ranks (2·avgrank = 2·cumBefore + t + 1) stay exact
+    * integers; Pearson is invariant to the common ×2 scale. Every
+    * moment accumulates in DECIMAL(38,0) — cnt·rx·ry reaches ~4n³,
+    * far past int64 at 100 TB row counts, and DuckDB's HUGEINT sum is
+    * the exact twin — then rho is ONE double expression from the six
+    * exact accumulators, identically associated on both engines. The
+    * rank windows touch |distinct x| + |distinct y| rows, never the
+    * fact table.
+    */
   private[graft] def spearman(df: DataFrame, xc: String, yc: String)
       : DataFrame = {
     val cells = df.groupBy(col(xc).as("x"), col(yc).as("y"))

@@ -262,6 +262,36 @@ object Streaming {
     }
   }
 
+  /** One side of the watermarked `[0, +5 min]` band join on `user_id`
+    * that the `stream_stream_*` queries and `ScalingBench`'s state axis
+    * run: the events stream cut to `user_id < bound` (the state bound,
+    * which the oracles carry too), watermarked 10 minutes, optionally
+    * cut to `ts <= maxTs − 20 min` (the rows an outer join has decided
+    * by end of stream, see `stream_stream_left_outer`), as columns
+    * `eid_<side>`, `uid_<side>` and `ts_<side>`.
+    */
+  private[graft] def bandSide(s: SparkSession, d: String, side: String,
+      bound: Int = 100, maxTs: Option[java.sql.Timestamp] = None)
+      : DataFrame = {
+    val wm = Streams.eventsStream(s, d).where(col("user_id") < bound)
+      .withWatermark("ts", "10 minutes")
+    maxTs.fold(wm)(m =>
+        wm.where(col("ts") <= lit(m) - expr("INTERVAL 20 MINUTES")))
+      .select(col("event_id").as(s"eid_$side"),
+        col("user_id").as(s"uid_$side"), col("ts").as(s"ts_$side"))
+  }
+
+  /** The band join of an `_a` and a `_b` side ([[bandSide]]'s columns):
+    * same user, distinct events, `ts_b` within `[ts_a, ts_a + 5 min]`.
+    */
+  private[graft] def bandJoin(l: DataFrame, r: DataFrame,
+      joinType: String = "inner"): DataFrame =
+    l.join(r,
+      col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
+        col("ts_b") >= col("ts_a") &&
+        col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
+      joinType)
+
   @annotation.nowarn("cat=deprecation")
   private def onceTrigger = org.apache.spark.sql.streaming.Trigger.Once()
 
@@ -785,18 +815,7 @@ object Streaming {
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 5 MINUTE
         |WHERE a.user_id < 100 AND b.user_id < 100
         |ORDER BY eid_a, eid_b""".stripMargin) { (s, d) =>
-      val l = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
-          col("ts").as("ts_a"))
-      val r = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
-          col("ts").as("ts_b"))
-      val j = l.join(r,
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"))
+      val j = bandJoin(bandSide(s, d, "a"), bandSide(s, d, "b"))
         .select("eid_a", "eid_b")
       Streams.runToTable(j, "append", statePartitions = 4)
         .orderBy("eid_a", "eid_b")
@@ -822,21 +841,10 @@ object Streaming {
         |  ON a.user_id = b.user_id AND a.event_id <> b.event_id
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 5 MINUTE
         |ORDER BY eid_a, eid_b NULLS FIRST""".stripMargin) { (s, d) =>
-      val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-      val l = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .where(col("ts") <= lit(maxTs) - expr("INTERVAL 20 MINUTES"))
-        .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
-          col("ts").as("ts_a"))
-      val r = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
-          col("ts").as("ts_b"))
-      val j = l.join(r,
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-        "left_outer")
+      val maxTs = Some(
+        Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0))
+      val j = bandJoin(bandSide(s, d, "a", maxTs = maxTs),
+          bandSide(s, d, "b"), "left_outer")
         .select("eid_a", "eid_b")
       Streams.runToTable(j, "append", statePartitions = 4)
         .orderBy(col("eid_a"), col("eid_b").asc_nulls_first)
@@ -860,19 +868,10 @@ object Streaming {
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 5 MINUTE
         |ORDER BY eid_a NULLS FIRST, eid_b NULLS FIRST""".stripMargin) {
       (s, d) =>
-      val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-      def side(eid: String, uid: String, ts: String) =
-        Streams.eventsStream(s, d).where(col("user_id") < 100)
-          .withWatermark("ts", "10 minutes")
-          .where(col("ts") <= lit(maxTs) - expr("INTERVAL 20 MINUTES"))
-          .select(col("event_id").as(eid), col("user_id").as(uid),
-            col("ts").as(ts))
-      val j = side("eid_a", "uid_a", "ts_a").join(
-        side("eid_b", "uid_b", "ts_b"),
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-        "full_outer")
+      val maxTs = Some(
+        Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0))
+      val j = bandJoin(bandSide(s, d, "a", maxTs = maxTs),
+          bandSide(s, d, "b", maxTs = maxTs), "full_outer")
         .select("eid_a", "eid_b")
       Streams.runToTable(j, "append", statePartitions = 4)
         .orderBy(col("eid_a").asc_nulls_first, col("eid_b").asc_nulls_first)
@@ -892,19 +891,10 @@ object Streaming {
     // twin); StreamingSpec gates non-zero metrics for this exact job.
     Q.noOracle("stream_state_metrics") { (s, d) =>
       import s.implicits._
-      val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-      def side(eid: String, uid: String, ts: String) =
-        Streams.eventsStream(s, d).where(col("user_id") < 100)
-          .withWatermark("ts", "10 minutes")
-          .where(col("ts") <= lit(maxTs) - expr("INTERVAL 20 MINUTES"))
-          .select(col("event_id").as(eid), col("user_id").as(uid),
-            col("ts").as(ts))
-      val j = side("eid_a", "uid_a", "ts_a").join(
-        side("eid_b", "uid_b", "ts_b"),
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-        "full_outer")
+      val maxTs = Some(
+        Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0))
+      val j = bandJoin(bandSide(s, d, "a", maxTs = maxTs),
+          bandSide(s, d, "b", maxTs = maxTs), "full_outer")
         .select("eid_a", "eid_b")
       // the rows are not the output; the batches run for their state
       val progress = Streams.withStatePartitions(s, 4) {
@@ -947,19 +937,7 @@ object Streaming {
         |    AND b.event_id <> a.event_id
         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 5 MINUTE)
         |ORDER BY eid_a""".stripMargin) { (s, d) =>
-      val l = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_a"), col("user_id").as("uid_a"),
-          col("ts").as("ts_a"))
-      val r = Streams.eventsStream(s, d).where(col("user_id") < 100)
-        .withWatermark("ts", "10 minutes")
-        .select(col("event_id").as("eid_b"), col("user_id").as("uid_b"),
-          col("ts").as("ts_b"))
-      val j = l.join(r,
-        col("uid_a") === col("uid_b") && col("eid_a") =!= col("eid_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-        "left_semi")
+      val j = bandJoin(bandSide(s, d, "a"), bandSide(s, d, "b"), "left_semi")
         .select("eid_a")
       Streams.runToTable(j, "append", statePartitions = 4)
         .orderBy("eid_a")

@@ -112,6 +112,18 @@ class HarnessSpec extends SparkSuite {
     codeLines(mainRoot).collect {
       case (f, l) if l.contains(needle) => s"$f: $l" }
 
+  test("the stream band join and the link-prediction hot-middle cap are " +
+      "each written once, in their builder") {
+    assert(linesWith("expr(\"INTERVAL 5 MINUTES\")") == Seq(
+      "src/main/scala/graft/operators/Streaming.scala: " +
+        "col(\"ts_b\") <= col(\"ts_a\") + expr(\"INTERVAL 5 MINUTES\"),"),
+      linesWith("expr(\"INTERVAL 5 MINUTES\")").mkString("\n"))
+    assert(linesWith("> maxMiddleDegree") == Seq(
+      "src/main/scala/graft/operators/Analytics.scala: " +
+        "val hotMid = deg.where(col(\"dg\") > maxMiddleDegree)"),
+      linesWith("> maxMiddleDegree").mkString("\n"))
+  }
+
   test("every run-to-completion stream goes through Streams.drain, and no " +
       "memory sink holds results on the driver") {
     val memory = linesWith("format(\"memory\")")

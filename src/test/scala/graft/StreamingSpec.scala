@@ -286,16 +286,14 @@ class StreamingSpec extends SparkSuite {
     implicit val sq: SQLContext = spark.sqlContext
     val lm = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val rm = MemoryStream[(java.sql.Timestamp, Long, Long)]
-    val l = lm.toDF().toDF("ts_a", "uid_a", "id_a")
+    // the shipped band join's sides: event ids are distinct across the
+    // two streams, so its eid_a <> eid_b term never drops a pair here
+    val l = lm.toDF().toDF("ts_a", "uid_a", "eid_a")
       .withWatermark("ts_a", "10 minutes")
-    val r = rm.toDF().toDF("ts_b", "uid_b", "id_b")
+    val r = rm.toDF().toDF("ts_b", "uid_b", "eid_b")
       .withWatermark("ts_b", "10 minutes")
-    val j = l.join(r,
-      col("uid_a") === col("uid_b") &&
-        col("ts_b") >= col("ts_a") &&
-        col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-      "left_outer")
-      .select(col("id_a"), col("id_b"))
+    val j = operators.Streaming.bandJoin(l, r, "left_outer")
+      .select(col("eid_a"), col("eid_b"))
     val q = j.writeStream.format("memory").queryName("ssloj")
       .outputMode("append").start()
     def emitted(): Set[(Long, Long)] =
@@ -351,16 +349,14 @@ class StreamingSpec extends SparkSuite {
     implicit val sq: SQLContext = spark.sqlContext
     val lm = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val rm = MemoryStream[(java.sql.Timestamp, Long, Long)]
-    val l = lm.toDF().toDF("ts_a", "uid_a", "id_a")
+    // the shipped band join's sides: event ids are distinct across the
+    // two streams, so its eid_a <> eid_b term never drops a pair here
+    val l = lm.toDF().toDF("ts_a", "uid_a", "eid_a")
       .withWatermark("ts_a", "10 minutes")
-    val r = rm.toDF().toDF("ts_b", "uid_b", "id_b")
+    val r = rm.toDF().toDF("ts_b", "uid_b", "eid_b")
       .withWatermark("ts_b", "10 minutes")
-    val j = l.join(r,
-      col("uid_a") === col("uid_b") &&
-        col("ts_b") >= col("ts_a") &&
-        col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"),
-      "left_semi")
-      .select(col("id_a"))
+    val j = operators.Streaming.bandJoin(l, r, "left_semi")
+      .select(col("eid_a"))
     val q = j.writeStream.format("memory").queryName("sslsj")
       .outputMode("append").start()
     def emitted(): Seq[Long] =
