@@ -885,11 +885,11 @@ object Ann {
     // the rows must be materialized before the first write
     val assign = Pin.now(assignIn
       .withColumn("cell", col("cell").cast("string"))) // stable partition-column type
-    assign.write.mode("overwrite").partitionBy("cell")
+    Streams.storeWriter(assign).mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/cells")
     val cents = assign.groupBy("cell")
       .agg(vector_avg(col("embedding")).as("cent"))
-    cents.coalesce(1).write.mode("overwrite")
+    Streams.storeWriter(cents.coalesce(1)).mode("overwrite")
       .parquet(s"$dir/centroids")
     writeDerivedLayers(dir, assign, cents, withGraph, withPq)
   }
@@ -912,8 +912,8 @@ object Ann {
     // search can escape a mis-routed cell — the graph table alone
     // carries the replicas; cells/ and pq_codes/ stay pure.
     if (withGraph)
-      buildCellGraphs(stitchAssignment(assign), m = 12)
-        .write.mode("overwrite").partitionBy("cell")
+      Streams.storeWriter(buildCellGraphs(stitchAssignment(assign), m = 12))
+        .mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/graph")
     // PQ layer (ann_ivfpq_topk): codebooks trained once at index
     // build, the store encoded to m one-byte codes per vector and
@@ -930,13 +930,13 @@ object Ann {
           expr("zip_with(embedding, cent, (x, y) -> x - y)").as("res"))
       val cb = pqCodebooks(res.select(col("id"), col("res")),
         "id", "res", 8, 16, 3)
-      subVectors(res, "id", "res", 8, carry = Seq("cell"))
+      Streams.storeWriter(subVectors(res, "id", "res", 8, carry = Seq("cell"))
         .select(col("id"), col("cell"), col("sub"),
-          pq_argmin(col("sv"), col("sub"), cbLit(cb)).as("code"))
-        .write.mode("overwrite").partitionBy("cell")
+          pq_argmin(col("sv"), col("sub"), cbLit(cb)).as("code")))
+        .mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/pq_codes")
-      cbFrame(assign.sparkSession, cb).coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/pq_codebook")
+      Streams.storeWriter(cbFrame(assign.sparkSession, cb).coalesce(1))
+        .mode("overwrite").parquet(s"$dir/pq_codebook")
     }
   }
 
@@ -953,10 +953,10 @@ object Ann {
   private[graft] def ivfDelete(s: org.apache.spark.sql.SparkSession,
       dir: String, deleteIds: org.apache.spark.sql.DataFrame): Unit = {
     val root = Streams.storeDataDir(dir)
-    readLayer(s, s"$root/cells")
+    Streams.storeWriter(readLayer(s, s"$root/cells")
       .join(deleteIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("cell"))
-      .write.mode("append").partitionBy("cell")
+      .select(col("vec_id"), col("cell")))
+      .mode("append").partitionBy("cell")
       .parquet(s"$root/tombstones")
   }
 
@@ -973,9 +973,9 @@ object Ann {
   private[graft] def ivfIngest(s: org.apache.spark.sql.SparkSession,
       dir: String, vecs: org.apache.spark.sql.DataFrame): Unit = {
     val root = Streams.storeDataDir(dir)
-    assignToCentroids(vecs.select("vec_id", "embedding"),
-        flatLayer(s, dir, root, "centroids"))
-      .write.mode("append").partitionBy("cell")
+    Streams.storeWriter(assignToCentroids(vecs.select("vec_id", "embedding"),
+        flatLayer(s, dir, root, "centroids")))
+      .mode("append").partitionBy("cell")
       .parquet(s"$root/cells")
   }
 
@@ -1089,8 +1089,8 @@ object Ann {
       // untouched cell's files across (never opened); centroids are NOT
       // retrained below the threshold — carried verbatim
       val affected = census.filter(_._3 > 0).map(_._1)
-      live.where(col("cell").isin(affected: _*))
-        .write.mode("overwrite").partitionBy("cell")
+      Streams.storeWriter(live.where(col("cell").isin(affected: _*)))
+        .mode("overwrite").partitionBy("cell")
         .parquet(s"$next/cells")
       census.map(_._1).filterNot(affected.contains).foreach { c =>
         linkLayer(java.nio.file.Paths.get(root, "cells", s"cell=$c"),

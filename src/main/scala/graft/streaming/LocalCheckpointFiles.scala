@@ -11,24 +11,27 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   *
   * Without the native `libhadoop`, Hadoop forks a shell command for every
   * local permission change (`chmod`) and every link-status check
-  * (`readlink`), at 3–4 ms a fork. Spark's default manager renames through
-  * `FileContext`, which checks link status on every rename, and its
-  * `FileSystem` creates set permissions on every new file and directory.
-  * Here, on a local (`file:`) checkpoint, `mkdirs`,
-  * `createCheckpointDirectory`, `createTempFile` and the rename that
+  * (`readlink`), at 3–4 ms a fork. Spark's default manager renames
+  * through `FileContext`, which checks link status on every rename. Here,
+  * on a local (`file:`) checkpoint, `createTempFile` and the rename that
   * publishes a temp file are `java.nio` calls, which leave modes to the
-  * process umask as Hadoop's defaults do. Open, list, exists and delete
-  * stay Spark's `FileSystem` code, which forks nothing on a local disk.
-  * Any other scheme behaves exactly as Spark's `FileSystem`-based manager.
+  * process umask as Hadoop's defaults do. Directories, open, list, exists
+  * and delete stay Spark's `FileSystem` code; inside a stream
+  * [[LocalFiles]] serves `file:`, so a new directory's mode is set
+  * without a fork as well. Any other scheme behaves exactly as Spark's
+  * `FileSystem`-based manager.
   *
-  * The rename is `java.nio` for correctness as well: where Hive's
-  * `ProxyLocalFileSystem` serves `file:` (Spark's distribution registers
-  * it), `FileSystem.rename` will not replace an existing file and returns
-  * false, which Spark's `FileSystem`-based manager reads as success when
-  * it may overwrite, so the new content would be lost. Here a publish
-  * that may overwrite replaces the file atomically, and one that may not
-  * throws `FileAlreadyExistsException` when the file exists, as Spark's
-  * does.
+  * In a stream the manager's filesystem is [[LocalFiles]], whose rename
+  * replaces an existing file as well. The rename stays `java.nio` so that
+  * the publish does not depend on which class serves `file:`: on a
+  * session without [[LocalFiles.confs]] (a test that builds the manager
+  * on the caller's session), Hive's `ProxyLocalFileSystem` serves it
+  * (Spark's distribution registers it), and its `FileSystem.rename` will
+  * not replace an existing file and returns false, which Spark's
+  * `FileSystem`-based manager reads as success when it may overwrite, so
+  * the new content would be lost. Here a publish that may overwrite
+  * replaces the file atomically, and one that may not throws
+  * `FileAlreadyExistsException` when the file exists, as Spark's does.
   *
   * The trade: a file written here carries no `.crc` sidecar, so a torn
   * checkpoint file is caught by its parser rather than by a checksum.
@@ -43,16 +46,6 @@ class LocalCheckpointFiles(path: Path, hadoopConf: Configuration)
   /** `p` on the local disk (only meaningful when [[isLocal]]). */
   private def nio(p: Path): java.nio.file.Path =
     Paths.get(fs.makeQualified(p).toUri)
-
-  override def mkdirs(p: Path): Unit =
-    if (isLocal) Files.createDirectories(nio(p)) else super.mkdirs(p)
-
-  override def createCheckpointDirectory(): Path =
-    if (!isLocal) super.createCheckpointDirectory()
-    else {
-      Files.createDirectories(nio(path))
-      fs.makeQualified(path)
-    }
 
   override def createTempFile(p: Path): FSDataOutputStream =
     if (!isLocal) super.createTempFile(p)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.Tables
 import graft.functions._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset,
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
@@ -146,17 +147,19 @@ object Streams {
     * The clone's conf also names [[LocalCheckpointFiles]] as the
     * checkpoint file manager, so the stream's offset, commit and source
     * logs and its state-store files are written without forking a
-    * process per file on a local disk. A file source builds its log on
-    * the caller's session when the stream thread initializes the query,
-    * after `start()` returns, so both confs stay set until the query has
-    * initialized its sources.
+    * process per file on a local disk, and serves `file:` with
+    * [[LocalFiles]], so what its batches write (a store append, a run's
+    * output, an answer sink) sets file modes without forking either. A
+    * file source builds its log on the caller's session when the stream
+    * thread initializes the query, after `start()` returns, so the confs
+    * stay set until the query has initialized its sources.
     */
   private[graft] def start(df: DataFrame)(
       writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
-    graft.Harness.withConfs(df.sparkSession,
+    graft.Harness.withConfs(df.sparkSession, Seq(
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.checkpointFileManagerClass" ->
-        classOf[LocalCheckpointFiles].getName) {
+        classOf[LocalCheckpointFiles].getName) ++ LocalFiles.confs: _*) {
       val q = writer(df.writeStream).start()
       q match {
         case w: StreamingQueryWrapper =>
@@ -272,6 +275,15 @@ object Streams {
     }
   }
 
+  /** `df.write` with [[LocalFiles]] serving `file:` for that write alone
+    * (a write's options join its Hadoop conf): the one writer of a store
+    * generation outside a stream, so a local store write forks no `chmod`
+    * per directory and file. No session conf changes, so a store write
+    * inside a batch leaves the caller's session as it is.
+    */
+  private[graft] def storeWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(LocalFiles.confs.toMap)
+
   /** Read the store's live generation (resolved at plan time — a reader
     * holds one consistent generation for its whole lifetime).
     *
@@ -380,8 +392,8 @@ object Streams {
       math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val nextDir = nextGeneration(storeDir)
     // the merged schema: a mixed-footer generation keeps every column
-    storeRead(s, storeDir).repartition(nFiles)
-      .write.mode("overwrite").parquet(nextDir)
+    storeWriter(storeRead(s, storeDir).repartition(nFiles))
+      .mode("overwrite").parquet(nextDir)
     publishGeneration(storeDir, nextDir)
     nFiles
   }
@@ -430,7 +442,7 @@ object Streams {
         Some(storeRead(s, storeDir))
       else None
     val nextDir = nextGeneration(storeDir)
-    next(cur).write.mode("overwrite").parquet(nextDir)
+    storeWriter(next(cur)).mode("overwrite").parquet(nextDir)
     batchId.foreach(id => java.nio.file.Files.write(
       java.nio.file.Paths.get(nextDir, "_COMMIT_BATCHID"),
       id.toString.getBytes(Utf8)))

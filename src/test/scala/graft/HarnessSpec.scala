@@ -158,6 +158,22 @@ class HarnessSpec extends SparkSuite {
         linesWith(conf).mkString("\n"))
   }
 
+  test("the local filesystem is named in one conf pair, applied only by " +
+      "Streams.start and the store writer") {
+    assert(linesWith("fs.file.impl") == Seq(
+      "src/main/scala/graft/streaming/LocalFiles.scala: " +
+        "\"fs.file.impl\" -> classOf[LocalFiles].getName,",
+      "src/main/scala/graft/streaming/LocalFiles.scala: " +
+        "\"fs.file.impl.disable.cache\" -> \"true\")"),
+      linesWith("fs.file.impl").mkString("\n"))
+    assert(linesWith("LocalFiles.confs") == Seq(
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "classOf[LocalCheckpointFiles].getName) ++ LocalFiles.confs: _*) {",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "df.write.options(LocalFiles.confs.toMap)"),
+      linesWith("LocalFiles.confs").mkString("\n"))
+  }
+
   test("query scratch lives under the one scratch root; only the memoized " +
       "cross-query layouts make their own temp directories") {
     val dirs = linesWith("createTempDirectory")

@@ -1029,6 +1029,96 @@ class StreamingSpec extends SparkSuite {
       assert(read(local, file) == "local")
     } finally streaming.Streams.deleteTree(root)
   }
+
+  test("an ingest and a compaction fork no process on the store") {
+    import spark.implicits._
+    val root = java.nio.file.Paths.get(streaming.Streams.scratchDir("storeforks_"))
+    val store = root.resolve("store").toString
+    try {
+      Seq("The capital of France is Paris.", "Spark plans with Catalyst.",
+        "Flink streams with low latency.").toDF("line").coalesce(1)
+        .write.parquet(s"$root/src")
+      // without the native libhadoop, Hadoop's local filesystem forks a
+      // chmod per directory and file the output committer makes here
+      def onStore(forks: Seq[String]): Seq[String] = forks.filter(_.contains(store))
+      def tally(forks: Seq[String]): String = s"${forks.size} processes: " +
+        forks.groupBy(_.split(" ").head).map { case (c, n) =>
+          s"$c x${n.size}" }.mkString(", ")
+      val (_, ingest) = Profile.processStarts(streaming.Streams.ingest(
+        streaming.Streams.fileLines(spark, s"$root/src"), store))
+      assert(onStore(ingest).isEmpty, "ingest: " + tally(onStore(ingest)))
+      val (files, compact) =
+        Profile.processStarts(streaming.Streams.compactStore(spark, store))
+      assert(files == 1)
+      assert(onStore(compact).isEmpty, "compaction: " + tally(onStore(compact)))
+      assert(streaming.Streams.storeRead(spark, store).count() == 3)
+    } finally streaming.Streams.deleteTree(root)
+  }
+
+  /** The POSIX mode of every entry under `root`, by its path relative to
+    * `root` with the per-job ids in file names masked.
+    */
+  private def modes(root: java.nio.file.Path): Seq[(String, Int)] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.toSeq).map { p =>
+      root.relativize(p).toString
+        .replaceAll("part-\\d+-[0-9a-f-]+", "part") ->
+        (java.nio.file.Files.getAttribute(p, "unix:mode")
+          .asInstanceOf[Int] & 0xfff)
+    }.sorted
+  }
+
+  test("LocalFiles writes the modes Spark's default file: filesystem " +
+      "writes, under the default umask and under 077") {
+    import spark.implicits._
+    val root = java.nio.file.Paths.get(streaming.Streams.scratchDir("modes_"))
+    val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("id", "cell").coalesce(1)
+    try {
+      for ((umask, i) <- Seq(None, Some("077")).zipWithIndex) {
+        val confs = umask.map("fs.permissions.umask-mode" -> _).toSeq
+        // a fresh instance of the default class: a cached one keeps the
+        // umask of the conf it was first made with
+        val (_, viaDefault) = Profile.processStarts(Harness.withConfs(spark,
+          confs :+ ("fs.file.impl.disable.cache" -> "true"): _*)(
+          df.write.partitionBy("cell")
+            .parquet(root.resolve(s"default$i").toString)))
+        val (_, viaNio) = Profile.processStarts(Harness.withConfs(spark,
+          confs: _*)(streaming.Streams.storeWriter(df).partitionBy("cell")
+            .parquet(root.resolve(s"nio$i").toString)))
+        val (expected, got) = (modes(root.resolve(s"default$i")),
+          modes(root.resolve(s"nio$i")))
+        assert(expected.map(_._1).exists(_.endsWith(".crc")) &&
+          expected.map(_._1).contains("cell=a"), expected)
+        assert(got == expected, umask)
+        // the default filesystem forked its chmods; the store writer's
+        // LocalFiles served the second write and forked none
+        assert(viaDefault.exists(_.contains(s"default$i")), umask)
+        assert(!viaNio.exists(_.contains(s"nio$i")), viaNio)
+        if (umask.nonEmpty)
+          assert(got.forall { case (_, m) => (m & 0x3f) == 0 }, got) // 077
+      }
+    } finally streaming.Streams.deleteTree(root)
+  }
+
+  test("LocalFiles sets a sticky bit it is asked for") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val root = java.nio.file.Paths.get(streaming.Streams.scratchDir("sticky_"))
+    val fs = new streaming.LocalFiles
+    try {
+      fs.initialize(java.net.URI.create("file:///"),
+        spark.sessionState.newHadoopConf())
+      val dir = new Path(root.resolve("d").toUri)
+      assert(fs.mkdirs(dir))
+      def mode = java.nio.file.Files.getAttribute(root.resolve("d"),
+        "unix:mode").asInstanceOf[Int] & 0xfff
+      fs.setPermission(dir, new FsPermission(Integer.parseInt("1777", 8).toShort))
+      assert(mode == Integer.parseInt("1777", 8), mode.toOctalString)
+      fs.setPermission(dir, new FsPermission(Integer.parseInt("750", 8).toShort))
+      assert(mode == Integer.parseInt("750", 8), mode.toOctalString)
+    } finally streaming.Streams.deleteTree(root)
+  }
 }
 
 object StreamingSpec {
