@@ -114,7 +114,9 @@ object Profile {
       rec.start()
       val out = try body finally rec.stop()
       rec.dump(file)
+      // the dump holds the events of every recording active in the JVM
       (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(_.getString("command")).toSeq)
     } finally {
       rec.close()

@@ -276,6 +276,15 @@ object Tables {
       path: String): DataFrame =
     read(spark, path, resolve(spark, root, path, mergeAll = true))
 
+  /** `spark.read.parquet(path)` with the schema it would infer, resolved
+    * from the footers (see [[resolve]]) instead of by a Spark job: the
+    * read-back of files the engine has just written. A partitioned
+    * directory still discovers its partition columns.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    read(spark, path, resolve(spark, path, path,
+      mergeAll = spark.sessionState.conf.isParquetSchemaMergingEnabled))
+
   /** The one read path for a base table.
     *
     * The schema comes from [[resolve]], so no read runs a Spark job, cold

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Pin, Q, Tables}
+import graft.streaming.Streams
 import graft.functions.{topKRows, word_ngrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -220,24 +221,18 @@ object Analytics {
   // ScaleOps.partitionedEvents: storage preparation, not per-query cost)
   // ---------------------------------------------------------------------
 
-  private val zoneDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** events re-written range-partitioned + sorted by `value` into 8 files
     * — the clustered layout that gives per-file min/max statistics their
     * pruning power (random layout ⇒ every file covers the full range ⇒
     * zonemaps prune nothing).
     */
   private[graft] def zonemapLayout(s: SparkSession, d: String): String =
-    zoneDirs.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_zonemap_")
-        .toString
-      Tables.events(s, d)
-        .repartitionByRange(8, col("value"))
-        .sortWithinPartitions("value")
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    Streams.layoutDir("zonemap", d) { dir =>
+      Streams.fileWriter(Tables.events(s, d)
+          .repartitionByRange(8, col("value"))
+          .sortWithinPartitions("value"))
+        .mode("overwrite").parquet(dir)
+    }
 
   /** The file paths whose [min(value), max(value)] zone intersects
     * [lo, hi]. The zonemap itself is O(files) metadata rows — the same
@@ -274,7 +269,7 @@ object Analytics {
     */
   private[graft] def zonemapZones(s: SparkSession, dir: String,
       valueCol: String): DataFrame =
-    s.read.parquet(dir)
+    Tables.readParquet(s, dir)
       .groupBy(input_file_name().as("f"))
       .agg(min(col(valueCol).cast("double")).as("lo"),
         max(col(valueCol).cast("double")).as("hi"))
@@ -302,7 +297,7 @@ object Analytics {
   private[graft] def zonemapScan(s: SparkSession, dir: String,
       valueCol: String, lo: Double, hi: Double): DataFrame = {
     val keep = zoneKeepSet(zonemapZones(s, dir, valueCol), lo, hi)
-    s.read.parquet(dir)
+    Tables.readParquet(s, dir)
       .withColumn("__file", input_file_name())
       .join(broadcast(keep), col("__file") === col("f"), "left_semi")
       .drop("__file")

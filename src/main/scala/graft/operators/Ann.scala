@@ -595,9 +595,6 @@ object Ann {
     },
   )
 
-  private val indexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** In-JVM cosine for the graph build/search kernels (the codegen'd
     * `cosine_sim` expression serves declarative plans; graph traversal is
     * genuinely imperative per-partition work — mapPartitions territory).
@@ -799,21 +796,15 @@ object Ann {
       .agg(max("score").as("score"))
   }
 
-  /** One-time persisted IVF index (built once per (session, sf), like the
-    * other layout builders): the k-means assignment written as parquet
-    * PARTITIONED BY cell — on a real table this is the cluster/partition
-    * key — plus the per-cell centroid table (k rows) used for probe
-    * routing.
+  /** One-time persisted IVF index (a layout built once per (JVM, sf)):
+    * the k-means assignment written as parquet PARTITIONED BY cell — on a
+    * real table this is the cluster/partition key — plus the per-cell
+    * centroid table (k rows) used for probe routing.
     */
   private[graft] def ivfIndex(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    indexDirs.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx_")
-        .toString
-      writeIndexLayers(s, dir,
-        kmeansCells(Tables.embeddings(s, d), k = 4, iters = 3))
-      dir
-    })
+    Streams.layoutDir("ivf_idx", d)(writeIndexLayers(s, _,
+      kmeansCells(Tables.embeddings(s, d), k = 4, iters = 3)))
 
   /** Read a cell-PARTITIONED index layer with partition-column type
     * inference OFF, so `cell` always comes back as the STRING it was
@@ -822,13 +813,14 @@ object Ann {
     * lifecycle join (cells⋈tombstones, assignment⋈centroids — the
     * centroid table stores cell as a string DATA column) silently leans
     * on int/string comparison coercion. The conf is scoped to the one
-    * eager `load()` and restored immediately.
+    * eager `load()` and restored immediately. The data columns' schema
+    * comes from the footer resolver, so the read runs no inference job.
     */
   private[graft] def readLayer(s: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame =
     withConfs(s,
       "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")(
-      s.read.parquet(path))
+      Tables.readParquet(s, path))
 
   /** A flat layer (`centroids`, `pq_codebook`) of the index at `dir`, read
     * from generation `gen` through the footer resolver, with no inference
@@ -885,11 +877,11 @@ object Ann {
     // the rows must be materialized before the first write
     val assign = Pin.now(assignIn
       .withColumn("cell", col("cell").cast("string"))) // stable partition-column type
-    Streams.storeWriter(assign).mode("overwrite").partitionBy("cell")
+    Streams.fileWriter(assign).mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/cells")
     val cents = assign.groupBy("cell")
       .agg(vector_avg(col("embedding")).as("cent"))
-    Streams.storeWriter(cents.coalesce(1)).mode("overwrite")
+    Streams.fileWriter(cents.coalesce(1)).mode("overwrite")
       .parquet(s"$dir/centroids")
     writeDerivedLayers(dir, assign, cents, withGraph, withPq)
   }
@@ -912,7 +904,7 @@ object Ann {
     // search can escape a mis-routed cell — the graph table alone
     // carries the replicas; cells/ and pq_codes/ stay pure.
     if (withGraph)
-      Streams.storeWriter(buildCellGraphs(stitchAssignment(assign), m = 12))
+      Streams.fileWriter(buildCellGraphs(stitchAssignment(assign), m = 12))
         .mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/graph")
     // PQ layer (ann_ivfpq_topk): codebooks trained once at index
@@ -930,12 +922,12 @@ object Ann {
           expr("zip_with(embedding, cent, (x, y) -> x - y)").as("res"))
       val cb = pqCodebooks(res.select(col("id"), col("res")),
         "id", "res", 8, 16, 3)
-      Streams.storeWriter(subVectors(res, "id", "res", 8, carry = Seq("cell"))
+      Streams.fileWriter(subVectors(res, "id", "res", 8, carry = Seq("cell"))
         .select(col("id"), col("cell"), col("sub"),
           pq_argmin(col("sv"), col("sub"), cbLit(cb)).as("code")))
         .mode("overwrite").partitionBy("cell")
         .parquet(s"$dir/pq_codes")
-      Streams.storeWriter(cbFrame(assign.sparkSession, cb).coalesce(1))
+      Streams.fileWriter(cbFrame(assign.sparkSession, cb).coalesce(1))
         .mode("overwrite").parquet(s"$dir/pq_codebook")
     }
   }
@@ -953,7 +945,7 @@ object Ann {
   private[graft] def ivfDelete(s: org.apache.spark.sql.SparkSession,
       dir: String, deleteIds: org.apache.spark.sql.DataFrame): Unit = {
     val root = Streams.storeDataDir(dir)
-    Streams.storeWriter(readLayer(s, s"$root/cells")
+    Streams.fileWriter(readLayer(s, s"$root/cells")
       .join(deleteIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("cell")))
       .mode("append").partitionBy("cell")
@@ -973,7 +965,7 @@ object Ann {
   private[graft] def ivfIngest(s: org.apache.spark.sql.SparkSession,
       dir: String, vecs: org.apache.spark.sql.DataFrame): Unit = {
     val root = Streams.storeDataDir(dir)
-    Streams.storeWriter(assignToCentroids(vecs.select("vec_id", "embedding"),
+    Streams.fileWriter(assignToCentroids(vecs.select("vec_id", "embedding"),
         flatLayer(s, dir, root, "centroids")))
       .mode("append").partitionBy("cell")
       .parquet(s"$root/cells")
@@ -1089,7 +1081,7 @@ object Ann {
       // untouched cell's files across (never opened); centroids are NOT
       // retrained below the threshold — carried verbatim
       val affected = census.filter(_._3 > 0).map(_._1)
-      Streams.storeWriter(live.where(col("cell").isin(affected: _*)))
+      Streams.fileWriter(live.where(col("cell").isin(affected: _*)))
         .mode("overwrite").partitionBy("cell")
         .parquet(s"$next/cells")
       census.map(_._1).filterNot(affected.contains).foreach { c =>

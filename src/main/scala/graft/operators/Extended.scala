@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** Relational-completeness extensions: subqueries (EXISTS / IN /
@@ -136,8 +137,8 @@ object Extended {
     Q("source_csv_roundtrip",
       """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""") {
       (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("csv_")
-      Tables.region(s, d).write.mode("overwrite")
+      val tmp = Streams.scratchDir("csv_")
+      Streams.fileWriter(Tables.region(s, d)).mode("overwrite")
         .option("header", "true").csv(tmp)
       s.read.option("header", "true")
         .schema("r_regionkey INT, r_name STRING").csv(tmp)
@@ -148,8 +149,8 @@ object Extended {
     Q("source_json_roundtrip",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("json_")
-      Tables.nation(s, d).write.mode("overwrite").json(tmp)
+      val tmp = Streams.scratchDir("json_")
+      Streams.fileWriter(Tables.nation(s, d)).mode("overwrite").json(tmp)
       s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(tmp)
         .select("n_nationkey", "n_name", "n_regionkey")
         .orderBy("n_nationkey")
@@ -161,8 +162,8 @@ object Extended {
     Q("source_orc_roundtrip",
       """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier
         |ORDER BY s_suppkey""".stripMargin) { (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("orc_")
-      Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
+      val tmp = Streams.scratchDir("orc_")
+      Streams.fileWriter(Tables.supplier(s, d)).mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         .orderBy("s_suppkey")
@@ -184,10 +185,10 @@ object Extended {
         |  CAST(max(length(replace(text, chr(10), ' '))) AS BIGINT)
         |    AS max_chars
         |FROM documents WHERE doc_id < 500""".stripMargin) { (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("text_")
-      Tables.documents(s, d).where(col("doc_id") < 500)
-        .select(regexp_replace(col("text"), "\n", " ").as("value"))
-        .write.mode("overwrite").text(tmp)
+      val tmp = Streams.scratchDir("text_")
+      Streams.fileWriter(Tables.documents(s, d).where(col("doc_id") < 500)
+          .select(regexp_replace(col("text"), "\n", " ").as("value")))
+        .mode("overwrite").text(tmp)
       s.read.text(tmp)
         .select(length(col("value")).cast("long").as("len"))
         .agg(count(lit(1)).as("n_lines"),
@@ -200,7 +201,7 @@ object Extended {
     // ONE partition in place, leave every other partition's files
     // untouched. Store partitioned by event_type; the second write
     // (filtered 'click' rows) replaces only that partition dir under
-    // partitionOverwriteMode=dynamic (conf scoped + restored). The final
+    // the write's partitionOverwriteMode=dynamic option. The final
     // store content is oracled: full data for other types, the filtered
     // subset for the overwritten one.
     Q("sink_partitioned_overwrite",
@@ -210,21 +211,22 @@ object Extended {
         |WHERE event_type <> 'click' OR value >= 100
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("dynpart_")
+      val tmp = Streams.scratchDir("dynpart_")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
-      ev.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
+      Streams.fileWriter(ev).mode("overwrite").partitionBy("event_type")
+        .parquet(tmp)
       val repl = ev.where(col("event_type") === "click" && col("value") >= 100)
       // dynamic overwrite with an EMPTY frame writes no partitions and
       // silently leaves the old 'click' partition in place — fail loudly
       // instead of diverging from the oracle on a degenerate fixture
       require(!repl.isEmpty,
         "sink_partitioned_overwrite: fixture has no 'click' rows with value >= 100")
-      graft.Harness.withConfs(s,
-        "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
-        repl.write.mode("overwrite").partitionBy("event_type").parquet(tmp))
-      s.read.parquet(tmp)
+      Streams.fileWriter(repl).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type").parquet(tmp)
+      Tables.readParquet(s, tmp)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(14,2)")).cast("double").as("sv"))

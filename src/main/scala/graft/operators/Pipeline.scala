@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Pin, Q, Tables}
 import graft.functions.zorder_key
+import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,14 +153,13 @@ object Pipeline {
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
         |FROM events GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      val base = s.conf.get("spark.local.dir", "/tmp")
-      val small = s"$base/graft_compact_small_$tag"
-      val out = s"$base/graft_compact_out_$tag"
-      Tables.events(s, d).select("event_id", "event_type", "value")
-        .repartition(64).write.mode("overwrite").parquet(small)
+      val base = Streams.scratchDir("compact_")
+      val (small, out) = (s"$base/small", s"$base/out")
+      Streams.fileWriter(Tables.events(s, d)
+          .select("event_id", "event_type", "value").repartition(64))
+        .mode("overwrite").parquet(small)
       compactParquet(s, small, out, targetBytes = 8L << 20)
-      s.read.parquet(out)
+      Tables.readParquet(s, out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sv"))
@@ -205,14 +205,14 @@ object Pipeline {
         |FROM events
         |ORDER BY event_id
         |LIMIT 1000""".stripMargin) { (s, d) =>
-      val tmp = graft.streaming.Streams.scratchDir("rangesort_")
-      Tables.events(s, d)
-        .select(col("event_id"), col("user_id"),
-          expr("unix_timestamp(date_trunc('second', ts))").as("sec"))
-        .repartitionByRange(8, col("sec"))
-        .sortWithinPartitions("sec", "event_id")
-        .write.mode("overwrite").parquet(tmp)
-      s.read.parquet(tmp)
+      val tmp = Streams.scratchDir("rangesort_")
+      Streams.fileWriter(Tables.events(s, d)
+          .select(col("event_id"), col("user_id"),
+            expr("unix_timestamp(date_trunc('second', ts))").as("sec"))
+          .repartitionByRange(8, col("sec"))
+          .sortWithinPartitions("sec", "event_id"))
+        .mode("overwrite").parquet(tmp)
+      Tables.readParquet(s, tmp)
         .select("event_id", "user_id", "sec")
         .orderBy("event_id")
         .limit(1000)
@@ -294,15 +294,13 @@ object Pipeline {
         |        / count(*), 6) AS mean_v
         |FROM events GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      val rollupDir =
-        s"${s.conf.get("spark.local.dir", "/tmp")}/graft_rollup_$tag"
-      Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(18,2)")).as("sv"))
-        .write.mode("overwrite").parquet(rollupDir)
-      val rollup = s.read.parquet(rollupDir)
+      val rollupDir = Streams.scratchDir("rollup_")
+      Streams.fileWriter(Tables.events(s, d)
+          .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("value").cast("decimal(18,2)")).as("sv")))
+        .mode("overwrite").parquet(rollupDir)
+      val rollup = Tables.readParquet(s, rollupDir)
       rollup.groupBy("event_type")
         .agg(sum(col("cnt")).as("n"),
           sum(col("sv")).cast("double").as("sv"))
@@ -698,8 +696,7 @@ object Pipeline {
         |  count(CASE WHEN l_shipdate IS NULL THEN 1 END) AS null_ship
         |FROM lineitem""".stripMargin) { (s, d) =>
       import s.implicits._
-      val obs = org.apache.spark.sql.Observation("graft_dq_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
+      val obs = org.apache.spark.sql.Observation()
       Tables.lineitem(s, d)
         .observe(obs,
           count(lit(1)).as("nrows"),
@@ -843,32 +840,13 @@ object Pipeline {
     */
   private[graft] def compactParquet(s: org.apache.spark.sql.SparkSession,
       in: String, out: String, targetBytes: Long): (Int, Int) = {
-    val before = parquetFileCount(in)
-    val bytes = parquetBytes(in)
+    def parquets(dir: String) =
+      Streams.listFiles(java.nio.file.Paths.get(dir), ".parquet")
+    val before = parquets(in)
+    val bytes = before.map(java.nio.file.Files.size).sum
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    s.read.parquet(in).coalesce(nFiles)
-      .write.mode("overwrite").parquet(out)
-    (before, parquetFileCount(out))
-  }
-
-  /** Total size of the parquet data files under `dir` (local fs). */
-  private def parquetBytes(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir)
-    scala.util.Using.resource(java.nio.file.Files.list(p)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(java.nio.file.Files.size(_)).sum
-    }
-  }
-
-  /** Parquet data-file count under `dir` (used by PipelineSpec). */
-  private[graft] def parquetFileCount(dir: String): Int = {
-    val p = java.nio.file.Paths.get(dir)
-    scala.util.Using.resource(java.nio.file.Files.list(p)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
-    }
+    Streams.fileWriter(Tables.readParquet(s, in).coalesce(nFiles))
+      .mode("overwrite").parquet(out)
+    (before.size, parquets(out).size)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** Scans, projections, filters — the base relational surface
@@ -74,11 +75,11 @@ object Relational {
       // Exercises the parquet sink + re-read path explicitly: result is
       // written columnar and scanned back (Verify additionally round-trips
       // every query result).
-      val out = s.conf.get("spark.local.dir", "/tmp") +
-        s"/graft_roundtrip_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.orders(s, d).groupBy("o_orderstatus").agg(count("*").as("n"))
-        .write.mode("overwrite").parquet(out)
-      s.read.parquet(out).orderBy("o_orderstatus")
+      val out = Streams.scratchDir("roundtrip_")
+      Streams.fileWriter(Tables.orders(s, d).groupBy("o_orderstatus")
+          .agg(count("*").as("n")))
+        .mode("overwrite").parquet(out)
+      Tables.readParquet(s, out).orderBy("o_orderstatus")
     },
 
     Q("filter_pred_and_or",
@@ -152,9 +153,9 @@ object Relational {
         |  CAST(0 AS BIGINT) AS min_ri, count(*) - 1 AS max_ri,
         |  count(*) * (count(*) - 1) // 2 AS sum_ri
         |FROM lineitem""".stripMargin) { (s, d) =>
-      // read directly (not via Tables): _metadata resolves on the file
-      // source relation, and this query's contract is about the scan
-      s.read.parquet(s"$d/lineitem.parquet")
+      // _metadata resolves on the file source relation, whose schema
+      // Tables gives from the footer, so the read runs no inference job
+      Tables.lineitem(s, d)
         .select(col("_metadata.file_name").as("file_name"),
           col("_metadata.row_index").as("ri"))
         .groupBy("file_name")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Pin, Q, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,24 +16,18 @@ object ScaleOps {
   /** events re-written partitioned by event_type, once per (JVM, sfDir) —
     * the layout that turns a key predicate into directory pruning.
     */
-  private val partDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def partitionedEvents(s: SparkSession, d: String): String =
-    partDirs.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_events_part_")
-        .toString
-      Tables.events(s, d).write.mode("overwrite")
+    Streams.layoutDir("events_part", d) { dir =>
+      Streams.fileWriter(Tables.events(s, d)).mode("overwrite")
         .partitionBy("event_type").parquet(s"$dir/fact")
       // a parquet-backed dim: a filter over a file scan survives into the
       // optimized plan, which the DPP rule requires (an inline VALUES dim
       // constant-folds to a pre-filtered LocalRelation — no Filter, no DPP)
       import s.implicits._
-      Seq(("click", 1), ("purchase", 2), ("view", 2), ("error", 3),
-        ("signup", 3))
-        .toDF("et", "w").write.mode("overwrite").parquet(s"$dir/dim")
-      dir
-    })
+      Streams.fileWriter(Seq(("click", 1), ("purchase", 2), ("view", 2),
+          ("error", 3), ("signup", 3)).toDF("et", "w"))
+        .mode("overwrite").parquet(s"$dir/dim")
+    }
 
   /** The join_skew_aqe shape over explicit inputs, so PlanSpec can run it
     * against a multi-file lineitem layout (see the query's comment).
@@ -188,7 +183,7 @@ object ScaleOps {
         |FROM events
         |WHERE event_type IN ('click', 'view')
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      s.read.parquet(s"${partitionedEvents(s, d)}/fact")
+      Tables.readParquet(s, s"${partitionedEvents(s, d)}/fact")
         .where(col("event_type").isin("click", "view"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -208,8 +203,8 @@ object ScaleOps {
         |WHERE dim.w = 1
         |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin) { (s, d) =>
       val base = partitionedEvents(s, d)
-      val dim = s.read.parquet(s"$base/dim").where(col("w") === 1)
-      s.read.parquet(s"$base/fact")
+      val dim = Tables.readParquet(s, s"$base/dim").where(col("w") === 1)
+      Tables.readParquet(s, s"$base/fact")
         .join(dim, col("event_type") === col("et"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))

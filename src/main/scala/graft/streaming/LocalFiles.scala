@@ -22,8 +22,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * delete a destination before they rename onto it.
   *
   * It serves `file:` only where [[LocalFiles.confs]] is set: in every
-  * stream's conf ([[Streams.start]]) and in the options of every
-  * generation-protocol store write ([[Streams.storeWriter]]). Not for the
+  * stream's conf ([[Streams.start]]), and in the options of every other
+  * file the engine writes ([[Streams.fileWriter]]): the store
+  * generations, the cross-query layouts, the files a query writes to its
+  * scratch directory and reads back, and `Verify`'s dump. Not for the
   * whole process: `perfbench` builds its own session and compiles only
   * the engine's Scala sources, so neither a classpath `core-site.xml` nor
   * a conf set where the engine builds its session would reach it.

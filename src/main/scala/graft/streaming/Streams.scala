@@ -51,29 +51,23 @@ object Streams {
           org.apache.spark.sql.types.StringType))))
       .parquet(dir)
 
-  /** Watch dirs of the table streams, one per (sfDir, table). */
-  private val streamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** A base table as a file stream. The file source wants a directory,
-    * and the fixture is a single file — a temp dir with one symlink
-    * bridges that (created once per (sfDir, table)). The schema is the
-    * table's [[Tables.table]] resolution, so a warm build runs no job.
+    * and the fixture is a single file — a layout directory with one
+    * symlink bridges that. The schema is the table's [[Tables.table]]
+    * resolution, so a warm build runs no job.
     */
   private def tableStream(s: SparkSession, sfDir: String,
       name: String): DataFrame = {
     val schema = Tables.table(s, sfDir, name).schema
-    val dir = streamDirs.computeIfAbsent(s"$sfDir#$name", { _ =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
+    val dir = layoutDir(s"stream_$name", sfDir) { d =>
       java.nio.file.Files.createSymbolicLink(
-        d.resolve(s"$name.parquet"),
+        java.nio.file.Paths.get(d, s"$name.parquet"),
         // toAbsolutePath: a RELATIVE sfDir would otherwise become a
-        // relative symlink TARGET, which resolves against the temp
-        // watch dir (not the cwd) — a broken link the file source
-        // silently reads as an EMPTY stream
+        // relative symlink TARGET, which resolves against the watch dir
+        // (not the cwd) — a broken link the file source silently reads
+        // as an EMPTY stream
         java.nio.file.Paths.get(s"$sfDir/$name.parquet").toAbsolutePath)
-      d.toString
-    })
+    }
     s.readStream.schema(schema).parquet(dir)
   }
 
@@ -203,6 +197,33 @@ object Streams {
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
   }
 
+  /** The per-JVM parent of every [[layoutDir]]. It outlives
+    * `Harness.release` and is deleted when the JVM exits.
+    */
+  private[graft] lazy val layoutRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_layouts_")
+    sys.addShutdownHook(deleteTree(root))
+    root
+  }
+
+  private val layouts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** The directory of the layout `name` of the tables under `sfDir` (a
+    * partitioned or sorted copy, an index, a stream's watch directory):
+    * `build` fills a fresh directory under [[layoutRoot]] once per JVM,
+    * and every later call returns that directory. Storage preparation
+    * shared across queries, so `Harness.release` leaves it in place.
+    */
+  private[graft] def layoutDir(name: String, sfDir: String)(
+      build: String => Unit): String =
+    layouts.computeIfAbsent((name, sfDir), { _ =>
+      val dir = java.nio.file.Files.createTempDirectory(layoutRoot, s"${name}_")
+        .toString
+      build(dir)
+      dir
+    })
+
   // ---- the generation protocol every file-backed store shares (the
   // vector store, the rollup and SCD2 views, the IVF index): the flat
   // root is generation 0; later generations are `gen-N` directories
@@ -276,12 +297,13 @@ object Streams {
   }
 
   /** `df.write` with [[LocalFiles]] serving `file:` for that write alone
-    * (a write's options join its Hadoop conf): the one writer of a store
-    * generation outside a stream, so a local store write forks no `chmod`
-    * per directory and file. No session conf changes, so a store write
-    * inside a batch leaves the caller's session as it is.
+    * (a write's options join its Hadoop conf): the one writer of the
+    * engine's files outside a stream's batches (store generations,
+    * layouts, query scratch, `Verify`'s dump), so a local write forks no
+    * `chmod` per directory and file. No session conf changes, so a store
+    * write inside a batch leaves the caller's session as it is.
     */
-  private[graft] def storeWriter(df: DataFrame): DataFrameWriter[Row] =
+  private[graft] def fileWriter(df: DataFrame): DataFrameWriter[Row] =
     df.write.options(LocalFiles.confs.toMap)
 
   /** Read the store's live generation (resolved at plan time — a reader
@@ -303,7 +325,7 @@ object Streams {
   /** Regular files under `p` ending in `suffix`; empty for a non-dir.
     * (Files.list must be closed — it holds a directory handle.)
     */
-  private def listFiles(p: java.nio.file.Path, suffix: String)
+  private[graft] def listFiles(p: java.nio.file.Path, suffix: String)
       : Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     if (!java.nio.file.Files.isDirectory(p)) Seq.empty
@@ -392,7 +414,7 @@ object Streams {
       math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val nextDir = nextGeneration(storeDir)
     // the merged schema: a mixed-footer generation keeps every column
-    storeWriter(storeRead(s, storeDir).repartition(nFiles))
+    fileWriter(storeRead(s, storeDir).repartition(nFiles))
       .mode("overwrite").parquet(nextDir)
     publishGeneration(storeDir, nextDir)
     nFiles
@@ -442,7 +464,7 @@ object Streams {
         Some(storeRead(s, storeDir))
       else None
     val nextDir = nextGeneration(storeDir)
-    storeWriter(next(cur)).mode("overwrite").parquet(nextDir)
+    fileWriter(next(cur)).mode("overwrite").parquet(nextDir)
     batchId.foreach(id => java.nio.file.Files.write(
       java.nio.file.Paths.get(nextDir, "_COMMIT_BATCHID"),
       id.toString.getBytes(Utf8)))

@@ -69,11 +69,11 @@ class HarnessSpec extends SparkSuite {
   }
 
   test("table and store reads take their schema from the footer resolver") {
-    val readers = Set("src/main/scala/graft/Tables.scala",
-      "src/main/scala/graft/streaming/Streams.scala",
-      "src/main/scala/graft/operators/Ann.scala",
-      "src/main/scala/graft/operators/Streaming.scala")
-    val lines = codeLines(mainRoot).filter { case (f, _) => readers(f.toString) }
+    // the read-backs of what a query wrote itself included
+    val lines = codeLines(mainRoot).filter { case (f, _) =>
+      Set("src/main/scala/graft/Tables.scala",
+        "src/main/scala/graft/streaming/Streams.scala")(f.toString) ||
+        f.toString.startsWith("src/main/scala/graft/operators/") }
     val merging = lines.collect {
       case (f, l) if l.contains("\"mergeSchema\"") => s"$f: $l" }
     assert(merging.isEmpty, merging.mkString("\n"))
@@ -81,12 +81,10 @@ class HarnessSpec extends SparkSuite {
     val inferring = lines.collect {
       case (f, l) if parquetRead.findFirstIn(l).nonEmpty &&
         !l.contains(".schema(") => s"$f: $l" }
-    // the schemaless reads are the resolver's no-data-file fallback
-    // (there is nothing to infer from, and Spark words the error) and the
-    // IVF index's cell-partitioned layers, which need partition discovery
+    // the one schemaless read is the resolver's no-data-file fallback
+    // (there is nothing to infer from, and Spark words the error)
     assert(inferring == Seq(
-      "src/main/scala/graft/Tables.scala: case None => spark.read.parquet(path)",
-      "src/main/scala/graft/operators/Ann.scala: s.read.parquet(path))"),
+      "src/main/scala/graft/Tables.scala: case None => spark.read.parquet(path)"),
       inferring.mkString("\n"))
     val footerReads = codeLines(mainRoot).collect {
       case (f, l) if l.contains("ParquetFileReader.open") => f.toString }
@@ -176,21 +174,70 @@ class HarnessSpec extends SparkSuite {
 
   test("query scratch lives under the one scratch root; only the memoized " +
       "cross-query layouts make their own temp directories") {
+    // Streams makes every local directory the engine writes: per-query
+    // scratch under the scratch root, layouts under the layout root
     val dirs = linesWith("createTempDirectory")
     assert(dirs == Seq(
-      "src/main/scala/graft/operators/Analytics.scala: " +
-        "val dir = java.nio.file.Files.createTempDirectory(\"graft_zonemap_\")",
-      "src/main/scala/graft/operators/Ann.scala: " +
-        "val dir = java.nio.file.Files.createTempDirectory(\"graft_ivf_idx_\")",
-      "src/main/scala/graft/operators/ScaleOps.scala: " +
-        "val dir = java.nio.file.Files.createTempDirectory(\"graft_events_part_\")",
-      "src/main/scala/graft/streaming/Streams.scala: " +
-        "val d = java.nio.file.Files.createTempDirectory(s\"graft_${name}_\")",
       "src/main/scala/graft/streaming/Streams.scala: " +
         "java.nio.file.Files.createTempDirectory(\"graft_scratch_\")",
       "src/main/scala/graft/streaming/Streams.scala: " +
-        "java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString"),
+        "java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "val root = java.nio.file.Files.createTempDirectory(\"graft_layouts_\")",
+      "src/main/scala/graft/streaming/Streams.scala: " +
+        "val dir = java.nio.file.Files.createTempDirectory(layoutRoot, s\"${name}_\")"),
       dirs.mkString("\n"))
+    // no query builds a path of its own from the local dir or a random tag
+    val paths = codeLines(mainRoot.resolve("graft").resolve("operators"))
+      .collect { case (f, l) if l.contains("spark.local.dir") ||
+        l.contains("randomUUID") => s"$f: $l" }
+    assert(paths.isEmpty, paths.mkString("\n"))
+  }
+
+  test("every engine file write outside a stream's batches goes through " +
+      "Streams.fileWriter") {
+    val write = """\.write(To)?\b(?!\s*\()""".r
+    val raw = codeLines(mainRoot).collect {
+      case (f, l) if write.findFirstIn(l).nonEmpty => s"$f: $l" }
+    val main = "src/main/scala/graft"
+    assert(raw == Seq(
+      // ScaleGen's fixture copies, outside the query paths
+      s"$main/ScaleGen.scala: df.repartition(parts).write.mode(\"overwrite\")",
+      s"$main/ScaleGen.scala: df.coalesce(1).write.mode(\"overwrite\").parquet(tmp)",
+      // bucketedJoin's catalog tables: write options would be stored in
+      // the tables' storage properties
+      s"$main/operators/Extended.scala: " +
+        "Tables.orders(s, d).write.mode(\"overwrite\")",
+      s"$main/operators/Extended.scala: " +
+        "Tables.lineitem(s, d).select(\"l_orderkey\").write.mode(\"overwrite\")",
+      s"$main/operators/Extended.scala: " +
+        ".write.mode(\"overwrite\").format(\"jdbc\")",
+      s"$main/operators/Pipeline.scala: " +
+        ".write.format(\"noop\").mode(\"overwrite\").save()",
+      // foreachBatch sinks: Streams.start's confs serve their file: writes
+      s"$main/operators/Streaming.scala: " +
+        "batch.where(gate).write.mode(\"overwrite\")",
+      s"$main/operators/Streaming.scala: " +
+        "batch.where(!coalesce(gate, lit(false))).write.mode(\"overwrite\")",
+      s"$main/operators/Streaming.scala: " +
+        "batch.write.format(\"noop\").mode(\"overwrite\").save()",
+      s"$main/operators/Streaming.scala: " +
+        "batch.write.format(\"noop\").mode(\"overwrite\").save()",
+      s"$main/operators/Streaming.scala: " +
+        ".write.mode(\"append\").partitionBy(\"cell\")",
+      s"$main/operators/Streaming.scala: " +
+        "batch.write.mode(\"append\").parquet(out)",
+      s"$main/streaming/Streams.scala: batch.write.mode(write).parquet(dir)",
+      // the writer itself
+      s"$main/streaming/Streams.scala: df.write.options(LocalFiles.confs.toMap)",
+      s"$main/streaming/Streams.scala: " +
+        "batch.coalesce(filesPerBatch).write.mode(\"append\")",
+      s"$main/streaming/Streams.scala: " +
+        "answers.write.mode(\"append\").parquet(outDir)",
+      s"$main/streaming/Streams.scala: " +
+        "answers.write.mode(\"overwrite\").parquet(s\"$outDir/epoch=$batchId\")",
+      s"$main/streaming/Streams.scala: .write.format(\"kafka\")"),
+      raw.mkString("\n"))
   }
 
   /** The scratch root's entries, empty when it does not exist. */
@@ -211,6 +258,48 @@ class HarnessSpec extends SparkSuite {
     Harness.release(spark)
     assert(tempViews.diff(before).isEmpty, tempViews.diff(before))
     assert(scratchEntries.isEmpty, scratchEntries.mkString(", "))
+  }
+
+  /** `graft_*` entries directly under the local dir and the temp dir. */
+  private def tempEntries: Set[Path] =
+    Seq(spark.conf.get("spark.local.dir", "/tmp"),
+        System.getProperty("java.io.tmpdir"))
+      .map(Paths.get(_)).filter(Files.isDirectory(_)).flatMap { d =>
+        scala.util.Using.resource(Files.list(d))(_.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("graft_")).toSeq)
+      }.toSet
+
+  test("queries that write and read back fork no chmod and leave nothing " +
+      "outside the scratch and layout roots after release") {
+    Harness.release(spark)
+    val before = tempEntries
+    val (_, forks) = Profile.processStarts(Seq("maintenance_compact_files",
+      "agg_partial_reaggregate", "sink_parquet_roundtrip",
+      "layout_range_sort", "sink_partitioned_overwrite",
+      "source_json_roundtrip").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+    })
+    val chmods = forks.filter(_.split(" ").head.endsWith("chmod"))
+    assert(chmods.size == 0, chmods.take(5).mkString("\n"))
+    Harness.release(spark)
+    val left = tempEntries -- before --
+      Seq(streaming.Streams.scratchRoot, streaming.Streams.layoutRoot)
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
+  test("processStarts reads only process starts while another JFR " +
+      "recording runs") {
+    val other = new jdk.jfr.Recording()
+    other.enable("jdk.ThreadStart")
+    other.start()
+    try {
+      val (_, forks) = Profile.processStarts {
+        val t = new Thread(() => ())
+        t.start(); t.join()
+        new ProcessBuilder("true").start().waitFor()
+      }
+      assert(forks.contains("true"), forks)
+    } finally other.close()
   }
 
   test("release drops the footer-cache roots of the scratch stores it " +

@@ -1084,14 +1084,14 @@ class StreamingSpec extends SparkSuite {
           df.write.partitionBy("cell")
             .parquet(root.resolve(s"default$i").toString)))
         val (_, viaNio) = Profile.processStarts(Harness.withConfs(spark,
-          confs: _*)(streaming.Streams.storeWriter(df).partitionBy("cell")
+          confs: _*)(streaming.Streams.fileWriter(df).partitionBy("cell")
             .parquet(root.resolve(s"nio$i").toString)))
         val (expected, got) = (modes(root.resolve(s"default$i")),
           modes(root.resolve(s"nio$i")))
         assert(expected.map(_._1).exists(_.endsWith(".crc")) &&
           expected.map(_._1).contains("cell=a"), expected)
         assert(got == expected, umask)
-        // the default filesystem forked its chmods; the store writer's
+        // the default filesystem forked its chmods; the file writer's
         // LocalFiles served the second write and forked none
         assert(viaDefault.exists(_.contains(s"default$i")), umask)
         assert(!viaNio.exists(_.contains(s"nio$i")), viaNio)
