@@ -1650,6 +1650,95 @@ object Analytics {
         supportName.map(col("n").as(_)).toSeq: _*))
   }
 
+  /** The hourly series every `ts_*` query starts from: one row per
+    * (event_type, hour `h`) with the hour's DECIMAL-exact sum `v`. An
+    * exact sum is order-free, so this is the one data decision the family
+    * shares with its oracles; a caller that wants doubles casts `v` once,
+    * after the rollup. One combiner-friendly aggregate: at 100 TB the
+    * fact shuffles once, into series × hours rows.
+    */
+  private def hourlySeries(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
+
+  /** Each series of [[hourlySeries]] as two aligned arrays in hour order:
+    * `hs` the hours and `vs` the sums cast to double. Per-series state is
+    * bounded by series length (the contract of mapGroupsWithState), and
+    * the series are the shuffle key.
+    */
+  private def seriesArrays(s: SparkSession, d: String): DataFrame =
+    hourlySeries(s, d).withColumn("v", col("v").cast("double"))
+      .groupBy("event_type")
+      .agg(sort_array(collect_list(struct(col("h"), col("v")))).as("sr"))
+      .select(col("event_type"),
+        expr("transform(sr, x -> x.h)").as("hs"),
+        expr("transform(sr, x -> x.v)").as("vs"))
+
+  /** An in-order recurrence over each series of [[seriesArrays]], which no
+    * window frame can express. `seed` is a SQL `named_struct` of one-
+    * element arrays, the state at the first point `vs[1]`; `step` is a
+    * `(acc, x) -> named_struct(...)` lambda appending the next point's
+    * state to each array, folded over `vs[2..]`. Out comes one row per
+    * (series, hour): the hour as `yyyy-MM-dd HH:mm:ss`, then each state
+    * array `field` as column `name`, for `outs` = `field -> name`; state
+    * not named there (a seasonal ring) is dropped.
+    */
+  private def foldSeries(s: SparkSession, d: String,
+      outs: Seq[(String, String)], seed: String, step: String): DataFrame = {
+    val fields = outs.map(_._1)
+    seriesArrays(s, d)
+      .select(col("event_type"), col("hs"),
+        expr(s"aggregate(slice(vs, 2, greatest(size(vs) - 1, 0)), $seed, " +
+          s"$step)").as("fold"))
+      .select(col("event_type") +: col("hs") +:
+        fields.map(f => col(s"fold.$f").as(f)): _*)
+      .select(col("event_type"),
+        explode(arrays_zip(col("hs") +: fields.map(col): _*)).as("z"))
+      .select(col("event_type") +:
+        date_format(col("z.hs"), "yyyy-MM-dd HH:mm:ss").as("hour") +:
+        outs.map { case (f, name) => col(s"z.$f").as(name) }: _*)
+  }
+
+  /** Per-group moments of an hourly frame (..., `v` DECIMAL): `n`,
+    * `sv` = Σv and `svv` = Σv² per `keys`. All three are exact (a count
+    * and DECIMAL sums), so a mean costs one correctly-rounded division and
+    * a standard deviation one more and a sqrt, the same bits in either
+    * engine. The groups are O(series × key domain).
+    */
+  private def seriesMoments(hourly: DataFrame, keys: Column*): DataFrame =
+    hourly.groupBy(keys: _*)
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+        sum(col("v") * col("v")).as("svv"))
+
+  /** The group mean from [[seriesMoments]]' columns. */
+  private def momentsMean: Column = col("sv").cast("double") / col("n")
+
+  /** The hours of `hourly` whose z-score against their group reaches
+    * `minAbsZ`: (event_type, hour, the other grouping keys, v, z). `keys`
+    * pairs each grouping column of `hourly`, event_type first, with its
+    * name in the [[seriesMoments]] frame, and `guard` filters the moments
+    * before they broadcast back onto the hourly frame. z = (v − mean) / σ
+    * with the variance (nΣv² − (Σv)²)/n²: one division and one
+    * correctly-rounded sqrt per group.
+    */
+  private def zScored(hourly: DataFrame, keys: Seq[(String, String)],
+      minAbsZ: Double, guard: Column = lit(true)): DataFrame = {
+    val st = seriesMoments(hourly,
+      keys.map { case (k, m) => col(k).as(m) }: _*).where(guard)
+    val z = (col("v").cast("double") - momentsMean) /
+      sqrt((col("n") * col("svv") - col("sv") * col("sv")).cast("double")
+        / (col("n").cast("double") * col("n")))
+    hourly
+      .join(broadcast(st),
+        keys.map { case (k, m) => col(k) === col(m) }.reduce(_ && _))
+      .select(Seq(col("event_type"),
+          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour")) ++
+        keys.tail.map { case (k, _) => col(k) } ++
+        Seq(col("v").cast("double").as("v"), z.as("z")): _*)
+      .where(abs(col("z")) >= minAbsZ)
+  }
+
   val defs: Seq[Q] = Seq(
 
     // Exact heavy hitters, one combiner-friendly shuffle: tokens partial-
@@ -2413,20 +2502,16 @@ object Analytics {
         |FROM hourly h JOIN seas s
         |  ON h.event_type = s.et AND hour(h.h) = s.hod
         |ORDER BY h.event_type, h.h""".stripMargin) { (s, d) =>
-      val hourly = Pin.now(Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
-      val seas = hourly
-        .groupBy(col("event_type").as("et"), hour(col("h")).as("hod"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
-      val seasonal = col("sv").cast("double") / col("n")
+      val hourly = Pin.now(hourlySeries(s, d))
+      val seas = seriesMoments(hourly,
+        col("event_type").as("et"), hour(col("h")).as("hod"))
       hourly.join(broadcast(seas),
           col("event_type") === col("et") && hour(col("h")) === col("hod"))
         .select(col("event_type"),
           date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("v").cast("double").as("v"),
-          seasonal.as("seasonal"),
-          (col("v").cast("double") - seasonal).as("residual"))
+          momentsMean.as("seasonal"),
+          (col("v").cast("double") - momentsMean).as("residual"))
         .orderBy("event_type", "hour")
     },
 
@@ -2478,10 +2563,8 @@ object Analytics {
     },
 
     // Hourly anomaly flags by z-score against the series' own
-    // mean/stddev — same exact-sums discipline as ts_linear_trend
-    // (n/Σv/Σv² are exact DECIMAL, variance = (nΣv²−(Σv)²)/n² needs one
-    // division + one correctly-rounded sqrt). The per-series stats row
-    // broadcasts back onto the hourly frame; |z| ≥ 2.5 bounds output.
+    // mean/stddev, from exact moments ([[zScored]], the exact-sums
+    // discipline of ts_linear_trend); |z| ≥ 2.5 bounds output.
     Q("ts_anomaly_zscore",
       """WITH hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS h,
@@ -2500,20 +2583,8 @@ object Analytics {
         |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, v, z
         |FROM z WHERE abs(z) >= 2.5
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Pin.now(Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
-      val st = hourly.groupBy(col("event_type").as("et"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-          sum(col("v") * col("v")).as("svv"))
-      val z = (col("v").cast("double") - col("sv").cast("double") / col("n")) /
-        sqrt((col("n") * col("svv") - col("sv") * col("sv")).cast("double")
-          / (col("n").cast("double") * col("n")))
-      hourly.join(broadcast(st), col("event_type") === col("et"))
-        .select(col("event_type"),
-          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("v").cast("double").as("v"), z.as("z"))
-        .where(abs(col("z")) >= 2.5)
+      zScored(Pin.now(hourlySeries(s, d)), Seq("event_type" -> "et"),
+          minAbsZ = 2.5)
         .orderBy("event_type", "hour")
     },
 
@@ -2523,11 +2594,9 @@ object Analytics {
     // but grouped by (series, HOUR-OF-DAY), so a midnight lull is judged
     // against midnights and a noon peak against noons — the raw z-score
     // flags every peak hour of a cyclic series as "anomalous" while
-    // missing a genuinely quiet noon. Per-group mean/σ from DECIMAL-exact
-    // (n, Σv, Σv²) with one division + one correctly-rounded sqrt per
-    // group; groups are O(series×24) and broadcast back onto the hourly
-    // frame. Threshold 2.0 within-group (tighter than the global 2.5 —
-    // deseasonalized residuals are tighter by construction).
+    // missing a genuinely quiet noon. Groups are O(series×24). Threshold
+    // 2.0 within-group (tighter than the global 2.5 — deseasonalized
+    // residuals are tighter by construction).
     Q("ts_anomaly_seasonal",
       """WITH hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS h,
@@ -2551,24 +2620,11 @@ object Analytics {
         |       hod, v, z
         |FROM z WHERE abs(z) >= 2.0
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Pin.now(Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          hour(col("ts")).cast("long").as("hod"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v")))
-      val st = hourly.groupBy(col("event_type").as("et"),
-          col("hod").as("shod"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-          sum(col("v") * col("v")).as("svv"))
-        .where(col("n") >= 2)
-      val z = (col("v").cast("double") - col("sv").cast("double") / col("n")) /
-        sqrt((col("n") * col("svv") - col("sv") * col("sv")).cast("double")
-          / (col("n").cast("double") * col("n")))
-      hourly.join(broadcast(st),
-          col("event_type") === col("et") && col("hod") === col("shod"))
-        .select(col("event_type"),
-          date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("hod"), col("v").cast("double").as("v"), z.as("z"))
-        .where(abs(col("z")) >= 2.0)
+      // hod after the rollup, not as a third key: h determines it
+      val hourly = Pin.now(hourlySeries(s, d)
+        .withColumn("hod", hour(col("h")).cast("long")))
+      zScored(hourly, Seq("event_type" -> "et", "hod" -> "shod"),
+          minAbsZ = 2.0, guard = col("n") >= 2)
         .orderBy("event_type", "hour")
     },
 
@@ -2613,9 +2669,7 @@ object Analytics {
         |FROM ranked WHERE pk = 1
         |ORDER BY event_type""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
+      val hourly = hourlySeries(s, d)
       val wAll = Window.partitionBy("event_type")
       val wRun = Window.partitionBy("event_type").orderBy("h")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2644,12 +2698,9 @@ object Analytics {
     // (α = 0.25 — an exact binary fraction, so both engines' multiply/add
     // chains are bit-identical with NO rounding): the classic smoothing
     // recurrence e_i = α·v_i + (1−α)·e_{i−1}, which no window frame can
-    // express. Spark runs it as an in-order array fold per series —
-    // per-group state is bounded by series length (the same contract as
-    // mapGroupsWithState), series are the shuffle key, so 100 TB of
-    // events reduce to one combiner-friendly hourly aggregate + one
-    // bounded fold per series. Oracle: recursive CTE (the same
-    // formulation discipline as dedup_minhash_collapse's CC oracle).
+    // express; Spark runs it as [[foldSeries]]. Oracle: recursive CTE
+    // (the same formulation discipline as dedup_minhash_collapse's CC
+    // oracle).
     Q("ts_ema_hourly",
       """WITH RECURSIVE hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS h,
@@ -2669,23 +2720,11 @@ object Analytics {
         |       e AS ema
         |FROM ema
         |ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).cast("double").as("v"))
-      hourly.groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("h"), col("v")))).as("s"))
-        .select(col("event_type"),
-          expr("transform(s, x -> x.h)").as("hs"),
-          expr("""aggregate(transform(s, x -> x.v),
-                 |  cast(array() as array<double>),
-                 |  (acc, x) -> concat(acc, array(coalesce(
-                 |    0.25D * x + 0.75D * try_element_at(acc, -1), x))))"""
-            .stripMargin).as("es"))
-        .select(col("event_type"),
-          explode(arrays_zip(col("hs"), col("es"))).as("z"))
-        .select(col("event_type"),
-          date_format(col("z.hs"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("z.es").as("ema"))
+      foldSeries(s, d, Seq("es" -> "ema"),
+        seed = "named_struct('es', array(element_at(vs, 1)))",
+        step = """(acc, x) -> named_struct('es', concat(acc.es, array(
+                 |  0.25D * x + 0.75D * element_at(acc.es, -1))))"""
+          .stripMargin)
         .orderBy("event_type", "hour")
     },
 
@@ -2735,13 +2774,7 @@ object Analytics {
         |  CAST(n AS BIGINT) AS n_points, sse, sse = ms AS is_best
         |FROM fin JOIN mn ON fin.event_type = mn.event_type
         |ORDER BY event_type, k""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).cast("double").as("v"))
-      val folds = hourly.groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("h"), col("v")))).as("s"))
-        .select(col("event_type"),
-          expr("transform(s, x -> x.v)").as("vs"))
+      val folds = seriesArrays(s, d)
         .withColumn("k", explode(expr("sequence(1, 7)")))
         .withColumn("res", expr(
           """aggregate(vs, cast(array() as array<double>),
@@ -2775,9 +2808,8 @@ object Analytics {
     // drift. α = 0.5, β = 0.25: exact binary fractions, so both engines'
     // identical-order multiply/add chains produce bit-identical doubles
     // (the level expression is repeated VERBATIM inside the trend formula
-    // on both sides — same ops, same order, same bits). Same 100 TB shape
-    // as the EMA: one combiner-friendly hourly aggregate, then one
-    // bounded in-order fold per series, series as the shuffle key.
+    // on both sides — same ops, same order, same bits). Same
+    // [[foldSeries]] shape as the EMA.
     Q("ts_holt_linear",
       """WITH RECURSIVE hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS h,
@@ -2806,38 +2838,21 @@ object Analytics {
         |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour,
         |       l AS level, b AS trend
         |FROM holt ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).cast("double").as("v"))
-        .groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("h"), col("v")))).as("sr"))
-        .select(col("event_type"),
-          expr("transform(sr, x -> x.h)").as("hs"),
-          expr("transform(sr, x -> x.v)").as("vs"))
-        .select(col("event_type"), col("hs"),
-          expr("""aggregate(
-                 |  slice(vs, 2, greatest(size(vs) - 1, 0)),
-                 |  named_struct(
-                 |    'ls', array(element_at(vs, 1)),
-                 |    'bs', array(coalesce(
-                 |      try_element_at(vs, 2) - element_at(vs, 1), 0D))),
-                 |  (acc, x) -> named_struct(
-                 |    'ls', concat(acc.ls, array(
-                 |      0.5D * x + 0.5D * (element_at(acc.ls, -1)
-                 |        + element_at(acc.bs, -1)))),
-                 |    'bs', concat(acc.bs, array(
-                 |      0.25D * ((0.5D * x + 0.5D * (element_at(acc.ls, -1)
-                 |          + element_at(acc.bs, -1)))
-                 |        - element_at(acc.ls, -1))
-                 |      + 0.75D * element_at(acc.bs, -1)))))"""
-            .stripMargin).as("lb"))
-        .select(col("event_type"), col("hs"),
-          expr("lb.ls").as("ls"), expr("lb.bs").as("bs"))
-        .select(col("event_type"),
-          explode(arrays_zip(col("hs"), col("ls"), col("bs"))).as("z"))
-        .select(col("event_type"),
-          date_format(col("z.hs"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("z.ls").as("level"), col("z.bs").as("trend"))
+      foldSeries(s, d, Seq("ls" -> "level", "bs" -> "trend"),
+        seed = """named_struct(
+                 |  'ls', array(element_at(vs, 1)),
+                 |  'bs', array(coalesce(
+                 |    try_element_at(vs, 2) - element_at(vs, 1), 0D)))"""
+          .stripMargin,
+        step = """(acc, x) -> named_struct(
+                 |  'ls', concat(acc.ls, array(
+                 |    0.5D * x + 0.5D * (element_at(acc.ls, -1)
+                 |      + element_at(acc.bs, -1)))),
+                 |  'bs', concat(acc.bs, array(
+                 |    0.25D * ((0.5D * x + 0.5D * (element_at(acc.ls, -1)
+                 |        + element_at(acc.bs, -1)))
+                 |      - element_at(acc.ls, -1))
+                 |    + 0.75D * element_at(acc.bs, -1))))""".stripMargin)
         .orderBy("event_type", "hour")
     },
 
@@ -2850,10 +2865,8 @@ object Analytics {
     // bit-identical. Seasonals init to ZERO (the first daily cycle
     // degenerates to plain Holt and seasonality is learned from cycle
     // 2 on — the deterministic "learn-from-zero" init; a mean-of-first-
-    // cycle init would be a partial-sum ULP trap). The recurrence is an
-    // in-order array fold with per-series bounded state (l, b, 24
-    // seasonal slots); series = the shuffle key, so a 100 TB fact
-    // shuffles once into per-series folds. Oracle = recursive CTE
+    // cycle init would be a partial-sum ULP trap). The [[foldSeries]]
+    // state is (l, b, 24 seasonal slots). Oracle = recursive CTE
     // carrying the same rotating seasonal list.
     Q("ts_holt_winters",
       """WITH RECURSIVE hourly AS (
@@ -2892,55 +2905,35 @@ object Analytics {
         |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour,
         |       l AS level, b AS trend, s AS seasonal
         |FROM hw ORDER BY event_type, h""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).cast("double").as("v"))
-        .groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("h"), col("v")))).as("sr"))
-        .select(col("event_type"),
-          expr("transform(sr, x -> x.h)").as("hs"),
-          expr("transform(sr, x -> x.v)").as("vs"))
-        .select(col("event_type"), col("hs"),
-          expr("""aggregate(
-                 |  slice(vs, 2, greatest(size(vs) - 1, 0)),
-                 |  named_struct(
-                 |    'ls', array(element_at(vs, 1)),
-                 |    'bs', array(coalesce(
-                 |      try_element_at(vs, 2) - element_at(vs, 1), 0D)),
-                 |    'ks', array(0D),
-                 |    'ss', array_repeat(0D, 24)),
-                 |  (acc, x) -> named_struct(
-                 |    'ls', concat(acc.ls, array(
-                 |      0.5D * (x - element_at(acc.ss, 1))
+      foldSeries(s, d,
+        Seq("ls" -> "level", "bs" -> "trend", "ks" -> "seasonal"),
+        seed = """named_struct(
+                 |  'ls', array(element_at(vs, 1)),
+                 |  'bs', array(coalesce(
+                 |    try_element_at(vs, 2) - element_at(vs, 1), 0D)),
+                 |  'ks', array(0D),
+                 |  'ss', array_repeat(0D, 24))""".stripMargin,
+        step = """(acc, x) -> named_struct(
+                 |  'ls', concat(acc.ls, array(
+                 |    0.5D * (x - element_at(acc.ss, 1))
+                 |      + 0.5D * (element_at(acc.ls, -1)
+                 |          + element_at(acc.bs, -1)))),
+                 |  'bs', concat(acc.bs, array(
+                 |    0.25D * ((0.5D * (x - element_at(acc.ss, 1))
                  |        + 0.5D * (element_at(acc.ls, -1)
-                 |            + element_at(acc.bs, -1)))),
-                 |    'bs', concat(acc.bs, array(
-                 |      0.25D * ((0.5D * (x - element_at(acc.ss, 1))
-                 |          + 0.5D * (element_at(acc.ls, -1)
-                 |              + element_at(acc.bs, -1)))
-                 |        - element_at(acc.ls, -1))
-                 |      + 0.75D * element_at(acc.bs, -1))),
-                 |    'ks', concat(acc.ks, array(
-                 |      0.25D * (x - (0.5D * (x - element_at(acc.ss, 1))
-                 |          + 0.5D * (element_at(acc.ls, -1)
-                 |              + element_at(acc.bs, -1))))
-                 |      + 0.75D * element_at(acc.ss, 1))),
-                 |    'ss', concat(slice(acc.ss, 2, 23), array(
-                 |      0.25D * (x - (0.5D * (x - element_at(acc.ss, 1))
-                 |          + 0.5D * (element_at(acc.ls, -1)
-                 |              + element_at(acc.bs, -1))))
-                 |      + 0.75D * element_at(acc.ss, 1)))))"""
-            .stripMargin).as("lb"))
-        .select(col("event_type"), col("hs"),
-          expr("lb.ls").as("ls"), expr("lb.bs").as("bs"),
-          expr("lb.ks").as("ks"))
-        .select(col("event_type"),
-          explode(arrays_zip(col("hs"), col("ls"), col("bs"), col("ks")))
-            .as("z"))
-        .select(col("event_type"),
-          date_format(col("z.hs"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("z.ls").as("level"), col("z.bs").as("trend"),
-          col("z.ks").as("seasonal"))
+                 |            + element_at(acc.bs, -1)))
+                 |      - element_at(acc.ls, -1))
+                 |    + 0.75D * element_at(acc.bs, -1))),
+                 |  'ks', concat(acc.ks, array(
+                 |    0.25D * (x - (0.5D * (x - element_at(acc.ss, 1))
+                 |        + 0.5D * (element_at(acc.ls, -1)
+                 |            + element_at(acc.bs, -1))))
+                 |    + 0.75D * element_at(acc.ss, 1))),
+                 |  'ss', concat(slice(acc.ss, 2, 23), array(
+                 |    0.25D * (x - (0.5D * (x - element_at(acc.ss, 1))
+                 |        + 0.5D * (element_at(acc.ls, -1)
+                 |            + element_at(acc.bs, -1))))
+                 |    + 0.75D * element_at(acc.ss, 1))))""".stripMargin)
         .orderBy("event_type", "hour")
     },
 
@@ -3302,11 +3295,8 @@ object Analytics {
         |  (n * sab - sa * sb)
         |    / sqrt((n * saa - sa * sa) * (n * sbb - sb * sb)) AS acf1
         |FROM sums ORDER BY event_type""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
       val w = Window.partitionBy("event_type").orderBy("h")
-      val pairs = hourly
+      val pairs = hourlySeries(s, d)
         .select(col("event_type"), col("v").as("a"),
           lead(col("v"), 1).over(w).as("b"))
         .where(col("b").isNotNull)
@@ -4419,13 +4409,10 @@ object Analytics {
         |  CAST(sum(abs(v - f)) AS DOUBLE) / count(*) AS mae,
         |  CAST(sum(v - f) AS DOUBLE) / count(*) AS bias
         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)")).as("v"))
-      val a = hourly.select(col("event_type"), col("h"), col("v"))
+      val hourly = hourlySeries(s, d)
       val b = hourly.select(col("event_type").as("et2"),
         col("h").as("h2"), col("v").as("f"))
-      a.join(b, col("event_type") === col("et2")
+      hourly.join(b, col("event_type") === col("et2")
           && col("h2") === col("h") - expr("INTERVAL 24 HOURS"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_eval"),
@@ -4920,11 +4907,9 @@ object Analytics {
         |FROM dev JOIN mad ON dev.event_type = mad.event_type
         |WHERE dv > 3 * 1.4826 * md
         |ORDER BY dev.event_type, h""".stripMargin) { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(sum(col("value").cast("decimal(12,2)"))
-          .cast("double").as("v"))
-      madOutliersOf(hourly, "event_type", "v", k = 3.0)
+      madOutliersOf(
+          hourlySeries(s, d).withColumn("v", col("v").cast("double")),
+          "event_type", "v", k = 3.0)
         .orderBy("event_type", "h")
     },
 

@@ -187,33 +187,56 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("Holt fold matches a driver-side recomputation of the recurrences") {
-    // independent check of the engine's array-fold wiring: recompute the
-    // hourly sums + the level/trend recurrences in plain Scala and demand
-    // bit-identical doubles (the fold uses the same IEEE ops in the same
-    // order, so == on doubles is the correct assertion, not a tolerance)
+    // independent check of the engine's array-fold wiring for all three
+    // folds (EMA, Holt linear, Holt-Winters): recompute the hourly sums
+    // + each recurrence in plain Scala and demand bit-identical doubles
+    // (the folds use the same IEEE ops in the same order, so == on
+    // doubles is the correct assertion, not a tolerance). The hourly
+    // rollup is written out here, not taken from the engine's builder.
     val hourly = Tables.events(SparkSpec.spark, sf)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
       .agg(sum(col("value").cast("decimal(12,2)")).cast("double").as("v"))
       .collect()
       .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2.getTime).map(_._3)).toMap
-    val expected = hourly.toSeq.flatMap { case (et, vs) =>
-      val l0 = vs.head
+    // (series, point index) -> the per-point outputs of `fold`
+    def expected(fold: Seq[Double] => Seq[Seq[Double]]) =
+      hourly.toSeq.flatMap { case (et, vs) =>
+        fold(vs.toSeq).zipWithIndex.map { case (o, i) => (et, i) -> o }
+      }.toMap
+    def got(query: String, cols: Int) =
+      SparkEntry.queries(query)(spark, sf).collect()
+        .groupBy(_.getString(0)).toSeq.flatMap { case (et, rows) =>
+          rows.sortBy(_.getString(1)).zipWithIndex.map { case (r, i) =>
+            (et, i) -> (2 until 2 + cols).map(r.getDouble)
+          }
+        }.toMap
+    def check(query: String, cols: Int)(
+        fold: Seq[Double] => Seq[Seq[Double]]): Unit = {
+      val (g, e) = (got(query, cols), expected(fold))
+      assert(g.size == e.size, query)
+      g.foreach { case (k, v) => assert(e(k) == v, s"$query at $k") }
+    }
+    check("ts_ema_hourly", 1) { vs =>
+      vs.tail.scanLeft(vs.head)((e, x) => 0.25d * x + 0.75d * e).map(Seq(_))
+    }
+    check("ts_holt_linear", 2) { vs =>
       val b0 = if (vs.length > 1) vs(1) - vs.head else 0d
-      val folded = vs.drop(1).scanLeft((l0, b0)) { case ((l, b), x) =>
+      vs.tail.scanLeft((vs.head, b0)) { case ((l, b), x) =>
         val nl = 0.5d * x + 0.5d * (l + b)
         (nl, 0.25d * (nl - l) + 0.75d * b)
-      }
-      folded.zipWithIndex.map { case ((l, b), i) => (et, i) -> ((l, b)) }
-    }.toMap
-    val got = SparkEntry.queries("ts_holt_linear")(spark, sf).collect()
-      .groupBy(_.getString(0)).toSeq.flatMap { case (et, rows) =>
-        rows.sortBy(_.getString(1)).zipWithIndex.map { case (r, i) =>
-          (et, i) -> ((r.getDouble(2), r.getDouble(3)))
-        }
-      }.toMap
-    assert(got.size == expected.size)
-    got.foreach { case (k, v) => assert(expected(k) == v, s"at $k") }
+      }.map { case (l, b) => Seq(l, b) }
+    }
+    check("ts_holt_winters", 3) { vs =>
+      // seasonals start at zero; the ring's head is this hour's season
+      val b0 = if (vs.length > 1) vs(1) - vs.head else 0d
+      vs.tail.scanLeft((vs.head, b0, 0d, Vector.fill(24)(0d))) {
+        case ((l, b, _, ring), x) =>
+          val nl = 0.5d * (x - ring.head) + 0.5d * (l + b)
+          val nk = 0.25d * (x - nl) + 0.75d * ring.head
+          (nl, 0.25d * (nl - l) + 0.75d * b, nk, ring.tail :+ nk)
+      }.map { case (l, b, k, _) => Seq(l, b, k) }
+    }
   }
 
   test("last-touch attribution == join-based reformulation") {

@@ -122,6 +122,27 @@ class HarnessSpec extends SparkSuite {
       linesWith("> maxMiddleDegree").mkString("\n"))
   }
 
+  test("the ts_* hourly rollup and its series arrays are each written " +
+      "once, in their builder") {
+    val analytics = "src/main/scala/graft/operators/Analytics.scala: "
+    val rollup = "date_trunc(\"hour\", col(\"ts\"))"
+    assert(linesWith(rollup) == Seq(
+      // Analytics.hourlySeries, the one (event_type, h, v) rollup
+      analytics + ".groupBy(col(\"event_type\"), " + rollup + ".as(\"h\"))",
+      // ts_interpolate_linear: sums only the values above 150, so its
+      // hours with none stay NULL for the interpolation
+      analytics + ".groupBy(col(\"event_type\"), " + rollup + ".as(\"h\"))",
+      // win_tumbling_batch: the streaming tumbling window's batch twin,
+      // a count and a double sum per (window start, type)
+      "src/main/scala/graft/operators/Windows.scala: .groupBy(" + rollup +
+        ".as(\"win_start\"), col(\"event_type\"))"),
+      linesWith(rollup).mkString("\n"))
+    val arrays = "sort_array(collect_list(struct(col(\"h\")"
+    assert(linesWith(arrays) == Seq(analytics +
+      ".agg(" + arrays + ", col(\"v\")))).as(\"sr\"))"),
+      linesWith(arrays).mkString("\n"))
+  }
+
   test("every run-to-completion stream goes through Streams.drain, and no " +
       "memory sink holds results on the driver") {
     val memory = linesWith("format(\"memory\")")
